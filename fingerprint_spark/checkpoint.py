@@ -127,7 +127,7 @@ class CheckpointedRun:
                 out.columns
             ):
                 out, obs = observe_pipeline(out, name=f"bucket_{b}_{time.time_ns()}")
-            path = os.path.join(self.output_dir, f"bucket={b}")
+            path = self.bucket_path(b)
             out.write.mode("overwrite").parquet(path)
             metrics = {k: v for k, v in (obs.get if obs else {}).items()}
             rec = {
@@ -149,5 +149,18 @@ class CheckpointedRun:
             "complete": len(self.completed_buckets()) == self.n_buckets,
         }
 
+    def bucket_path(self, bucket: int) -> str:
+        return os.path.join(self.output_dir, f"bucket={bucket}")
+
     def read_output(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.output_dir, "bucket=*"))
+        """The committed buckets' rows: the bucket directories the
+        manifest lists, never a glob — a ``bucket=<i>`` directory the
+        manifest did not commit (a write killed before its manifest
+        append) is not read. Each directory is read as its own root, so
+        there is no ``bucket`` partition column."""
+        done = self.completed_buckets()
+        if not done:
+            raise FileNotFoundError(
+                f"no committed bucket in {self.manifest_path}"
+            )
+        return spark.read.parquet(*[self.bucket_path(b) for b in sorted(done)])

@@ -961,10 +961,15 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
       Arrow pass. Integer sums are order-independent, so the total is
       bit-identical to the former explode+join+groupBy plan while
       shuffling nothing (r6: that plan moved one row per gram, twice).
-    - production path: the same fused Arrow pass also emits the float
-      score (functions/perplexity._ppl_exact_udf); `udf_agrees` pins
-      |udf - exact| <= 1e-6 INSIDE the oracle row, so a tokenizer or
-      closure drift turns the row red.
+    - float twin: the same fused Arrow pass also emits the float score
+      (functions/perplexity._ppl_exact_udf); `udf_agrees` pins
+      |udf - exact| <= 1e-6 INSIDE the oracle row. Both operands come
+      from that one pass over the same JVM-built string, so the row
+      pins the fixed-point contract and the float sum, not the
+      production gates. Those — score_text_fast_fn inside
+      quality_filter's enrich UDF and perplexity_col in
+      quality_filter_text — are pinned bit-identical to score_text by
+      tests/test_r06_optimizations.py.
 
     Reference analog: the n-gram perplexity quality signal in the
     enrich stage, src/pipeline/enricher.rs (perplexity fold) — scoring

@@ -25,6 +25,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import context_cached
+
 _FNV_OFFSET = 0xCBF29CE484222325
 _FNV_PRIME = 0x100000001B3
 _MASK64 = 0xFFFFFFFFFFFFFFFF
@@ -133,7 +135,7 @@ def _jvm_words(text: str) -> list[str]:
 _NULL_SHINGLE = -7046029254386353131  # int64 view of 0x9E3779B97F4A7C15
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _jaccard_shingle_udf(k: int):
     """Distinct word-k-shingle hash set per document as a SORTED
     array<long> — the Arrow replacement for the interpreted JVM
@@ -267,7 +269,7 @@ def minhash_signature_py(text: str, num_hashes: int = 64, k: int = 3) -> list[in
     return [int(x) for x in sig]
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _simhash_udf(k: int):
     @F.pandas_udf(T.LongType())
     def udf(texts: pd.Series) -> pd.Series:
@@ -276,7 +278,7 @@ def _simhash_udf(k: int):
     return udf
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _minhash_udf(num_hashes: int, k: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
@@ -357,7 +359,7 @@ def _minhash_from_hashes(h: "np.ndarray", num_hashes: int) -> list[int]:
     return [int(x) for x in sig]
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _sketches_udf(num_hashes: int, k: int):
     """Fused simhash + minhash: ONE shingle-hash pass per doc (separate
     UDF columns each recompute the shingles)."""
@@ -423,7 +425,7 @@ def content_hash_bytes_blake3(
     return "blake3:" + blake3_hex(bytes(buf))
 
 
-@lru_cache(maxsize=32)
+@context_cached(maxsize=32)
 def _blake3_content_hash_udf(names: tuple[str, ...]):
     @F.pandas_udf(T.StringType())
     def udf(jsons: pd.Series) -> pd.Series:
@@ -546,7 +548,7 @@ def winnow_fingerprints_py(
     return out
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _winnow_udf(k: int, window: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
@@ -602,7 +604,7 @@ def winnow_minima_py(text: str, k: int = 8, window: int = 4) -> list[int]:
     return [min(hs[j : j + window]) for j in range(nw)]
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _winnow_minima_udf(k: int, window: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
@@ -725,7 +727,7 @@ def _sketch_md5_batch(
     return sims, mins
 
 
-@lru_cache(maxsize=2)
+@context_cached(maxsize=2)
 def _sketch_md5_udf(seeds: tuple[int, ...], k: int):
     memo: dict = {}  # per-worker, survives batches (worker reuse)
 

@@ -18,12 +18,12 @@ Both are deterministic; tier 1 is the pipeline default (zero Python).
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..caching import context_cached
 
 # top function words per language (public common-word lists, abridged).
 # Every word starts AND ends with an ASCII letter (interior accents are
@@ -55,21 +55,30 @@ def _n_tokens(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
 
 
-def langid_scores(text: Column) -> Column:
-    """Struct<lang:double> of per-language marker-token fractions."""
+def _marker_fractions(text: Column) -> dict[str, Column]:
     lowered = F.lower(text)
     n = F.greatest(_n_tokens(text), F.lit(1))
-    fields = []
-    for lang in LANGS:
-        hits = F.size(F.split(lowered, marker_pattern(lang))) - 1
-        fields.append((hits / n).alias(lang))
-    return F.struct(*fields)
+    return {
+        lang: (F.size(F.split(lowered, marker_pattern(lang))) - 1) / n
+        for lang in LANGS
+    }
+
+
+def langid_scores(text: Column) -> Column:
+    """Struct<lang:double> of per-language marker-token fractions."""
+    return F.struct(
+        *[frac.alias(lang) for lang, frac in _marker_fractions(text).items()]
+    )
 
 
 def langid_best(text: Column) -> Column:
     """Struct<lang:string, score:double> — argmax with deterministic
     tie-break (lexicographically smallest language wins ties)."""
-    scores = langid_scores(text)
+    # each fraction enters the expression tree once (a field of the
+    # langid_scores struct would carry the whole struct per language;
+    # the optimizer folds both to the same plan, but the driver-side
+    # analysis cost grows with the tree)
+    fracs = _marker_fractions(text)
     # array_max compares struct fields in order: (score, nrank, lang).
     # nrank = -index makes ties resolve to the lexicographically smallest
     # language — an explicit deterministic tie-break (SURVEY.md §4: never
@@ -77,7 +86,7 @@ def langid_best(text: Column) -> Column:
     pairs = F.array(
         *[
             F.struct(
-                scores[lang].alias("score"),
+                fracs[lang].alias("score"),
                 F.lit(-i).alias("nrank"),
                 F.lit(lang).alias("lang"),
             )
@@ -131,7 +140,7 @@ def _stable_hash(s: str) -> int:
     return h
 
 
-@lru_cache(maxsize=4)
+@context_cached(maxsize=4)
 def _langid_ngram_udf(profile_key: tuple, n: int, dim: int):
     profiles = {lang: list(vec) for lang, vec in profile_key}
     langs = sorted(profiles)

@@ -23,6 +23,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import context_cached
+
 DEFAULT_ORDER = 3
 # perplexity above this is "junk" for the quality verdict
 DEFAULT_PPL_THRESHOLD = 36.0
@@ -189,7 +191,7 @@ def score_text(model_dict: dict[str, float], order: int, backoff: float, text: s
     return math.exp(-total / n)
 
 
-@lru_cache(maxsize=4)
+@context_cached(maxsize=4)
 def _ppl_exact_udf(model: NGramModel, micro_items: tuple, backoff_micro: int):
     """Fused fixed-point + float scorer over the ALREADY padded/lowered/
     truncated string (built JVM-side so both engines share one
@@ -201,8 +203,8 @@ def _ppl_exact_udf(model: NGramModel, micro_items: tuple, backoff_micro: int):
 
     Fast path: for pure-ASCII batches the trigram ids pack into
     base-128 ints and both lookups become numpy gathers over 16 MiB
-    LUTs (built once per Python worker, amortized via lru_cache +
-    worker reuse). Non-ASCII documents fall back to the exact dict
+    LUTs (built once per Python worker, amortized via the factory
+    memo + worker reuse). Non-ASCII documents fall back to the exact dict
     loop. Integer sums are order-independent, so the fixed-point
     contract is bit-identical to the join path by construction."""
     import numpy as np
@@ -336,7 +338,7 @@ def score_text_fast_fn(model: NGramModel):
     return score
 
 
-@lru_cache(maxsize=4)
+@context_cached(maxsize=4)
 def _ppl_udf(model: NGramModel):
     d = model.as_dict()
     order, backoff = model.order, model.backoff_logp

@@ -15,13 +15,13 @@ sheets grid; ``compile_extracts`` assembles the rule's extract map and
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import context_cached
 from ..dsl.model import ContentHashConfig, ExtractSection, FingerprintDefinition
 from ..functions.hashing import content_hash_col
 from .assertions import a1_to_rc, _sheet
@@ -127,7 +127,7 @@ def _text_match_py(
     return {"line": line, "char_offset": char_offset, "matched": m.group(0)}
 
 
-@lru_cache(maxsize=64)
+@context_cached(maxsize=64)
 def _text_match_udf(anchor: str, value: str, within_chars: int):
     @F.pandas_udf(_TEXT_MATCH_TYPE)
     def udf(texts: pd.Series) -> pd.DataFrame:

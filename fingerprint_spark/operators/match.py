@@ -82,6 +82,29 @@ def child_routing(children: Column) -> Column:
     )
 
 
+def match_levels(
+    rules: list[FingerprintDefinition],
+    env: dict[str, Column],
+    result_col: str = "fingerprint",
+) -> tuple[dict[str, Column], dict[str, Column], dict[str, Column]]:
+    """The match pass as its three dependency levels: the root fold,
+    the children (they read the fold's winner) and the routing summary
+    (it reads the children). Each level is one projection; the Columns
+    hold no DataFrame, so callers may build them once and reuse them."""
+    winner = _winner(result_col)
+    return (
+        {result_col: first_match_fold(rules, env)},
+        {"children": children_array(rules, env, winner)},
+        {"child_routing": child_routing(F.col("children"))},
+    )
+
+
+def _winner(result_col: str) -> Column:
+    return F.when(
+        F.col(f"{result_col}.matched"), F.col(f"{result_col}.fingerprint_id")
+    )
+
+
 def apply_match(
     df: DataFrame,
     rules: list[FingerprintDefinition],
@@ -90,17 +113,11 @@ def apply_match(
     with_extracts: bool = False,
 ) -> DataFrame:
     """Full match pass: root fold + children + routing (+ extraction and
-    content hash for the winning rule), one projection."""
-    root = first_match_fold(rules, env)
-    df = df.withColumn(result_col, root)
-    winner = F.when(
-        F.col(f"{result_col}.matched"), F.col(f"{result_col}.fingerprint_id")
-    )
-    kids = children_array(rules, env, winner)
-    df = df.withColumn("children", kids)
-    df = df.withColumn("child_routing", child_routing(F.col("children")))
+    content hash for the winning rule), one projection per level."""
+    for level in match_levels(rules, env, result_col):
+        df = df.withColumns(level)
     if with_extracts:
-        df = apply_extracts(df, rules, env, winner)
+        df = apply_extracts(df, rules, env, _winner(result_col))
     return df
 
 

@@ -13,14 +13,13 @@ requires an active SparkSession.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import context_cached
 from .html_parser import extract_text, parse_html
 from .markdown import normalize_markdown, parse_markdown
 from .schema import PARSED_TYPE
@@ -45,7 +44,7 @@ def _to_str(h) -> str:
     return bytes(h).decode("utf-8", "replace")
 
 
-@lru_cache(maxsize=1)
+@context_cached(maxsize=1)
 def _parse_html_udf():
     @F.pandas_udf(PARSED_TYPE)
     def udf(html: pd.Series) -> pd.DataFrame:
@@ -54,7 +53,7 @@ def _parse_html_udf():
     return udf
 
 
-@lru_cache(maxsize=1)
+@context_cached(maxsize=1)
 def _parse_markdown_udf():
     @F.pandas_udf(PARSED_TYPE)
     def udf(md: pd.Series) -> pd.DataFrame:
@@ -63,7 +62,7 @@ def _parse_markdown_udf():
     return udf
 
 
-@lru_cache(maxsize=1)
+@context_cached(maxsize=1)
 def _extract_text_udf():
     @F.pandas_udf(T.StringType())
     def udf(html: pd.Series) -> pd.Series:
@@ -108,7 +107,7 @@ def enrich_type():
     )
 
 
-@lru_cache(maxsize=4)
+@context_cached(maxsize=4)
 def _enrich_udf(model, simhash_k: int):
     from ..functions.hashing import simhash64_batch_py
     from ..functions.perplexity import score_text_fast_fn

@@ -26,6 +26,20 @@ Execution shape (the 100 TB design):
   downstream stage actually shuffles (dedup, label-join), never for the
   map-only chain itself.
 
+Driver-side build shape: every ``F.*`` call is a py4j round trip and
+every ``withColumn`` re-analyses the whole plan, so the chains are NOT
+rebuilt per call. Each stage's Columns are built once and memoized in
+``_STAGES``, a bounded LRU keyed on the live SparkContext and the
+parameters that shape the expressions (rules, ppl model, target_lang,
+ppl_threshold, html_col / text_col, package version); Columns are
+unresolved expressions, so one tree serves every DataFrame (each
+checkpoint bucket, each streaming micro-batch, each revalidate). The
+stages are applied as ONE ``withColumns`` per dependency level — the
+levels are the Projects the optimizer settles on, so the optimized plan
+equals the per-column chain's (pinned by tests/fixtures/plans). The
+cache drops its entries when the SparkContext changes: a Column that
+calls a Python UDF carries the context the UDF was made under.
+
 Reference analog: the run-mode lifecycle of src/lib.rs:739-834 —
 read -> enrich (rules) -> outcome fold -> ordered emit. Ordering is
 replaced by keying on url (SURVEY §1.7).
@@ -34,12 +48,15 @@ replaced by keying on url (SURVEY §1.7).
 from __future__ import annotations
 
 from functools import lru_cache
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import __version__
+from .caching import ContextCache
 from .dsl.model import FingerprintDefinition
-from .dsl.registry import Registry, builtin_rules
+from .dsl.registry import builtin_rules
 from .functions.langid import UNKNOWN_LANG, langid_best
 from .functions.perplexity import (
     DEFAULT_PPL_THRESHOLD,
@@ -49,8 +66,8 @@ from .functions.perplexity import (
 )
 from .functions.scrub import scrub_counts, scrub_text
 from .functions.textstats import gopher_quality_flags, text_stats
-from .operators.match import apply_match
-from .parse import enrich_col, parse_html_col
+from .operators.match import match_levels
+from .parse import enrich_col
 
 HEURISTIC_FLAGS = [
     "words_in_range", "mean_word_len_in_range", "symbol_ratio_ok",
@@ -117,22 +134,33 @@ def _verdict(
 
 DEFAULT_LANGID_THRESHOLD = 0.5  # CCNet's fastText-prob gate
 
+# the stage-Column memo (module docstring: driver-side build shape)
+_STAGES = ContextCache(maxsize=8)
+_SCRATCH_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
 
-def _langid_stage(
-    df: DataFrame,
+
+def _marker_langid(text_col: str) -> tuple[dict, dict]:
+    """The default language-ID stage (marker-word Column scorer) as two
+    levels: the ``_lid`` struct, then lang_detected + lang_score."""
+    return (
+        {"_lid": langid_best(F.col(text_col))},
+        {"lang_detected": F.col("_lid.lang"), "lang_score": F.col("_lid.score")},
+    )
+
+
+def _trained_langid(
     text_col: str,
     langid_model: dict | None,
     langid_kernel: str,
-    langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
-) -> DataFrame:
-    """THE language-ID stage dispatch, shared by the html chain
-    (quality_filter) and the text chain (quality_filter_text): emits
-    lang_detected + lang_score columns from either the marker-word
-    Column scorer (default) or the trained softmax (langid_model
-    supplied; lang_score = softmax probability). 'arrow' is the
-    measured corpus kernel (46x the Column fold); 'column' is the
-    zero-Python parity anchor; anything else raises — a typo would
-    otherwise silently pick the slow path.
+    langid_threshold: float,
+) -> tuple[Callable[[DataFrame], DataFrame], dict] | None:
+    """The opt-in trained language-ID stage, None without a model:
+    (frame -> frame with the ``_lid`` struct, the lang_detected +
+    lang_score level). It is built per call: the model is a dict and
+    the classifiers transform the frame. 'arrow' is the measured
+    corpus kernel (46x the Column fold); 'column' is the zero-Python
+    parity anchor; anything else raises — a typo would otherwise
+    silently pick the slow path.
 
     langid_threshold is the trained tier's UNKNOWN-language gate (the
     marker tier's MIN_SCORE analog; CCNet gates fastText lid at prob
@@ -142,12 +170,7 @@ def _langid_stage(
     'und' (and drop as langid:und downstream), with lang_score still
     carrying the rejected argmax probability for auditability."""
     if langid_model is None:
-        df = df.withColumn("_lid", langid_best(F.col(text_col)))
-        return (
-            df.withColumn("lang_detected", F.col("_lid.lang"))
-            .withColumn("lang_score", F.col("_lid.score"))
-            .drop("_lid")
-        )
+        return None
     from .operators.langid_classifier import (
         langid_classify,
         langid_classify_arrow,
@@ -162,18 +185,40 @@ def _langid_stage(
             f"unknown langid_kernel: {langid_kernel!r} "
             "(expected 'arrow' or 'column')"
         )
-    df = classify(df, langid_model, text_col=text_col, out_col="_lid")
+    lang = {
+        "lang_detected": F.when(
+            F.col("_lid.prob") >= F.lit(float(langid_threshold)),
+            F.col("_lid.lang"),
+        ).otherwise(F.lit(UNKNOWN_LANG)),
+        "lang_score": F.col("_lid.prob"),
+    }
     return (
-        df.withColumn(
-            "lang_detected",
-            F.when(
-                F.col("_lid.prob") >= F.lit(float(langid_threshold)),
-                F.col("_lid.lang"),
-            ).otherwise(F.lit(UNKNOWN_LANG)),
-        )
-        .withColumn("lang_score", F.col("_lid.prob"))
-        .drop("_lid")
+        lambda df: classify(df, langid_model, text_col=text_col, out_col="_lid"),
+        lang,
     )
+
+
+def _apply_levels(
+    df: DataFrame,
+    levels: tuple[dict, ...],
+    trained: tuple[Callable[[DataFrame], DataFrame], dict] | None,
+) -> DataFrame:
+    """One ``withColumns`` per dependency level, then drop the scratch
+    columns. A trained language-ID stage (_trained_langid) replaces the
+    level's ``_lid`` Column with its classifier and the marker scorer's
+    lang Columns with its own (same names, same positions)."""
+    classify, lang = trained or (None, None)
+    for level in levels:
+        if classify is not None and "_lid" in level:
+            rest = {k: v for k, v in level.items() if k != "_lid"}
+            if rest:
+                df = df.withColumns(rest)
+            df = classify(df)
+            continue
+        if lang is not None and "lang_detected" in level:
+            level = {**level, **lang}
+        df = df.withColumns(level)
+    return df.drop(*_SCRATCH_COLS)
 
 
 def quality_filter(
@@ -203,50 +248,34 @@ def quality_filter(
         rules = builtin_rules()
     # constant-fold the format gate at the driver: only html rules can
     # match an html corpus (enricher.rs:455-468 done at compile time)
-    rules = [r for r in rules if r.format == "html"]
-
-    # stage 0: ONE Python pass per document — structural parse + perplexity
-    # + simhash in a single Arrow-batched UDF (separate chained UDFs would
-    # double the Python worker pool and re-serialize the parsed struct)
-    df = df.withColumn(
-        "_enriched", enrich_col(F.col(html_col), ppl_model or default_ppl_model())
+    rules = tuple(r for r in rules if r.format == "html")
+    model = ppl_model or default_ppl_model()
+    # ppl_threshold's type is keyed too: 36 and 36.0 are equal keys but
+    # build different literals (and so different plans)
+    levels = _STAGES.get(
+        ("quality_filter", rules, model, target_lang, ppl_threshold,
+         type(ppl_threshold), html_col, __version__),
+        lambda: _html_levels(rules, model, target_lang, ppl_threshold, html_col),
     )
-    df = (
-        df.withColumn("parsed", F.col("_enriched.parsed"))
-        .withColumn("ppl", F.col("_enriched.ppl"))
-        .withColumn("simhash", F.col("_enriched.simhash"))
-        .drop("_enriched")
-    )
-    df = df.withColumn("extracted_text", F.col("parsed.normalized"))
+    return _apply_levels(df, levels, _trained_langid(
+        "extracted_text", langid_model, langid_kernel, langid_threshold
+    ))
 
-    # stage 1: template match (broadcast fold, enricher.rs:201-268 analog)
-    env = {
-        "url": F.col("url"),
-        "ts": F.col("warc_ts"),
-        "parsed": F.col("parsed"),
-    }
-    df = apply_match(df, rules, env, result_col="fingerprint")
 
-    # stage 2: language ID — marker-word Column exprs by default, or
-    # the trained softmax when a model is supplied (same dispatch as
-    # quality_filter_text; the verdict fold below reads the shared
-    # lang struct either way)
-    df = _langid_stage(
-        df, "extracted_text", langid_model, langid_kernel,
-        langid_threshold,
-    )
-
-    # stage 3: perplexity — already computed in the enrich pass (stage 0)
-
-    # stage 4: heuristics (pure Column exprs)
-    df = df.withColumn("stats", text_stats(F.col("extracted_text")))
-    df = df.withColumn("flags", gopher_quality_flags(F.col("stats")))
-
-    # stage 5: scrub (regexp_replace chain + counters)
-    df = df.withColumn("scrub", scrub_counts(F.col("extracted_text")))
-    df = df.withColumn("scrubbed_text", scrub_text(F.col("extracted_text")))
-
-    # verdict
+def _html_levels(
+    rules: tuple[FingerprintDefinition, ...],
+    model: NGramModel,
+    target_lang: str,
+    ppl_threshold: float,
+    html_col: str,
+) -> tuple[dict[str, Column], ...]:
+    """quality_filter's stages as projection levels. A column reads only
+    columns of earlier levels, and each level is the Project the
+    optimizer settles on for the chain, so the optimized plan is the
+    same as one built with a withColumn per column."""
+    text = F.col("extracted_text")
+    fold, kids, routing = match_levels(rules, _match_env(ts=True))
+    lid, lang = _marker_langid("extracted_text")
     keep, reason = _verdict(
         F.col("fingerprint"),
         F.struct(F.col("lang_detected").alias("lang"), F.col("lang_score").alias("score")),
@@ -255,35 +284,61 @@ def quality_filter(
         target_lang,
         ppl_threshold,
     )
-    df = df.withColumn("keep", keep).withColumn("drop_reason", reason)
-
     # lifecycle: parse failures are skips with warnings, never task
     # failures (enricher.rs:145-159 E_PARSE); skipped docs drop with an
     # explicit reason and carry the warning code
     parse_err = F.col("parsed.parse_error")
-    df = df.withColumn(
-        "warnings",
-        F.filter(
-            F.array(F.when(parse_err.isNotNull(), F.lit("E_PARSE"))),
-            lambda w: w.isNotNull(),
-        ),
+    return (
+        # stage 0: ONE Python pass per document — structural parse +
+        # perplexity + simhash in a single Arrow-batched UDF (separate
+        # chained UDFs would double the Python worker pool and
+        # re-serialize the parsed struct)
+        {"_enriched": enrich_col(F.col(html_col), model)},
+        # (stage 3, perplexity, is computed in the enrich pass)
+        {
+            "parsed": F.col("_enriched.parsed"),
+            "ppl": F.col("_enriched.ppl"),
+            "simhash": F.col("_enriched.simhash"),
+        },
+        # stage 1: template match (broadcast fold, enricher.rs:201-268
+        # analog), then the children, then their routing
+        {"extracted_text": F.col("parsed.normalized"), **fold},
+        kids,
+        # stage 2: language ID — marker-word Column exprs by default, or
+        # the trained softmax when a model is supplied (_apply_levels)
+        {**routing, **lid},
+        # stage 4: heuristics (pure Column exprs), stats then flags;
+        # stage 5: scrub (regexp_replace chain + counters)
+        {**lang, "stats": text_stats(text)},
+        {
+            "flags": gopher_quality_flags(F.col("stats")),
+            "scrub": scrub_counts(text),
+            "scrubbed_text": scrub_text(text),
+        },
+        # verdict
+        {
+            "keep": F.when(parse_err.isNotNull(), F.lit(False)).otherwise(keep),
+            "drop_reason": F.when(
+                parse_err.isNotNull(), F.lit("skip:E_PARSE")
+            ).otherwise(reason),
+            "warnings": F.filter(
+                F.array(F.when(parse_err.isNotNull(), F.lit("E_PARSE"))),
+                lambda w: w.isNotNull(),
+            ),
+            # tool_versions accumulation analog (enricher.rs:622-634)
+            "tool_versions": F.create_map(
+                F.lit("fingerprint_spark"), F.lit(__version__)
+            ),
+        },
     )
-    df = df.withColumn(
-        "keep", F.when(parse_err.isNotNull(), F.lit(False)).otherwise(F.col("keep"))
-    ).withColumn(
-        "drop_reason",
-        F.when(parse_err.isNotNull(), F.lit("skip:E_PARSE")).otherwise(
-            F.col("drop_reason")
-        ),
-    )
-    # tool_versions accumulation analog (enricher.rs:622-634)
-    from . import __version__
 
-    df = df.withColumn(
-        "tool_versions",
-        F.create_map(F.lit("fingerprint_spark"), F.lit(__version__)),
-    )
-    return df
+
+def _match_env(ts: bool) -> dict[str, Column]:
+    """The match fold's inputs; ``ts`` when the frame has warc_ts."""
+    env = {"url": F.col("url"), "ts": F.col("warc_ts"), "parsed": F.col("parsed")}
+    if not ts:
+        del env["ts"]
+    return env
 
 
 def quality_filter_text(
@@ -318,17 +373,27 @@ def quality_filter_text(
     sum-order ulp) — the fixed-point micro kernels are the bit-exact
     contract where that matters (the oracle row).
     """
+    model = (ppl_model or default_ppl_model()) if with_ppl else None
+    levels = _STAGES.get(
+        ("quality_filter_text", text_col, target_lang, ppl_threshold,
+         type(ppl_threshold), model, __version__),
+        lambda: _text_levels(text_col, target_lang, ppl_threshold, model),
+    )
+    return _apply_levels(df, levels, _trained_langid(
+        text_col, langid_model, langid_kernel, langid_threshold
+    ))
+
+
+def _text_levels(
+    text_col: str,
+    target_lang: str,
+    ppl_threshold: float,
+    ppl_model: NGramModel | None,
+) -> tuple[dict[str, Column], ...]:
+    """quality_filter_text's stages as projection levels (see
+    _html_levels); ``ppl_model`` None leaves the perplexity stage out."""
     text = F.col(text_col)
-    df = _langid_stage(df, text_col, langid_model, langid_kernel,
-                       langid_threshold)
-    df = df.withColumn("stats", text_stats(text))
-    df = df.withColumn("flags", gopher_quality_flags(F.col("stats")))
-    df = df.withColumn("scrub", scrub_counts(text))
-    df = df.withColumn("scrubbed_text", scrub_text(text))
-    if with_ppl:
-        df = df.withColumn(
-            "ppl", perplexity_col(text, ppl_model or default_ppl_model())
-        )
+    lid, lang = _marker_langid(text_col)
     heur_fail = F.coalesce(
         *[F.when(~F.col("flags")[n], F.lit(n)) for n in HEURISTIC_FLAGS],
         F.lit(None).cast("string"),
@@ -342,7 +407,13 @@ def quality_filter_text(
             F.concat(F.lit("langid:"), F.col("lang_detected")),
         ),
     ]
-    if with_ppl:
+    scored = {
+        "flags": gopher_quality_flags(F.col("stats")),
+        "scrub": scrub_counts(text),
+        "scrubbed_text": scrub_text(text),
+    }
+    if ppl_model is not None:
+        scored["ppl"] = perplexity_col(text, ppl_model)
         clauses.append((F.col("ppl") > ppl_threshold, F.lit("perplexity")))
     clauses.append(
         (heur_fail.isNotNull(), F.concat(F.lit("heuristic:"), heur_fail))
@@ -350,7 +421,12 @@ def quality_filter_text(
     reason = F.when(*clauses[0])
     for cond, val in clauses[1:]:
         reason = reason.when(cond, val)
-    return df.withColumn("keep", reason.isNull()).withColumn("drop_reason", reason)
+    return (
+        lid,
+        {**lang, "stats": text_stats(text)},
+        scored,
+        {"keep": reason.isNull(), "drop_reason": reason},
+    )
 
 
 def revalidate(
@@ -367,11 +443,12 @@ def revalidate(
     (asserted in tests): at 100 TB this is the difference between
     re-reading stored structs and re-parsing the crawl.
     """
-    rules = [r for r in rules if r.format == "html"]
-    env = {
-        "url": F.col("url"),
-        "ts": F.col("warc_ts") if "warc_ts" in parsed_df.columns else None,
-        "parsed": F.col("parsed"),
-    }
-    env = {k: v for k, v in env.items() if v is not None}
-    return apply_match(parsed_df, rules, env, result_col=result_col)
+    rules = tuple(r for r in rules if r.format == "html")
+    has_ts = "warc_ts" in parsed_df.columns
+    levels = _STAGES.get(
+        ("revalidate", rules, has_ts, result_col, __version__),
+        lambda: match_levels(rules, _match_env(has_ts), result_col),
+    )
+    for level in levels:
+        parsed_df = parsed_df.withColumns(level)
+    return parsed_df

@@ -109,6 +109,23 @@ def test_arbitrary_schema_pipeline_checkpoints(spark, corpus, tmp_path):
         assert rec["n_buckets"] == 2 and rec["key_col"] == "url"
 
 
+def test_read_output_reads_only_committed_buckets(spark, corpus, tmp_path):
+    """A bucket directory the manifest never committed (a write killed
+    before its manifest append) is not read, and the committed buckets
+    come back without a ``bucket`` partition column."""
+    run = CheckpointedRun(str(tmp_path / "out"), n_buckets=3)
+    narrow = lambda df: df.select("url", F.length("text").alias("n"))  # noqa: E731
+    s = run.run(corpus, narrow, max_buckets=2)
+    committed = sum(
+        spark.read.parquet(run.bucket_path(b)).count()
+        for b in s["processed_buckets"]
+    )
+    narrow(corpus).write.parquet(run.bucket_path(2))  # stray, uncommitted
+    out = run.read_output(spark)
+    assert out.columns == ["url", "n"]
+    assert out.count() == committed < N
+
+
 def test_observe_metrics_single_pass(spark, corpus):
     out, obs = observe_pipeline(quality_filter(corpus))
     out.write.mode("overwrite").format("noop").save()
