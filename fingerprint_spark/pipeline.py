@@ -136,7 +136,7 @@ DEFAULT_LANGID_THRESHOLD = 0.5  # CCNet's fastText-prob gate
 
 # the stage-Column memo (module docstring: driver-side build shape)
 _STAGES = ContextCache(maxsize=8)
-_SCRATCH_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
+_HELPER_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
 
 
 def _marker_langid(text_col: str) -> tuple[dict, dict]:
@@ -203,7 +203,7 @@ def _apply_levels(
     levels: tuple[dict, ...],
     trained: tuple[Callable[[DataFrame], DataFrame], dict] | None,
 ) -> DataFrame:
-    """One ``withColumns`` per dependency level, then drop the scratch
+    """One ``withColumns`` per dependency level, then drop the helper
     columns. A trained language-ID stage (_trained_langid) replaces the
     level's ``_lid`` Column with its classifier and the marker scorer's
     lang Columns with its own (same names, same positions)."""
@@ -218,7 +218,7 @@ def _apply_levels(
         if lang is not None and "lang_detected" in level:
             level = {**level, **lang}
         df = df.withColumns(level)
-    return df.drop(*_SCRATCH_COLS)
+    return df.drop(*_HELPER_COLS)
 
 
 def quality_filter(

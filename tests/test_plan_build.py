@@ -164,7 +164,6 @@ def test_context_cache_under_threads(spark):
 _RESTART_SCRIPT = """
 import sys
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
 from fingerprint_spark.corpus import generate_corpus
 from fingerprint_spark.pipeline import quality_filter
 from fingerprint_spark.session import get_spark
