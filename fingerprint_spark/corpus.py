@@ -35,7 +35,6 @@ from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 SEED = 42
 
@@ -311,16 +310,3 @@ def generate_corpus(
     if not with_labels:
         df = df.select(*INPUT_COLS)
     return df
-
-
-def labels_df(spark: SparkSession, n_docs: int, partitions: int | None = None) -> DataFrame:
-    """Ground-truth (url, page_class, expected_keep) — the 'reference labels'."""
-    return generate_corpus(spark, n_docs, partitions, with_labels=True).select(
-        "url", "page_class", "expected_keep"
-    )
-
-
-def write_corpus(spark: SparkSession, n_docs: int, path: str, partitions: int | None = None) -> None:
-    generate_corpus(spark, n_docs, partitions, with_labels=True).withColumn(
-        "host", F.regexp_extract("url", r"https://([^/]+)/", 1)
-    ).write.mode("overwrite").parquet(path)

@@ -606,8 +606,9 @@ def q_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit = sign of the distinct-shingle bit sum). Emitted TWICE: from
     pure Columns and from the Arrow-batched pandas UDF, so the UDF
     operator itself is under the hard signal (the round-4 winnow
-    pattern applied to sketches; the fused xxhash-style sketches_col
-    stays the 100 TB hot path, pytest + plan-checked)."""
+    pattern applied to sketches; the dedup operators' blake2b
+    simhash64_col / minhash_signature_col are pytest-pinned against
+    their reference twins)."""
     from .functions.hashing import (
         sketch_md5_udf_col,
         sketch_minhash_col,
@@ -961,14 +962,14 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
       Arrow pass. Integer sums are order-independent, so the total is
       bit-identical to the former explode+join+groupBy plan while
       shuffling nothing (r6: that plan moved one row per gram, twice).
-    - float twin: the same fused Arrow pass also emits the float score
-      (functions/perplexity._ppl_exact_udf); `udf_agrees` pins
-      |udf - exact| <= 1e-6 INSIDE the oracle row. Both operands come
-      from that one pass over the same JVM-built string, so the row
-      pins the fixed-point contract and the float sum, not the
-      production gates. Those — score_text_fast_fn inside
-      quality_filter's enrich UDF and perplexity_col in
-      quality_filter_text — are pinned bit-identical to score_text by
+    - production float scorer: the same Arrow pass also scores the RAW
+      text with functions/perplexity.score_text_fast_fn — the scorer
+      quality_filter's enrich UDF and quality_filter_text's
+      perplexity_col run — and `udf_agrees` pins |udf - exact| <= 1e-6
+      INSIDE the oracle row. The two operands are independent: the
+      float one lowers and truncates the raw text in Python, the exact
+      one sums over the JVM-built padded string. score_text_fast_fn is
+      also pinned bit-identical to the score_text reference by
       tests/test_r06_optimizations.py.
 
     Reference analog: the n-gram perplexity quality signal in the
@@ -980,15 +981,16 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro, backoff_micro, model = _ppl_micro_model()
     base = _fan_out(_doc(spark, sf_dir).select("doc_id", "text"))
     # pad/lower/truncate JVM-side (unchanged tokenization contract),
-    # then ONE fused Arrow pass computes the exact integer total, the
-    # gram count and the float production score per document — the
-    # former explode -> broadcast join -> groupBy -> join-back plan
+    # then ONE fused Arrow pass computes the exact integer total and the
+    # gram count, and scores the raw text with the production scorer —
+    # the former explode -> broadcast join -> groupBy -> join-back plan
     # shuffled one row per gram (~len(text) rows/doc) twice; this plan
     # has ZERO exchanges (guide §2.4). Integer sums are order-
     # independent, so logp_micro_total is bit-identical to the join
     # path's sum of the SAME per-gram integers.
     padded = base.select(
         "doc_id",
+        "text",
         F.concat(
             F.lit("\x02" * (_PPL_ORDER - 1)),
             F.substring(
@@ -1000,7 +1002,11 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = padded.select(
         "doc_id",
         ppl_exact_col(
-            F.col("__s"), model, tuple(sorted(micro.items())), backoff_micro
+            F.col("__s"),
+            F.col("text"),
+            model,
+            tuple(sorted(micro.items())),
+            backoff_micro,
         ).alias("__r"),
     )
     exact_ppl = F.exp(

@@ -6,11 +6,21 @@ canonical encoding is a fixed-field-order struct serialized with
 ``to_json`` and hashed JVM-side (md5/xxhash64) — same determinism
 guarantee, zero Python.
 
-SimHash/MinHash (the north_star's near-dup identity) are Arrow-batched
-numpy UDFs over word shingles; the per-doc output is a single int64
-(SimHash) or array<long> signature (MinHash), so the expensive text never
-shuffles — only the compact sketches do. At 100 TB that is the difference
-between shuffling ~100 TB and shuffling ~100 GB.
+SimHash, MinHash and the jaccard shingle sets (the north_star's near-dup
+identity) share one Arrow-batch kernel, ``shingle_hashes_batch``: one
+blake2b pass over the unique words of the whole batch, then a positional
+combine per word k-shingle. Each production UDF maps the kernel's
+per-document uint64 array to a single int64 (SimHash), an array<long>
+signature (MinHash) or a sorted distinct array<long> (jaccard), so the
+expensive text never shuffles — only the compact sketches do. At 100 TB
+that is the difference between shuffling ~100 TB and shuffling ~100 GB.
+``_shingle_hashes64``, ``simhash64_py`` and ``minhash_signature_py`` are
+the per-document pure-Python reference twins the kernel is pinned
+against (tests/test_r06_optimizations.py).
+
+The md5 sketch and winnow paths at the end of the module are the
+portable contracts: an external engine (the DuckDB oracle) recomputes
+them exactly.
 """
 
 from __future__ import annotations
@@ -26,25 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..caching import context_cached
-
-_FNV_OFFSET = 0xCBF29CE484222325
-_FNV_PRIME = 0x100000001B3
-_MASK64 = 0xFFFFFFFFFFFFFFFF
-
-
-def fnv1a64(data: bytes) -> int:
-    h = _FNV_OFFSET
-    for b in data:
-        h = ((h ^ b) * _FNV_PRIME) & _MASK64
-    return h
-
-
-def _shingles(text: str, k: int) -> list[str]:
-    words = (text or "").lower().split()
-    if len(words) < k:
-        return [" ".join(words)] if words else []
-    return [" ".join(words[i: i + k]) for i in range(len(words) - k + 1)]
-
 
 # distinct odd multipliers for position-dependent shingle combination
 _COMB = (
@@ -109,6 +100,43 @@ def _shingle_hashes64(text: str, k: int) -> "np.ndarray":
     return out
 
 
+def _combine(H: "np.ndarray", k: int) -> "np.ndarray":
+    """Positional combine of every k consecutive word hashes in H: one
+    uint64 per window start, len(H) - k + 1 of them (array-typed, so
+    the uint64 wraparound is the intended modular arithmetic)."""
+    n = len(H) - k + 1
+    out = H[:n] * _COMB[0]
+    for i in range(1, k):
+        out = out ^ _rotl64(H[i: i + n], (21 * i) % 63 + 1) * _COMB[i % 3]
+    return out
+
+
+def shingle_hashes_batch(docs: list[list[str]], k: int) -> list["np.ndarray"]:
+    """The production shingle-hash kernel: per document of an Arrow
+    batch (given as its word list), the uint64 hash of every word
+    k-shingle in order — bit-identical to _shingle_hashes64 on the same
+    words (pinned by test_r06_optimizations). A document shorter than k
+    words is one shingle (empty: none).
+
+    All words of the batch go through ONE blake2b pass over their
+    unique set (Zipf: uniques ≪ occurrences) and one batch-wide
+    positional combine; a shingle that would cross a document boundary
+    is never selected, because each document slices only its own
+    n_words - k + 1 positions."""
+    hflat = _word_hashes64([w for words in docs for w in words])
+    comb = _combine(hflat, k) if len(hflat) >= k else hflat[:0]
+    out = []
+    off = 0
+    for words in docs:
+        n = len(words)
+        if n >= k:
+            out.append(comb[off: off + n - k + 1])
+        else:
+            out.append(_combine(hflat[off: off + n], n))
+        off += n
+    return out
+
+
 _WS_ASCII = None  # compiled lazily (re import stays function-local)
 
 
@@ -146,70 +174,22 @@ def _jaccard_shingle_udf(k: int):
     consumer only compares shingle sets / counts, and any deterministic
     64-bit hash preserves those up to ~2^-64 collisions (the same
     contract the xxhash64 fold already carried vs the oracle's string
-    shingles). Word hashing batches ALL unique words of an Arrow batch
-    through ONE blake2b pass (Zipf: uniques ≪ occurrences), then the
-    k-wise positional combine and per-doc distinct run in numpy."""
+    shingles). The shingle hashes come from shingle_hashes_batch over
+    the JVM fold's tokenization (_jvm_words); the per-doc distinct runs
+    in numpy."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
-        docs: list[list[str] | None] = []
-        flat: list[str] = []
-        for t in texts:
-            if t is None:
-                docs.append(None)
-                continue
-            words = _jvm_words(t.lower())
-            docs.append(words)
-            flat.extend(words)
-        if flat:
-            uniq, inv = np.unique(
-                np.array(flat, dtype=object), return_inverse=True
-            )
-            blake2b = hashlib.blake2b
-            uh = np.fromiter(
-                (
-                    int.from_bytes(
-                        blake2b(w.encode("utf-8"), digest_size=8).digest(),
-                        "little",
-                    )
-                    for w in uniq
-                ),
-                dtype=np.uint64, count=len(uniq),
-            )
-            hflat = uh[inv]
-        else:
-            hflat = np.empty(0, dtype=np.uint64)
-        # positional combine over the whole batch at once; shingles that
-        # would cross a document boundary are simply never selected
-        # because each doc slices only its own n_words - k + 1 positions
-        n_flat = len(hflat)
-        if n_flat >= k:
-            comb = hflat[: n_flat - k + 1] * _COMB[0]
-            for i in range(1, k):
-                comb = comb ^ _rotl64(
-                    hflat[i: n_flat - k + 1 + i], (21 * i) % 63 + 1
-                ) * _COMB[i % 3]
-        else:
-            comb = np.empty(0, dtype=np.uint64)
-        out: list[list[int] | None] = []
-        off = 0
-        for words in docs:
-            if words is None:
-                out.append([_NULL_SHINGLE])
-                continue
-            n = len(words)
-            if n < k:
-                h = hflat[off: off + 1] * _COMB[0]
-                for i in range(1, n):
-                    h = h ^ _rotl64(
-                        hflat[off + i: off + i + 1], (21 * i) % 63 + 1
-                    ) * _COMB[i % 3]
-                out.append(h.view(np.int64).tolist())
-            else:
-                sh = np.unique(comb[off: off + n - k + 1])
-                out.append(sh.view(np.int64).tolist())
-            off += n
-        return pd.Series(out)
+        hashes = shingle_hashes_batch(
+            [[] if t is None else _jvm_words(t.lower()) for t in texts], k
+        )
+        return pd.Series(
+            [
+                [_NULL_SHINGLE] if t is None
+                else np.unique(h).view(np.int64).tolist()
+                for t, h in zip(texts, hashes)
+            ]
+        )
 
     return udf
 
@@ -269,76 +249,6 @@ def minhash_signature_py(text: str, num_hashes: int = 64, k: int = 3) -> list[in
     return [int(x) for x in sig]
 
 
-@context_cached(maxsize=2)
-def _simhash_udf(k: int):
-    @F.pandas_udf(T.LongType())
-    def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([simhash64_py(t, k) for t in texts], dtype="int64")
-
-    return udf
-
-
-@context_cached(maxsize=2)
-def _minhash_udf(num_hashes: int, k: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([minhash_signature_py(t, num_hashes, k) for t in texts])
-
-    return udf
-
-
-def simhash64_col(text: Column, k: int = 3) -> Column:
-    return _simhash_udf(k)(text)
-
-
-def minhash_signature_col(text: Column, num_hashes: int = 64, k: int = 3) -> Column:
-    return _minhash_udf(num_hashes, k)(text)
-
-
-def simhash64_batch_py(texts, k: int = 3) -> list[int]:
-    """Batch twin of simhash64_py — BIT-IDENTICAL outputs (pinned by
-    test_r06_optimizations): one blake2b pass over the unique words of
-    the whole batch (Zipf: uniques ≪ occurrences) instead of per
-    document, then the identical positional combine + bit-majority per
-    doc. Used by the enrich UDF (the flagship chain's per-doc simhash)."""
-    docs: list[list[str] | None] = []
-    flat: list[str] = []
-    for t in texts:
-        words = (t or "").lower().split()
-        docs.append(words)
-        flat.extend(words)
-    if flat:
-        hflat = _word_hashes64(flat)
-    else:
-        hflat = np.empty(0, dtype=np.uint64)
-    n_flat = len(hflat)
-    if n_flat >= k:
-        comb = hflat[: n_flat - k + 1] * _COMB[0]
-        for i in range(1, k):
-            comb = comb ^ _rotl64(
-                hflat[i: n_flat - k + 1 + i], (21 * i) % 63 + 1
-            ) * _COMB[i % 3]
-    else:
-        comb = np.empty(0, dtype=np.uint64)
-    out: list[int] = []
-    off = 0
-    for words in docs:
-        n = len(words)
-        if n == 0:
-            out.append(0)
-        elif n < k:
-            h = hflat[off: off + 1] * _COMB[0]
-            for i in range(1, n):
-                h = h ^ _rotl64(
-                    hflat[off + i: off + i + 1], (21 * i) % 63 + 1
-                ) * _COMB[i % 3]
-            out.append(_simhash_from_hashes(h))
-        else:
-            out.append(_simhash_from_hashes(comb[off: off + n - k + 1]))
-        off += n
-    return out
-
-
 def _simhash_from_hashes(h: "np.ndarray") -> int:
     if h.size == 0:
         return 0
@@ -359,33 +269,52 @@ def _minhash_from_hashes(h: "np.ndarray", num_hashes: int) -> list[int]:
     return [int(x) for x in sig]
 
 
-@context_cached(maxsize=2)
-def _sketches_udf(num_hashes: int, k: int):
-    """Fused simhash + minhash: ONE shingle-hash pass per doc (separate
-    UDF columns each recompute the shingles)."""
+def _batch_shingle_hashes(texts, k: int) -> list["np.ndarray"]:
+    """shingle_hashes_batch over the reference twins' tokenization:
+    lowercased, Python-whitespace-split words; NULL text is empty."""
+    return shingle_hashes_batch([(t or "").lower().split() for t in texts], k)
 
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("simhash", T.LongType()),
-                T.StructField("minhash", T.ArrayType(T.LongType())),
-            ]
-        )
-    )
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        sims, sigs = [], []
-        for t in texts:
-            h = _shingle_hashes64(t or "", k)
-            sims.append(_simhash_from_hashes(h))
-            sigs.append(_minhash_from_hashes(h, num_hashes))
-        return pd.DataFrame({"simhash": sims, "minhash": sigs})
+
+def simhash64_batch_py(texts, k: int = 3) -> list[int]:
+    """simhash64_py over a whole batch, BIT-IDENTICAL per doc (pinned by
+    test_r06_optimizations): the shared batch kernel, then the
+    bit-majority per doc. Used by simhash64_col and the enrich UDF (the
+    flagship chain's per-doc simhash)."""
+    return [_simhash_from_hashes(h) for h in _batch_shingle_hashes(texts, k)]
+
+
+@context_cached(maxsize=2)
+def _simhash_udf(k: int):
+    @F.pandas_udf(T.LongType())
+    def udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(simhash64_batch_py(texts, k), dtype="int64")
 
     return udf
 
 
-def sketches_col(text: Column, num_hashes: int = 64, k: int = 3) -> Column:
-    """struct(simhash, minhash) from one shingle pass."""
-    return _sketches_udf(num_hashes, k)(text)
+@context_cached(maxsize=2)
+def _minhash_udf(num_hashes: int, k: int):
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                _minhash_from_hashes(h, num_hashes)
+                for h in _batch_shingle_hashes(texts, k)
+            ]
+        )
+
+    return udf
+
+
+def simhash64_col(text: Column, k: int = 3) -> Column:
+    """text -> 64-bit SimHash (simhash64_py per doc, batch kernel)."""
+    return _simhash_udf(k)(text)
+
+
+def minhash_signature_col(text: Column, num_hashes: int = 64, k: int = 3) -> Column:
+    """text -> MinHash signature (minhash_signature_py per doc, batch
+    kernel)."""
+    return _minhash_udf(num_hashes, k)(text)
 
 
 def content_hash_bytes_blake3(
@@ -486,94 +415,19 @@ def canonical_text_col(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# winnowing document fingerprints (rolling hash) — the MOSS construction
+# winnowing document fingerprints — the MOSS construction
 # (Schleimer/Wilkerson/Aiken, "Winnowing: Local Algorithms for Document
-# Fingerprinting", SIGMOD 2003 — public)
+# Fingerprinting", SIGMOD 2003 — public). The k-gram hash is the first
+# 15 hex digits of md5, so an external engine (the DuckDB oracle) can
+# recompute the fingerprint SET exactly. The tie rule of classic
+# winnowing picks a POSITION; the selected VALUE set is
+# tie-rule-independent (every selected value is a window minimum), so
+# set aggregates over window minima are the portable contract. The
+# winnow query runs the pure-Column form (winnow_gram_hashes_col +
+# winnow_minima_from_hashes) and the Arrow UDF form side by side under
+# the oracle. Reference analog: content identity,
+# src/dsl/content_hash.rs:7-69.
 # ---------------------------------------------------------------------------
-
-_RK_BASE = np.uint64(1000003)
-_RK_MASK = np.uint64((1 << 61) - 1)  # cheap modulus via mask (2^61-1 shape)
-
-
-def winnow_fingerprints_py(
-    text: str, k: int = 8, window: int = 4
-) -> list[int]:
-    """Winnowed rolling-hash fingerprints: Rabin-Karp hashes of every
-    char k-gram (canonicalized text), then the minimum hash of each
-    w-length window (rightmost tie), deduplicated in first-seen order.
-
-    Guarantee (the winnowing property): any shared substring of length
-    >= k + window - 1 between two documents shares at least one
-    fingerprint. Fully vectorized: prefix-product-free rolling via
-    H[i+1] = (H[i]*b + c) computed as a cumulative polynomial with
-    precomputed powers; window minima via stride tricks."""
-    s = " ".join((text or "").lower().split())
-    if len(s) < k:
-        return []
-    codes = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-    n = len(codes)
-    if n < k:
-        return []
-    # polynomial k-gram hashes: h_i = sum codes[i+j] * b^(k-1-j)  (mod 2^64
-    # wraparound — collision-adequate for fingerprinting)
-    # powers computed in Python ints (explicit 2^64 wraparound — numpy
-    # warns on scalar uint64 overflow even though wraparound is intended)
-    pw, plist = 1, []
-    for _ in range(k):
-        plist.append(pw)
-        pw = (pw * int(_RK_BASE)) & _MASK64
-    powers = np.array(list(reversed(plist)), dtype=np.uint64)
-    windows = np.lib.stride_tricks.sliding_window_view(codes, k)
-    h = (windows * powers[None, :]).sum(axis=1, dtype=np.uint64)
-    if h.size < window:
-        sel = np.array([int(h.min())], dtype=np.uint64)
-    else:
-        wv = np.lib.stride_tricks.sliding_window_view(h, window)
-        mins = wv.min(axis=1)
-        # rightmost minimum per window (the robust-winnowing tie rule):
-        # argmax over reversed equality
-        eq = wv == mins[:, None]
-        idx = window - 1 - np.argmax(eq[:, ::-1], axis=1)
-        pos = np.arange(len(mins)) + idx
-        keep = np.ones(len(pos), dtype=bool)
-        keep[1:] = pos[1:] != pos[:-1]
-        sel = wv[np.arange(len(mins)), idx][keep]
-    out: list[int] = []
-    seen = set()
-    for v in sel.tolist():
-        iv = int(v) - (1 << 64) if int(v) >= (1 << 63) else int(v)
-        if iv not in seen:
-            seen.add(iv)
-            out.append(iv)
-    return out
-
-
-@context_cached(maxsize=2)
-def _winnow_udf(k: int, window: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([winnow_fingerprints_py(t, k, window) for t in texts])
-
-    return udf
-
-
-def winnow_fingerprints_col(text: Column, k: int = 8, window: int = 4) -> Column:
-    """array<long> winnowed fingerprints per doc — near-dup / substring
-    containment via array_intersect or explode+join on the (compact)
-    fingerprint sets; the text itself never shuffles."""
-    return _winnow_udf(k, window)(text)
-
-
-# -- portable (md5-contract) winnow: same MOSS window-minima algorithm,
-# but the k-gram hash is the first 15 hex digits of md5 so an external
-# engine (the DuckDB oracle) can recompute the fingerprint SET exactly.
-# The tie rule of classic winnowing picks a POSITION; the selected
-# VALUE set is tie-rule-independent (every selected value is a window
-# minimum), so set aggregates over window minima are the portable
-# contract. The Rabin-Karp numpy version above stays the 100 TB hot
-# path (one vectorized pass, no per-gram digest); this one exists to
-# put the operator under the driver's hard oracle signal (r3 VERDICT
-# #1). Reference analog: content identity, src/dsl/content_hash.rs:7-69.
 
 
 def _ascii_ws_normalize(text: str) -> str:
@@ -624,18 +478,18 @@ def sketch_md5_py(
     text: str, seeds: tuple[int, ...] = (0, 7, 15), k: int = 3
 ) -> tuple[int, list[int]]:
     """Portable (md5-contract) SimHash16 + MinHash over word k-shingles
-    — same role as the fused xxhash-style ``sketches_col`` (the 100 TB
-    hot path) but recomputable in any engine with md5, so the sketch
-    operator sits under the driver's hard oracle signal (the winnow
-    pattern applied to near-dup identity). Contract: words =
-    whitespace-split lowercased text; shingles = k-word grams (the
+    — same role as simhash64_col / minhash_signature_col (the dedup
+    operators' blake2b path) but recomputable in any engine with md5,
+    so the sketch operator sits under the driver's hard oracle signal
+    (the winnow pattern applied to near-dup identity). Contract: words
+    = whitespace-split lowercased text; shingles = k-word grams (the
     whole text as one shingle when shorter); hash_i(s) = first 15 hex
     digits of md5('<i>:' + s); minhash_i = min over shingles;
     simhash16 bit b set iff sum over DISTINCT shingles of
     (bit_b(hash_sim(s)) ? +1 : -1) > 0 with hash_sim seeded 'sim'.
     Only the EMITTED seeds are computed (each (seed, shingle) pair is
-    one md5 digest — the full 16/64-seed signature is sketches_col's
-    vectorized job, not this contract's)."""
+    one md5 digest — the full 16/64-seed signature is
+    minhash_signature_col's vectorized job, not this contract's)."""
     words = _ascii_ws_normalize(text).split(" ") if text else []
     words = [w for w in words if w]
     if len(words) >= k:

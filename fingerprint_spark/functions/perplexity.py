@@ -17,6 +17,7 @@ import math
 from dataclasses import dataclass
 from functools import lru_cache
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column
@@ -191,56 +192,72 @@ def score_text(model_dict: dict[str, float], order: int, backoff: float, text: s
     return math.exp(-total / n)
 
 
+def _ascii_lut(table: dict, default, dtype, order: int) -> "np.ndarray":
+    """Dense lookup table over every pure-ASCII gram of length order:
+    the gram's chars pack into a base-128 int (see _ascii_gram_keys),
+    grams absent from ``table`` read ``default``. 128^3 entries at the
+    default order — 16 MiB of int64/float64, so callers build it lazily
+    on first use (on the worker), not when the UDF is defined."""
+    lut = np.full(128 ** order, default, dtype=dtype)
+    for g, v in table.items():
+        bs = g.encode("utf-8", errors="ignore")
+        if len(bs) == order and max(bs) < 128:
+            idx = 0
+            for c in bs:
+                idx = idx * 128 + c
+            lut[idx] = v
+    return lut
+
+
+def _ascii_gram_keys(b: bytes, order: int) -> "np.ndarray":
+    """_ascii_lut index of every gram of an ASCII byte string, in
+    order (len(b) - order + 1 of them)."""
+    arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    n = len(arr) - order + 1
+    keys = arr[:n] * (128 ** (order - 1))
+    for j in range(1, order):
+        keys = keys + arr[j: j + n] * (128 ** (order - 1 - j))
+    return keys
+
+
 @context_cached(maxsize=4)
 def _ppl_exact_udf(model: NGramModel, micro_items: tuple, backoff_micro: int):
-    """Fused fixed-point + float scorer over the ALREADY padded/lowered/
+    """Fused fixed-point scorer over the ALREADY padded/lowered/
     truncated string (built JVM-side so both engines share one
     tokenization). Replaces the explode -> broadcast join -> groupBy ->
     join-back plan of the exact path (guide §2.4 "remove shuffles
-    outright"): per document the integer micro-logp total, the gram
-    count and the float score are all derivable in ONE narrow pass, so
-    the (doc_id, gram) shuffle — ~(len(text) rows/doc) — disappears.
+    outright"): per document the integer micro-logp total and the gram
+    count are derivable in ONE narrow pass, so the (doc_id, gram)
+    shuffle — ~(len(text) rows/doc) — disappears.
 
-    Fast path: for pure-ASCII batches the trigram ids pack into
-    base-128 ints and both lookups become numpy gathers over 16 MiB
-    LUTs (built once per Python worker, amortized via the factory
-    memo + worker reuse). Non-ASCII documents fall back to the exact dict
-    loop. Integer sums are order-independent, so the fixed-point
-    contract is bit-identical to the join path by construction."""
-    import numpy as np
+    Fast path: for pure-ASCII strings the lookup is a numpy gather over
+    an _ascii_lut (built once per task); non-ASCII strings fall back to
+    the exact dict loop. Integer sums are order-independent, so the
+    fixed-point contract is bit-identical to the join path by
+    construction.
 
+    The same pass also scores the RAW text with score_text_fast_fn, the
+    production float scorer, as ``ppl_udf``: an independent operand
+    (Python-side lowering and truncation of the raw text, against the
+    JVM-built padded string) for the oracle row's agreement check."""
     order = model.order
     micro = dict(micro_items)
-    flogp = model.as_dict()
-    fbackoff = model.backoff_logp
     luts: dict[str, "np.ndarray"] = {}
 
-    def _get_luts():
-        if not luts:
-            dim = 128 ** order
-            ilut = np.full(dim, backoff_micro, dtype=np.int64)
-            flut = np.full(dim, fbackoff, dtype=np.float64)
-            for g, v in micro.items():
-                bs = g.encode("utf-8", errors="ignore")
-                if len(bs) == order and max(bs) < 128:
-                    idx = 0
-                    for c in bs:
-                        idx = idx * 128 + c
-                    ilut[idx] = v
-                    flut[idx] = flogp[g]
-            luts["i"] = ilut
-            luts["f"] = flut
-        return luts["i"], luts["f"]
+    def _lut():
+        if "i" not in luts:
+            luts["i"] = _ascii_lut(micro, backoff_micro, np.int64, order)
+        return luts["i"]
 
-    def _one_slow(s: str) -> tuple[int, int, float]:
-        total_i = 0
-        total_f = 0.0
-        n = len(s) - order + 1
-        for i in range(order - 1, len(s)):
-            g = s[i - order + 1: i + 1]
-            total_i += micro.get(g, backoff_micro)
-            total_f += flogp.get(g, fbackoff)
-        return total_i, n, math.exp(-total_f / n)
+    def _total(s: str) -> int:
+        try:
+            b = s.encode("ascii")
+        except UnicodeEncodeError:
+            return sum(
+                micro.get(s[i - order + 1: i + 1], backoff_micro)
+                for i in range(order - 1, len(s))
+            )
+        return int(_lut()[_ascii_gram_keys(b, order)].sum())
 
     @F.pandas_udf(
         T.StructType(
@@ -251,70 +268,50 @@ def _ppl_exact_udf(model: NGramModel, micro_items: tuple, backoff_micro: int):
             ]
         )
     )
-    def udf(padded: pd.Series) -> pd.DataFrame:
-        ilut, flut = _get_luts()
-        totals, ns, ppls = [], [], []
-        for s in padded:
-            try:
-                b = s.encode("ascii")
-            except UnicodeEncodeError:
-                ti, n, p = _one_slow(s)
-            else:
-                arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                n_keys = len(arr) - order + 1
-                keys = arr[:n_keys] * (128 ** (order - 1))
-                for j in range(1, order):
-                    keys = keys + arr[j: j + n_keys] * (
-                        128 ** (order - 1 - j)
-                    )
-                ti = int(ilut[keys].sum())
-                n = len(keys)
-                p = math.exp(-float(flut[keys].sum()) / n)
-            totals.append(ti)
-            ns.append(n)
-            ppls.append(p)
+    def udf(padded: pd.Series, text: pd.Series) -> pd.DataFrame:
+        score = score_text_fast_fn(model)
         return pd.DataFrame(
-            {"logp_micro_total": totals, "n_grams": ns, "ppl_udf": ppls}
+            {
+                "logp_micro_total": [_total(s) for s in padded],
+                "n_grams": [len(s) - order + 1 for s in padded],
+                "ppl_udf": [score(t) for t in text],
+            }
         )
 
     return udf
 
 
 def ppl_exact_col(
-    padded: Column, model: NGramModel, micro_items: tuple, backoff_micro: int
+    padded: Column,
+    text: Column,
+    model: NGramModel,
+    micro_items: tuple,
+    backoff_micro: int,
 ) -> Column:
-    """padded/lowered string -> struct(logp_micro_total, n_grams,
-    ppl_udf) under the broadcast fixed-point model (see _ppl_exact_udf)."""
-    return _ppl_exact_udf(model, micro_items, backoff_micro)(padded)
+    """(padded/lowered string, raw text) -> struct(logp_micro_total,
+    n_grams, ppl_udf) under the broadcast fixed-point model (see
+    _ppl_exact_udf)."""
+    return _ppl_exact_udf(model, micro_items, backoff_micro)(padded, text)
 
 
 @lru_cache(maxsize=4)
 def score_text_fast_fn(model: NGramModel):
-    """Per-text scorer BIT-IDENTICAL to score_text(model...) but ~6x
-    faster on ASCII text (r6): trigram ids pack into base-128 ints and
-    the logp lookup becomes a numpy gather over a float64 LUT, summed
-    with cumsum — numpy's cumsum accumulates SEQUENTIALLY, so the float
-    adds happen in the same order with the same IEEE ops as the Python
-    loop (verified bit-exact over the full sf0.1 corpus + fixtures in
+    """The production float scorer: BIT-IDENTICAL to score_text(model...)
+    but ~6x faster on ASCII text (r6): the logp lookup is a numpy
+    gather over a float64 _ascii_lut, summed with cumsum — numpy's
+    cumsum accumulates SEQUENTIALLY, so the float adds happen in the
+    same order with the same IEEE ops as the Python loop (verified
+    bit-exact over the full sf0.1 corpus + fixtures in
     test_r06_optimizations). Non-ASCII text falls back to score_text
-    itself. Used by the enrich UDF (the flagship chain's per-doc ppl)."""
-    import numpy as np
-
+    itself. Used by the enrich UDF (the flagship chain's per-doc ppl),
+    perplexity_col and the perplexity oracle row's ppl_udf."""
     logp = model.as_dict()
     order, backoff = model.order, model.backoff_logp
     luts: dict[str, "np.ndarray"] = {}
 
     def _lut():
         if "f" not in luts:
-            flut = np.full(128 ** order, backoff, dtype=np.float64)
-            for g, v in logp.items():
-                bs = g.encode("utf-8", errors="ignore")
-                if len(bs) == order and max(bs) < 128:
-                    idx = 0
-                    for c in bs:
-                        idx = idx * 128 + c
-                    flut[idx] = v
-            luts["f"] = flut
+            luts["f"] = _ascii_lut(logp, backoff, np.float64, order)
         return luts["f"]
 
     def score(text: str) -> float:
@@ -323,35 +320,25 @@ def score_text_fast_fn(model: NGramModel):
             b = s.encode("ascii")
         except UnicodeEncodeError:
             return score_text(logp, order, backoff, text)
-        import numpy as np
-
-        arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-        n = len(arr) - order + 1
-        if n <= 0:
-            return float("inf")
-        keys = arr[:n] * (128 ** (order - 1))
-        for j in range(1, order):
-            keys = keys + arr[j: j + n] * (128 ** (order - 1 - j))
+        # the pads make s at least order chars long: >= 1 gram
+        keys = _ascii_gram_keys(b, order)
         total = _lut()[keys].cumsum()[-1]
-        return math.exp(-float(total) / n)
+        return math.exp(-float(total) / len(keys))
 
     return score
 
 
 @context_cached(maxsize=4)
 def _ppl_udf(model: NGramModel):
-    d = model.as_dict()
-    order, backoff = model.order, model.backoff_logp
-
     @F.pandas_udf(T.DoubleType())
     def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [score_text(d, order, backoff, t) for t in texts], dtype="float64"
-        )
+        score = score_text_fast_fn(model)
+        return pd.Series([score(t) for t in texts], dtype="float64")
 
     return udf
 
 
 def perplexity_col(text: Column, model: NGramModel) -> Column:
-    """text -> per-char perplexity under the broadcast model."""
+    """text -> per-char perplexity under the broadcast model
+    (score_text_fast_fn per doc)."""
     return _ppl_udf(model)(text)

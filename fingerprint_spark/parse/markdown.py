@@ -26,7 +26,6 @@ _SETEXT_H2 = re.compile(r"^-+\s*$")
 _BOLD_LINE = re.compile(r"^\*\*([^*]+)\*\*\s*$")
 _ATX = re.compile(r"^(#{1,6})\s+(.*?)\s*#*\s*$")
 _TABLE_SEP = re.compile(r"^\s*\|?[\s:|-]+\|[\s:|-]*$")
-_EMPH = re.compile(r"(\*\*|__|\*|_|`)")
 
 
 def _pass_setext_to_atx(lines: list[str]) -> list[str]:
@@ -99,11 +98,6 @@ def normalize_markdown(md: str) -> str:
     lines = _pass_collapse_blanks(lines)
     lines = _pass_table_pipes(lines)
     return "\n".join(lines)
-
-
-def strip_emphasis(s: str) -> str:
-    """Markdown emphasis stripped before cell typing (assertions.rs:2295-2307)."""
-    return _EMPH.sub("", s)
 
 
 def _split_row(ln: str) -> list[str]:

@@ -72,6 +72,12 @@ def streaming_dedup(
     return hashed.dropDuplicatesWithinWatermark(["_chash"]).drop("_chash")
 
 
+# Hard cap on the benchmark gram set stream_decontaminate collects to
+# the driver and embeds in the plan as an array literal. Eval benchmarks
+# hold a few thousand grams; past the cap, use the batch operator.
+MAX_STREAM_BENCH_GRAMS = 100_000
+
+
 def stream_decontaminate(
     stream_df: DataFrame,
     benchmark: DataFrame,
@@ -85,26 +91,33 @@ def stream_decontaminate(
     by url: every url is unique, so its state grows without bound. The
     stateless shape: the (static, tiny-by-nature) benchmark n-gram set
     is collected ONCE at stream definition (driver-bounded — eval
-    benchmarks are a few thousand grams; for decontamination against a
-    huge reference corpus use the batch operator) and embedded as an
-    array literal, so each micro-batch row computes
+    benchmarks are a few thousand grams; past MAX_STREAM_BENCH_GRAMS it
+    raises ValueError — decontaminate against a huge reference corpus
+    with the batch operator) and embedded as an array literal, so each
+    micro-batch row computes
     ``array_intersect(its distinct grams, benchmark grams)`` narrowly:
     no shuffle, no state, no watermark interaction. Emits
     (key, n_hits, contaminated) per streaming document with verdicts
     identical to operators/curation.decontaminate (tested)."""
     from ..operators.curation import _ngrams_from_words, _words
 
-    bench_grams = sorted(
-        r["__g"]
-        for r in benchmark.select(
-            _words(F.col(text_col)).alias("__ws")
-        )
+    cap = MAX_STREAM_BENCH_GRAMS
+    rows = (
+        benchmark.select(_words(F.col(text_col)).alias("__ws"))
         .select(
             F.explode(_ngrams_from_words(F.col("__ws"), n)).alias("__g")
         )
         .distinct()
-        .collect()  # driver-bounded: benchmark gram set
+        .limit(cap + 1)
+        .collect()  # driver-bounded: at most cap + 1 grams
     )
+    if len(rows) > cap:
+        raise ValueError(
+            f"benchmark has more than {cap} distinct {n}-grams; the "
+            "stateless streaming decontaminate embeds them all in the "
+            "plan — use the batch operators/curation.decontaminate"
+        )
+    bench_grams = sorted(r["__g"] for r in rows)
     bench_arr = F.array(*[F.lit(g) for g in bench_grams])
     # two-step projection (the repo's lambda-CSE rule): materialize the
     # words array before the n-gram lambdas slice it, or split+filter

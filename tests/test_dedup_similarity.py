@@ -190,36 +190,15 @@ def test_kmeans_refined_ivf_improves_recall(spark, emb):
     assert r1 >= max(r0, 3), (r0, r1)
 
 
-def test_fused_sketches_match_individual_udfs(spark):
-    """sketches_col (one shingle pass) must equal the standalone simhash
-    and minhash columns value-for-value."""
-    from fingerprint_spark.functions.hashing import (
-        minhash_signature_col,
-        simhash64_col,
-        sketches_col,
-    )
-
-    df = spark.createDataFrame(
-        [(BASE,), (NEAR,), (FAR,), ("",), ("one two",)], ["text"]
-    )
-    out = df.select(
-        sketches_col(F.col("text"), num_hashes=8).alias("sk"),
-        simhash64_col(F.col("text")).alias("sh"),
-        minhash_signature_col(F.col("text"), num_hashes=8).alias("mh"),
-    ).collect()
-    for r in out:
-        assert r["sk"]["simhash"] == r["sh"]
-        assert list(r["sk"]["minhash"]) == list(r["mh"])
-
-
 def test_winnow_fingerprints_detect_containment(spark, docs):
-    """Winnowed fingerprint sets intersect for near-dups / shared
-    passages (u1 vs u4: one-word edit) and not for unrelated docs —
-    substring containment via compact sets, text never joined."""
-    from fingerprint_spark.functions.hashing import winnow_fingerprints_col
+    """Winnowed fingerprint sets (the md5 window minima the winnow
+    query runs) intersect for near-dups / shared passages (u1 vs u4:
+    one-word edit) and not for unrelated docs — substring containment
+    via compact sets, text never joined."""
+    from fingerprint_spark.functions.hashing import winnow_minima_md5_udf_col
 
     out = docs.select(
-        "url", winnow_fingerprints_col(F.col("text")).alias("fp")
+        "url", winnow_minima_md5_udf_col(F.col("text")).alias("fp")
     )
     a = out.alias("a")
     b = out.alias("b")

@@ -183,28 +183,28 @@ def test_winnowing_guarantee_and_determinism():
     """The winnowing property: documents sharing a substring of length
     >= k + window - 1 share at least one fingerprint; disjoint-alphabet
     documents share none; output is deterministic."""
-    from fingerprint_spark.functions.hashing import winnow_fingerprints_py
+    from fingerprint_spark.functions.hashing import winnow_minima_py
 
     shared = "the quarterly revenue figures improved materially this year"
     a = "intro text before. " + shared + " trailing remarks here."
     b = "completely different opening. " + shared + " other ending."
     c = "zzz qqq xxx vvv kkk jjj uuu www yyy mmm nnn ppp rrr sss ttt"
-    fa = winnow_fingerprints_py(a, k=8, window=4)
-    fb = winnow_fingerprints_py(b, k=8, window=4)
-    fc = winnow_fingerprints_py(c, k=8, window=4)
-    assert fa == winnow_fingerprints_py(a, k=8, window=4)
+    fa = winnow_minima_py(a, k=8, window=4)
+    fb = winnow_minima_py(b, k=8, window=4)
+    fc = winnow_minima_py(c, k=8, window=4)
+    assert fa == winnow_minima_py(a, k=8, window=4)
     assert set(fa) & set(fb), "shared substring must share a fingerprint"
     assert not (set(fa) & set(fc))
-    assert winnow_fingerprints_py("", 8, 4) == []
-    assert winnow_fingerprints_py("short", 8, 4) == []
+    assert winnow_minima_py("", 8, 4) == []
+    assert winnow_minima_py("short", 8, 4) == []
 
 
 @settings(max_examples=40, deadline=None)
 @given(st.text(alphabet="abcdef gh", min_size=0, max_size=200))
 def test_winnowing_never_throws_and_bounded(s):
-    from fingerprint_spark.functions.hashing import winnow_fingerprints_py
+    from fingerprint_spark.functions.hashing import winnow_minima_py
 
-    fp = winnow_fingerprints_py(s, k=5, window=3)
-    assert all(-(1 << 63) <= x < (1 << 63) for x in fp)
-    # winnowing selects ~1/window of positions: sane upper bound
+    fp = winnow_minima_py(s, k=5, window=3)
+    # 60-bit md5 prefixes, one window minimum per window position
+    assert all(0 <= x < (1 << 60) for x in fp)
     assert len(fp) <= max(1, len(s))

@@ -10,6 +10,9 @@ operator's internals gets a focused equivalence test here.
 2. the fused perplexity UDF (functions/perplexity._ppl_exact_udf) must
    produce the identical integer totals as the former explode ->
    broadcast join -> groupBy plan, including the non-ASCII fallback.
+3. the shared batch shingle-hash kernel (functions/hashing.
+   shingle_hashes_batch) behind simhash64_col, minhash_signature_col
+   and the enrich UDF's simhash must equal the per-doc reference twins.
 """
 
 import pytest
@@ -28,6 +31,14 @@ ADVERSARIAL_DOCS = [
     (8, "Mixed CASE Words and MORE mixed case words"),
     (9, "spaced    out     tokens here now ok"),  # runs of spaces
     (10, "tab\tsep\ntokens here now ok"),       # \t and \n separators
+    # non-ASCII case mappings: Python str.lower() in _jvm_words must
+    # fold exactly like the JVM lower() (a mismatch changes how many
+    # distinct shingles each doc has)
+    (11, "İ İ i\u0307 İ"),                      # dotted I -> i + U+0307
+    (12, "ẞ ß ẞ ß"),                            # capital sharp s -> ß
+    (13, "ﬃ FFI ﬃ ffi"),                        # ligature: no expansion
+    (14, "İstanbul STRAẞE oﬃce ASCII words "
+         "i\u0307stanbul straße oﬃce ascii words"),
 ]
 
 
@@ -217,20 +228,57 @@ def test_text_chain_perplexity_gate_matches_scorers(spark, sf_dir):
     assert any(gated) and not all(gated)  # both sides of the gate ran
 
 
-def test_simhash_batch_bit_identical(sf_dir):
-    """simhash64_batch_py must equal simhash64_py per doc."""
+# degenerate inputs of the shingle kernel: NULL, empty, one word, k-1
+# words, tab/newline and NBSP separators (Python split() splits on NBSP)
+SKETCH_TEXTS = [
+    None, "", "one", "one two", "one two three", "a b a b a b",
+    "Mixed CASE words", "tab\tsep\nnew lines here",
+    "nbsp\u00a0separated\u00a0words and more", "  padded  ",
+]
+
+
+def _assert_sketches_match_references(spark, texts):
     from fingerprint_spark.functions.hashing import (
+        minhash_signature_col,
+        minhash_signature_py,
         simhash64_batch_py,
+        simhash64_col,
         simhash64_py,
     )
+    from fingerprint_spark.parse import enrich_col
+    from fingerprint_spark.pipeline import default_ppl_model
 
-    texts = [
-        "", None, "one", "one two", "one two three",
-        "a b a b a b", "Mixed CASE words", "nbsp separated words",
-    ] + _corpus_texts(sf_dir, limit=300)
-    got = simhash64_batch_py(texts, 3)
-    want = [simhash64_py(t or "", 3) for t in texts]
-    assert got == want
+    assert simhash64_batch_py(texts, 3) == [simhash64_py(t, 3) for t in texts]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "i long, text string"
+    ).repartition(2)  # several docs per Arrow batch, two batches
+    rows = df.select(
+        "i",
+        simhash64_col(F.col("text")).alias("sh"),
+        minhash_signature_col(F.col("text"), num_hashes=8).alias("mh8"),
+        minhash_signature_col(F.col("text"), num_hashes=64).alias("mh64"),
+        enrich_col(F.col("text"), default_ppl_model()).alias("e"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        t = texts[r["i"]]
+        assert r["sh"] == simhash64_py(t, 3), t
+        assert list(r["mh8"]) == minhash_signature_py(t, 8, 3), t
+        assert list(r["mh64"]) == minhash_signature_py(t, 64, 3), t
+        norm = r["e"]["parsed"]["normalized"] or ""
+        assert r["e"]["simhash"] == simhash64_py(norm, 3), t
+
+
+def test_simhash_batch_bit_identical(spark, sf_dir):
+    """Every production caller of the batch shingle kernel —
+    simhash64_batch_py, simhash64_col, minhash_signature_col (8 and 64
+    hashes) and enrich_col's simhash — equals simhash64_py /
+    minhash_signature_py per doc: degenerate inputs always, then the
+    sf_dir corpus (skipped when missing)."""
+    _assert_sketches_match_references(spark, SKETCH_TEXTS)
+    _assert_sketches_match_references(
+        spark, _corpus_texts(sf_dir, limit=300)
+    )
 
 
 def test_fused_perplexity_matches_join_plan(spark):
@@ -241,7 +289,10 @@ def test_fused_perplexity_matches_join_plan(spark):
         _PPL_ORDER,
         _ppl_micro_model,
     )
-    from fingerprint_spark.functions.perplexity import ppl_exact_col
+    from fingerprint_spark.functions.perplexity import (
+        ppl_exact_col,
+        score_text_fast_fn,
+    )
 
     micro, backoff_micro, model = _ppl_micro_model()
     texts = [
@@ -255,6 +306,7 @@ def test_fused_perplexity_matches_join_plan(spark):
     df = spark.createDataFrame(texts, "doc_id long, text string")
     padded = df.select(
         "doc_id",
+        "text",
         F.concat(
             F.lit("\x02" * (_PPL_ORDER - 1)),
             F.substring(
@@ -263,16 +315,21 @@ def test_fused_perplexity_matches_join_plan(spark):
             F.lit("\x03"),
         ).alias("__s"),
     )
+    rows = padded.select(
+        "doc_id",
+        ppl_exact_col(
+            F.col("__s"), F.col("text"), model,
+            tuple(sorted(micro.items())), backoff_micro,
+        ).alias("r"),
+    ).collect()
     fused = {
         r["doc_id"]: (r["r"]["logp_micro_total"], r["r"]["n_grams"])
-        for r in padded.select(
-            "doc_id",
-            ppl_exact_col(
-                F.col("__s"), model, tuple(sorted(micro.items())),
-                backoff_micro,
-            ).alias("r"),
-        ).collect()
+        for r in rows
     }
+    # ppl_udf is the production scorer over the raw text
+    score = score_text_fast_fn(model)
+    for r in rows:
+        assert r["r"]["ppl_udf"] == score(dict(texts)[r["doc_id"]])
     # reference: the former join plan
     model_df = spark.createDataFrame(
         sorted(micro.items()), "gram string, lp_micro long"

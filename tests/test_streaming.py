@@ -152,3 +152,31 @@ def test_stream_decontaminate_stateless_matches_batch(spark, tmp_path):
     assert any(v[1] == 0 for v in got.values())
     # stateless: the streaming progress reports zero state rows
     assert not progress or not progress.get("stateOperators")
+
+
+def test_stream_decontaminate_refuses_benchmark_past_gram_cap(
+    spark, monkeypatch
+):
+    """The driver-side benchmark gram collect is bounded: a gram set at
+    the cap is embedded, one past it is refused with a pointer to the
+    batch operator."""
+    from pyspark.sql import Row
+
+    from fingerprint_spark.streaming import pipeline as sp
+
+    docs = spark.createDataFrame(
+        [Row(url="a", text="say this exact benchmark phrase"),
+         Row(url="b", text="nothing shared here at all")]
+    )
+    bench = spark.createDataFrame(
+        [Row(url="b", text="this exact benchmark phrase")]
+    )  # two distinct 3-grams
+    monkeypatch.setattr(sp, "MAX_STREAM_BENCH_GRAMS", 2)
+    got = {
+        r["url"]: r["contaminated"]
+        for r in sp.stream_decontaminate(docs, bench, n=3).collect()
+    }
+    assert got == {"a": 1, "b": 0}
+    monkeypatch.setattr(sp, "MAX_STREAM_BENCH_GRAMS", 1)
+    with pytest.raises(ValueError, match="operators/curation.decontaminate"):
+        sp.stream_decontaminate(docs, bench, n=3)
