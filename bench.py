@@ -44,10 +44,9 @@ HEADLINE = [
     "jaccard_adjacent",
     "extract_hash",       # extraction anchors + content hash (round 2)
     "xlsx_decode",        # xlsx DECODE over pre-materialized bytes
-                          # (round 3; the encode+decode roundtrip
-                          # q_xlsx_grid is pytest-covered — retired
-                          # from the driver registry in round 4 for
-                          # the ~50-row correctness budget)
+                          # (round 3; the encode+decode roundtrip was
+                          # retired from the driver registry in round 4
+                          # for the ~50-row correctness budget)
     "chunk_dedup",        # CCNet sub-document dedup + reassembly
     "decontam",           # broadcast benchmark n-gram overlap
     "url_curation",       # canonicalize + eTLD+1 + blocklist + dedup

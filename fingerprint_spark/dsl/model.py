@@ -44,11 +44,6 @@ SPREADSHEET_ONLY = frozenset(
      "header_row_match", "sum_eq", "within_tolerance"]
 )
 PDF_ONLY = frozenset(["page_count", "metadata_regex"])
-CONTENT_TYPES = frozenset(
-    ["heading_exists", "heading_regex", "heading_level", "text_contains",
-     "text_regex", "text_near", "section_non_empty", "section_min_lines",
-     "table_exists", "table_columns", "table_shape", "table_min_rows"]
-)
 
 
 @dataclass(frozen=True)

@@ -94,8 +94,6 @@ _SQL_TOKS = (
     "list_filter(string_split_regex(lower(trim(text)), "
     f"'{TOKEN_SPLIT_RE}'), t -> t <> '')"
 )
-_SQL_WORDS = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
-_SQL_LINES = "string_split(text, chr(10))"
 
 
 def _sql_lang_scores() -> str:
@@ -176,10 +174,10 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the weights quantize to integers once, so the per-class margin is
     an exact int64 sum in any engine — the language verdict is
     bit-exact and the softmax's exp() inputs are IEEE-identical
-    doubles (the perplexity row's fixed-point contract). The Arrow
-    micro kernel (exact-parity twin of the Column micro fold, pinned
-    by pytest) keeps the headline row fast: the Column fold's
-    interpreted md5 gram hashing costs ~1 ms/doc. Reference analog:
+    doubles (the perplexity row's fixed-point contract). The micro
+    kernel is Arrow-batched to keep the headline row fast (a Column
+    fold's interpreted md5 gram hashing costs ~1 ms/doc) and is pinned
+    against the double-path Column fold by pytest. Reference analog:
     the langid gate in the keep/drop fold (src/pipeline/enricher.rs)."""
     from .operators.langid_classifier import langid_classify_micro_arrow
 
@@ -251,18 +249,6 @@ SELECT s.doc_id, {_sql_lang_case()} AS lang_detected,
   p.lang_trained, p.prob_trained
 FROM s JOIN p ON s.doc_id = p.doc_id
 """
-
-
-def q_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict groupBy projection of q_langid — retired from the driver
-    registry for the 50-row budget (round 5); pinned to langid by
-    test_lang_distribution_is_langid_projection. (Its DuckDB twin was
-    deleted with the registry row: the projection test pins it to the
-    oracle-green langid instead.)"""
-    df = q_langid(spark, sf_dir)
-    return df.groupBy("lang_detected").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
 
 
 def q_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,7 +439,6 @@ _CELL_COLS = {
     "l_shipdate": "date",
     "l_returnflag": "string",
 }
-_TYPE_ORDER = ["number", "currency", "percentage", "date", "string"]
 
 
 def q_cell_type_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,10 +730,6 @@ def q_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_QUERIES = {
-    # lang_distribution was retired from the driver registry for the
-    # 50-row budget when quality_score took the hard signal (round 5):
-    # it is a strict groupBy projection of langid's oracle logic,
-    # pinned to langid by test_lang_distribution_is_langid_projection
     "langid": (q_langid, sql_langid),
     "gopher": (q_gopher, sql_gopher),
     "pipeline_keep": (q_pipeline_keep, sql_pipeline_keep),
@@ -1614,9 +1595,9 @@ def _decode_grid_fused_col(xlsx: F.Column) -> F.Column:
     Accessor semantics replicated from operators/assertions (_sheet /
     _cell / sheet_exists): case-insensitive first-key match, A1 refs
     out of range -> NULL, undecodable bytes -> all-NULL row. Output
-    parity with the two-step path is pinned by
-    test_xlsx_grid_roundtrip_matches_decode (q_xlsx_grid keeps the
-    original projection over the shared accessors)."""
+    parity with the two-step path (_decode_grid_projection, the
+    projection over the shared accessors) is pinned by
+    test_xlsx_grid_roundtrip_matches_decode."""
     from .sources.xlsx import excel_to_sheets
 
     @F.pandas_udf(
@@ -1654,35 +1635,22 @@ def _decode_grid_fused_col(xlsx: F.Column) -> F.Column:
     return udf(xlsx)
 
 
-def q_xlsx_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-xlsx-bytes roundtrip: per doc, an xlsx workbook is BUILT
-    (stdlib writer) from (doc_id, source), decoded back through the
-    engine's xlsx codec (sources/xlsx.py, the xlsx.rs:12-98 surface),
-    and cells/shape read via the grid-assertion accessors. Retired from
-    the driver registry in round 4 (the ~50-row correctness budget;
-    xlsx_decode keeps the SAME oracle over the same decode projection)
-    — roundtrip parity is held by tests/test_oracle_parity.py::
-    test_xlsx_grid_roundtrip_matches_decode."""
-    df = _doc(spark, sf_dir).select(
-        "doc_id",
-        _workbook_bytes_col(F.col("doc_id"), F.col("source")).alias("xlsx"),
-    )
-    return _decode_grid_projection(df)
-
-
 def q_xlsx_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DECODE-ONLY variant for the bench: the workbook bytes are
     materialized ONCE into a /tmp parquet cache (a real pipeline decodes
-    EXISTING bytes — round-2 VERDICT #3: xlsx_grid's time was 2/3
-    fixture synthesis), then every run reads + decodes. Same output and
-    oracle as the roundtrip row. bench.py's untimed warm-up pass builds
-    the cache, so the measured runs time the codec alone."""
+    EXISTING bytes — round-2 VERDICT #3: the build+decode roundtrip's
+    time was 2/3 fixture synthesis), then every run reads + decodes.
+    bench.py's untimed warm-up pass builds the cache, so the measured
+    runs time the codec alone. A cache is reused only once its write
+    committed."""
     import hashlib
     import os
 
     tag = hashlib.md5(f"{sf_dir}|grid-v1".encode()).hexdigest()[:12]
     path = f"/tmp/fps_xlsx_bytes_{tag}.parquet"
-    if not os.path.exists(path):
+    # the job commit writes _SUCCESS last: a build killed mid-write
+    # leaves a directory without it, which is rebuilt, never read
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # fan out the one-time cache build too (r6): the workbook
         # synthesis UDF otherwise runs on the single scan split
         _fan_out(_doc(spark, sf_dir)).select(
@@ -1798,8 +1766,7 @@ COSINE_PAIR_THRESHOLD = 0.3  # ~55 pairs at every sf (0.5 matched NOTHING
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, oracle-checkable form: all (a < b) pairs with
     rounded cosine >= COSINE_PAIR_THRESHOLD among the first 120 vectors
-    (exact verify semantics of embedding_near_dup; the LSH candidate
-    stage is plane-literal-dependent and covered by pytest instead)."""
+    (the exact cosine verify of an embedding near-dup pass)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 120
     )
@@ -2231,49 +2198,12 @@ FROM customer WHERE c_custkey NOT IN (
 """
 
 
-def q_lang_by_source_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot coverage: per-source language distribution as wide columns
-    (langid stage feeding a pivoted rollup)."""
-    df = q_langid(spark, sf_dir).join(
-        _doc(spark, sf_dir).select("doc_id", "source"), "doc_id"
-    )
-    piv = (
-        df.groupBy("source")
-        .pivot("lang_detected", list(LANGS) + ["und"])
-        .count()
-        .na.fill(0)
-    )
-    return piv.select(
-        "source",
-        *[F.col(lang).cast("bigint").alias(f"n_{lang}") for lang in list(LANGS) + ["und"]],
-    )
-
-
-def sql_lang_by_source_pivot() -> str:
-    cols = ", ".join(
-        f"count(*) FILTER (WHERE lang_detected = '{lang}')::bigint AS n_{lang}"
-        for lang in list(LANGS) + ["und"]
-    )
-    return f"""
-WITH s AS ({_sql_lang_scores()}),
-l AS (SELECT doc_id, {_sql_lang_case()} AS lang_detected FROM s),
-j AS (SELECT d.source, l.lang_detected FROM documents d JOIN l USING (doc_id))
-SELECT source, {cols} FROM j GROUP BY source
-"""
-
-
 ORACLE_QUERIES.update(
     {
         "events_rollup": (q_events_rollup, sql_events_rollup),
         "customers_without_orders": (
             q_customers_without_orders, sql_customers_without_orders,
         ),
-        # lang_by_source_pivot was retired from the driver registry for
-        # the 50-row budget (perplexity took the slot — a named
-        # north_rule stage beats a presentational pivot of the already
-        # oracle-green langid row; same retirement class as
-        # lang_distribution). Still oracle-checked every run by
-        # test_lang_by_source_pivot_retired_parity.
     }
 )
 

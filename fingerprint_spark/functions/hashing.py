@@ -404,11 +404,6 @@ def content_hash_col(*cols: Column, algo: str = "md5", names: tuple[str, ...] = 
     raise ValueError(f"unknown algo {algo}")
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two int64 SimHashes — bit_count(a XOR b)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def canonical_text_col(text: Column) -> Column:
     """Case/whitespace canonicalization before content hashing."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))

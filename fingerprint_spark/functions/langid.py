@@ -1,29 +1,20 @@
 """Language identification — fastText-style, but expressed Spark-first.
 
-Two tiers:
-
-1. ``langid_scores``/``langid_best``: a marker-function-word scorer as
-   pure Column expressions. Occurrence counting uses the split trick
-   ``size(split(lower(text), '\\b(w1|w2|...)\\b')) - 1`` — one compiled
-   regex pass per language, fully whole-stage-codegen'd, no higher-order
-   lambdas (interpreted HOFs over token arrays were ~20x slower). Marker
-   words are chosen with ASCII word-boundary-safe edges so Java and RE2
-   (DuckDB oracle) agree on ``\\b``.
-2. ``langid_ngram_col``: a hashed char-n-gram multinomial scorer inside an
-   Arrow-batched pandas UDF (closer to fastText's architecture); profiles
-   are trained deterministically at the driver and broadcast via closure.
-
-Both are deterministic; tier 1 is the pipeline default (zero Python).
+``langid_scores``/``langid_best``: a marker-function-word scorer as pure
+Column expressions. Occurrence counting uses the split trick
+``size(split(lower(text), '\\b(w1|w2|...)\\b')) - 1`` — one compiled regex
+pass per language, fully whole-stage-codegen'd, no higher-order lambdas
+(interpreted HOFs over token arrays were ~20x slower). Marker words are
+chosen with ASCII word-boundary-safe edges so Java and RE2 (DuckDB
+oracle) agree on ``\\b``. Deterministic, and the pipeline default (zero
+Python); the trained fastText-shaped tier is
+operators/langid_classifier.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..caching import context_cached
 
 # top function words per language (public common-word lists, abridged).
 # Every word starts AND ends with an ASCII letter (interior accents are
@@ -108,73 +99,3 @@ def sql_lang_score(lang: str, text_expr: str = "text") -> str:
         f"(len(string_split_regex(lower({text_expr}), '{pat}')) - 1)::double"
         f" / greatest(len(string_split_regex(trim({text_expr}), '\\s+')), 1)"
     )
-
-
-# -- tier 2: hashed char-ngram scorer (fastText-shaped, pandas UDF) --------
-
-def train_char_ngram_profiles(
-    samples: dict[str, list[str]], n: int = 3, dim: int = 2048
-) -> dict[str, list[float]]:
-    """Deterministic per-language hashed n-gram log-frequency profiles."""
-    import math
-
-    profiles = {}
-    for lang, texts in sorted(samples.items()):
-        counts = [1.0] * dim  # add-one smoothing
-        total = float(dim)
-        for t in texts:
-            s = f" {t.lower()} "
-            for i in range(len(s) - n + 1):
-                h = _stable_hash(s[i: i + n]) % dim
-                counts[h] += 1.0
-                total += 1.0
-        profiles[lang] = [math.log(c / total) for c in counts]
-    return profiles
-
-
-def _stable_hash(s: str) -> int:
-    """FNV-1a 64-bit — stable across processes (unlike builtin hash)."""
-    h = 0xCBF29CE484222325
-    for b in s.encode("utf-8"):
-        h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-@context_cached(maxsize=4)
-def _langid_ngram_udf(profile_key: tuple, n: int, dim: int):
-    profiles = {lang: list(vec) for lang, vec in profile_key}
-    langs = sorted(profiles)
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("lang", T.StringType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
-    )
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        out_lang, out_score = [], []
-        for t in texts:
-            s = f" {(t or '').lower()[:2000]} "
-            idxs = [
-                _stable_hash(s[i: i + n]) % dim for i in range(len(s) - n + 1)
-            ]
-            best_lang, best = UNKNOWN_LANG, float("-inf")
-            for lang in langs:
-                vec = profiles[lang]
-                ll = sum(vec[i] for i in idxs) / max(len(idxs), 1)
-                if ll > best:
-                    best, best_lang = ll, lang
-            out_lang.append(best_lang)
-            out_score.append(best)
-        return pd.DataFrame({"lang": out_lang, "score": out_score})
-
-    return udf
-
-
-def langid_ngram_col(
-    text: Column, profiles: dict[str, list[float]], n: int = 3, dim: int = 2048
-) -> Column:
-    key = tuple((lang, tuple(vec)) for lang, vec in sorted(profiles.items()))
-    return _langid_ngram_udf(key, n, dim)(text)

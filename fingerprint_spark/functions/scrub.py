@@ -49,8 +49,6 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
     ),
 ]
 
-SCRUB_VERSION = "scrub.v1"
-
 
 def scrub_text(text: Column, patterns: list[tuple[str, str, str]] | None = None) -> Column:
     """Apply the ordered replacement chain."""

@@ -145,27 +145,3 @@ def oracle_stats_sql(text_expr: str = "text") -> dict[str, str]:
             f"(len({lines}) - len(list_distinct({lines})))::double / {nl}"
         ),
     }
-
-
-def compression_ratio_col(text: Column) -> Column:
-    """zlib compressed-size / raw-size per document (Arrow-batched; the
-    RedPajama/CCNet gibberish signal: natural prose compresses to
-    ~0.3-0.5, repeated boilerplate far below, random symbol soup near
-    1.0). Empty/null text -> null (a row outcome). Not SQL-expressible
-    -> no oracle row; pinned by unit tests against direct zlib."""
-    import pandas as pd  # noqa: F401 (module-level import is in scrub path)
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("double")
-    def _ratio(s):
-        import zlib
-
-        def one(v):
-            if v is None or len(v) == 0:
-                return None
-            raw = v.encode("utf-8")
-            return len(zlib.compress(raw, 6)) / len(raw)
-
-        return s.map(one)
-
-    return _ratio(text)

@@ -137,30 +137,6 @@ def domain_reputation(
     )
 
 
-def domain_blocklist_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    keep: bool = True,
-) -> DataFrame:
-    """Drop (keep=True) or select (keep=False) rows whose registered
-    domain appears in the blocklist.
-
-    ``blocklist`` is a one-column DataFrame of registered domains
-    (column ``domain``). Matching is by eTLD+1 EQUALITY — computing the
-    registered domain first turns suffix semantics ("block evil.com and
-    every subdomain") into an equi-join, which broadcasts; a suffix
-    LIKE-scan against the list would be a nested loop at scale.
-    """
-    dom = registered_domain(url_host(F.col(url_col)))
-    tagged = df.withColumn("__dom", dom)
-    bl = F.broadcast(
-        blocklist.select(F.lower(F.col("domain")).alias("__dom")).distinct()
-    )
-    how = "left_anti" if keep else "left_semi"
-    return tagged.join(bl, "__dom", how).drop("__dom")
-
-
 def robots_disallows(robots_txt: Column, agent: str = "*") -> Column:
     """Array of Disallow path-prefixes for the given user-agent group
     from a robots.txt body — pure Column expressions (REP subset: group

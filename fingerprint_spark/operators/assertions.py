@@ -150,7 +150,6 @@ def table_min_rows(
 # -- table_shape: majority-vote cell typing (assertions.rs:1897-1932,
 #    2204-2342) -------------------------------------------------------------
 
-CELL_TYPES = ["number", "currency", "percentage", "date", "empty", "string"]
 
 _NUMBER_RE = r"^-?[0-9][0-9,]*(\.[0-9]+)?$"
 _CURRENCY_RE = r"^-?[$€£¥][0-9][0-9,]*(\.[0-9]+)?$|^-?[0-9][0-9,]*(\.[0-9]+)?\s?[$€£¥]$"
@@ -469,17 +468,8 @@ def sheet_exists(sheets: Column, name: str) -> Column:
 
 def sheet_name_regex(sheets: Column, pattern: str) -> Column:
     """Any sheet name matches (assertions.rs:1077-1113). The optional
-    ``bind`` is exposed via sheet_name_regex_bind as a computed column."""
+    ``bind`` to a $var is not implemented."""
     return F.exists(F.map_keys(sheets), lambda k: k.rlike(pattern))
-
-
-def sheet_name_regex_bind(sheets: Column, pattern: str) -> Column:
-    """The bound $var: first matching sheet name in sorted order
-    (deterministic; reference binds during sequential evaluation,
-    assertions.rs:171-174, 353-386)."""
-    return F.try_element_at(
-        F.filter(F.sort_array(F.map_keys(sheets)), lambda k: k.rlike(pattern)), F.lit(1)
-    )
 
 
 def _cell(sheets: Column, sheet: str, ref: str) -> Column:

@@ -316,19 +316,3 @@ def bloom_merge(
         .groupBy("word_idx")
         .agg(F.expr("bit_or(word)").alias("word"))
     )
-
-
-def frontier_new_urls(
-    incoming: DataFrame,
-    seen: DataFrame,
-    key_col: str = "url",
-    n_bits: int = 1 << 24,
-    k: int = 5,
-) -> DataFrame:
-    """Incremental crawl dedup: rows of ``incoming`` whose key is
-    definitely NOT in ``seen`` (bloom miss). A false positive drops a
-    genuinely-new URL this cycle (re-discovered next crawl); a seen URL
-    is never re-emitted."""
-    bloom = bloom_build(seen, key_col, n_bits, k)
-    tagged = bloom_probe(incoming, bloom, key_col, n_bits, k)
-    return tagged.filter(F.col("maybe_member") == 0).drop("maybe_member")

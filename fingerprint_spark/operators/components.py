@@ -1,9 +1,9 @@
 """Connected components over candidate-pair graphs — exact dup GROUPS.
 
-The one-pass min-key policy in ``minhash_dedup`` (drop every key_b of a
-near-dup pair) is the standard web-dedup approximation; it under-drops
-on duplicate CHAINS (a~b, b~c where a!~c directly: c's pair points at b,
-which is itself dropped, so the survivor set depends on pair direction).
+A one-pass min-key policy (drop every key_b of a near-dup pair) is the
+standard web-dedup approximation; it under-drops on duplicate CHAINS
+(a~b, b~c where a!~c directly: c's pair points at b, which is itself
+dropped, so the survivor set depends on pair direction).
 ``connected_components`` computes the exact transitive closure so every
 near-dup cluster keeps exactly its minimum key.
 
@@ -163,20 +163,3 @@ def pagerank(
     # released via caching.release_tracked AFTER materialization; an
     # unpersist here would fire before the lazy plan ever runs)
     return ranks.select(F.col("__node").alias(key_col), "score")
-
-
-def dedup_connected(
-    df: DataFrame,
-    pairs: DataFrame,
-    key_col: str = "url",
-    key_a: str = "key_a",
-    key_b: str = "key_b",
-) -> DataFrame:
-    """Exact-cluster dedup: keep the minimum key of every connected
-    near-dup component (pairs from minhash/simhash/embedding candidate
-    generation, already thresholded). Rows never in any pair survive."""
-    cc = connected_components(pairs, key_a, key_b)
-    losers = cc.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(key_col)
-    )
-    return df.join(losers, key_col, "left_anti")

@@ -66,14 +66,6 @@ def _chunks_from_words(words: Column, chunk_words: int) -> Column:
     )
 
 
-def word_chunks(text_col: Column, chunk_words: int) -> Column:
-    """Array of fixed-size word chunks (last chunk may be short); an
-    empty/blank document yields one empty-string chunk so every input
-    row survives to the output. For hot paths prefer projecting
-    ``_words`` first and calling ``_chunks_from_words`` (see there)."""
-    return _chunks_from_words(_words(text_col), chunk_words)
-
-
 def chunk_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -229,12 +221,6 @@ def _ngrams_from_words(words: Column, n: int) -> Column:
     return F.when(F.size(words) >= n, r).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_ngrams(text_col: Column, n: int) -> Column:
-    """Array of space-joined word n-grams; empty when the document has
-    fewer than n words."""
-    return _ngrams_from_words(_words(text_col), n)
 
 
 def _decontam_strategy(

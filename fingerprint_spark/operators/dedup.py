@@ -1,23 +1,19 @@
 """Deduplication operators for web-scale training corpora.
 
-Four tiers, each designed around what actually shuffles at 100 TB:
+Two tiers, each designed around what actually shuffles at 100 TB:
 
-- exact:     xxhash64/md5 of canonical text -> groupBy hash. Only the
-             16-byte hash + key shuffle, never the text.
+- exact:     xxhash64 of canonical text -> groupBy hash. Only the
+             8-byte hash + key shuffle, never the text.
 - minhash:   word-shingle MinHash signatures (pandas UDF, one pass) ->
              LSH banding -> bucket self-join -> signature-estimated
-             Jaccard filter. Classic MMDS construction: a pair with
+             Jaccard. Classic MMDS construction: a pair with
              Jaccard >= t collides in >= 1 of b bands of r rows with
              probability 1-(1-t^r)^b.
-- simhash:   64-bit SimHash -> 4x16-bit chunk bucketing (pigeonhole: any
-             pair with Hamming distance <= 3 shares at least one exact
-             chunk) -> JVM-side bit_count(xor) verification.
-- embedding: random-hyperplane LSH over embedding vectors -> bucket join
-             -> exact cosine verify (F.aggregate/zip_with, JVM-side).
 
-All candidate generation shuffles COMPACT sketches (8-64 bytes/doc); the
-only stage that ever rejoins document text is the optional exact-Jaccard
-verify, applied to the (tiny) candidate pair set.
+Candidate generation shuffles COMPACT sketches; the only stage that ever
+rejoins document text is the optional exact-Jaccard verify, applied to
+the (tiny) candidate pair set. ``_cosine`` is the JVM-side cosine the
+similarity and search operators share.
 
 Reference analog: the reference defers MinHash/LSH ("MIME and MinHash
 pre-filtering deferred", docs/PLAN.md:1761-1762); this engine implements
@@ -31,9 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (
     canonical_text_col as canonical_text,
-    hamming64,
     minhash_signature_col,
-    simhash64_col,
 )
 
 
@@ -47,24 +41,6 @@ def dedup_exact(
     hashed = df.withColumn("_chash", h)
     keepers = hashed.groupBy("_chash").agg(F.min(key_col).alias(key_col))
     return hashed.join(keepers, ["_chash", key_col], "left_semi").drop("_chash")
-
-
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", key_col: str = "url"
-) -> DataFrame:
-    """(content_hash, dup_count, keeper) for groups with >1 member."""
-    hashed = df.select(
-        F.xxhash64(canonical_text(F.col(text_col))).alias("content_hash"),
-        F.col(key_col),
-    )
-    return (
-        hashed.groupBy("content_hash")
-        .agg(
-            F.count("*").alias("dup_count"),
-            F.min(key_col).alias("keeper"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -154,27 +130,6 @@ def minhash_candidates(
     return with_sigs.select("key_a", "key_b", est.alias("est_jaccard"))
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "url",
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Drop near-duplicates: every doc that appears as the GREATER key of
-    a pair above threshold is removed (min-key survivor policy; one pass,
-    no iterative connected components — the standard web-dedup
-    approximation)."""
-    cands = minhash_candidates(df, text_col, key_col, num_hashes, bands)
-    losers = (
-        cands.filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("key_b").alias(key_col))
-        .distinct()
-    )
-    return df.join(losers, key_col, "left_anti")
-
-
 def ngram_jaccard_verify(
     pairs: DataFrame,
     docs: DataFrame,
@@ -225,72 +180,7 @@ def ngram_jaccard_verify(
 
 
 # ---------------------------------------------------------------------------
-# SimHash near-dup
-# ---------------------------------------------------------------------------
-
-
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "url",
-    max_hamming: int = 3,
-    shingle_k: int = 3,
-    n_chunks: int = 4,
-) -> DataFrame:
-    """Hamming-ball candidate pairs via chunk bucketing + exact JVM
-    verification. n_chunks equal bit-slices: any pair with distance <
-    n_chunks agrees on >= 1 chunk (pigeonhole), so recall is guaranteed
-    for max_hamming <= n_chunks - 1; raise n_chunks for looser balls at
-    the cost of more bucket-join fan-out."""
-    if 64 % n_chunks != 0:
-        raise ValueError("n_chunks must divide 64")
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
-    sh = df.select(
-        F.col(key_col).alias("key"),
-        simhash64_col(F.col(text_col), shingle_k).alias("simhash"),
-    )
-    chunks = sh.select(
-        "key",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftrightunsigned("simhash", width * i)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk_val"),
-                    )
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("key", "simhash", "c.chunk", "c.chunk_val")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.key") < F.col("b.key")),
-        )
-        .select(
-            F.col("a.key").alias("key_a"),
-            F.col("b.key").alias("key_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .dropDuplicates(["key_a", "key_b"])
-    )
-    dist = hamming64(F.col("sim_a"), F.col("sim_b"))
-    return pairs.select("key_a", "key_b", dist.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-# ---------------------------------------------------------------------------
-# Embedding near-dup (cosine)
+# cosine (shared by similarity.py, search.py and q_cosine_pairs)
 # ---------------------------------------------------------------------------
 
 
@@ -315,91 +205,3 @@ def _cosine(a: Column, b: Column) -> Column:
         )
     )
     return dot / F.greatest(na * nb, F.lit(1e-12))
-
-
-def embedding_near_dup(
-    df: DataFrame,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_planes: int = 16,
-    seed: int = 7,
-    max_bucket_size: int = 1000,
-    refine_planes: int = 8,
-    chain_width: int = 8,
-) -> DataFrame:
-    """Random-hyperplane LSH: sign-bit signature (deterministic seeded
-    planes materialized as literals) -> bucket join -> exact cosine
-    verify. Only (key, signature) shuffles for candidate generation.
-
-    Degenerate-bucket guard (a dense bucket is otherwise quadratic):
-    1. buckets with > max_bucket_size rows get a SECOND signature from
-       refine_planes extra hyperplanes appended (splits merely-colliding
-       clusters; identical/near-identical vectors stay together);
-    2. buckets STILL over the cap pair only rows within chain_width
-       positions in key order (N·chain_width pairs, not N²). A fully
-       duplicated cluster still dedups exactly under a min-key survivor
-       policy — every member but the smallest appears as some key_b.
-       Recall impact: within a still-dense bucket, a near-dup pair more
-       than chain_width keys apart is missed; raise chain_width (or
-       refine_planes) to trade cost for recall.
-    """
-    import random
-
-    from pyspark.sql import Window as W
-
-    first = df.select(F.size(F.col(emb_col)).alias("d")).first()
-    dim = first["d"]
-    rng = random.Random(seed)
-    planes = [
-        [rng.gauss(0.0, 1.0) for _ in range(dim)]
-        for _ in range(n_planes + refine_planes)
-    ]
-
-    def sig(col: Column, lo: int, hi: int) -> Column:
-        bits = []
-        for p in planes[lo:hi]:
-            plane = F.array(*[F.lit(v) for v in p])
-            dot = F.aggregate(
-                F.zip_with(col, plane, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
-
-    s = df.select(
-        F.col(key_col).alias("key"),
-        F.col(emb_col).alias("emb"),
-        sig(F.col(emb_col), 0, n_planes).alias("bucket"),
-        sig(F.col(emb_col), n_planes, n_planes + refine_planes).alias("rsig"),
-    )
-    c1 = s.groupBy("bucket").agg(F.count("*").alias("n1"))
-    s = s.join(c1, "bucket").withColumn(
-        "bucket2",
-        F.when(
-            F.col("n1") > max_bucket_size, F.concat("bucket", F.lit("|"), "rsig")
-        ).otherwise(F.col("bucket")),
-    )
-    c2 = s.groupBy("bucket2").agg(F.count("*").alias("n2"))
-    w = W.partitionBy("bucket2").orderBy("key")
-    s2 = (
-        s.join(c2, "bucket2")
-        .withColumn("rn", F.row_number().over(w))
-        .select("key", "emb", "bucket2", "n2", "rn")
-    )
-    a, b = s2.alias("a"), s2.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.bucket2") == F.col("b.bucket2"))
-        & (F.col("a.key") < F.col("b.key"))
-        & (
-            (F.col("a.n2") <= max_bucket_size)
-            | (F.abs(F.col("b.rn") - F.col("a.rn")) <= chain_width)
-        ),
-    ).select(
-        F.col("a.key").alias("key_a"),
-        F.col("b.key").alias("key_b"),
-        _cosine(F.col("a.emb"), F.col("b.emb")).alias("cosine"),
-    )
-    return pairs.filter(F.col("cosine") >= threshold)

@@ -7,7 +7,7 @@ pass; a missed target is NON-fatal (the key is simply null — extract.rs:
 contract.
 
 Each builder returns a Column (struct or null) over the parsed struct /
-sheets grid; ``compile_extracts`` assembles the rule's extract map and
+sheets grid; ``compile_extract`` dispatches one extract section and
 ``content_hash_for_rule`` hashes selected extracts in ``over`` order
 (content_hash.rs:24-31).
 """
@@ -162,19 +162,6 @@ def compile_extract(e: ExtractSection, env: dict[str, Column]) -> Column:
             env["parsed"], p["anchor"], p["value"], int(p.get("within_chars", 400))
         )
     raise ValueError(f"unknown extract type {e.type}")
-
-
-def compile_extracts(
-    d: FingerprintDefinition, env: dict[str, Column], matched: Column
-) -> Column:
-    """All extracts of a rule as one struct column; null when unmatched
-    (extraction only runs after a match, extract.rs:14-29)."""
-    if not d.extract:
-        return F.lit(None).cast("struct<_none:string>")
-    fields = [
-        compile_extract(e, env).alias(e.name) for e in d.extract
-    ]
-    return F.when(matched, F.struct(*fields))
 
 
 def content_hash_for_rule(

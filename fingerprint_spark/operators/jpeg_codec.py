@@ -8,7 +8,7 @@ YCbCr 4:4:4 / 4:2:0 (and any h,v factors <= 2), restart markers.
 Progressive (SOF2), arithmetic coding, and 12-bit stay unsupported and
 raise ValueError — a ROW outcome upstream, never a task failure.
 
-The encoder (fixtures + the multimodal write path) emits baseline
+The encoder (fixtures + the media_roundtrip query) emits baseline
 4:4:4 / grayscale with the spec's Annex-K quantization tables scaled
 by the familiar libjpeg quality formula and the Annex-K standard
 huffman tables. quality=100 gives all-ones quant tables, so FLAT

@@ -124,34 +124,6 @@ LANGID_TRAIN_FIXTURE: list[tuple[str, str]] = [
      "guardarla de nuevo en el cajón", "es"),
 ]
 
-#: held-out sentences (never trained on) for the accuracy gate
-LANGID_HOLDOUT_FIXTURE: list[tuple[str, str]] = [
-    ("the children played in the garden until the sun went down "
-     "and their mother called them inside", "en"),
-    ("please read the instructions carefully before you start the "
-     "machine for the first time", "en"),
-    ("the train to the coast leaves every hour from the main "
-     "station during the summer months", "en"),
-    ("die kinder spielten im garten bis die sonne unterging und "
-     "ihre mutter sie ins haus rief", "de"),
-    ("bitte lesen sie die anweisungen sorgfältig bevor sie die "
-     "maschine zum ersten mal starten", "de"),
-    ("der zug zur küste fährt im sommer jede stunde vom "
-     "hauptbahnhof ab", "de"),
-    ("les enfants jouaient dans le jardin jusqu'au coucher du "
-     "soleil quand leur mère les appela", "fr"),
-    ("veuillez lire attentivement les instructions avant de "
-     "démarrer la machine pour la première fois", "fr"),
-    ("le train pour la côte part toutes les heures de la gare "
-     "principale pendant l'été", "fr"),
-    ("los niños jugaban en el jardín hasta que se puso el sol y "
-     "su madre los llamó adentro", "es"),
-    ("por favor lea las instrucciones con atención antes de "
-     "encender la máquina por primera vez", "es"),
-    ("el tren a la costa sale cada hora desde la estación "
-     "principal durante el verano", "es"),
-]
-
 _MAX_CHARS = 2000  # langid needs a prefix, not the whole document
 
 
@@ -569,11 +541,10 @@ def langid_classify(
 
 
 def _margin_fold_col(feats, init, warr, L: int):
-    """THE dense-literal margin fold (Column side), shared by the
-    double and micro folds: per gram id, slice the L-wide weight row
-    out of the flat literal and zip-add into the accumulator. The
-    literal embeds exactly ONCE in the plan (per-class folds each
-    embedding their own copy OOM'd the driver at dim=2048)."""
+    """THE dense-literal margin fold (Column side): per gram id, slice
+    the L-wide weight row out of the flat literal and zip-add into the
+    accumulator. The literal embeds exactly ONCE in the plan (per-class
+    folds each embedding their own copy OOM'd the driver at dim=2048)."""
     return F.aggregate(
         feats,
         init,
@@ -597,7 +568,7 @@ def _batch_margins(texts, bias: np.ndarray, weights: np.ndarray,
     numpy row-sum fold. Yields one margin vector per text. NOTE: the
     row-sum order is numpy's, not the Column fold's first-occurrence
     order — exact double-path sums can differ in the last ulp (the
-    micro kernels' integer sums are order-free and therefore
+    micro kernel's integer sums are order-free and therefore
     bit-exact)."""
     if memo is None:
         memo = {}
@@ -630,72 +601,6 @@ def model_micro(model: dict, scale: int = 10**6) -> tuple[list[int], list[int]]:
     return fm, bm
 
 
-def langid_classify_micro(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "lang_pred",
-    scale: int = 10**6,
-) -> DataFrame:
-    """Fixed-point inference for cross-engine oracle contracts.
-
-    Rounding DOUBLE margins to 6dp is not a cross-engine shield: a
-    margin can land ON a decimal half-boundary (measured at sf0.01:
-    1.1315865000000003 vs ...4999999996 across engines — sum-order ulp
-    noise decides the rounding direction). Here the weights are
-    quantized to integers once, so the per-class margin is an EXACT
-    bigint sum in any engine: argmax (the language verdict) is
-    bit-exact, and the softmax's exp() inputs ((m_c - max)/scale, an
-    exact-int-to-double division) are IEEE-identical doubles — the
-    only residual cross-engine surface is the libm exp ulp
-    (~1e-16 relative on the reported prob). Same zero-shuffle
-    single-literal plan shape as langid_classify."""
-    classes = list(model["classes"])
-    L = len(classes)
-    dim, n = int(model["dim"]), int(model.get("ngram", 3))
-    hasher = model.get("hasher", "xxhash")
-    fm, bm = model_micro(model, scale)
-    df = df.withColumn(
-        "__lid_feats", gram_features_col(F.col(text_col), dim, n, hasher)
-    )
-    init = F.array(*[F.lit(b).cast("bigint") for b in bm])
-    if model["weights"]:
-        warr = F.array(*[F.lit(v).cast("bigint") for v in fm])
-        marr = _margin_fold_col("__lid_feats", init, warr, L)
-    else:
-        marr = init
-    df = df.withColumn("__lid_m", marr)
-    margins = [F.element_at("__lid_m", c + 1) for c in range(L)]
-    mmax = F.greatest(*margins) if L > 1 else margins[0]
-    es = [
-        F.exp((m - mmax).cast("double") / F.lit(float(scale)))
-        for m in margins
-    ]
-    z = es[0]
-    for e in es[1:]:
-        z = z + e
-    # argmax on the exact INTEGER margins (exp is monotone, so this is
-    # the softmax argmax); ties to the smallest class index via nrank
-    pairs = F.array(
-        *[
-            F.struct(
-                margins[c].alias("m"),
-                F.lit(-c).alias("nrank"),
-                F.lit(classes[c]).alias("lang"),
-            )
-            for c in range(L)
-        ]
-    )
-    best = F.array_max(pairs)
-    # winner's prob = exp(0)/z = 1/z (ties: all tied classes share z)
-    return df.withColumn(
-        out_col,
-        F.struct(
-            best["lang"].alias("lang"), (F.lit(1.0) / z).alias("prob")
-        ),
-    ).drop("__lid_feats", "__lid_m")
-
-
 def langid_classify_micro_arrow(
     df: DataFrame,
     model: dict,
@@ -703,14 +608,14 @@ def langid_classify_micro_arrow(
     out_col: str = "lang_pred",
     scale: int = 10**6,
 ) -> DataFrame:
-    """Arrow twin of langid_classify_micro — the SAME fixed-point
-    contract (exact int64 margin sums; argmax on integers; exp inputs
-    are IEEE-identical doubles) at corpus speed. The Column micro fold
-    pays ~1 ms/doc in interpreted HOF md5+conv gram hashing (measured:
-    gram extraction alone is 5.0 s of a 5.5 s sf0.1 pass); here the
-    per-batch gram memo hashes each distinct gram once in C, so the
-    oracle-checked headline row stays fast. Parity with the Column
-    micro fold is exact on lang and ulp-bounded on prob (pytest)."""
+    """Fixed-point langid kernel (exact int64 margin sums; argmax on
+    integers; exp inputs are IEEE-identical doubles) at corpus speed. A
+    Column micro fold paid ~1 ms/doc in interpreted HOF md5+conv gram
+    hashing (measured: gram extraction alone was 5.0 s of a 5.5 s sf0.1
+    pass); here the per-batch gram memo hashes each distinct gram once
+    in C, so the oracle-checked headline row stays fast. Agreement with
+    the double-path Column fold (langid_classify) is pinned by
+    pytest."""
     classes = list(model["classes"])
     L = len(classes)
     dim, n = int(model["dim"]), int(model.get("ngram", 3))

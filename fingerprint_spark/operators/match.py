@@ -19,11 +19,6 @@ from pyspark.sql import functions as F
 from ..dsl.compiler import compile_rule
 from ..dsl.model import FingerprintDefinition
 
-MATCH_RESULT_FIELDS = (
-    "fingerprint_id", "version", "matched", "failed_assertion",
-    "assertions", "source_hash",
-)
-
 
 def first_match_fold(
     rules: list[FingerprintDefinition], env: dict[str, Column]

@@ -1,33 +1,25 @@
-"""REAL media codecs from the stdlib — PNG, BMP, WAV (+ JPEG in
+"""REAL image codecs from the stdlib — PNG, BMP (+ JPEG in
 jpeg_codec.py).
 
-The container ships no imaging/audio libraries, but the formats a
-training pipeline meets most don't need one:
+The container ships no imaging libraries, but the formats a training
+pipeline meets most don't need one:
 
 - PNG: zlib (stdlib) inflates IDAT; chunk framing, scanline unfiltering
   (all 5 filter types incl. Paeth), and the critical-chunk layout are
   ~150 lines of struct arithmetic. Supports 8-bit depth, color types
   0/2/4/6 (gray, RGB, gray+alpha, RGBA), non-interlaced.
 - BMP: uncompressed 24-bit BITMAPINFOHEADER, bottom-up rows padded to 4.
-- WAV: the stdlib ``wave`` module (rate/channels/width/frames), samples
-  via numpy frombuffer.
 - JPEG: baseline sequential huffman + IDCT from the public T.81 spec
   (operators/jpeg_codec.py) — grayscale / 4:4:4 / 4:2:0.
 
-MP3/MP4 genuinely require codec libraries and remain honestly stubbed
-(deterministic fakes keep the Spark data path testable).
-
 Also includes a minimal deterministic PNG writer (filter 0 + zlib) for
-fixtures, and a real nearest-neighbor resize over the decoded array.
+fixtures.
 """
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 import zlib
-from functools import lru_cache
 
 import numpy as np
 
@@ -177,394 +169,3 @@ def decode_image_bytes(payload: bytes) -> dict:
 
         return decode_jpeg(payload)
     raise ValueError("unsupported image format (stdlib codecs: png, bmp, jpeg)")
-
-
-def resize_nearest(pixels: "np.ndarray", target_w: int, target_h: int) -> "np.ndarray":
-    """Real nearest-neighbor resize (deterministic index mapping)."""
-    h, w = pixels.shape[:2]
-    ys = np.minimum((np.arange(target_h) * h) // target_h, h - 1)
-    xs = np.minimum((np.arange(target_w) * w) // target_w, w - 1)
-    return pixels[ys][:, xs]
-
-
-def decode_wav(payload: bytes) -> dict:
-    """WAV bytes -> {sample_rate, n_channels, sample_width, n_frames,
-    duration_ms, rms} via the stdlib wave module."""
-    try:
-        wf = wave.open(io.BytesIO(payload), "rb")
-    except (wave.Error, EOFError) as e:
-        # the stdlib module reads PCM only; IMA ADPCM (fmt tag 0x11)
-        # and G.711 mu-law/A-law (7/6) are real crawl-data variants —
-        # decode them ourselves
-        try:
-            return decode_wav_ima_adpcm(payload)
-        except ValueError:
-            pass
-        try:
-            return decode_wav_g711(payload)
-        except ValueError:
-            pass
-        raise ValueError(f"not a wav: {e}") from None
-    with wf:
-        rate = wf.getframerate()
-        nch = wf.getnchannels()
-        width = wf.getsampwidth()
-        n = wf.getnframes()
-        frames = wf.readframes(n)
-    if width == 2:
-        samples = np.frombuffer(frames, dtype=np.int16).astype(np.float64)
-        norm = 32768.0
-    elif width == 1:
-        samples = np.frombuffer(frames, dtype=np.uint8).astype(np.float64) - 128.0
-        norm = 128.0
-    else:
-        raise ValueError(f"unsupported wav sample width {width}")
-    rms = float(np.sqrt(np.mean((samples / norm) ** 2))) if samples.size else 0.0
-    return {
-        "sample_rate": rate,
-        "n_channels": nch,
-        "sample_width": width,
-        "n_frames": n,
-        "duration_ms": int(n * 1000 / rate) if rate else 0,
-        "rms": rms,
-    }
-
-
-# ---------------------------------------------------------------------------
-# IMA ADPCM WAV (wFormatTag 0x11) — the compressed-WAV variant the stdlib
-# wave module refuses. The algorithm (step/index tables, nibble update) is
-# the public IMA/DVI ADPCM spec; decode is exactly defined integer
-# arithmetic, so decode(encode(x)) is deterministic and re-encoding the
-# decoded signal is byte-identical (tested).
-# ---------------------------------------------------------------------------
-
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8]
-_IMA_STEP = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-
-
-def _ima_step_decode(pred: int, index: int, nibble: int) -> tuple[int, int]:
-    step = _IMA_STEP[index]
-    diff = step >> 3
-    if nibble & 1:
-        diff += step >> 2
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 4:
-        diff += step
-    pred = pred - diff if nibble & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + _IMA_INDEX[nibble]))
-    return pred, index
-
-
-def decode_wav_ima_adpcm(payload: bytes) -> dict:
-    """IMA ADPCM WAV (mono, fmt tag 0x11) -> same dict shape as
-    decode_wav plus the decoded int16 'samples' array. ValueError on
-    anything else (E_PARSE contract — truncated chunks must not
-    surface struct.error into the Spark task)."""
-    try:
-        return _decode_wav_ima_adpcm(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"ima adpcm: truncated or corrupt ({e})") from None
-
-
-def _decode_wav_ima_adpcm(payload: bytes) -> dict:
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a wav: bad RIFF header")
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact" and clen >= 4:
-            # total sample count — mandatory for non-PCM WAV; bounds
-            # the padded final block
-            (fact,) = struct.unpack("<I", body[:4])
-        pos += 8 + clen + (clen & 1)
-    if fmt is None or data is None:
-        raise ValueError("wav: missing fmt/data chunk")
-    tag, ch, rate, _bps, block_align, bits = struct.unpack("<HHIIHH", fmt[:16])
-    if tag != 0x11:
-        raise ValueError(f"not ima adpcm (fmt tag {tag:#x})")
-    if ch != 1:
-        raise ValueError("ima adpcm subset: mono only")
-    if bits != 4:
-        raise ValueError("ima adpcm: 4-bit nibbles only")
-    (spb,) = struct.unpack("<H", fmt[18:20]) if len(fmt) >= 20 else (
-        (block_align - 4) * 2 + 1,
-    )
-    out = []
-    for bstart in range(0, len(data), block_align):
-        block = data[bstart : bstart + block_align]
-        if len(block) < 4:
-            break
-        pred = struct.unpack("<h", block[:2])[0]
-        index = min(88, block[2])
-        out.append(pred)
-        produced = 1
-        for byte in block[4:]:
-            for nib in (byte & 0xF, byte >> 4):
-                if produced >= spb:
-                    break
-                pred, index = _ima_step_decode(pred, index, nib)
-                out.append(pred)
-                produced += 1
-    samples = np.array(out, dtype=np.int16)
-    if fact is not None:
-        samples = samples[:fact]
-    n = len(samples)
-    norm = samples.astype(np.float64) / 32768.0
-    return {
-        "sample_rate": rate,
-        "n_channels": 1,
-        "sample_width": 2,
-        "n_frames": n,
-        "duration_ms": int(n * 1000 / rate) if rate else 0,
-        "rms": float(np.sqrt(np.mean(norm * norm))) if n else 0.0,
-        "samples": samples,
-    }
-
-
-def encode_wav_ima_adpcm(
-    samples: "np.ndarray", sample_rate: int = 8000, block_samples: int = 505
-) -> bytes:
-    """Deterministic mono IMA ADPCM WAV writer (canonical encoder:
-    3-bit magnitude successive approximation + decoder-mirrored state
-    update)."""
-    s = np.asarray(samples, dtype=np.int16)
-    block_align = 4 + (block_samples - 1 + 1) // 2
-    blocks = []
-    for bstart in range(0, len(s), block_samples):
-        blk = s[bstart : bstart + block_samples]
-        pred = int(blk[0])
-        # per-block initial step index sized to the block's mean
-        # |delta| (encoder freedom; kills the cold-start adaptation
-        # transient the all-zeros index causes on steep signals)
-        mean_d = (
-            float(np.abs(np.diff(blk.astype(np.int64))).mean())
-            if len(blk) > 1 else 0.0
-        )
-        index = int(
-            np.argmin([abs(st - mean_d) for st in _IMA_STEP])
-        )
-        hdr = struct.pack("<hBB", pred, index, 0)
-        nibbles = []
-        for sample in blk[1:]:
-            step = _IMA_STEP[index]
-            delta = int(sample) - pred
-            nib = 0
-            if delta < 0:
-                nib = 8
-                delta = -delta
-            if delta >= step:
-                nib |= 4
-                delta -= step
-            if delta >= step >> 1:
-                nib |= 2
-                delta -= step >> 1
-            if delta >= step >> 2:
-                nib |= 1
-            pred, index = _ima_step_decode(pred, index, nib)
-            nibbles.append(nib)
-        if len(nibbles) % 2:
-            nibbles.append(0)
-        body = bytes(
-            nibbles[i] | (nibbles[i + 1] << 4)
-            for i in range(0, len(nibbles), 2)
-        )
-        blocks.append(hdr + body.ljust(block_align - 4, b"\x00"))
-    data = b"".join(blocks)
-    byte_rate = sample_rate * block_align // block_samples
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, 1, sample_rate, byte_rate, block_align, 4, 2,
-        block_samples,
-    )
-    riff = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, len(s))
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-# ---------------------------------------------------------------------------
-# G.711 mu-law / A-law WAV (wFormatTag 7 / 6) — telephony-rate crawl
-# audio. G.711 (ITU-T, public) is a pure 256-entry companding table:
-# decode is exact integer arithmetic and encode(decode(code)) == code
-# for every code (the defining involution, tested over all 256 values),
-# so this tier is bit-exact like FLAC/ADPCM — the honestly-stubbed
-# sample tier shrinks to MP3/MP4 (needs real codec libs).
-# ---------------------------------------------------------------------------
-
-_ULAW_BIAS = 0x84
-
-
-def ulaw_to_linear(code: int) -> int:
-    """One G.711 mu-law code -> linear int16 (range +-32124)."""
-    u = ~code & 0xFF
-    exp = (u >> 4) & 0x07
-    mant = u & 0x0F
-    x = (((mant << 3) + _ULAW_BIAS) << exp) - _ULAW_BIAS
-    return -x if u & 0x80 else x
-
-
-def linear_to_ulaw(sample: int) -> int:
-    """Linear int16 -> G.711 mu-law code (canonical CCITT encoder)."""
-    sign = 0x80 if sample < 0 else 0
-    if sample < 0:
-        sample = -sample
-    sample = min(sample, 32635) + _ULAW_BIAS
-    exp = 7
-    mask = 0x4000
-    while exp > 0 and not sample & mask:
-        exp -= 1
-        mask >>= 1
-    mant = (sample >> (exp + 3)) & 0x0F
-    return ~(sign | (exp << 4) | mant) & 0xFF
-
-
-def alaw_to_linear(code: int) -> int:
-    """One G.711 A-law code -> linear int16 (range +-32256)."""
-    a = code ^ 0x55
-    exp = (a >> 4) & 0x07
-    mant = a & 0x0F
-    if exp == 0:
-        x = (mant << 4) + 8
-    else:
-        x = ((mant << 4) + 0x108) << (exp - 1)
-    # A-law sign convention is inverted vs mu-law: MSB set = POSITIVE
-    return x if a & 0x80 else -x
-
-
-def linear_to_alaw(sample: int) -> int:
-    """Linear int16 -> G.711 A-law code."""
-    sign = 0x80 if sample >= 0 else 0
-    if sample < 0:
-        sample = -sample - 1 if sample == -32768 else -sample
-    sample = min(sample, 32767)
-    if sample >= 256:
-        exp = 7
-        mask = 0x4000
-        while exp > 1 and not sample & mask:
-            exp -= 1
-            mask >>= 1
-        mant = (sample >> (exp + 3)) & 0x0F
-    else:
-        exp = 0
-        mant = sample >> 4
-    return (sign | (exp << 4) | mant) ^ 0x55
-
-
-@lru_cache(maxsize=1)
-def _g711_tables() -> dict:
-    # built once per process, not once per decoded row (review finding)
-    return {
-        6: np.array([alaw_to_linear(c) for c in range(256)], dtype=np.int16),
-        7: np.array([ulaw_to_linear(c) for c in range(256)], dtype=np.int16),
-    }
-
-
-def decode_wav_g711(payload: bytes) -> dict:
-    """G.711 WAV (fmt tag 6 = A-law, 7 = mu-law; mono or interleaved
-    stereo, 8 bits/code) -> the decode_wav dict shape + decoded int16
-    'samples'. ValueError on anything else (E_PARSE contract)."""
-    try:
-        return _decode_wav_g711(payload)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"g711: truncated or corrupt ({e})") from None
-
-
-def _decode_wav_g711(payload: bytes) -> dict:
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a wav: bad RIFF header")
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact" and clen >= 4:
-            (fact,) = struct.unpack("<I", body[:4])
-        pos += 8 + clen + (clen & 1)
-    if fmt is None or data is None:
-        raise ValueError("wav: missing fmt/data chunk")
-    tag, ch, rate, _bps, _ba, bits = struct.unpack("<HHIIHH", fmt[:16])
-    if tag not in (6, 7):
-        raise ValueError(f"not g711 (fmt tag {tag:#x})")
-    if bits != 8:
-        raise ValueError("g711: 8 bits per code required")
-    if ch not in (1, 2):
-        raise ValueError("g711: mono or stereo only")
-    table = _g711_tables()[tag]
-    codes = np.frombuffer(data, dtype=np.uint8)
-    if ch == 2 and len(codes) % 2:
-        codes = codes[:-1]
-    samples = table[codes]
-    n = len(samples) // ch
-    if fact is not None:
-        n = min(n, fact)
-        samples = samples[: n * ch]
-    norm = samples.astype(np.float64) / 32768.0
-    return {
-        "sample_rate": rate,
-        "n_channels": ch,
-        "sample_width": 2,
-        "n_frames": n,
-        "duration_ms": int(n * 1000 / rate) if rate else 0,
-        "rms": float(np.sqrt(np.mean(norm * norm))) if len(samples) else 0.0,
-        "samples": samples.reshape(n, ch) if ch == 2 else samples,
-    }
-
-
-def encode_wav_g711(
-    samples: "np.ndarray", law: str = "ulaw", sample_rate: int = 8000
-) -> bytes:
-    """Deterministic G.711 WAV fixture writer (mono or (n, 2) stereo):
-    companding encode + fmt tag 7 (mu-law) / 6 (A-law) + fact chunk."""
-    s = np.asarray(samples, dtype=np.int16)
-    ch = 1 if s.ndim == 1 else s.shape[1]
-    flat = s.reshape(-1)
-    enc = linear_to_ulaw if law == "ulaw" else linear_to_alaw
-    tag = 7 if law == "ulaw" else 6
-    codes = bytes(enc(int(v)) for v in flat)
-    n_frames = len(flat) // ch
-    fmt = struct.pack(
-        "<HHIIHH", tag, ch, sample_rate, sample_rate * ch, ch, 8
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n_frames)
-        + b"data" + struct.pack("<I", len(codes)) + codes
-        + (b"\x00" if len(codes) % 2 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def encode_wav(
-    samples: "np.ndarray", sample_rate: int = 16000, n_channels: int = 1
-) -> bytes:
-    """Deterministic WAV fixture writer (int16 PCM)."""
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(n_channels)
-        wf.setsampwidth(2)
-        wf.setframerate(sample_rate)
-        wf.writeframes(np.asarray(samples, dtype=np.int16).tobytes())
-    return buf.getvalue()

@@ -3,11 +3,6 @@
 - ``cosine_topk``: brute-force baseline — broadcast the query vector,
   one narrow pass computing cosine, top-k via a single ordered window.
   Exact; O(N) scan, the right answer until N is large enough to index.
-- ``lsh_topk``: random-hyperplane LSH scale path — probe only vectors
-  whose sign-signature is within ``probe_hamming`` of the query's
-  signature (multi-probe), then exact cosine on the candidate subset.
-  At 10^12 scale candidates shrink by ~2^-planes per bucket; recall is
-  tunable via n_planes/probe_hamming.
 - ``ivf_topk``: IVF-style scale path — k-means-lite centroids sampled
   deterministically, vectors assigned to nearest centroid (one narrow
   pass), queries probe ``n_probe`` nearest cells only.
@@ -68,58 +63,6 @@ def cosine_topk(
     # TakeOrderedAndProject + k-row rank window (operators/topk.py);
     # key-type-agnostic partition spec — string url keys work under ANSI
     return ranked_topk(scored, [F.desc("cosine"), F.asc("key")], k)
-
-
-def _sign_signature(col: Column, planes: list[list[float]]) -> Column:
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        dot = F.aggregate(
-            F.zip_with(col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, 1).otherwise(0))
-    # pack to a long
-    packed = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        packed = packed + (b.cast("long") * F.lit(2 ** i).cast("long"))
-    return packed
-
-
-def make_planes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
-    import random
-
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
-    n_planes: int = 12,
-    probe_hamming: int = 2,
-    seed: int = 7,
-) -> DataFrame:
-    """Multi-probe sign-LSH: candidates = signature within probe_hamming
-    bits of the query signature, then exact cosine top-k on candidates.
-    The signature filter is a pure Column predicate -> predicate-pushdown
-    friendly if signatures are precomputed + partitioned."""
-    planes = make_planes(len(query_vec), n_planes, seed)
-    # query signature computed at the driver (pure python, deterministic)
-    qsig = 0
-    for i, p in enumerate(planes):
-        dot = sum(float(a) * b for a, b in zip(query_vec, p))
-        if dot >= 0:
-            qsig |= 1 << i
-    sig = _sign_signature(F.col(emb_col), planes)
-    cand = df.withColumn("_sig", sig).filter(
-        F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig))) <= probe_hamming
-    )
-    return cosine_topk(cand, query_vec, k, emb_col, key_col)
 
 
 def ivf_assign(

@@ -65,5 +65,3 @@ PARSED_TYPE = T.StructType(
         T.StructField("parse_error", T.StringType(), True),
     ]
 )
-
-PARSED_DDL = PARSED_TYPE.simpleString()

@@ -22,9 +22,8 @@ Execution shape (the 100 TB design):
   literals (broadcast versioned lookup structures). Re-validation against
   a new template version is an incremental pass over the same parsed
   struct — only the match fold changes.
-- ``repartition_by_url`` (xxhash64 + optional salt) is applied only when a
-  downstream stage actually shuffles (dedup, label-join), never for the
-  map-only chain itself.
+- The map-only chain itself never repartitions; only a downstream stage
+  that actually shuffles (dedup, label-join) keys on url hashes.
 
 Driver-side build shape: every ``F.*`` call is a py4j round trip and
 every ``withColumn`` re-analyses the whole plan, so the chains are NOT
@@ -88,19 +87,6 @@ def default_ppl_model() -> NGramModel:
         for i in range(300)
     ]
     return train_char_ngram(texts, order=3)
-
-
-def repartition_by_url(
-    df: DataFrame, num_partitions: int, salt_buckets: int = 0
-) -> DataFrame:
-    """Explicit repartition on xxhash64(url); optional salting for skewed
-    hosts (north_rule). Use before shuffle-bearing stages only."""
-    if salt_buckets > 1:
-        salt = F.pmod(F.xxhash64(F.col("url"), F.lit("salt")), F.lit(salt_buckets))
-        return df.withColumn("_salt", salt).repartition(
-            num_partitions, F.xxhash64("url"), F.col("_salt")
-        ).drop("_salt")
-    return df.repartition(num_partitions, F.xxhash64("url"))
 
 
 def _verdict(

@@ -14,10 +14,9 @@ exact shards" long after the job ran. This sink:
 - aggregates a per-shard manifest IN THE SAME JOB (row count + an
   order-insensitive xor of key hashes — driver-bounded at n_shards
   rows) and writes it as MANIFEST.json next to the data;
-- ``verify_shards`` recomputes counts + key-hash folds from the written
-  parquet and diffs them against the manifest — a deleted or duplicated
-  row flips the xor and is caught, the lineage story of checkpoint.py
-  applied to the output side.
+- the manifest's folds are recomputable from the written parquet
+  (``_fold_shards``): a deleted or duplicated row flips the xor, the
+  lineage story of checkpoint.py applied to the output side.
 
 Reference analog: the witness/lineage receipts (witness.py); beyond-
 reference per the round brief's training-pipeline requirement.
@@ -53,17 +52,6 @@ def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-
-
-def _fs_read_text(spark: SparkSession, path: str) -> str:
-    fs, p = _manifest_path(spark, path)
-    stream = fs.open(p)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
 
 
 def _shard_col(key, n_shards: int):
@@ -126,21 +114,4 @@ def _fold_shards(spark: SparkSession, path: str, key_col: str) -> dict:
             for r in rows
         },
         "total_rows": int(sum(r["rows"] for r in rows)),
-    }
-
-
-def verify_shards(spark: SparkSession, path: str) -> dict:
-    """Recompute per-shard counts + key folds and diff vs MANIFEST.json.
-    Returns {ok, mismatched_shards, missing_shards, extra_shards}."""
-    manifest = json.loads(_fs_read_text(spark, path))
-    got = _fold_shards(spark, path, manifest["key_col"])["shards"]
-    want = manifest["shards"]
-    mismatched = sorted(
-        s for s in want.keys() & got.keys() if want[s] != got[s]
-    )
-    return {
-        "ok": want == got,
-        "mismatched_shards": mismatched,
-        "missing_shards": sorted(want.keys() - got.keys()),
-        "extra_shards": sorted(got.keys() - want.keys()),
     }

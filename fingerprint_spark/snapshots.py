@@ -307,8 +307,8 @@ def commit_snapshot(
     """Write df's rows as new immutable data files + publish the next
     snapshot manifest atomically. mode='append' carries the parent's
     file list forward; 'overwrite' starts fresh (the old files stay on
-    disk — pinned readers of older snapshots keep working; reclaim is
-    expire_snapshots' job). Returns the committed manifest.
+    disk — pinned readers of older snapshots keep working; nothing
+    reclaims them yet). Returns the committed manifest.
 
     publish_wait_secs: how long a race loser waits for the winner's
     manifest to appear before concluding the claim is stale. Raise it
@@ -412,31 +412,6 @@ def read_snapshot(
     if not manifest["files"]:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*manifest["files"])
-
-
-def expire_snapshots(table_path: str, keep_last: int = 1) -> list[int]:
-    """Drop all but the newest keep_last manifests and delete data
-    files no surviving snapshot references. Returns expired ids."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    fs = _fs_for(table_path)
-    ids = list_snapshots(table_path, fs)
-    expired = ids[:-keep_last]
-    if not expired:
-        return []
-    keep_files = set()
-    for sid in ids[-keep_last:]:
-        keep_files.update(load_manifest(table_path, sid, fs)["files"])
-    drop_files = set()
-    for sid in expired:
-        drop_files.update(load_manifest(table_path, sid, fs)["files"])
-    for f in sorted(drop_files - keep_files):
-        fs.delete(f)
-    for sid in expired:
-        mf = _manifest_file(fs, table_path, sid)
-        fs.delete(mf)
-        fs.delete(mf + ".claim")  # Hadoop-backend claim marker, if any
-    return expired
 
 
 def witness_read(

@@ -16,9 +16,6 @@ it from raw bytes:
   (page_count / metadata_regex) consumes — from the parse above or from
   ALREADY-EXTRACTED columns (a WARC sidecar), whichever the pipeline has;
 - ``pdf_struct_from_binary_col``: Arrow-batched UDF binary -> pdf struct.
-
-The sparse-text warning (pages > 10 & text < 100 chars ->
-W_SPARSE_TEXT, enricher.rs:565-592) lives here as a flag column.
 """
 
 from __future__ import annotations
@@ -41,13 +38,6 @@ def pdf_struct_col(page_count: Column, metadata: Column) -> Column:
     return F.struct(
         page_count.cast("int").alias("page_count"),
         metadata.alias("metadata"),
-    )
-
-
-def sparse_text_flag(pdf: Column, text: Column) -> Column:
-    """W_SPARSE_TEXT: pages>10 & text<100 chars (enricher.rs:565-592)."""
-    return (pdf["page_count"] > 10) & (
-        F.length(F.coalesce(text, F.lit(""))) < 100
     )
 
 
@@ -143,40 +133,3 @@ def pdf_struct_from_binary_col(payload: Column) -> Column:
         return pd.DataFrame(rows)
 
     return udf(payload)
-
-
-def make_pdf(n_pages: int, info: dict[str, str] | None = None) -> bytes:
-    """Minimal valid PDF fixture writer (deterministic bytes): catalog,
-    pages tree, n_pages empty pages, optional Info dict + trailer."""
-    objs: list[bytes] = []
-    kids = " ".join(f"{3 + i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    )
-    for _ in range(n_pages):
-        objs.append(b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>")
-    info_num = None
-    if info:
-        pairs = " ".join(
-            f"/{k} ({v.replace(chr(92), chr(92)*2).replace('(', chr(92)+'(').replace(')', chr(92)+')')})"
-            for k, v in sorted(info.items())
-        )
-        objs.append(f"<< {pairs} >>".encode())
-        info_num = len(objs)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    trailer = f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R"
-    if info_num:
-        trailer += f" /Info {info_num} 0 R"
-    trailer += f" >>\nstartxref\n{xref_at}\n%%EOF\n"
-    out += trailer.encode()
-    return bytes(out)

@@ -20,9 +20,6 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 DEFAULT_LEDGER = os.path.expanduser("~/.fingerprint_spark/witness.jsonl")
 ENV_VAR = "FINGERPRINT_SPARK_WITNESS"
 
@@ -62,40 +59,3 @@ def append_witness(
         f.flush()
         os.fsync(f.fileno())
     return rec
-
-
-def read_ledger(spark: SparkSession, path: str | None = None) -> DataFrame:
-    """Ledger as a DataFrame (query.rs:13-119 analog)."""
-    return spark.read.json(path or ledger_path())
-
-
-def query_witness(
-    spark: SparkSession,
-    tool: str | None = None,
-    outcome: str | None = None,
-    since: str | None = None,
-    until: str | None = None,
-    input_hash: str | None = None,
-    path: str | None = None,
-) -> DataFrame:
-    df = read_ledger(spark, path)
-    if tool:
-        df = df.filter(F.col("tool") == tool)
-    if outcome:
-        df = df.filter(F.col("outcome") == outcome)
-    if since:
-        df = df.filter(F.col("ts") >= since)
-    if until:
-        df = df.filter(F.col("ts") <= until)
-    if input_hash:
-        df = df.filter(F.col("input_hash") == input_hash)
-    return df.orderBy("ts")
-
-
-def last_witness(spark: SparkSession, tool: str | None = None, path: str | None = None):
-    rows = query_witness(spark, tool=tool, path=path).orderBy(F.desc("ts")).limit(1).collect()
-    return rows[0].asDict() if rows else None
-
-
-def count_witness(spark: SparkSession, path: str | None = None, **filters) -> int:
-    return query_witness(spark, path=path, **filters).count()

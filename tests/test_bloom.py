@@ -3,11 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from fingerprint_spark.operators.bloom import (
-    bloom_build,
-    bloom_probe,
-    frontier_new_urls,
-)
+from fingerprint_spark.operators.bloom import bloom_build, bloom_probe
 
 N_BITS = 1 << 20
 K = 5
@@ -41,8 +37,11 @@ def test_frontier_new_urls_composes_with_snapshots(spark, tmp_path):
     t = str(tmp_path / "tbl")
     commit_snapshot(_urls(spark, 0, 2000), t)
     incoming = _urls(spark, 1000, 3000)          # 1000 old + 1000 new
-    new = frontier_new_urls(
-        incoming, read_snapshot(spark, t), "url", N_BITS, K
+    # crawl-frontier dedup: keep the incoming rows the bloom of the
+    # seen snapshot definitely does not contain
+    bloom = bloom_build(read_snapshot(spark, t), "url", N_BITS, K)
+    new = bloom_probe(incoming, bloom, "url", N_BITS, K).filter(
+        F.col("maybe_member") == 0
     )
     got = {r["url"] for r in new.collect()}
     # no seen URL re-emitted; (almost) all new ones kept — a bloom

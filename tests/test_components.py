@@ -4,10 +4,7 @@ pairs (large-star/small-star), vs the one-pass min-key approximation."""
 import pytest
 from pyspark.sql import functions as F
 
-from fingerprint_spark.operators.components import (
-    connected_components,
-    dedup_connected,
-)
+from fingerprint_spark.operators.components import connected_components
 
 
 def _cc(spark, edges):
@@ -50,7 +47,11 @@ def test_dedup_connected_keeps_component_minimum(spark):
     pairs = spark.createDataFrame(
         [(0, 3), (3, 5), (2, 6)], ["key_a", "key_b"]
     )
-    kept = {r["url"] for r in dedup_connected(docs, pairs).collect()}
+    cc = connected_components(pairs)
+    losers = cc.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias("url")
+    )
+    kept = {r["url"] for r in docs.join(losers, "url", "left_anti").collect()}
     # component {0,3,5} -> keep 0; {2,6} -> keep 2; singletons survive
     assert kept == {0, 1, 2, 4, 7}
 

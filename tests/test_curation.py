@@ -18,8 +18,6 @@ from fingerprint_spark.operators.curation import (
     repetition_profile,
     sample_uniform_permille,
     stratified_sample,
-    word_chunks,
-    word_ngrams,
 )
 
 
@@ -78,8 +76,10 @@ def test_chunk_dedup_within_document_repeat_collapses(spark):
 
 
 def test_word_chunks_last_chunk_short(spark):
+    from fingerprint_spark.operators.curation import _chunks_from_words, _words
+
     out = spark.range(1).select(
-        word_chunks(F.lit("a b c d e"), 2).alias("c")
+        _chunks_from_words(_words(F.lit("a b c d e")), 2).alias("c")
     ).head()["c"]
     assert out == ["a b", "c d", "e"]
 
@@ -210,8 +210,10 @@ def test_repetition_short_doc_absent(spark):
 
 
 def test_word_ngrams_short_is_empty(spark):
+    from fingerprint_spark.operators.curation import _ngrams_from_words, _words
+
     out = spark.range(1).select(
-        word_ngrams(F.lit("a b"), 3).alias("g")
+        _ngrams_from_words(_words(F.lit("a b")), 3).alias("g")
     ).head()["g"]
     assert out == []
 
@@ -375,7 +377,8 @@ def test_graph_and_sink_on_empty(spark, tmp_path):
     from pyspark.sql import Row
 
     from fingerprint_spark.operators.components import pagerank
-    from fingerprint_spark.sinks import verify_shards, write_training_shards
+    from fingerprint_spark.sinks import write_training_shards
+    from helpers import verify_shards
 
     nodes = spark.createDataFrame([Row(doc_id=0)]).limit(0)
     edges = spark.createDataFrame([], "src long, dst long")

@@ -3,7 +3,7 @@
 Round-4 VERDICT #5: close the audio tier the way jpeg_codec closed
 images — a lossless stdlib-feasible decoder whose output is PROVEN
 exact (CRC-8/16 + STREAMINFO md5), wired into the media_roundtrip
-oracle row and the audio_features cascade.
+oracle row.
 """
 
 import numpy as np
@@ -87,29 +87,6 @@ def test_crc_vectors():
     assert _crc8(msg + bytes([_crc8(msg)])) == 0
     c16 = _crc16(msg)
     assert _crc16(msg + bytes([c16 >> 8, c16 & 0xFF])) == 0
-
-
-def test_audio_features_flac_branch(spark):
-    """audio_features decodes FLAC payloads sample-accurately (rms),
-    WAV still first, garbage still nulls."""
-    from fingerprint_spark.operators.media_codecs import encode_wav
-    from fingerprint_spark.operators.multimodal import audio_features
-
-    sig = (np.sin(np.arange(2000) / 5.0) * 10000).astype(np.int16)
-    flac = encode_flac(sig, rate=8000, blocksize=256)
-    wav = encode_wav(sig, sample_rate=8000)
-    df = spark.createDataFrame(
-        [("f", bytearray(flac)), ("w", bytearray(wav)), ("g", bytearray(b"xx"))],
-        "media_id string, payload binary",
-    )
-    got = {r["media_id"]: r for r in audio_features(df).collect()}
-    want_rms = float(np.sqrt(np.mean((sig / 32768.0) ** 2)))
-    assert got["f"]["sample_rate"] == 8000
-    assert got["f"]["n_frames"] == 2000
-    assert got["f"]["rms"] == pytest.approx(want_rms, abs=1e-12)
-    # FLAC rms must equal WAV rms exactly at the sample level
-    assert got["f"]["rms"] == pytest.approx(got["w"]["rms"], abs=1e-12)
-    assert got["g"]["sample_rate"] is None and got["g"]["rms"] is None
 
 
 def test_stereo_decorrelation_roundtrips():

@@ -105,24 +105,3 @@ def test_garbage_and_unsupported_refused():
     b[i + 1] = 0xC2
     with pytest.raises(ValueError, match="SOF2"):
         decode_jpeg(bytes(b))
-
-
-def test_multimodal_image_features_on_real_jpeg(spark):
-    """image_features with the real codec over JPEG payloads: features
-    from actual pixels; undecodable bytes stay a null-feature row."""
-    from fingerprint_spark.operators.multimodal import image_features
-
-    img = np.full((6, 4, 1), 100, dtype=np.uint8)
-    rows = [
-        ("j1", "image", "image/jpeg", bytearray(encode_jpeg(img, 100)), {}),
-        ("bad", "image", "image/webp", bytearray(b"RIFF....WEBP"), {}),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id string, kind string, mime string, payload binary, "
-        "meta map<string,string>"
-    )
-    got = {r["media_id"]: r for r in
-           image_features(df, use_fake_codec=False).collect()}
-    assert got["j1"]["width"] == 4 and got["j1"]["height"] == 6
-    assert abs(got["j1"]["mean_luma"] - 100 / 255) < 1e-9
-    assert got["bad"]["width"] is None

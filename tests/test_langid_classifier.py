@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.operators.langid_classifier import (
-    LANGID_HOLDOUT_FIXTURE,
     LANGID_TRAIN_FIXTURE,
     gram_feature_ids_py,
     gram_features_col,
@@ -20,6 +19,34 @@ from fingerprint_spark.operators.langid_classifier import (
     train_langid_softmax,
     train_langid_softmax_py,
 )
+
+#: held-out sentences (never trained on) for the accuracy gate
+LANGID_HOLDOUT_FIXTURE: list[tuple[str, str]] = [
+    ("the children played in the garden until the sun went down "
+     "and their mother called them inside", "en"),
+    ("please read the instructions carefully before you start the "
+     "machine for the first time", "en"),
+    ("the train to the coast leaves every hour from the main "
+     "station during the summer months", "en"),
+    ("die kinder spielten im garten bis die sonne unterging und "
+     "ihre mutter sie ins haus rief", "de"),
+    ("bitte lesen sie die anweisungen sorgfältig bevor sie die "
+     "maschine zum ersten mal starten", "de"),
+    ("der zug zur küste fährt im sommer jede stunde vom "
+     "hauptbahnhof ab", "de"),
+    ("les enfants jouaient dans le jardin jusqu'au coucher du "
+     "soleil quand leur mère les appela", "fr"),
+    ("veuillez lire attentivement les instructions avant de "
+     "démarrer la machine pour la première fois", "fr"),
+    ("le train pour la côte part toutes les heures de la gare "
+     "principale pendant l'été", "fr"),
+    ("los niños jugaban en el jardín hasta que se puso el sol y "
+     "su madre los llamó adentro", "es"),
+    ("por favor lea las instrucciones con atención antes de "
+     "encender la máquina por primera vez", "es"),
+    ("el tren a la costa sale cada hora desde la estación "
+     "principal durante el verano", "es"),
+]
 
 #: strings that stress every contract edge the two engines must share:
 #: NULL, empty, whitespace-only, accents (lower() beyond ASCII), NBSP
@@ -195,14 +222,14 @@ def test_langid_trainer_refusals(spark):
 
 
 def test_langid_micro_matches_double_path(spark):
-    """langid_classify_micro (the fixed-point oracle contract: integer
-    margin sums, exact in any engine) must agree with the double-path
-    Column fold: language EXACTLY, probability within the 1e-6 weight
-    quantization (margins shift <= n_ids * 0.5e-6), on adversarial
-    edges + holdout — and keep the same zero-Exchange zero-Python
-    plan."""
+    """langid_classify_micro_arrow (the fixed-point oracle contract:
+    integer margin sums, exact in any engine) must agree with the
+    double-path Column fold: language EXACTLY, probability within the
+    1e-6 weight quantization (margins shift <= n_ids * 0.5e-6), on
+    adversarial edges + holdout — with a zero-Exchange plan holding one
+    Python stage."""
     from fingerprint_spark.operators.langid_classifier import (
-        langid_classify_micro,
+        langid_classify_micro_arrow,
     )
 
     m = train_langid_softmax_py(
@@ -226,37 +253,18 @@ def test_langid_micro_matches_double_path(spark):
             .collect()
         }
 
-    dbl, mic = collect(langid_classify), collect(langid_classify_micro)
+    dbl, mic = collect(langid_classify), collect(langid_classify_micro_arrow)
     assert set(dbl) == set(mic)
     for i in dbl:
         assert dbl[i][0] == mic[i][0], f"lang mismatch on id {i}"
         assert abs(dbl[i][1] - mic[i][1]) <= 1e-3
 
-    # the Arrow micro twin shares the EXACT fixed-point contract with
-    # the Column micro fold: same lang (integer argmax is bit-exact),
-    # prob to libm-exp ulp
-    from fingerprint_spark.operators.langid_classifier import (
-        langid_classify_micro_arrow,
-    )
-
-    mic_a = collect(langid_classify_micro_arrow)
-    for i in mic:
-        assert mic[i][0] == mic_a[i][0], f"micro lang mismatch on id {i}"
-        assert abs(mic[i][1] - mic_a[i][1]) <= 1e-12
-
     plan = (
-        langid_classify_micro(df, m)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    plan_a = (
         langid_classify_micro_arrow(df, m)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "Exchange" not in plan_a and "Join" not in plan_a
-    assert plan_a.count("ArrowEvalPython") == 1
+    assert "Exchange" not in plan and "Join" not in plan
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_langid_model_validation_refusals(spark):

@@ -89,14 +89,72 @@ def test_entry_smoke(spark):
 
 
 def test_xlsx_grid_roundtrip_matches_decode(spark):
-    """q_xlsx_grid (build+decode in one plan) was retired from the
-    driver registry for the 50-row budget; pin it to q_xlsx_decode
-    (same projection over cached bytes, oracle-checked) here."""
-    from fingerprint_spark.entry_queries import q_xlsx_decode, q_xlsx_grid
+    """The build+decode roundtrip (workbook bytes built in the same plan
+    and projected through the shared grid-assertion accessors) must
+    equal q_xlsx_decode's fused decode over its cached bytes."""
+    from pyspark.sql import functions as F
 
-    a = {tuple(r) for r in q_xlsx_grid(spark, SF_DIR).collect()}
+    from fingerprint_spark.entry_queries import (
+        _decode_grid_projection,
+        _doc,
+        _workbook_bytes_col,
+        q_xlsx_decode,
+    )
+
+    built = _doc(spark, SF_DIR).select(
+        "doc_id",
+        _workbook_bytes_col(F.col("doc_id"), F.col("source")).alias("xlsx"),
+    )
+    a = {tuple(r) for r in _decode_grid_projection(built).collect()}
     b = {tuple(r) for r in q_xlsx_decode(spark, SF_DIR).collect()}
     assert a == b and len(a) > 0
+
+
+def test_xlsx_decode_rebuilds_uncommitted_cache(spark, tmp_path):
+    """A byte cache left without _SUCCESS (a build killed mid-write) is
+    rebuilt, not read: the rows still equal the xlsx_decode oracle."""
+    import hashlib
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from fingerprint_spark.entry_queries import (
+        _workbook_bytes_col,
+        q_xlsx_decode,
+    )
+
+    sf = str(tmp_path)
+    docs = spark.createDataFrame(
+        [(i, f"text {i}", "en", f"src{i % 3}", 6) for i in range(20)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.coalesce(1).write.parquet(f"{sf}/documents.parquet")
+    tag = hashlib.md5(f"{sf}|grid-v1".encode()).hexdigest()[:12]
+    cache = f"/tmp/fps_xlsx_bytes_{tag}.parquet"
+    try:
+        # the partial cache: a quarter of the rows, no commit marker
+        docs.filter(F.col("doc_id") < 5).select(
+            "doc_id",
+            _workbook_bytes_col(F.col("doc_id"), F.col("source")).alias("xlsx"),
+        ).write.mode("overwrite").parquet(cache)
+        os.remove(os.path.join(cache, "_SUCCESS"))
+
+        sdf = q_xlsx_decode(spark, sf)
+        spark_rows = [tuple(r) for r in sdf.collect()]
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf}/documents.parquet/*.parquet'"
+        )
+        res = con.execute(entry_mod.oracle_sql()["xlsx_decode"])
+        duck_cols = [c[0] for c in res.description]
+        duck_rows = res.fetchall()
+        con.close()
+        assert len(spark_rows) == len(duck_rows) == 20
+        assert _rowset(spark_rows, sdf.columns) == _rowset(duck_rows, duck_cols)
+        assert os.path.exists(os.path.join(cache, "_SUCCESS"))
+    finally:
+        shutil.rmtree(cache, ignore_errors=True)
 
 
 def test_winnow_sketches_parity_on_adversarial_docs(spark, tmp_path):
@@ -155,45 +213,6 @@ def test_driver_query_budget_pinned():
     )
     assert set(o) <= set(q)
     assert len(o) == 49  # 49 oracle + html_pipeline rows-only
-
-
-def test_lang_distribution_is_langid_projection(spark):
-    """lang_distribution was retired from the driver registry for the
-    50-row budget (quality_score took the slot); pin it here as the
-    strict groupBy projection of oracle-green langid."""
-    from collections import Counter
-
-    from fingerprint_spark.entry_queries import (
-        q_lang_distribution, q_langid,
-    )
-
-    dist = {
-        (r["lang_detected"], r["n_docs"])
-        for r in q_lang_distribution(spark, SF_DIR).collect()
-    }
-    base = Counter(
-        r["lang_detected"] for r in q_langid(spark, SF_DIR).collect()
-    )
-    assert dist == {(k, v) for k, v in base.items()} and dist
-
-
-def test_lang_by_source_pivot_retired_parity(spark, duck):
-    """lang_by_source_pivot was retired from the driver registry for
-    the 50-row budget (perplexity took the slot); keep it under the
-    same Spark-vs-DuckDB check here so the pivot operator stays
-    oracle-verified."""
-    from fingerprint_spark.entry_queries import (
-        q_lang_by_source_pivot, sql_lang_by_source_pivot,
-    )
-
-    sdf = q_lang_by_source_pivot(spark, SF_DIR)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(sql_lang_by_source_pivot())
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(duck_cols)
-    assert _rowset(spark_rows, sdf.columns) == _rowset(duck_rows, duck_cols)
-    assert len(spark_rows) > 0
 
 
 def test_perplexity_oracle_on_adversarial_docs(spark, tmp_path):

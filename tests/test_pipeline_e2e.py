@@ -180,21 +180,3 @@ def test_revalidate_is_incremental_no_reparse(spark, tmp_path):
         F.col("fingerprint.matched")
         & (F.col("fingerprint.fingerprint_id") == "spam_any.v2")
     ).count() == n_match
-
-
-def test_salted_repartition_balances_skewed_hosts(spark):
-    """Host-skewed corpus: url-hash partitioning spreads the hot host's
-    docs across partitions (the salting path of repartition_by_url)."""
-    from fingerprint_spark.pipeline import repartition_by_url
-
-    df = generate_corpus(spark, 2000, partitions=4)
-    parts = repartition_by_url(df, 16, salt_buckets=8)
-    sizes = (
-        parts.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").count().collect()
-    )
-    counts = [r["count"] for r in sizes]
-    # ~25% of docs share one host; balanced partitioning keeps the max
-    # partition well under that mass
-    assert max(counts) < 0.25 * 2000
-    assert max(counts) <= 3 * (2000 / 16)

@@ -1,8 +1,7 @@
 """Round-3 regression tests for the round-2 ADVICE findings:
 
-1. streaming sessionization must MERGE late-but-inside-watermark events
-   (extend the envelope both directions) instead of regressing
-   session_end backward and splitting later on-time events;
+1. (streaming sessionization late-event merging: the operator was
+   removed, and its tests with it);
 2. text_near regex validation must be judged by the EXECUTING engine
    (java.util.regex), not Python ``re`` — Java-only syntax is accepted,
    Java-invalid or zero-width-in-Java patterns are refused;
@@ -14,72 +13,10 @@
 
 import json
 
-import pandas as pd
 import pytest
 
 from fingerprint_spark.dsl.parser import parse_yaml
 from fingerprint_spark.dsl.validate import ValidationError, validate_definition
-from fingerprint_spark.streaming.stateful import _session_fn
-
-
-class _FakeSessionState:
-    def __init__(self, value=None):
-        self._value = value
-        self.hasTimedOut = False
-        self.removed = False
-        self.timeout_ts = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self.removed = True
-
-    def getCurrentWatermarkMs(self):
-        return 0
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_ts = ms
-
-
-def test_session_fn_merges_late_event_without_split():
-    """ADVICE #1 scenario: stored open session last=1000; a late event
-    es=500 arrives (inside watermark), then an on-time es=2700. With
-    gap=1800, 2700 belongs to the SAME session (2700-1000 <= gap); the
-    old code regressed last to 500 and split. The merged envelope must
-    be start=500, last=2700, n=3 with nothing closed."""
-    state = _FakeSessionState(value=(1000, 1000, 1))
-    batch = pd.DataFrame(
-        {
-            "ts": [pd.Timestamp(500, unit="s"), pd.Timestamp(2700, unit="s")],
-            "event_id": [10, 11],
-        }
-    )
-    out = list(_session_fn(1800)((7,), iter([batch]), state))
-    closed = pd.concat(out)
-    assert len(closed) == 0, f"spurious split: {closed.to_dict('records')}"
-    assert state.get == (500, 2700, 3)
-    assert state.timeout_ts == (2700 + 1800) * 1000
-
-
-def test_session_fn_late_event_does_not_lower_close_timer():
-    """A late event must not move the watermark-close target backward:
-    the timeout stays keyed to the running-max last."""
-    state = _FakeSessionState(value=(1000, 2000, 2))
-    batch = pd.DataFrame(
-        {"ts": [pd.Timestamp(1500, unit="s")], "event_id": [9]}
-    )
-    list(_session_fn(1800)((7,), iter([batch]), state))
-    assert state.get == (1000, 2000, 3)
-    assert state.timeout_ts == (2000 + 1800) * 1000
 
 
 def _near_def(anchor: str, value: str = "v[0-9]+"):

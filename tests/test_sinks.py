@@ -8,11 +8,8 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from fingerprint_spark.sinks import (
-    MANIFEST_NAME,
-    verify_shards,
-    write_training_shards,
-)
+from fingerprint_spark.sinks import MANIFEST_NAME, write_training_shards
+from helpers import verify_shards
 
 
 def _df(spark, n=200):

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from fingerprint_spark.snapshots import (
     commit_snapshot,
     current_snapshot_id,
-    expire_snapshots,
     list_snapshots,
     load_manifest,
     read_snapshot,
@@ -95,20 +94,6 @@ def test_append_schema_mismatch_refuses(spark, tmp_path):
 
     with pytest.raises(ValueError, match="schema mismatch"):
         commit_snapshot(bad, t, mode="append")
-
-
-def test_expire_keeps_pinned_current(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    commit_snapshot(_corpus(spark, 0, 50), t)
-    commit_snapshot(_corpus(spark, 50, 60), t, mode="append")
-    commit_snapshot(_corpus(spark, 100, 110), t, mode="overwrite")
-    expired = expire_snapshots(t, keep_last=1)
-    assert expired == [1, 2]
-    assert list_snapshots(t) == [3]
-    assert read_snapshot(spark, t).count() == 10
-    # the overwrite's files survived; the orphaned v1/v2 files are gone
-    m3 = load_manifest(t, 3)
-    assert all(os.path.exists(f) for f in m3["files"])
 
 
 def test_witness_carries_snapshot_id(spark, tmp_path, monkeypatch):
@@ -204,10 +189,6 @@ def test_snapshot_protocol_over_hadoop_fs(spark, tmp_path):
     assert list_snapshots(t) == [1, 2, 3, 4, 5]
     for sid in list_snapshots(t):
         json.dumps(load_manifest(t, sid))  # parses; not torn
-    # expire through the FS API: dropped files are really gone, the
-    # pinned-current snapshot still reads
-    expired = expire_snapshots(t, keep_last=1)
-    assert expired == [1, 2, 3, 4]
     assert read_snapshot(spark, t).count() == 25
 
 

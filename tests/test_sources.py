@@ -13,7 +13,7 @@ from fingerprint_spark.sources import (
     write_corpus_partitioned,
 )
 from fingerprint_spark.sources.grid import xlsx_to_sheets
-from fingerprint_spark.sources.pdf import pdf_struct_col, sparse_text_flag
+from fingerprint_spark.sources.pdf import pdf_struct_col
 
 
 def test_detect_format(spark):
@@ -70,20 +70,13 @@ def test_csv_grid_and_fallback(spark):
     assert ok is True
 
 
-def test_pdf_struct_and_sparse_warning(spark):
+def test_pdf_struct_feeds_page_count_assertion(spark):
     df = spark.createDataFrame(
         [(12, {"Title": "X"}, "tiny"), (12, {"Title": "X"}, "t" * 200),
          (3, {"Title": "X"}, "tiny")],
         "page_count int, metadata map<string,string>, text string",
     )
     df = df.withColumn("pdf", pdf_struct_col(F.col("page_count"), F.col("metadata")))
-    flags = [
-        r["w"]
-        for r in df.select(
-            sparse_text_flag(F.col("pdf"), F.col("text")).alias("w")
-        ).collect()
-    ]
-    assert flags == [True, False, False]
 
     env = {"pdf": F.col("pdf")}
     a = make_assertion("page_count", "t", {"min_pages": 10, "max_pages": 20})
@@ -177,7 +170,8 @@ def test_spreadsheet_assertions_on_real_xlsx_bytes(spark):
 def test_pdf_assertions_on_real_pdf_bytes(spark):
     """page_count / metadata_regex over REAL pdf bytes parsed in a Spark
     UDF (pdf.rs:18-61 parity on actual file bytes)."""
-    from fingerprint_spark.sources.pdf import make_pdf, pdf_struct_from_binary_col
+    from fingerprint_spark.sources.pdf import pdf_struct_from_binary_col
+    from helpers import make_pdf
 
     rows = [
         ("u1", bytearray(make_pdf(12, {"Title": "Annual Report 2024"}))),
@@ -227,7 +221,7 @@ def test_partition_pruning_and_column_pruning(spark, tmp_path):
 def test_dispatch_binary_formats_end_to_end(spark):
     """Extension dispatch routes xlsx bytes to the grid codec and pdf
     bytes to the struct parser in the SAME plan as html/csv rows."""
-    from fingerprint_spark.sources.pdf import make_pdf
+    from helpers import make_pdf
     from fingerprint_spark.sources.xlsx import make_xlsx
 
     xlsx = make_xlsx({"Report": [["Item", "Qty"], ["widget", "3"]]})

@@ -407,7 +407,7 @@ def test_cli_curate_subcommand(spark, tmp_path):
 def test_cli_curate_sharded_output(spark, tmp_path):
     from pyspark.sql import Row
 
-    from fingerprint_spark.sinks import verify_shards
+    from helpers import verify_shards
 
     corpus = str(tmp_path / "corpus.parquet")
     out = str(tmp_path / "curated_shards")

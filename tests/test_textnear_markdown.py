@@ -7,31 +7,78 @@ from fingerprint_spark.operators.assertions import _near_match
 from fingerprint_spark.parse.markdown import normalize_markdown, parse_markdown
 
 
+def _near_agrees(spark, text, anchor, value, within, expected):
+    """_near_match gives ``expected``, and production text_near over a
+    one-row DataFrame gives the same."""
+    from pyspark.sql import functions as F
+
+    from fingerprint_spark.operators.assertions import text_near
+
+    assert _near_match(text, anchor, value, within) is expected
+    parsed = F.struct(F.lit(text).alias("normalized"))
+    got = spark.range(1).select(
+        text_near(parsed, anchor, value, within).alias("near")
+    ).head()["near"]
+    assert got is expected
+
+
 class TestTextNear:
-    def test_bidirectional(self):
+    def test_bidirectional(self, spark):
         # value BEFORE anchor also matches (assertions.rs: bidirectional)
-        assert _near_match("1234 then Anchor", "Anchor", r"\d{4}", 8)
-        assert _near_match("Anchor then 1234", "Anchor", r"\d{4}", 8)
+        _near_agrees(spark, "1234 then Anchor", "Anchor", r"\d{4}", 8, True)
+        _near_agrees(spark, "Anchor then 1234", "Anchor", r"\d{4}", 8, True)
 
-    def test_any_anchor_occurrence(self):
+    def test_any_anchor_occurrence(self, spark):
         t = "Anchor far away " + "x" * 100 + " Anchor 1234"
-        assert _near_match(t, "Anchor", r"\d{4}", 5)
+        _near_agrees(spark, t, "Anchor", r"\d{4}", 5, True)
 
-    def test_whitespace_gap_under_10_counts_as_zero(self):
+    def test_whitespace_gap_under_10_counts_as_zero(self, spark):
         # 9 whitespace chars between anchor and value: distance 0
         t = "Anchor" + " " * 9 + "1234"
-        assert _near_match(t, "Anchor", r"\d{4}", 0)
-        # 9 chars but not whitespace-only: distance 9 > 0
-        t2 = "Anchor___ ___ 1234".replace(" ", "")  # 8 non-ws chars
-        assert not _near_match("Anchor________1234", "Anchor", r"\d{4}", 0)
+        _near_agrees(spark, t, "Anchor", r"\d{4}", 0, True)
+        # 8 chars but not whitespace-only: distance 8 > 0
+        _near_agrees(spark, "Anchor________1234", "Anchor", r"\d{4}", 0, False)
 
-    def test_gap_10_or_more_is_counted(self):
+    def test_gap_10_or_more_is_counted(self, spark):
         t = "Anchor" + " " * 10 + "1234"
-        assert not _near_match(t, "Anchor", r"\d{4}", 9)
-        assert _near_match(t, "Anchor", r"\d{4}", 10)
+        _near_agrees(spark, t, "Anchor", r"\d{4}", 9, False)
+        _near_agrees(spark, t, "Anchor", r"\d{4}", 10, True)
 
-    def test_overlap_is_distance_zero(self):
-        assert _near_match("xAB1234x", "AB\\d+", r"\d{4}", 0)
+    def test_overlap_is_distance_zero(self, spark):
+        _near_agrees(spark, "xAB1234x", "AB\\d+", r"\d{4}", 0, True)
+
+
+@pytest.mark.parametrize(
+    "text,anchor,value,within,expected",
+    [
+        ("", "Anchor", r"\d{4}", 100, False),
+        ("Anchor1234", r"Anchor\d", r"\d{4}", 0, True),
+        ("AB1234", r"AB\d+", r"\d{2}", 0, True),
+        ("aaa1", "aa", "a1", 0, True),
+        ("Anchor" + " " * 9 + "1234", "Anchor", r"\d{4}", 0, True),
+        ("1234" + " " * 9 + "Anchor", "Anchor", r"\d{4}", 0, True),
+        ("Anchor\t\n" + " " * 7 + "1234", "Anchor", r"\d{4}", 0, True),
+        ("Anchor" + " " * 10 + "1234", "Anchor", r"\d{4}", 0, False),
+        ("Anchor" + " " * 10 + "1234", "Anchor", r"\d{4}", 10, True),
+        ("1234" + " " * 10 + "Anchor", "Anchor", r"\d{4}", 9, False),
+    ],
+    ids=[
+        "empty-text",
+        "overlap-value-inside-anchor",
+        "overlap-shared-digits",
+        "overlap-adjacent-repeats",
+        "ws-gap-9",
+        "ws-gap-9-value-first",
+        "mixed-ws-gap-9",
+        "ws-gap-10-within-0",
+        "ws-gap-10-within-10",
+        "ws-gap-10-value-first",
+    ],
+)
+def test_text_near_edge_cases_match_reference(
+    spark, text, anchor, value, within, expected
+):
+    _near_agrees(spark, text, anchor, value, within, expected)
 
 
 def test_text_near_column_matches_python_reference(spark):
@@ -127,31 +174,3 @@ class TestScrubToxicity:
         ).first()
         assert out["s"] == "that <MASKED> thing is <MASKED> but helloworld stays"
         assert out["c"]["toxicity"] == 2
-
-
-class TestLangidNgram:
-    def test_tier2_ngram_classifier(self, spark):
-        from pyspark.sql import functions as F
-        from fingerprint_spark.corpus import VOCAB
-        from fingerprint_spark.functions.langid import (
-            langid_ngram_col,
-            train_char_ngram_profiles,
-        )
-
-        samples = {
-            lang: [" ".join(words[i : i + 10]) for i in range(0, 30, 10)]
-            for lang, words in VOCAB.items()
-        }
-        profiles = train_char_ngram_profiles(samples)
-        df = spark.createDataFrame(
-            [
-                ("the report and the data of the system for the people",),
-                ("der bericht und die daten von dem system für die",),
-                ("le rapport et les données du système pour le public",),
-            ],
-            ["text"],
-        )
-        rows = df.select(
-            langid_ngram_col(F.col("text"), profiles).alias("l")
-        ).collect()
-        assert [r["l"]["lang"] for r in rows] == ["en", "de", "fr"]

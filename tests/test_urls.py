@@ -6,7 +6,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from fingerprint_spark.functions.urls import (
-    domain_blocklist_filter,
     registered_domain,
     url_canonical,
     url_host,
@@ -91,9 +90,17 @@ def test_blocklist_filters_subdomains_via_etld1(spark):
     bl = spark.createDataFrame(
         [Row(domain="example.com"), Row(domain="SPAM-SITE.co.uk")]
     )
-    kept = domain_blocklist_filter(df, bl, keep=True)
+    # eTLD+1 equality turns "block the domain and every subdomain" into
+    # an equi-join against the (broadcast) list, as q_url_curation does
+    tagged = df.withColumn("__dom", registered_domain(url_host(F.col("url"))))
+    bl = F.broadcast(bl.select(F.lower(F.col("domain")).alias("__dom")))
+
+    def blocked(how):
+        return tagged.join(bl, "__dom", how).drop("__dom")
+
+    kept = blocked("left_anti")
     assert [r["doc_id"] for r in kept.collect()] == [2]
-    dropped = domain_blocklist_filter(df, bl, keep=False)
+    dropped = blocked("left_semi")
     assert sorted(r["doc_id"] for r in dropped.collect()) == [0, 1]
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
@@ -156,25 +163,6 @@ def test_nfc_idempotent_on_normalized_text(spark):
     twice = nfc_normalize_col(once)
     row = spark.range(1).select(once.alias("a"), twice.alias("b")).head()
     assert row["a"] == row["b"] == "noël mélange"
-
-
-def test_compression_ratio_signal(spark):
-    from pyspark.sql import Row
-    import zlib
-
-    from fingerprint_spark.functions.textstats import compression_ratio_col
-
-    prose = ("the quick brown fox jumps over the lazy dog and keeps "
-             "running through the quiet field toward the river bank") * 3
-    boiler = "nav bar item " * 80
-    rows = [Row(t=prose), Row(t=boiler), Row(t=""), Row(t=None)]
-    df = spark.createDataFrame(rows, "t string")
-    got = [r["r"] for r in
-           df.select(compression_ratio_col(F.col("t")).alias("r")).collect()]
-    exact = lambda v: len(zlib.compress(v.encode(), 6)) / len(v.encode())
-    assert got[0] == exact(prose) and got[1] == exact(boiler)
-    assert got[1] < got[0] < 1.0  # boilerplate compresses far better
-    assert got[2] is None and got[3] is None
 
 
 # ---------------------------------------------------------------------------

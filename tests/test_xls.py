@@ -3,7 +3,7 @@
 Round-2 VERDICT #5: dispatch routed .xls to the zip codec, which
 refused BIFF bytes; the reference's calamine opens both
 (src/document/xlsx.rs:12-21). These tests feed REAL CFB+BIFF8 bytes
-(make_xls writes a genuine container: ministream for small workbooks,
+(helpers.make_xls writes a genuine container: ministream for small workbooks,
 FAT chains for large, SST split into CONTINUE records) through the
 same reader a real corpus would hit.
 """
@@ -13,13 +13,9 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from fingerprint_spark.sources.xls import (
-    _SSTCursor,
-    cfb_streams,
-    make_xls,
-    xls_to_sheets,
-)
+from fingerprint_spark.sources.xls import _SSTCursor, cfb_streams, xls_to_sheets
 from fingerprint_spark.sources.xlsx import excel_to_sheets, make_xlsx
+from helpers import make_xls
 
 
 def test_roundtrip_ministream():
