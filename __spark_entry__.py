@@ -34,7 +34,7 @@ def entry(spark: SparkSession) -> DataFrame:
     -> broadcast template fold -> langid -> perplexity -> heuristics ->
     scrub -> verdict) on /root/testdata/sf0.001."""
     ensure_pyfiles(spark)
-    from fingerprint_spark.entry_queries import q_html_pipeline
+    from fingerprint_spark.queries.text import q_html_pipeline
 
     return q_html_pipeline(spark, "/root/testdata/sf0.001")
 

@@ -16,4 +16,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def sf_dir():
+    return default_sf_dir()
+
+
+def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

@@ -162,7 +162,7 @@ def test_ann_recall_quality_floor(spark):
     embeddings (clustered real embeddings need far fewer probes)."""
     import os
 
-    from fingerprint_spark.entry_queries import q_ann_recall
+    from fingerprint_spark.queries.vectors import q_ann_recall
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
     rows = q_ann_recall(spark, sf).collect()

@@ -74,11 +74,10 @@ def test_oracle_parity(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
-def test_rows_only_queries_run(spark):
-    from fingerprint_spark.entry_queries import ROWS_ONLY_QUERIES
-
-    for name, q in ROWS_ONLY_QUERIES.items():
-        df = q(spark, "/root/testdata/sf0.001")
+def test_rows_only_queries_run(spark, sf_dir):
+    queries = entry_mod.queries()
+    for name in sorted(set(queries) - set(entry_mod.oracle_sql())):
+        df = queries[name](spark, sf_dir)
         assert df.count() >= 0, name
         assert len(df.schema.fields) > 0, name
 
@@ -94,9 +93,9 @@ def test_xlsx_grid_roundtrip_matches_decode(spark):
     equal q_xlsx_decode's fused decode over its cached bytes."""
     from pyspark.sql import functions as F
 
-    from fingerprint_spark.entry_queries import (
+    from fingerprint_spark.queries._common import _doc
+    from fingerprint_spark.queries.rules import (
         _decode_grid_projection,
-        _doc,
         _workbook_bytes_col,
         q_xlsx_decode,
     )
@@ -118,7 +117,7 @@ def test_xlsx_decode_rebuilds_uncommitted_cache(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from fingerprint_spark.entry_queries import (
+    from fingerprint_spark.queries.rules import (
         _workbook_bytes_col,
         q_xlsx_decode,
     )

@@ -89,7 +89,7 @@ def test_jaccard_query_matches_join_formulation(spark, tmp_path):
         "doc_id long, text string, source string, lang string",
     ).coalesce(1).write.parquet(d)
 
-    from fingerprint_spark.entry_queries import q_jaccard_adjacent
+    from fingerprint_spark.queries.dedup import q_jaccard_adjacent
     from fingerprint_spark.functions.hashing import (
         jaccard_shingle_hashes_col,
     )
@@ -285,7 +285,7 @@ def test_fused_perplexity_matches_join_plan(spark):
     """_ppl_exact_udf's integer totals must be bit-identical to the
     former explode -> broadcast join -> groupBy formulation, and the
     non-ASCII fallback must agree with the numpy LUT fast path."""
-    from fingerprint_spark.entry_queries import (
+    from fingerprint_spark.queries.text import (
         _PPL_ORDER,
         _ppl_micro_model,
     )

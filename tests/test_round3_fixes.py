@@ -95,7 +95,7 @@ def test_tracked_persist_released(spark, sf_dir):
     — went persist-free in r6 (explode + single groupBy), so the
     lifecycle contract is pinned on the surviving track_persist user."""
     from fingerprint_spark.caching import release_tracked
-    from fingerprint_spark.entry_queries import q_neardup_clusters
+    from fingerprint_spark.queries.dedup import q_neardup_clusters
 
     release_tracked(spark)  # clear anything earlier tests tracked
     jsc = spark.sparkContext._jsc
