@@ -11,7 +11,7 @@ The generator composes each page from typed content blocks (headings /
 paragraphs / tables), renders HTML with injected noise (NBSP, dashes,
 script/style tags, comments, ragged whitespace), and renders the EXPECTED
 extracted text independently from the same blocks. The pipeline's
-byte-identity invariant (extract_text(html) == text per url) is therefore
+byte-identity invariant (parsed normalized text == text per url) is therefore
 a genuine test of the normalization rules, not a tautology.
 
 Page classes (ground-truth labels for keep/drop F1, BASELINE.json metric):

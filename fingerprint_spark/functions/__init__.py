@@ -6,23 +6,20 @@ explicitly-marked slow path: simhash, perplexity). Per BASELINE.json
 input_hint, no per-row Python UDF exists anywhere in this package.
 """
 
-from .hashing import content_hash_col, minhash_signature_col, simhash64_col
-from .langid import LANG_MARKERS, langid_best, langid_scores
+from .hashing import content_hash_col, minhash_signature_col
+from .langid import LANG_MARKERS, langid_best
 from .perplexity import NGramModel, perplexity_col, train_char_ngram
 from .scrub import PII_PATTERNS, scrub_counts, scrub_text
 from .textstats import (
     GOPHER_STOPWORDS,
     gopher_quality_flags,
-    quality_flags_all_pass,
     text_stats,
 )
 
 __all__ = [
     "text_stats",
     "gopher_quality_flags",
-    "quality_flags_all_pass",
     "GOPHER_STOPWORDS",
-    "langid_scores",
     "langid_best",
     "LANG_MARKERS",
     "train_char_ngram",
@@ -31,7 +28,6 @@ __all__ = [
     "scrub_text",
     "scrub_counts",
     "PII_PATTERNS",
-    "simhash64_col",
     "minhash_signature_col",
     "content_hash_col",
 ]

@@ -278,18 +278,9 @@ def _batch_shingle_hashes(texts, k: int) -> list["np.ndarray"]:
 def simhash64_batch_py(texts, k: int = 3) -> list[int]:
     """simhash64_py over a whole batch, BIT-IDENTICAL per doc (pinned by
     test_r06_optimizations): the shared batch kernel, then the
-    bit-majority per doc. Used by simhash64_col and the enrich UDF (the
-    flagship chain's per-doc simhash)."""
+    bit-majority per doc. Used by the enrich UDF (the flagship chain's
+    per-doc simhash)."""
     return [_simhash_from_hashes(h) for h in _batch_shingle_hashes(texts, k)]
-
-
-@context_cached(maxsize=2)
-def _simhash_udf(k: int):
-    @F.pandas_udf(T.LongType())
-    def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash64_batch_py(texts, k), dtype="int64")
-
-    return udf
 
 
 @context_cached(maxsize=2)
@@ -304,11 +295,6 @@ def _minhash_udf(num_hashes: int, k: int):
         )
 
     return udf
-
-
-def simhash64_col(text: Column, k: int = 3) -> Column:
-    """text -> 64-bit SimHash (simhash64_py per doc, batch kernel)."""
-    return _simhash_udf(k)(text)
 
 
 def minhash_signature_col(text: Column, num_hashes: int = 64, k: int = 3) -> Column:
@@ -473,7 +459,7 @@ def sketch_md5_py(
     text: str, seeds: tuple[int, ...] = (0, 7, 15), k: int = 3
 ) -> tuple[int, list[int]]:
     """Portable (md5-contract) SimHash16 + MinHash over word k-shingles
-    — same role as simhash64_col / minhash_signature_col (the dedup
+    — same role as simhash64_batch_py / minhash_signature_col (the dedup
     operators' blake2b path) but recomputable in any engine with md5,
     so the sketch operator sits under the driver's hard oracle signal
     (the winnow pattern applied to near-dup identity). Contract: words

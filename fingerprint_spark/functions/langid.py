@@ -1,6 +1,6 @@
 """Language identification — fastText-style, but expressed Spark-first.
 
-``langid_scores``/``langid_best``: a marker-function-word scorer as pure
+``langid_best``: a marker-function-word scorer as pure
 Column expressions. Occurrence counting uses the split trick
 ``size(split(lower(text), '\\b(w1|w2|...)\\b')) - 1`` — one compiled regex
 pass per language, fully whole-stage-codegen'd, no higher-order lambdas
@@ -55,20 +55,13 @@ def _marker_fractions(text: Column) -> dict[str, Column]:
     }
 
 
-def langid_scores(text: Column) -> Column:
-    """Struct<lang:double> of per-language marker-token fractions."""
-    return F.struct(
-        *[frac.alias(lang) for lang, frac in _marker_fractions(text).items()]
-    )
-
-
 def langid_best(text: Column) -> Column:
     """Struct<lang:string, score:double> — argmax with deterministic
     tie-break (lexicographically smallest language wins ties)."""
-    # each fraction enters the expression tree once (a field of the
-    # langid_scores struct would carry the whole struct per language;
-    # the optimizer folds both to the same plan, but the driver-side
-    # analysis cost grows with the tree)
+    # each fraction enters the expression tree once (a field of a
+    # per-language scores struct would carry the whole struct per
+    # language; the optimizer folds both to the same plan, but the
+    # driver-side analysis cost grows with the tree)
     fracs = _marker_fractions(text)
     # array_max compares struct fields in order: (score, nrank, lang).
     # nrank = -index makes ties resolve to the lexicographically smallest

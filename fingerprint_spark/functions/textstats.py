@@ -82,6 +82,23 @@ def text_stats(text: Column) -> Column:
     )
 
 
+# One row per Gopher rule: (flag, statistic, lower bound, upper bound),
+# None for an open side. The Column flags, the DuckDB flag fragments and
+# the flag order (the drop_reason order) are all generated from it.
+GOPHER_RULES = (
+    ("words_in_range", "n_words", MIN_WORDS, MAX_WORDS),
+    ("mean_word_len_in_range", "mean_word_len",
+     MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN),
+    ("symbol_ratio_ok", "symbol_word_ratio", None, MAX_SYMBOL_WORD_RATIO),
+    ("ellipsis_ok", "ellipsis_line_frac", None, MAX_ELLIPSIS_LINE_FRAC),
+    ("bullet_ok", "bullet_line_frac", None, MAX_BULLET_LINE_FRAC),
+    ("alpha_ok", "alpha_word_frac", MIN_ALPHA_WORD_FRAC, None),
+    ("stopwords_ok", "stopword_hits", MIN_STOPWORD_HITS, None),
+    ("dup_lines_ok", "dup_line_frac", None, MAX_DUP_LINE_FRAC),
+)
+GOPHER_FLAGS = [flag for flag, *_ in GOPHER_RULES]
+
+
 def gopher_quality_flags(stats: Column) -> Column:
     """Struct of named boolean pass/fail flags, one per heuristic rule.
 
@@ -89,28 +106,30 @@ def gopher_quality_flags(stats: Column) -> Column:
     (src/dsl/assertions.rs AssertionResult) so the failure *reason* is
     reportable, not just the verdict.
     """
-    return F.struct(
-        stats["n_words"].between(MIN_WORDS, MAX_WORDS).alias("words_in_range"),
-        stats["mean_word_len"]
-        .between(MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN)
-        .alias("mean_word_len_in_range"),
-        (stats["symbol_word_ratio"] <= MAX_SYMBOL_WORD_RATIO).alias("symbol_ratio_ok"),
-        (stats["ellipsis_line_frac"] <= MAX_ELLIPSIS_LINE_FRAC).alias("ellipsis_ok"),
-        (stats["bullet_line_frac"] <= MAX_BULLET_LINE_FRAC).alias("bullet_ok"),
-        (stats["alpha_word_frac"] >= MIN_ALPHA_WORD_FRAC).alias("alpha_ok"),
-        (stats["stopword_hits"] >= MIN_STOPWORD_HITS).alias("stopwords_ok"),
-        (stats["dup_line_frac"] <= MAX_DUP_LINE_FRAC).alias("dup_lines_ok"),
-    )
+    flags = []
+    for flag, stat, lo, hi in GOPHER_RULES:
+        s = stats[stat]
+        if lo is not None and hi is not None:
+            ok = s.between(lo, hi)
+        elif lo is None:
+            ok = s <= hi
+        else:
+            ok = s >= lo
+        flags.append(ok.alias(flag))
+    return F.struct(*flags)
 
 
-def quality_flags_all_pass(flags: Column) -> Column:
-    names = [
-        "words_in_range", "mean_word_len_in_range", "symbol_ratio_ok",
-        "ellipsis_ok", "bullet_ok", "alpha_ok", "stopwords_ok", "dup_lines_ok",
-    ]
-    out = F.lit(True)
-    for n in names:
-        out = out & flags[n]
+def oracle_flags_sql() -> dict[str, str]:
+    """DuckDB SQL of each flag over the oracle_stats_sql columns, in
+    GOPHER_FLAGS order."""
+    out = {}
+    for flag, stat, lo, hi in GOPHER_RULES:
+        if lo is not None and hi is not None:
+            out[flag] = f"({stat} BETWEEN {lo} AND {hi})"
+        elif lo is None:
+            out[flag] = f"({stat} <= {hi})"
+        else:
+            out[flag] = f"({stat} >= {lo})"
     return out
 
 

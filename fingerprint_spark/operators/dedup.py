@@ -25,10 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    canonical_text_col as canonical_text,
-    minhash_signature_col,
-)
+from ..functions.hashing import canonical_text_col, minhash_signature_col
 
 
 def dedup_exact(
@@ -37,7 +34,7 @@ def dedup_exact(
     """Keep one doc per exact content hash (deterministic keeper = min
     key). Two-phase: hash -> groupBy(hash).min(key) -> semi-join back.
     Only (hash, key) pairs shuffle."""
-    h = F.xxhash64(canonical_text(F.col(text_col))).alias("_chash")
+    h = F.xxhash64(canonical_text_col(F.col(text_col))).alias("_chash")
     hashed = df.withColumn("_chash", h)
     keepers = hashed.groupBy("_chash").agg(F.min(key_col).alias(key_col))
     return hashed.join(keepers, ["_chash", key_col], "left_semi").drop("_chash")

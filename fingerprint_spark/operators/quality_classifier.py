@@ -116,7 +116,8 @@ QUALITY_TRAIN_FIXTURE: list[tuple[str, int]] = [
 def words_array_col(text: Column) -> Column:
     """Lowercased ASCII-\\s word array — the ONE tokenizer both
     training and inference must share for the hashing trick to be
-    valid (same expression shape as entry_queries/dedup/curation).
+    valid (same expression shape as the queries/ modules and
+    operators/dedup and operators/curation).
     Contract note: F.lower delegates to the JVM's locale-default
     toLowerCase, so JVM/Python tokenizer parity (_tokenize_py) assumes
     a root-ish JVM locale — on tr_TR/az deployments set

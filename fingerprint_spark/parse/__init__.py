@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..caching import context_cached
-from .html_parser import extract_text, parse_html
+from .html_parser import parse_html
 from .markdown import normalize_markdown, parse_markdown
 from .schema import PARSED_TYPE
 
@@ -28,11 +28,9 @@ __all__ = [
     "PARSED_TYPE",
     "parse_html",
     "parse_markdown",
-    "extract_text",
     "normalize_markdown",
     "parse_html_col",
     "parse_markdown_col",
-    "extract_text_col",
 ]
 
 
@@ -62,15 +60,6 @@ def _parse_markdown_udf():
     return udf
 
 
-@context_cached(maxsize=1)
-def _extract_text_udf():
-    @F.pandas_udf(T.StringType())
-    def udf(html: pd.Series) -> pd.Series:
-        return pd.Series([extract_text(_to_str(h)) for h in html], dtype="object")
-
-    return udf
-
-
 def parse_html_col(html: Column) -> Column:
     """html (binary or string) -> parsed struct (schema.PARSED_TYPE)."""
     return _parse_html_udf()(html)
@@ -78,11 +67,6 @@ def parse_html_col(html: Column) -> Column:
 
 def parse_markdown_col(md: Column) -> Column:
     return _parse_markdown_udf()(md)
-
-
-def extract_text_col(html: Column) -> Column:
-    """html -> byte-stable normalized text (the per-url invariant surface)."""
-    return _extract_text_udf()(html)
 
 
 # ---------------------------------------------------------------------------

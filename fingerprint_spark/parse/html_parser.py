@@ -426,8 +426,3 @@ def parse_html(html: str) -> dict:
         "page_sections": p._page_sections,
         "parse_error": None,
     }
-
-
-def extract_text(html: str) -> str:
-    """Normalized text only — the scrub/extract invariant surface."""
-    return parse_html(html)["normalized"] or ""

@@ -14,10 +14,8 @@ Execution shape (the 100 TB design):
   narrow transformations, so the plan is scan -> project -> write with
   ZERO shuffles. Throughput scales linearly with executors because no
   stage exchanges data. Opting into a TRAINED language model
-  (langid_model + the default 'arrow' kernel) adds a second
-  ArrowEvalPython stage — still narrow, still zero shuffles; the
-  'column' kernel keeps the single-UDF shape at a measured 46x
-  inference cost.
+  (langid_model) adds a second ArrowEvalPython stage — still narrow,
+  still zero shuffles.
 - Template rules compile at the driver and ride the Catalyst plan as
   literals (broadcast versioned lookup structures). Re-validation against
   a new template version is an incremental pass over the same parsed
@@ -64,14 +62,13 @@ from .functions.perplexity import (
     train_char_ngram,
 )
 from .functions.scrub import scrub_counts, scrub_text
-from .functions.textstats import gopher_quality_flags, text_stats
+from .functions.textstats import (
+    GOPHER_FLAGS,
+    gopher_quality_flags,
+    text_stats,
+)
 from .operators.match import match_levels
 from .parse import enrich_col
-
-HEURISTIC_FLAGS = [
-    "words_in_range", "mean_word_len_in_range", "symbol_ratio_ok",
-    "ellipsis_ok", "bullet_ok", "alpha_ok", "stopwords_ok", "dup_lines_ok",
-]
 
 
 @lru_cache(maxsize=1)
@@ -89,6 +86,15 @@ def default_ppl_model() -> NGramModel:
     return train_char_ngram(texts, order=3)
 
 
+def _heuristic_failure(flags: Column) -> Column:
+    """Name of the first failing Gopher flag in rule order, NULL when
+    every flag passes."""
+    return F.coalesce(
+        *[F.when(~flags[n], F.lit(n)) for n in GOPHER_FLAGS],
+        F.lit(None).cast("string"),
+    )
+
+
 def _verdict(
     template: Column,
     lang_best: Column,
@@ -99,10 +105,7 @@ def _verdict(
 ) -> tuple[Column, Column]:
     """keep boolean + first-failing-stage drop_reason (the stage-order
     analog of assertion declaration-order short-circuit)."""
-    heur_fail = F.coalesce(
-        *[F.when(~flags[n], F.lit(n)) for n in HEURISTIC_FLAGS],
-        F.lit(None).cast("string"),
-    )
+    heur_fail = _heuristic_failure(flags)
     reason = (
         F.when(
             template["matched"],
@@ -137,16 +140,15 @@ def _marker_langid(text_col: str) -> tuple[dict, dict]:
 def _trained_langid(
     text_col: str,
     langid_model: dict | None,
-    langid_kernel: str,
     langid_threshold: float,
 ) -> tuple[Callable[[DataFrame], DataFrame], dict] | None:
     """The opt-in trained language-ID stage, None without a model:
     (frame -> frame with the ``_lid`` struct, the lang_detected +
     lang_score level). It is built per call: the model is a dict and
-    the classifiers transform the frame. 'arrow' is the measured
-    corpus kernel (46x the Column fold); 'column' is the zero-Python
-    parity anchor; anything else raises — a typo would otherwise
-    silently pick the slow path.
+    the classifier transforms the frame. The classifier is the
+    Arrow-batched kernel (langid_classify_arrow, measured 46x the
+    zero-Python Column fold langid_classify, which tests keep as its
+    parity anchor).
 
     langid_threshold is the trained tier's UNKNOWN-language gate (the
     marker tier's MIN_SCORE analog; CCNet gates fastText lid at prob
@@ -157,20 +159,8 @@ def _trained_langid(
     carrying the rejected argmax probability for auditability."""
     if langid_model is None:
         return None
-    from .operators.langid_classifier import (
-        langid_classify,
-        langid_classify_arrow,
-    )
+    from .operators.langid_classifier import langid_classify_arrow
 
-    if langid_kernel == "arrow":
-        classify = langid_classify_arrow
-    elif langid_kernel == "column":
-        classify = langid_classify
-    else:
-        raise ValueError(
-            f"unknown langid_kernel: {langid_kernel!r} "
-            "(expected 'arrow' or 'column')"
-        )
     lang = {
         "lang_detected": F.when(
             F.col("_lid.prob") >= F.lit(float(langid_threshold)),
@@ -179,7 +169,9 @@ def _trained_langid(
         "lang_score": F.col("_lid.prob"),
     }
     return (
-        lambda df: classify(df, langid_model, text_col=text_col, out_col="_lid"),
+        lambda df: langid_classify_arrow(
+            df, langid_model, text_col=text_col, out_col="_lid"
+        ),
         lang,
     )
 
@@ -215,7 +207,6 @@ def quality_filter(
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
     html_col: str = "html",
     langid_model: dict | None = None,
-    langid_kernel: str = "arrow",
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
     """Full chain over the input_hint table (url, warc_ts, html, text, lang).
@@ -227,8 +218,7 @@ def quality_filter(
     ``langid_model`` swaps stage 2's marker-word scorer for the
     TRAINED fastText-shaped softmax (the curate --langid-model
     semantics, now first-class in the flagship chain); lang_score then
-    carries the softmax probability. ``langid_kernel`` as in
-    quality_filter_text ('arrow' default / 'column').
+    carries the softmax probability.
     """
     if rules is None:
         rules = builtin_rules()
@@ -244,7 +234,7 @@ def quality_filter(
         lambda: _html_levels(rules, model, target_lang, ppl_threshold, html_col),
     )
     return _apply_levels(df, levels, _trained_langid(
-        "extracted_text", langid_model, langid_kernel, langid_threshold
+        "extracted_text", langid_model, langid_threshold
     ))
 
 
@@ -336,7 +326,6 @@ def quality_filter_text(
     with_ppl: bool = False,
     ppl_model: NGramModel | None = None,
     langid_model: dict | None = None,
-    langid_kernel: str = "arrow",
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
     """Text-only variant (no html parse): langid -> heuristics -> scrub.
@@ -348,16 +337,13 @@ def quality_filter_text(
     fastText-shaped softmax (operators/langid_classifier, the
     train-langid CLI output) — zero-shuffle either way; lang_score then
     carries the softmax probability of the predicted class rather than
-    the marker-token fraction. ``langid_kernel`` picks the trained
-    scorer's implementation: 'arrow' (default — the measured corpus
-    path, 60.6k vs the fold's 1.3k docs/s at dim=2048/L=4; one
-    ArrowEvalPython stage) or 'column' (pure Columns, zero Python —
-    the parity anchor; plan embeds the dim*L weight literal).
-    Kernel parity: probabilities agree to 1e-9 (pinned by
-    test_langid_classifier); an EXACT margin tie between two classes
-    could in principle resolve differently across kernels (float
-    sum-order ulp) — the fixed-point micro kernels are the bit-exact
-    contract where that matters (the oracle row).
+    the marker-token fraction. The trained scorer runs as one
+    ArrowEvalPython stage (langid_classify_arrow: 60.6k vs the Column
+    fold's 1.3k docs/s at dim=2048/L=4). Its probabilities agree with
+    the Column fold to 1e-9 (pinned by test_langid_classifier); an
+    EXACT margin tie between two classes could in principle resolve
+    differently (float sum-order ulp) — the fixed-point micro kernels
+    are the bit-exact contract where that matters (the oracle row).
     """
     model = (ppl_model or default_ppl_model()) if with_ppl else None
     levels = _STAGES.get(
@@ -366,7 +352,7 @@ def quality_filter_text(
         lambda: _text_levels(text_col, target_lang, ppl_threshold, model),
     )
     return _apply_levels(df, levels, _trained_langid(
-        text_col, langid_model, langid_kernel, langid_threshold
+        text_col, langid_model, langid_threshold
     ))
 
 
@@ -380,10 +366,7 @@ def _text_levels(
     _html_levels); ``ppl_model`` None leaves the perplexity stage out."""
     text = F.col(text_col)
     lid, lang = _marker_langid(text_col)
-    heur_fail = F.coalesce(
-        *[F.when(~F.col("flags")[n], F.lit(n)) for n in HEURISTIC_FLAGS],
-        F.lit(None).cast("string"),
-    )
+    heur_fail = _heuristic_failure(F.col("flags"))
     # ONE reason chain with the ppl link conditionally inserted —
     # building two whole chains duplicated the langid/heuristic
     # clauses (review finding r5c)

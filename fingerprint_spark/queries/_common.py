@@ -1,30 +1,14 @@
 """What several query families share: the documents read, the scan
-fan-out and the DuckDB fragments of the langid and Gopher stages."""
+fan-out, the html escape of the synthesized pages and the DuckDB
+fragments of the langid, Gopher and keep-verdict stages."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..functions.langid import LANGS, MIN_SCORE, sql_lang_score
-from ..functions.textstats import (
-    MAX_BULLET_LINE_FRAC,
-    MAX_DUP_LINE_FRAC,
-    MAX_ELLIPSIS_LINE_FRAC,
-    MAX_MEAN_WORD_LEN,
-    MAX_SYMBOL_WORD_RATIO,
-    MAX_WORDS,
-    MIN_ALPHA_WORD_FRAC,
-    MIN_MEAN_WORD_LEN,
-    MIN_STOPWORD_HITS,
-    MIN_WORDS,
-    oracle_stats_sql,
-)
-
-
-FLAG_NAMES = [
-    "words_in_range", "mean_word_len_in_range", "symbol_ratio_ok",
-    "ellipsis_ok", "bullet_ok", "alpha_ok", "stopwords_ok", "dup_lines_ok",
-]
+from ..functions.textstats import oracle_flags_sql, oracle_stats_sql
 
 
 def _doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,13 +67,33 @@ def _sql_stats_cte() -> str:
     return f"SELECT doc_id, text, {cols} FROM documents"
 
 
-_SQL_FLAG_EXPRS = {
-    "words_in_range": f"(n_words BETWEEN {MIN_WORDS} AND {MAX_WORDS})",
-    "mean_word_len_in_range": f"(mean_word_len BETWEEN {MIN_MEAN_WORD_LEN} AND {MAX_MEAN_WORD_LEN})",
-    "symbol_ratio_ok": f"(symbol_word_ratio <= {MAX_SYMBOL_WORD_RATIO})",
-    "ellipsis_ok": f"(ellipsis_line_frac <= {MAX_ELLIPSIS_LINE_FRAC})",
-    "bullet_ok": f"(bullet_line_frac <= {MAX_BULLET_LINE_FRAC})",
-    "alpha_ok": f"(alpha_word_frac >= {MIN_ALPHA_WORD_FRAC})",
-    "stopwords_ok": f"(stopword_hits >= {MIN_STOPWORD_HITS})",
-    "dup_lines_ok": f"(dup_line_frac <= {MAX_DUP_LINE_FRAC})",
-}
+def _sql_keep_ctes() -> str:
+    """The WITH clause of the text keep verdict: CTE ``j`` is one row
+    per document with its statistics and lang_detected."""
+    return f"""WITH stats AS ({_sql_stats_cte()}),
+langs AS ({_sql_lang_scores()}),
+l AS (SELECT doc_id, {_sql_lang_case()} AS lang_detected FROM langs),
+j AS (SELECT s.*, l.lang_detected FROM stats s JOIN l USING (doc_id))"""
+
+
+def _sql_flag_whens(then: str) -> str:
+    """The Gopher clauses of the keep CASE: one ``WHEN NOT <flag> THEN
+    <then>`` per flag in drop_reason order; ``{flag}`` in ``then`` is
+    replaced by the flag name."""
+    return " ".join(
+        f"WHEN NOT {expr} THEN {then.format(flag=flag)}"
+        for flag, expr in oracle_flags_sql().items()
+    )
+
+
+def _escape_html(text: Column) -> Column:
+    """&, < and > as html entities for the synthesized pages. Literal
+    escapes via replace(), not regexp_replace — same bytes, no regex
+    engine on the hot path (r6 guide §1.2 "per-task work")."""
+    return F.replace(
+        F.replace(
+            F.replace(text, F.lit("&"), F.lit("&amp;")),
+            F.lit("<"), F.lit("&lt;"),
+        ),
+        F.lit(">"), F.lit("&gt;"),
+    )

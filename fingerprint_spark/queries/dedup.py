@@ -7,15 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._common import (
-    FLAG_NAMES,
-    _SQL_FLAG_EXPRS,
-    _doc,
-    _fan_out,
-    _sql_lang_case,
-    _sql_lang_scores,
-    _sql_stats_cte,
-)
+from ._common import _doc, _fan_out, _sql_flag_whens, _sql_keep_ctes
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,7 +52,7 @@ def q_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure Columns and from the Arrow-batched pandas UDF, so the UDF
     operator itself is under the hard signal (the round-4 winnow
     pattern applied to sketches; the dedup operators' blake2b
-    simhash64_col / minhash_signature_col are pytest-pinned against
+    simhash64_batch_py / minhash_signature_col are pytest-pinned against
     their reference twins)."""
     from ..functions.hashing import (
         sketch_md5_udf_col,
@@ -395,14 +387,9 @@ def q_pipeline_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_pipeline_dedup() -> str:
-    heur = " ".join(
-        f"WHEN NOT {_SQL_FLAG_EXPRS[n]} THEN 0" for n in FLAG_NAMES
-    )
+    heur = _sql_flag_whens("0")
     return f"""
-WITH stats AS ({_sql_stats_cte()}),
-langs AS ({_sql_lang_scores()}),
-l AS (SELECT doc_id, {_sql_lang_case()} AS lang_detected FROM langs),
-j AS (SELECT s.*, l.lang_detected FROM stats s JOIN l USING (doc_id)),
+{_sql_keep_ctes()},
 kept AS (
   SELECT d.doc_id, d.source, d.text FROM documents d JOIN j USING (doc_id)
   WHERE (CASE WHEN j.lang_detected <> 'en' THEN 0 {heur} ELSE 1 END) = 1),

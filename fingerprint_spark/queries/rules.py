@@ -16,7 +16,7 @@ from ..operators.assertions import (
     _NUMBER_RE,
     _PCT_RE,
 )
-from ._common import _doc, _fan_out
+from ._common import _doc, _escape_html, _fan_out
 
 
 def q_source_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,15 +188,11 @@ def q_infer_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..parse import parse_html_col
 
     df = _doc(spark, sf_dir).filter(F.col("doc_id") < 200)
-    esc = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(F.col("text"), "&", "&amp;"), "<", "&lt;"),
-        ">", "&gt;",
-    )
     html = F.concat(
         F.lit("<html><body><h1>Corpus Document</h1><h2>Sec "),
         (F.col("doc_id") % 7).cast("string"),
         F.lit("</h2><p>"),
-        esc, F.lit("</p></body></html>"),
+        _escape_html(F.col("text")), F.lit("</p></body></html>"),
     )
     parsed = df.select(
         F.col("doc_id").cast("string").alias("url"),
@@ -248,19 +244,10 @@ def q_extract_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..parse import parse_html_col
 
     df = _fan_out(_doc(spark, sf_dir))
-    # literal escapes via replace(), not regexp_replace (r6 — same
-    # bytes, no regex engine; see q_html_pipeline)
-    esc = F.replace(
-        F.replace(
-            F.replace(F.col("text"), F.lit("&"), F.lit("&amp;")),
-            F.lit("<"), F.lit("&lt;"),
-        ),
-        F.lit(">"), F.lit("&gt;"),
-    )
     html = F.concat(
         F.lit("<html><body><h1>Doc "), F.col("doc_id").cast("string"),
         F.lit("</h1><h2>Body</h2><p>"),
-        F.replace(esc, F.lit("\n"), F.lit("</p><p>")),
+        F.replace(_escape_html(F.col("text")), F.lit("\n"), F.lit("</p><p>")),
         F.lit("</p></body></html>"),
     )
     parsed = df.select("doc_id", parse_html_col(html).alias("parsed"))

@@ -9,12 +9,18 @@ from pyspark.sql import functions as F
 
 from ..functions.langid import TOKEN_SPLIT_RE, langid_best
 from ..functions.scrub import PII_PATTERNS, scrub_counts, scrub_text
-from ..functions.textstats import gopher_quality_flags, text_stats
+from ..functions.textstats import (
+    GOPHER_FLAGS,
+    gopher_quality_flags,
+    oracle_flags_sql,
+    text_stats,
+)
 from ._common import (
-    FLAG_NAMES,
-    _SQL_FLAG_EXPRS,
     _doc,
+    _escape_html,
     _fan_out,
+    _sql_flag_whens,
+    _sql_keep_ctes,
     _sql_lang_case,
     _sql_lang_scores,
     _sql_stats_cte,
@@ -152,13 +158,13 @@ def q_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         s["n_words"].cast("bigint").alias("n_words"),
         s["n_lines"].cast("bigint").alias("n_lines"),
         s["stopword_hits"].cast("bigint").alias("stopword_hits"),
-        *[flags[n].cast("int").alias(n) for n in FLAG_NAMES],
+        *[flags[n].cast("int").alias(n) for n in GOPHER_FLAGS],
     )
 
 
 def sql_gopher() -> str:
     cols = ", ".join(
-        f"{expr}::int AS {name}" for name, expr in _SQL_FLAG_EXPRS.items()
+        f"{expr}::int AS {name}" for name, expr in oracle_flags_sql().items()
     )
     return (
         f"WITH s AS ({_sql_stats_cte()}) "
@@ -183,20 +189,14 @@ def q_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_pipeline_keep() -> str:
-    heur = " ".join(
-        f"WHEN NOT {_SQL_FLAG_EXPRS[n]} THEN 'heuristic:{n}'" for n in FLAG_NAMES
-    )
     return f"""
-WITH stats AS ({_sql_stats_cte()}),
-langs AS ({_sql_lang_scores()}),
-l AS (SELECT doc_id, {_sql_lang_case()} AS lang_detected FROM langs),
-j AS (SELECT s.*, l.lang_detected FROM stats s JOIN l USING (doc_id))
+{_sql_keep_ctes()}
 SELECT doc_id,
   (CASE WHEN lang_detected <> 'en' THEN 0
-        {" ".join(f"WHEN NOT {_SQL_FLAG_EXPRS[n]} THEN 0" for n in FLAG_NAMES)}
+        {_sql_flag_whens("0")}
         ELSE 1 END)::int AS keep,
   coalesce(CASE WHEN lang_detected <> 'en' THEN 'langid:' || lang_detected
-        {heur} END, '') AS drop_reason
+        {_sql_flag_whens("'heuristic:{flag}'")} END, '') AS drop_reason
 FROM j
 """
 
@@ -259,20 +259,11 @@ def q_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran on the single scan task and the exchange carried the inflated
     # html instead of the raw text
     df = _fan_out(_doc(spark, sf_dir))
-    # literal escapes via replace(), not regexp_replace — same bytes,
-    # no regex engine on the hot path (r6 guide §1.2 "per-task work")
-    esc = F.replace(
-        F.replace(
-            F.replace(F.col("text"), F.lit("&"), F.lit("&amp;")),
-            F.lit("<"), F.lit("&lt;"),
-        ),
-        F.lit(">"), F.lit("&gt;"),
-    )
     html = F.concat(
         F.lit("<html><head><title>t</title></head><body><h1>Doc "),
         F.col("doc_id").cast("string"),
         F.lit("</h1><p>"),
-        F.replace(esc, F.lit("\n"), F.lit("</p><p>")),
+        F.replace(_escape_html(F.col("text")), F.lit("\n"), F.lit("</p><p>")),
         F.lit("</p></body></html>"),
     )
     docs = df.select(

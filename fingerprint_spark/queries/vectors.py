@@ -3,9 +3,32 @@ thresholded cosine pairs and IVF recall."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+
+def _cosine_unfloored(a: Column, b: Column) -> Column:
+    """Cosine of two embedding arrays as double folds. The division is
+    not floored, as in the embedding_topk / knn_label_vote oracle SQL
+    (operators/dedup._cosine floors the norm product at 1e-12, as its
+    callers' SQL does)."""
+
+    def norm(c: Column) -> Column:
+        return F.sqrt(
+            F.aggregate(
+                F.transform(c, lambda x: x.cast("double") * x.cast("double")),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        )
+
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return dot / (norm(a) * norm(b))
 
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17,27 +40,10 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb")
     )
     joined = df.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_a = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    norm_q = F.sqrt(
-        F.aggregate(
-            F.transform("q_emb", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     scored = joined.select(
-        "vec_id", F.round(dot / (norm_a * norm_q), 4).alias("cos_r")
+        "vec_id",
+        F.round(_cosine_unfloored(F.col("embedding"), F.col("q_emb")), 4)
+        .alias("cos_r"),
     )
     # TakeOrderedAndProject (per-partition top-k + driver merge) instead
     # of a global unpartitioned window; the rank window sees only the 10
@@ -81,19 +87,10 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
     )
     pairs = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
     scored = pairs.select(
         "qid", "vec_id", "label",
-        F.round(dot / (norm(F.col("embedding")) * norm(F.col("q_emb"))), 4).alias("cos_r"),
+        F.round(_cosine_unfloored(F.col("embedding"), F.col("q_emb")), 4)
+        .alias("cos_r"),
     )
     w = W.partitionBy("qid").orderBy(F.desc("cos_r"), F.asc("vec_id"))
     top = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 10)

@@ -18,18 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_corpus_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partition by warc day (the Iceberg partition-spec analog:
-    days(warc_ts)); url-hash bucketing inside partitions happens at
-    checkpoint time, not storage time."""
-    (
-        df.withColumn("warc_day", F.to_date("warc_ts"))
-        .write.mode(mode)
-        .partitionBy("warc_day")
-        .parquet(path)
-    )
-
-
 def read_corpus(
     spark: SparkSession,
     path: str,

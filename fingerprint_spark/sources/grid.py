@@ -49,13 +49,6 @@ def sheets_from_csv_col(text: Column, url: Column) -> Column:
     return csv_text_to_sheets(text, stem)
 
 
-def grid_cell(sheets: Column, sheet: str, a1: str) -> Column:
-    """Convenience A1 accessor (csv.rs cell_by_column analog)."""
-    from ..operators.assertions import _cell
-
-    return _cell(sheets, sheet, a1)
-
-
 def xlsx_to_sheets(payload: bytes) -> dict[str, list[list[str]]]:
     """Real xlsx byte decode (stdlib zip+XML) — see sources/xlsx.py."""
     from .xlsx import xlsx_to_sheets as _impl

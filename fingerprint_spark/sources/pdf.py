@@ -12,10 +12,9 @@ it from raw bytes:
 - ``parse_pdf_binary``: page count = /Type /Page leaf objects;
   metadata = the trailer's /Info dictionary (literal-string values,
   last trailer wins across incremental updates);
-- ``pdf_struct_col``: builds the ``pdf`` struct the assertion family
-  (page_count / metadata_regex) consumes — from the parse above or from
-  ALREADY-EXTRACTED columns (a WARC sidecar), whichever the pipeline has;
-- ``pdf_struct_from_binary_col``: Arrow-batched UDF binary -> pdf struct.
+- ``pdf_struct_from_binary_col``: Arrow-batched UDF binary -> the
+  ``pdf`` struct the assertion family (page_count / metadata_regex)
+  consumes.
 """
 
 from __future__ import annotations
@@ -28,17 +27,6 @@ import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def pdf_struct_col(page_count: Column, metadata: Column) -> Column:
-    """(page_count int, metadata map<string,string>) — metadata keys kept
-    verbatim; lookups are case-insensitive in the assertion
-    (pdf.rs:50 sorts keys for determinism; map iteration here is keyed,
-    never order-dependent)."""
-    return F.struct(
-        page_count.cast("int").alias("page_count"),
-        metadata.alias("metadata"),
-    )
 
 
 # /Type /Page but not /Pages (\b: 's' is a word char) — the leaf page

@@ -1,8 +1,9 @@
 """Test-only fixture writers and output checkers.
 
 Nothing in the package calls these: they build real input bytes for the
-format readers (``make_xls``, ``make_pdf``) and audit what a sink wrote
-(``verify_shards``).
+format readers (``make_xls``, ``make_pdf``), write the day-partitioned
+corpus the CLI reads (``write_corpus_partitioned``) and audit what a sink
+wrote (``verify_shards``).
 """
 
 from __future__ import annotations
@@ -10,7 +11,8 @@ from __future__ import annotations
 import json
 import struct
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from fingerprint_spark.sinks import _fold_shards, _manifest_path
 from fingerprint_spark.sources.xls import (
@@ -357,3 +359,20 @@ def verify_shards(spark: SparkSession, path: str) -> dict:
         "missing_shards": sorted(want.keys() - got.keys()),
         "extra_shards": sorted(got.keys() - want.keys()),
     }
+
+
+# ---------------------------------------------------------------------------
+# corpus: the day-partitioned layout sources.corpus_io.read_corpus scans
+# ---------------------------------------------------------------------------
+
+
+def write_corpus_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Partition by warc day (the Iceberg partition-spec analog:
+    days(warc_ts)); url-hash bucketing inside partitions happens at
+    checkpoint time, not storage time."""
+    (
+        df.withColumn("warc_day", F.to_date("warc_ts"))
+        .write.mode(mode)
+        .partitionBy("warc_day")
+        .parquet(path)
+    )

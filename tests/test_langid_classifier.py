@@ -270,9 +270,9 @@ def test_langid_micro_matches_double_path(spark):
 def test_langid_model_validation_refusals(spark):
     """Review-pass contracts: out-of-range weight indices (negative
     keys would silently corrupt the dense matrix tail via Python
-    negative indexing), empty class lists, NULL training labels, and
-    kernel typos must all fail LOUDLY with ValueError — never corrupt
-    silently or traceback deep inside inference."""
+    negative indexing), empty class lists and NULL training labels must
+    all fail LOUDLY with ValueError — never corrupt silently or
+    traceback deep inside inference."""
     import json
 
     from fingerprint_spark.operators.langid_classifier import (
@@ -304,13 +304,6 @@ def test_langid_model_validation_refusals(spark):
         )
     with pytest.raises(ValueError, match="NULL"):
         train_langid_softmax_py([("hello", "en"), ("welt", None)])
-
-    from fingerprint_spark.pipeline import quality_filter_text
-
-    m = train_langid_softmax_py(LANGID_TRAIN_FIXTURE[:4], dim=64, epochs=1)
-    df = spark.createDataFrame([("https://h/1", "hi")], "url string, text string")
-    with pytest.raises(ValueError, match="unknown langid_kernel"):
-        quality_filter_text(df, langid_model=m, langid_kernel="Arrow")
 
 
 @pytest.mark.parametrize("hasher", ["xxhash", "md5"])

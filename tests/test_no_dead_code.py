@@ -2,16 +2,17 @@
 
 A top-level definition of ``fingerprint_spark/`` (function, class or
 module constant) is live when a production path reaches it. The roots
-are every other module-level statement of the package, every statement
-of the production entry points (``scripts/``, ``bench.py``,
-``bench_extra.py``, ``qfbench/`` except its smoke test, and
-``__spark_entry__.py``) and the two allowlists below. Reachability is
+are every other module-level statement of the package except imports
+and ``__all__``, every statement of the production entry points
+(``scripts/``, ``bench.py``, ``bench_extra.py``, ``qfbench/`` except its
+smoke test, and ``__spark_entry__.py``) and the two allowlists below.
+A module-level import or an ``__all__`` entry is not a caller: a name
+that only a package re-export mentions is dead. Reachability is
 transitive: the body of a live definition makes the names it uses live,
 so a helper that only dead code calls is dead too.
 
-References are matched by name: a ``Name``, an attribute name, an
-imported name, or a string constant that is one identifier (queries
-are registered by name, and ``__all__`` lists the public names).
+References are matched by name: a ``Name``, an attribute name, a name a
+function body imports, or a string constant that is one identifier.
 
 Run ``python tests/test_no_dead_code.py`` to print the dead definitions
 with their line counts.
@@ -62,6 +63,15 @@ LIBRARY_API = (
     "_generalize_value",  # SURVEY §3.3 infer-schema: value -> pattern
     "hybrid_search",  # SURVEY hybrid-search/RRF rows (operators/search.py)
     "support_for_query",  # SURVEY hybrid-search rows (operators/search.py)
+    "parse_by_format",  # format dispatch (md/csv/pdf); ARCHITECTURE.md, --describe
+    "read_manifest",  # SURVEY §1.1 record model: manifest validation
+    "load_text_paths",  # SURVEY §1.1 record model: manifest text loading
+    "stream_quality_filter",  # streaming/pipeline.py row of the module map
+    "streaming_dedup",  # streaming/pipeline.py row of the module map
+    "stream_decontaminate",  # streaming/pipeline.py row of the module map
+    "stream_metrics_by_window",  # streaming/pipeline.py row of the module map
+    "write_bucketed",  # bucketed layout (sources/bucketed.py); test_sources
+    "colocated_join",  # shuffle-free join on that layout; test_sources
 )
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -111,6 +121,16 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
     return names
 
 
+def _is_root(stmt: ast.stmt) -> bool:
+    """A module-level statement whose names count as used."""
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return False
+    return not (
+        isinstance(stmt, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets)
+    )
+
+
 def _scan():
     """(definitions, root names): definitions maps a name to a list of
     (file, line count, names its statement uses)."""
@@ -121,7 +141,8 @@ def _scan():
         for stmt in tree.body:
             names = _defined_names(stmt)
             if not names:
-                roots |= _names_used(stmt)
+                if _is_root(stmt):
+                    roots |= _names_used(stmt)
                 continue
             lines = stmt.end_lineno - stmt.lineno + 1
             if getattr(stmt, "decorator_list", None):

@@ -7,7 +7,7 @@ from fingerprint_spark.functions.hashing import (
     minhash_signature_py,
     simhash64_py,
 )
-from fingerprint_spark.parse.html_parser import extract_text, normalize_ws, parse_html
+from fingerprint_spark.parse.html_parser import normalize_ws, parse_html
 from fingerprint_spark.parse.markdown import normalize_markdown, parse_markdown
 
 text_strategy = st.text(
@@ -48,7 +48,7 @@ def test_normalize_ws_idempotent(s):
 @given(text_strategy)
 def test_extract_text_deterministic(s):
     html = f"<html><body><p>{s.replace('<', '&lt;').replace('>', '&gt;')}</p></body></html>"
-    assert extract_text(html) == extract_text(html)
+    assert parse_html(html)["normalized"] == parse_html(html)["normalized"]
 
 
 @settings(max_examples=60, deadline=None)

@@ -11,7 +11,7 @@ operator's internals gets a focused equivalence test here.
    produce the identical integer totals as the former explode ->
    broadcast join -> groupBy plan, including the non-ASCII fallback.
 3. the shared batch shingle-hash kernel (functions/hashing.
-   shingle_hashes_batch) behind simhash64_col, minhash_signature_col
+   shingle_hashes_batch) behind simhash64_batch_py, minhash_signature_col
    and the enrich UDF's simhash must equal the per-doc reference twins.
 """
 
@@ -242,7 +242,6 @@ def _assert_sketches_match_references(spark, texts):
         minhash_signature_col,
         minhash_signature_py,
         simhash64_batch_py,
-        simhash64_col,
         simhash64_py,
     )
     from fingerprint_spark.parse import enrich_col
@@ -254,7 +253,6 @@ def _assert_sketches_match_references(spark, texts):
     ).repartition(2)  # several docs per Arrow batch, two batches
     rows = df.select(
         "i",
-        simhash64_col(F.col("text")).alias("sh"),
         minhash_signature_col(F.col("text"), num_hashes=8).alias("mh8"),
         minhash_signature_col(F.col("text"), num_hashes=64).alias("mh64"),
         enrich_col(F.col("text"), default_ppl_model()).alias("e"),
@@ -262,7 +260,6 @@ def _assert_sketches_match_references(spark, texts):
     assert len(rows) == len(texts)
     for r in rows:
         t = texts[r["i"]]
-        assert r["sh"] == simhash64_py(t, 3), t
         assert list(r["mh8"]) == minhash_signature_py(t, 8, 3), t
         assert list(r["mh64"]) == minhash_signature_py(t, 64, 3), t
         norm = r["e"]["parsed"]["normalized"] or ""
@@ -271,8 +268,8 @@ def _assert_sketches_match_references(spark, texts):
 
 def test_simhash_batch_bit_identical(spark, sf_dir):
     """Every production caller of the batch shingle kernel —
-    simhash64_batch_py, simhash64_col, minhash_signature_col (8 and 64
-    hashes) and enrich_col's simhash — equals simhash64_py /
+    simhash64_batch_py, minhash_signature_col (8 and 64 hashes) and
+    enrich_col's simhash — equals simhash64_py /
     minhash_signature_py per doc: degenerate inputs always, then the
     sf_dir corpus (skipped when missing)."""
     _assert_sketches_match_references(spark, SKETCH_TEXTS)

@@ -10,10 +10,9 @@ from fingerprint_spark.sources import (
     detect_format,
     parse_by_format,
     read_corpus,
-    write_corpus_partitioned,
 )
 from fingerprint_spark.sources.grid import xlsx_to_sheets
-from fingerprint_spark.sources.pdf import pdf_struct_col
+from helpers import write_corpus_partitioned
 
 
 def test_detect_format(spark):
@@ -76,7 +75,7 @@ def test_pdf_struct_feeds_page_count_assertion(spark):
          (3, {"Title": "X"}, "tiny")],
         "page_count int, metadata map<string,string>, text string",
     )
-    df = df.withColumn("pdf", pdf_struct_col(F.col("page_count"), F.col("metadata")))
+    df = df.withColumn("pdf", F.struct("page_count", "metadata"))
 
     env = {"pdf": F.col("pdf")}
     a = make_assertion("page_count", "t", {"min_pages": 10, "max_pages": 20})

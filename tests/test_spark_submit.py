@@ -10,7 +10,7 @@ import pytest
 
 from fingerprint_spark.corpus import generate_corpus
 from fingerprint_spark.deploy import build_pyfiles_zip
-from fingerprint_spark.sources.corpus_io import write_corpus_partitioned
+from helpers import write_corpus_partitioned
 
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
