@@ -18,9 +18,10 @@ that is the difference between shuffling ~100 TB and shuffling ~100 GB.
 the per-document pure-Python reference twins the kernel is pinned
 against (tests/test_r06_optimizations.py).
 
-The md5 sketch and winnow paths at the end of the module are the
+The md5 sketch and winnow kernels at the end of the module are the
 portable contracts: an external engine (the DuckDB oracle) recomputes
-them exactly.
+them exactly. Each is one Arrow-batch kernel, the only path its query
+runs.
 """
 
 from __future__ import annotations
@@ -404,20 +405,26 @@ def canonical_text_col(text: Column) -> Column:
 # winnowing picks a POSITION; the selected VALUE set is
 # tie-rule-independent (every selected value is a window minimum), so
 # set aggregates over window minima are the portable contract. The
-# winnow query runs the pure-Column form (winnow_gram_hashes_col +
-# winnow_minima_from_hashes) and the Arrow UDF form side by side under
-# the oracle. Reference analog: content identity,
+# winnow query runs one path, the Arrow UDF winnow_minima_md5_udf_col,
+# which maps winnow_minima_py per document; the DuckDB oracle
+# recomputes every value it emits. Reference analog: content identity,
 # src/dsl/content_hash.rs:7-69.
 # ---------------------------------------------------------------------------
 
 
 def _ascii_ws_normalize(text: str) -> str:
-    """Collapse ASCII whitespace runs to single spaces + strip — the
-    EXACT semantics of trim(regexp_replace(lower(x), '\\s+', ' ')) on
-    the JVM and of RE2 \\s in DuckDB. Python str.split() would also
-    split on Unicode whitespace (NBSP etc.), silently diverging the
-    UDF contract path from the Column/oracle paths (review finding
-    r4)."""
+    """Lowercase, collapse ASCII whitespace runs to single spaces and
+    strip. Python's re.ASCII \\s is space, TAB, LF, VT, FF and CR —
+    the same set as Java's \\s, so this equals
+    trim(regexp_replace(lower(x), '\\s+', ' ')) on the JVM. Python
+    str.split() would also split on Unicode whitespace (NBSP etc.);
+    no engine's \\s does.
+
+    VT (\\x0b) is outside the oracle contract: RE2's \\s, which the
+    DuckDB oracle uses, excludes it, so DuckDB keeps 'a\\x0bb' as one
+    word while this function splits it. The sketch kernel and its twin
+    agree on VT (pinned by test_sketch_md5_batch_matches_reference);
+    the oracle does not. The generated test corpora carry no VT."""
     import re
 
     toks = [t for t in re.split(r"\s+", (text or "").lower(), flags=re.ASCII)
@@ -586,99 +593,3 @@ def sketch_md5_udf_col(
 ) -> Column:
     """Arrow-batched UDF path of the portable sketch contract."""
     return _sketch_md5_udf(tuple(seeds), k)(text)
-
-
-def sketch_words_col(col_name: str) -> Column:
-    """Lowercased ASCII-whitespace word array from a text column (by
-    NAME) — project THIS first, then pass its name to
-    sketch_shingles_col (lambda-CSE: interpolating the split into the
-    shingle lambda would re-split the text once per shingle)."""
-    return F.expr(
-        f"filter(split(trim(lower({col_name})), '\\\\s+'), w -> w != '')"
-    )
-
-
-def sketch_shingles_col(words_col: str, k: int = 3) -> Column:
-    """Word k-shingles from an ALREADY-PROJECTED word-array column (by
-    NAME; lambda-CSE rule): array<string>, whole-text single shingle
-    when shorter than k words.
-
-    Built from k bulk slices chained through zip_with concat instead of
-    a per-position transform(array_join(slice(...))) — the same strings
-    with k-1 array traversals instead of one interpreted slice+join per
-    shingle (measured ~2x on the shingle stage, r6)."""
-    ws = words_col
-    m = f"size({ws}) - {k - 1}"
-    chain = f"slice({ws}, 1, {m})"
-    for j in range(2, k + 1):
-        chain = (
-            f"zip_with({chain}, slice({ws}, {j}, {m}), "
-            f"(a, b) -> concat(a, ' ', b))"
-        )
-    return F.expr(
-        f"CASE WHEN size({ws}) >= {k} THEN {chain} "
-        f"ELSE array(array_join({ws}, ' ')) END"
-    )
-
-
-def _md5_hash_sql(seed: str, s: str) -> str:
-    return (
-        f"cast(conv(substr(md5(concat('{seed}:', {s})), 1, 15), 16, 10) "
-        f"as bigint)"
-    )
-
-
-def sketch_minhash_col(shingles_col: str, seed: int) -> Column:
-    """min over shingles of the seeded md5 hash (by NAME)."""
-    return F.expr(
-        f"array_min(transform({shingles_col}, "
-        f"s -> {_md5_hash_sql(str(seed), 's')}))"
-    )
-
-
-def sketch_sim_hashes_col(shingles_col: str) -> Column:
-    """'sim'-seeded hashes of the DISTINCT shingles (by NAME) —
-    project this ONCE before sketch_simhash16_from_hashes (the 16
-    per-bit folds below would otherwise each recompute every md5)."""
-    return F.expr(
-        f"transform(array_distinct({shingles_col}), "
-        f"s -> {_md5_hash_sql('sim', 's')})"
-    )
-
-
-def sketch_simhash16_from_hashes(hs_col: str) -> Column:
-    """16-bit SimHash from a projected sim-hash array (by NAME)."""
-    terms = []
-    for b in range(16):
-        bitsum = (
-            f"aggregate({hs_col}, cast(0 as bigint), "
-            f"(a, x) -> a + ((x >> {b}) & 1) * 2 - 1)"
-        )
-        terms.append(f"(CASE WHEN {bitsum} > 0 THEN {1 << b} ELSE 0 END)")
-    return F.expr(" + ".join(terms)).cast("long")
-
-
-def winnow_gram_hashes_col(col_name: str, k: int = 8) -> Column:
-    """Pure-Column md5 k-gram hashes over an ALREADY-PROJECTED
-    normalized-text column (passed by NAME — lambda-CSE: Catalyst does
-    not CSE under HOF lambdas, so an expression argument would be
-    recomputed per sequence element). O(m·k) digests per doc — the
-    oracle path; the numpy UDF is the scale path."""
-    return F.expr(
-        # conv(hex,16,10) returns a decimal string; 15 hex digits = 60
-        # bits, so the bigint cast cannot overflow
-        f"CASE WHEN length({col_name}) >= {k} THEN "
-        f"transform(sequence(1, length({col_name}) - {k - 1}), "
-        f"i -> cast(conv(substr(md5(substring({col_name}, i, {k})), 1, 15), 16, 10) as bigint)) "
-        f"ELSE cast(array() as array<bigint>) END"
-    )
-
-
-def winnow_minima_from_hashes(col_name: str, window: int = 4) -> Column:
-    """Window minima over a projected gram-hash array column (by
-    NAME, same lambda-CSE rule)."""
-    return F.expr(
-        f"CASE WHEN size({col_name}) = 0 THEN cast(array() as array<bigint>) "
-        f"ELSE transform(sequence(1, greatest(size({col_name}) - {window - 1}, 1)), "
-        f"j -> array_min(slice({col_name}, j, {window}))) END"
-    )

@@ -200,10 +200,10 @@ def _ngrams_from_words(words: Column, n: int) -> Column:
     For small n, built from n bulk slices chained through zip_with
     concat instead of a per-position transform(array_join(slice(...)))
     — identical strings, n-1 array traversals instead of one
-    interpreted slice+join per gram (the sketch_shingles_col rewrite,
-    r6; measured 2x at n=3). The chain's progressive concatenation
-    allocates O(n^2) chars per gram, so past n=8 (measured neutral at 8,
-    slower at 13) the single array_join form wins and is kept."""
+    interpreted slice+join per gram (r6; measured 2x at n=3). The
+    chain's progressive concatenation allocates O(n^2) chars per gram,
+    so past n=8 (measured neutral at 8, slower at 13) the single
+    array_join form wins and is kept."""
     if n <= 8:
         m = F.size(words) - n + 1
         r = F.slice(words, 1, m)

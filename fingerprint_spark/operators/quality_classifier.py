@@ -338,11 +338,42 @@ def _md5_word_id(w: str, dim: int) -> int:
     return int(hashlib.md5(("f:" + w).encode()).hexdigest()[:15], 16) % dim
 
 
+def quality_model_from_json(s: str) -> dict:
+    """Parse + validate a train-classifier model file; JSON stringifies
+    the weight keys, so re-int them. Malformed structure raises
+    ValueError (the CLI's clean-error contract)."""
+    import json
+
+    try:
+        m = json.loads(s)
+        weights = {int(i): float(v) for i, v in m["weights"].items()}
+        bias = float(m["bias"])
+        dim = int(m["dim"])
+        hasher = str(m.get("hasher", "xxhash"))
+    except (KeyError, TypeError, AttributeError) as e:
+        raise ValueError(f"malformed quality model: {e!r}") from e
+    if dim <= 0:
+        # dim=0 would pass the (vacuous) index check below, then crash
+        # as '% 0' deep inside inference
+        raise ValueError(f"dim must be >= 1, got {dim}")
+    if hasher not in ("xxhash", "md5"):
+        raise ValueError(f"unknown feature hasher: {hasher!r}")
+    bad = [i for i in weights if not 0 <= i < dim]
+    if bad:
+        raise ValueError(f"weight index out of range [0, {dim}): {bad[:3]}")
+    return {"weights": weights, "bias": bias, "dim": dim, "hasher": hasher}
+
+
 def _model_dense(model: dict) -> list[float]:
     """Dense weight vector from a model dict — shared by the Column
     literal fold, the Arrow kernel, and oracle SQL generation."""
-    dense = [0.0] * int(model["dim"])
+    dim = int(model["dim"])
+    dense = [0.0] * dim
     for idx, wv in model["weights"].items():
+        if not 0 <= int(idx) < dim:
+            # negative keys would WRITE into the vector tail via Python
+            # negative indexing — corrupt weights, no error
+            raise ValueError(f"weight index {idx} out of range [0, {dim})")
         dense[int(idx)] = float(wv)
     return dense
 

@@ -48,61 +48,37 @@ def q_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash + MinHash sketches per doc (near-dup identity), ORACLE-
     CHECKED via the portable md5-gram contract (functions/hashing.py:
     sketch_md5_py — hash_i(s) = md5('<i>:'+shingle) prefix; simhash16
-    bit = sign of the distinct-shingle bit sum). Emitted TWICE: from
-    pure Columns and from the Arrow-batched pandas UDF, so the UDF
-    operator itself is under the hard signal (the round-4 winnow
-    pattern applied to sketches; the dedup operators' blake2b
-    simhash64_batch_py / minhash_signature_col are pytest-pinned against
-    their reference twins)."""
-    from ..functions.hashing import (
-        sketch_md5_udf_col,
-        sketch_minhash_col,
-        sketch_shingles_col,
-        sketch_sim_hashes_col,
-        sketch_simhash16_from_hashes,
-        sketch_words_col,
-    )
+    bit = sign of the distinct-shingle bit sum). ONE production path:
+    the Arrow-batched kernel (sketch_md5_udf_col -> _sketch_md5_batch),
+    pinned against its twin sketch_md5_py by pytest. The plain and the
+    `_u` columns both read that one kernel's output; the `_u` names
+    remain only because the oracle SQL and the row digests are frozen.
+    NULL text sketches like empty text (the kernel's contract and the
+    oracle's coalesce)."""
+    from ..functions.hashing import sketch_md5_udf_col
 
-    # NULL text must behave exactly like empty text on BOTH paths (the
-    # Column path's split/array_join would propagate NULL while the
-    # md5 UDF hashes the empty shingle — ADVICE r4 asymmetry)
-    df = _doc(spark, sf_dir).select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text")
-    )
     # the test parquet is one small file -> one input split; fan out so
     # the per-shingle digests use every core (scale-adaptive: a no-op
     # when the scan already yields >= cores splits — r6)
-    df = _fan_out(df)
-    # each stage projected separately (lambda-CSE rule): words, THEN
-    # shingles over the projected array, THEN hashes
-    df = df.select("doc_id", "text", sketch_words_col("text").alias("ws"))
-    df = df.select(
-        "doc_id", "text", sketch_shingles_col("ws", k=3).alias("sh")
-    )
-    # ONE distinct projection feeds both Column sub-paths (r6): the sim
-    # hashes always deduped; the minhash folds now hash each DISTINCT
-    # shingle once too — min over a set equals min over the multiset,
-    # so the emitted values are unchanged while duplicate shingles stop
-    # paying md5 twice
-    df = df.select(
-        "doc_id", "text", F.expr("array_distinct(sh)").alias("shd")
-    )
+    df = _fan_out(_doc(spark, sf_dir).select("doc_id", "text"))
     df = df.select(
         "doc_id",
-        "shd",
-        sketch_sim_hashes_col("shd").alias("hs"),
         sketch_md5_udf_col(F.col("text"), seeds=(0, 7, 15), k=3).alias("u"),
     )
+    sim = F.col("u.simhash16")
+    mins = [
+        F.try_element_at(F.col("u.minhash"), F.lit(i)) for i in (1, 2, 3)
+    ]
     return df.select(
         "doc_id",
-        sketch_simhash16_from_hashes("hs").alias("simhash16"),
-        sketch_minhash_col("shd", 0).alias("minhash_0"),
-        sketch_minhash_col("shd", 7).alias("minhash_7"),
-        sketch_minhash_col("shd", 15).alias("minhash_15"),
-        F.col("u.simhash16").alias("simhash16_u"),
-        F.try_element_at(F.col("u.minhash"), F.lit(1)).alias("minhash_0_u"),
-        F.try_element_at(F.col("u.minhash"), F.lit(2)).alias("minhash_7_u"),
-        F.try_element_at(F.col("u.minhash"), F.lit(3)).alias("minhash_15_u"),
+        sim.alias("simhash16"),
+        mins[0].alias("minhash_0"),
+        mins[1].alias("minhash_7"),
+        mins[2].alias("minhash_15"),
+        sim.alias("simhash16_u"),
+        mins[0].alias("minhash_0_u"),
+        mins[1].alias("minhash_7_u"),
+        mins[2].alias("minhash_15_u"),
     )
 
 
@@ -152,47 +128,34 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/hashing.py): the selected fingerprint VALUE set is
     tie-rule-independent (every selection is a window minimum), so set
     aggregates — distinct count / min / max / xor-fold — are exactly
-    recomputable in DuckDB. Emitted TWICE, once from the pure-Column
-    path and once from the Arrow-batched pandas UDF, so the UDF
-    operator itself sits under the hard signal. Reference analog:
-    content identity family, src/dsl/content_hash.rs:7-69."""
-    from ..functions.hashing import (
-        winnow_gram_hashes_col,
-        winnow_minima_from_hashes,
-        winnow_minima_md5_udf_col,
-    )
+    recomputable in DuckDB. ONE production path: the Arrow-batched
+    kernel winnow_minima_md5_udf_col, which maps winnow_minima_py. The
+    plain and the `_u` aggregates both read that one minima array; the
+    `_u` names remain only because the oracle SQL and the row digests
+    are frozen. Reference analog: content identity family,
+    src/dsl/content_hash.rs:7-69."""
+    from ..functions.hashing import winnow_minima_md5_udf_col
 
     df = _fan_out(_doc(spark, sf_dir)).select(
         "doc_id",
-        F.trim(
-            F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-        ).alias("s"),
-        F.col("text"),
-    )
-    # each stage projected separately (lambda-CSE rule)
-    df = df.select(
-        "doc_id", "text", winnow_gram_hashes_col("s", k=8).alias("h")
-    )
-    df = df.select(
-        "doc_id",
-        winnow_minima_from_hashes("h", window=4).alias("mins"),
         winnow_minima_md5_udf_col(F.col("text"), k=8, window=4).alias(
-            "mins_u"
+            "mins"
         ),
     )
 
-    def agg(mins: str, suffix: str):
-        fps = f"array_distinct({mins})"
+    fps = "array_distinct(mins)"
+
+    def agg(suffix: str):
         return [
             F.expr(f"size({fps})").cast("bigint").alias(f"n_fp{suffix}"),
-            F.expr(f"array_min({mins})").alias(f"fp_min{suffix}"),
-            F.expr(f"array_max({mins})").alias(f"fp_max{suffix}"),
+            F.expr("array_min(mins)").alias(f"fp_min{suffix}"),
+            F.expr("array_max(mins)").alias(f"fp_max{suffix}"),
             F.expr(
                 f"aggregate({fps}, cast(0 as bigint), (a, x) -> a ^ x)"
             ).alias(f"fp_xor{suffix}"),
         ]
 
-    return df.select("doc_id", *agg("mins", ""), *agg("mins_u", "_u"))
+    return df.select("doc_id", *agg(""), *agg("_u"))
 
 
 def sql_winnow() -> str:

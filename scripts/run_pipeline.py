@@ -490,6 +490,18 @@ def _curate_mode(argv: list[str]) -> int:
         except (OSError, ValueError) as e:
             print(f"error: --langid-model: {e}", file=sys.stderr)
             return 2
+    classifier_model = None
+    if "classifier" in opts:
+        from fingerprint_spark.operators.quality_classifier import (
+            quality_model_from_json,
+        )
+
+        try:
+            with open(opts["classifier"]) as fh:
+                classifier_model = quality_model_from_json(fh.read())
+        except (OSError, ValueError) as e:
+            print(f"error: --classifier: {e}", file=sys.stderr)
+            return 2
     from fingerprint_spark.pipeline import DEFAULT_LANGID_THRESHOLD
 
     langid_threshold = float(
@@ -566,19 +578,14 @@ def _curate_mode(argv: list[str]) -> int:
             quality_score_arrow,
         )
 
-        with open(opts["classifier"]) as fh:
-            model = json.load(fh)
-        model["weights"] = {
-            int(i): float(v) for i, v in model["weights"].items()
-        }
         thr = float(opts.get("classifier_threshold", "0.5"))
         # the Arrow kernel (per-batch word memo + numpy fold) is ~3x
         # the Column fold's throughput at dim=4096 — the right default
         # for the corpus pass; parity with the Column path is pinned
         # at 1e-9 by test_quality_classifier
         scored = quality_score_arrow(
-            df.select(key_col, text_col), model, text_col=text_col,
-            hasher=model.get("hasher", "xxhash"),
+            df.select(key_col, text_col), classifier_model,
+            text_col=text_col, hasher=classifier_model["hasher"],
         )
         out = out.join(scored.select(key_col, "quality_prob"), key_col)
         keep = keep & (F.col("quality_prob") >= F.lit(thr))

@@ -108,6 +108,32 @@ def test_xlsx_grid_roundtrip_matches_decode(spark):
     b = {tuple(r) for r in q_xlsx_decode(spark, SF_DIR).collect()}
     assert a == b and len(a) > 0
 
+    # bad input (ADVICE r06 #2): corrupt bytes and a workbook with no
+    # Data sheet decode the same through the fused UDF and its twin.
+    # Pinned values are the twin's: size(NULL) is NULL under ANSI, so
+    # n_rows is NULL, not -1
+    from fingerprint_spark.queries.rules import _decode_grid_fused_col
+    from fingerprint_spark.sources.xlsx import make_xlsx
+
+    bad = spark.createDataFrame(
+        [
+            (-1, b"PK\x03\x04 corrupt zip"),
+            (-2, make_xlsx({"Other": [["id", "source"], ["1", "x"]]})),
+        ],
+        "doc_id long, xlsx binary",
+    )
+    twin = {tuple(r) for r in _decode_grid_projection(bad).collect()}
+    fused = {
+        tuple(r)
+        for r in bad.select(
+            "doc_id", _decode_grid_fused_col(F.col("xlsx")).alias("g")
+        ).select("doc_id", "g.*").collect()
+    }
+    assert fused == twin == {
+        (-1, None, None, None, None),
+        (-2, 0, None, None, None),
+    }, (fused, twin)
+
 
 def test_xlsx_decode_rebuilds_uncommitted_cache(spark, tmp_path):
     """A byte cache left without _SUCCESS (a build killed mid-write) is
@@ -159,16 +185,24 @@ def test_xlsx_decode_rebuilds_uncommitted_cache(spark, tmp_path):
 def test_winnow_sketches_parity_on_adversarial_docs(spark, tmp_path):
     """Review findings r4: sub-k-char docs must not drop out of the
     winnow oracle (LEFT JOIN), and Unicode whitespace (NBSP) must not
-    diverge the Python-UDF contract path from the Column/oracle paths
-    (ASCII-\\s tokenization everywhere)."""
+    split words in the Arrow kernels when no engine's \\s does
+    (ASCII-\\s tokenization everywhere). Every emitted column, the
+    `_u` ones included, is compared against DuckDB. VT is left out on
+    purpose: it is outside the oracle contract (hashing.
+    _ascii_ws_normalize)."""
     import duckdb
 
     docs = [
         (0, "short", "s0", "en"),                       # < k=8 chars
-        (1, "alpha beta gamma delta words here now", "s0", "en"),
+        (1, "alpha\u00a0beta gamma delta words here now", "s0", "en"),
         (2, "", "s1", "en"),                            # empty
         (3, "a perfectly ordinary document with words", "s1", "en"),
         (4, None, "s1", "en"),                          # NULL text (ADVICE r4)
+        (5, "nbsp\u00a0joined words\u00a0stay one\u00a0word here", "s0", "en"),
+        (6, "tab\t\r\x0cruns \t\r\x0c collapse\r\rto one space", "s1", "en"),
+        (7, " \t\r\x0c\n  ", "s1", "en"),                # whitespace only
+        (8, "onlyoneword", "s0", "en"),                 # one word < k=3
+        (9, "Two  Words", "s0", "en"),                  # two words < k=3
     ]
     d = str(tmp_path / "documents.parquet")
     spark.createDataFrame(
@@ -186,17 +220,22 @@ def test_winnow_sketches_parity_on_adversarial_docs(spark, tmp_path):
         res = con.execute(entry_mod.oracle_sql()[name])
         duck_cols = [c[0] for c in res.description]
         duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows) == 5, name
+        assert len(spark_rows) == len(duck_rows) == len(docs), name
         a = _rowset(spark_rows, sdf.columns)
         b = _rowset(duck_rows, duck_cols)
         assert a == b, (name, a, b)
-        # Column path == UDF path per row (the _u columns)
-        for r in sdf.collect():
-            base = [c for c in sdf.columns if not c.endswith("_u")
-                    and c != "doc_id"]
-            for c in base:
-                assert r[c] == r[c + "_u"], (name, r["doc_id"], c)
     con.close()
+
+
+def test_md5_signal_queries_run_one_kernel(spark):
+    """q_sketches and q_winnow each run ONE production path: exactly
+    one ArrowEvalPython node (the md5 kernel) and no JVM md5
+    expression, so a second Column path cannot come back unnoticed."""
+    for name in ("sketches", "winnow"):
+        df = entry_mod.queries()[name](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
+        assert "md5(" not in plan, (name, plan)
 
 
 def test_driver_query_budget_pinned():

@@ -227,3 +227,46 @@ def test_xxh64_randomized_cross_check(spark):
     got = {r["i"]: r["h"] for r in rows}
     for i, c in enumerate(cases):
         assert xxh64_signed(c.encode("utf-8")) == got[i], (i, repr(c[:20]))
+
+
+def test_quality_model_validation_refusals():
+    """A model file is validated where it is read: out-of-range weight
+    keys (a negative key would silently write the dense vector's tail
+    via Python negative indexing), dim <= 0, missing keys and an unknown
+    hasher all raise ValueError — never corrupt silently or traceback
+    deep inside inference."""
+    import json
+
+    from fingerprint_spark.operators.quality_classifier import (
+        _model_dense,
+        quality_model_from_json,
+    )
+
+    base = {"weights": {"0": 0.5, "7": -1.0}, "bias": 0.1, "dim": 8,
+            "hasher": "md5"}
+    m = quality_model_from_json(json.dumps(base))
+    assert m == {"weights": {0: 0.5, 7: -1.0}, "bias": 0.1, "dim": 8,
+                 "hasher": "md5"}
+    # hasher defaults to xxhash, the train-classifier default
+    no_hasher = {k: v for k, v in base.items() if k != "hasher"}
+    assert quality_model_from_json(json.dumps(no_hasher))["hasher"] == (
+        "xxhash")
+    bad = [
+        ({**base, "weights": {"-1": 1.0}}, "out of range"),
+        ({**base, "weights": {"8": 1.0}}, "out of range"),
+        ({**base, "dim": 0, "weights": {}}, "dim must be"),
+        ({**base, "hasher": "sha1"}, "hasher"),
+        ({k: v for k, v in base.items() if k != "dim"}, "malformed"),
+        ({k: v for k, v in base.items() if k != "bias"}, "malformed"),
+        ({k: v for k, v in base.items() if k != "weights"}, "malformed"),
+        ({**base, "weights": [1.0, 2.0]}, "malformed"),
+    ]
+    for model, msg in bad:
+        with pytest.raises(ValueError, match=msg):
+            quality_model_from_json(json.dumps(model))
+    with pytest.raises(ValueError, match="malformed"):
+        quality_model_from_json("[1, 2]")
+    with pytest.raises(ValueError, match="out of range"):
+        _model_dense({"weights": {-1: 1.0}, "bias": 0.0, "dim": 8})
+    with pytest.raises(ValueError, match="out of range"):
+        _model_dense({"weights": {8: 1.0}, "bias": 0.0, "dim": 8})

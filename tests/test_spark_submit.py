@@ -621,6 +621,26 @@ def test_train_classifier_cli_closes_the_loop(spark, tmp_path, capsys):
     assert rp._train_classifier_mode(
         ["train-classifier", labeled, "--output", model_path,
          "--text-col", "nope"]) == 2
+    # a malformed or out-of-range model file: one error line and exit
+    # 2, never a traceback or a run on silently corrupted weights
+    bad_models = {
+        "neg_index": {**model, "weights": {"-1": 1.0}},
+        "index_ge_dim": {**model, "weights": {"1024": 1.0}},
+        "no_dim": {k: v for k, v in model.items() if k != "dim"},
+        "bad_hasher": {**model, "hasher": "sha1"},
+        "not_object": [1, 2],
+    }
+    for name, bad in bad_models.items():
+        bad_path = str(tmp_path / f"{name}.json")
+        with open(bad_path, "w") as f:
+            json.dump(bad, f)
+        capsys.readouterr()
+        assert rp._curate_mode(
+            ["curate", corpus, "--output", str(tmp_path / f"o_{name}"),
+             "--classifier", bad_path]) == 2, name
+        err = capsys.readouterr().err.strip().splitlines()
+        assert len(err) == 1 and err[0].startswith(
+            "error: --classifier:"), (name, err)
 
 
 def test_frontier_cli_build_merge_probe_cycle(spark, tmp_path, capsys,
