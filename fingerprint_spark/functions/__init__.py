@@ -1,8 +1,9 @@
 """Column-expression and vectorized-UDF function library.
 
 Everything here is either a pure Catalyst Column expression (JVM-side,
-whole-stage-codegen'd — the default) or an Arrow-batched pandas UDF (the
-explicitly-marked slow path: simhash, perplexity). Per BASELINE.json
+whole-stage-codegen'd — the default) or an Arrow-batched pandas UDF
+(simhash, perplexity, the marker-word langid kernel, which the flagship
+chain runs in its one enrich pass). Per BASELINE.json
 input_hint, no per-row Python UDF exists anywhere in this package.
 """
 

@@ -53,17 +53,26 @@ def _rotl64(x: "np.ndarray", r: int) -> "np.ndarray":
 def _word_hashes64(words: list[str]) -> "np.ndarray":
     """blake2b-64 per UNIQUE word, mapped back to positions. Zipf means
     unique words ≪ word count, so the C-hash call count drops ~2-5x vs
-    hashing every k-shingle string."""
-    uniq, inv = np.unique(np.array(words, dtype=object), return_inverse=True)
+    hashing every k-shingle string.
+
+    The unique words are indexed in first-seen order by a dict (one
+    hash lookup per word), not by sorting an object array: np.unique
+    compares Python strings, which cost ~7x the dict on a 500-doc
+    batch. The word -> hash mapping is the same either way."""
+    index: dict[str, int] = {}
+    slot = index.setdefault
+    inv = np.fromiter(
+        (slot(w, len(index)) for w in words), dtype=np.intp, count=len(words)
+    )
     blake2b = hashlib.blake2b
     wh = np.fromiter(
         (
             int.from_bytes(
                 blake2b(w.encode("utf-8"), digest_size=8).digest(), "little"
             )
-            for w in uniq
+            for w in index
         ),
-        dtype=np.uint64, count=len(uniq),
+        dtype=np.uint64, count=len(index),
     )
     return wh[inv]
 

@@ -77,9 +77,14 @@ def parse_markdown_col(md: Column) -> Column:
 # parsed struct between them. At cluster scale that doubles Python worker
 # memory and Arrow serialization; measured locally it dominated cold-start
 # wall time. The enrich UDF computes every Python-side signal (structural
-# parse, char-ngram perplexity, simhash) in one Arrow batch pass.
+# parse, char-ngram perplexity, simhash) in one Arrow batch pass, and
+# also the marker-word language ID: the batch already holds the text, so
+# scoring it here (marker_langid_batch, ~0.1 ms/doc) costs less than the
+# four JVM regex passes of the Column scorer, which took about half as
+# long as the whole enrich pass.
 
 def enrich_type():
+    from ..functions.langid import LID_TYPE
     from ..parse.schema import PARSED_TYPE
 
     return T.StructType(
@@ -87,6 +92,7 @@ def enrich_type():
             T.StructField("parsed", PARSED_TYPE),
             T.StructField("ppl", T.DoubleType()),
             T.StructField("simhash", T.LongType()),
+            T.StructField("lid", LID_TYPE),
         ]
     )
 
@@ -94,33 +100,40 @@ def enrich_type():
 @context_cached(maxsize=4)
 def _enrich_udf(model, simhash_k: int):
     from ..functions.hashing import simhash64_batch_py
+    from ..functions.langid import marker_langid_batch
     from ..functions.perplexity import score_text_fast_fn
 
     # bit-identical fast twins (r6): the LUT+cumsum ppl scorer and the
     # batch-word-hashed simhash produce the same floats/ints as
     # score_text/simhash64_py (pinned by test_r06_optimizations) at
-    # ~3x the per-doc Python speed
+    # ~3x the per-doc Python speed; marker_langid_batch equals the
+    # Column scorer langid_best (pinned by test_langid_kernel)
     score = score_text_fast_fn(model)
 
     @F.pandas_udf(enrich_type())
     def udf(html: pd.Series) -> pd.DataFrame:
         # column-wise construction: ~30% less pandas overhead than
         # list-of-dicts rows for nested-struct outputs
-        parsed_col, ppl_col, texts = [], [], []
-        for h in html:
-            parsed = parse_html(_to_str(h))
-            text = parsed["normalized"] or ""
-            parsed_col.append(parsed)
-            texts.append(text)
-            ppl_col.append(score(text))
-        sim_col = simhash64_batch_py(texts, simhash_k)
+        parsed_col = [parse_html(_to_str(h)) for h in html]
+        normalized = [p["normalized"] for p in parsed_col]
+        texts = [t or "" for t in normalized]
         return pd.DataFrame(
-            {"parsed": parsed_col, "ppl": ppl_col, "simhash": sim_col}
+            {
+                "parsed": parsed_col,
+                "ppl": [score(t) for t in texts],
+                "simhash": simhash64_batch_py(texts, simhash_k),
+                # NULL text scores (und, NULL), as langid_best does
+                "lid": [
+                    {"lang": lang, "score": s}
+                    for lang, s in marker_langid_batch(normalized)
+                ],
+            }
         )
 
     return udf
 
 
 def enrich_col(html: Column, model, simhash_k: int = 3) -> Column:
-    """html -> struct(parsed, ppl, simhash) in one vectorized pass."""
+    """html -> struct(parsed, ppl, simhash, lid) in one vectorized pass;
+    lid is the marker-word language ID of parsed.normalized."""
     return _enrich_udf(model, simhash_k)(html)

@@ -9,10 +9,13 @@
 
 Execution shape (the 100 TB design):
 
-- ONE vectorized parse UDF per document (the only expensive Python in
-  the default chain), then pure Column expressions — the whole chain is
-  narrow transformations, so the plan is scan -> project -> write with
-  ZERO shuffles. Throughput scales linearly with executors because no
+- ONE vectorized enrich UDF per document, the only Python in the
+  default chain: it parses the html and scores perplexity, simhash and
+  the marker-word language ID in one Arrow pass, since it already holds
+  the text. The template match, Gopher rules, scrub and verdict that
+  follow are Column expressions. The whole chain is narrow
+  transformations, so the plan is scan -> project -> write with ZERO
+  shuffles. Throughput scales linearly with executors because no
   stage exchanges data. Opting into a TRAINED language model
   (langid_model) adds a second ArrowEvalPython stage — still narrow,
   still zero shuffles.
@@ -128,11 +131,12 @@ _STAGES = ContextCache(maxsize=8)
 _HELPER_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
 
 
-def _marker_langid(text_col: str) -> tuple[dict, dict]:
-    """The default language-ID stage (marker-word Column scorer) as two
-    levels: the ``_lid`` struct, then lang_detected + lang_score."""
+def _marker_langid(lid: Column) -> tuple[dict, dict]:
+    """The default language-ID stage (a marker-word struct<lang, score>)
+    as two levels: the ``_lid`` struct, then lang_detected +
+    lang_score."""
     return (
-        {"_lid": langid_best(F.col(text_col))},
+        {"_lid": lid},
         {"lang_detected": F.col("_lid.lang"), "lang_score": F.col("_lid.score")},
     )
 
@@ -149,6 +153,11 @@ def _trained_langid(
     Arrow-batched kernel (langid_classify_arrow, measured 46x the
     zero-Python Column fold langid_classify, which tests keep as its
     parity anchor).
+
+    In quality_filter the enrich pass still scores the marker-word
+    language ID, and the trained stage discards it: about 0.11 ms of
+    Python per document (0.06 s per 500-doc task), paid rather than
+    keeping a second enrich variant.
 
     langid_threshold is the trained tier's UNKNOWN-language gate (the
     marker tier's MIN_SCORE analog; CCNet gates fastText lid at prob
@@ -251,7 +260,7 @@ def _html_levels(
     same as one built with a withColumn per column."""
     text = F.col("extracted_text")
     fold, kids, routing = match_levels(rules, _match_env(ts=True))
-    lid, lang = _marker_langid("extracted_text")
+    lid, lang = _marker_langid(F.col("_enriched.lid"))
     keep, reason = _verdict(
         F.col("fingerprint"),
         F.struct(F.col("lang_detected").alias("lang"), F.col("lang_score").alias("score")),
@@ -266,9 +275,9 @@ def _html_levels(
     parse_err = F.col("parsed.parse_error")
     return (
         # stage 0: ONE Python pass per document — structural parse +
-        # perplexity + simhash in a single Arrow-batched UDF (separate
-        # chained UDFs would double the Python worker pool and
-        # re-serialize the parsed struct)
+        # perplexity + simhash + marker-word language ID in a single
+        # Arrow-batched UDF (separate chained UDFs would double the
+        # Python worker pool and re-serialize the parsed struct)
         {"_enriched": enrich_col(F.col(html_col), model)},
         # (stage 3, perplexity, is computed in the enrich pass)
         {
@@ -280,8 +289,9 @@ def _html_levels(
         # analog), then the children, then their routing
         {"extracted_text": F.col("parsed.normalized"), **fold},
         kids,
-        # stage 2: language ID — marker-word Column exprs by default, or
-        # the trained softmax when a model is supplied (_apply_levels)
+        # stage 2: language ID — the enrich pass's marker-word struct by
+        # default, or the trained softmax when a model is supplied
+        # (_apply_levels)
         {**routing, **lid},
         # stage 4: heuristics (pure Column exprs), stats then flags;
         # stage 5: scrub (regexp_replace chain + counters)
@@ -365,7 +375,7 @@ def _text_levels(
     """quality_filter_text's stages as projection levels (see
     _html_levels); ``ppl_model`` None leaves the perplexity stage out."""
     text = F.col(text_col)
-    lid, lang = _marker_langid(text_col)
+    lid, lang = _marker_langid(langid_best(text))
     heur_fail = _heuristic_failure(F.col("flags"))
     # ONE reason chain with the ppl link conditionally inserted —
     # building two whole chains duplicated the langid/heuristic

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.langid import TOKEN_SPLIT_RE, langid_best
+from ..functions.langid import TOKEN_SPLIT_RE, marker_langid_col
 from ..functions.scrub import PII_PATTERNS, scrub_counts, scrub_text
 from ..functions.textstats import (
     GOPHER_FLAGS,
@@ -60,7 +60,8 @@ def _lid_model() -> dict:
 
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID stage (SURVEY §7 step 6): BOTH tiers in one row —
-    the marker-word Column scorer (langid_best) and the TRAINED
+    the marker-word scorer (marker_langid_col, the kernel the flagship
+    chain runs in its enrich pass) and the TRAINED
     fastText-shaped softmax (operators/langid_classifier) under the
     hard oracle signal. The trained tier classifies a 256-char prefix
     (pre-truncated at the query level so both engines compose
@@ -71,7 +72,8 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles (the perplexity row's fixed-point contract). The micro
     kernel is Arrow-batched to keep the headline row fast (a Column
     fold's interpreted md5 gram hashing costs ~1 ms/doc) and is pinned
-    against the double-path Column fold by pytest. Reference analog:
+    against the double-path Column fold by pytest. Spark evaluates the
+    two Arrow UDFs in one ArrowEvalPython node. Reference analog:
     the langid gate in the keep/drop fold (src/pipeline/enricher.rs)."""
     from ..operators.langid_classifier import langid_classify_micro_arrow
 
@@ -84,7 +86,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.select(
         "doc_id",
-        langid_best(F.col("text"))["lang"].alias("lang_detected"),
+        marker_langid_col(F.col("text"))["lang"].alias("lang_detected"),
         F.col("__lid.lang").alias("lang_trained"),
         F.round(F.col("__lid.prob"), 6).alias("prob_trained"),
     )

@@ -76,6 +76,26 @@ def test_optimized_plans_match_fixtures(spark, tmp_path):
         assert plan == _fixture(name), name
 
 
+def test_quality_filter_langid_rides_the_enrich_pass(spark):
+    """The flagship chain scores marker-word language ID inside its
+    enrich Arrow pass: the executed plan has exactly one ArrowEvalPython
+    node and none of langid_best's marker-regex splits, which the text
+    chain (the pure-Column surface the oracle checks) still runs."""
+    from fingerprint_spark.functions.langid import LANGS, marker_pattern
+
+    df = generate_corpus(spark, 8, partitions=1)
+
+    def executed(out) -> str:
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    plan = executed(quality_filter(df))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    text_plan = executed(quality_filter_text(df))
+    for lang in LANGS:
+        assert marker_pattern(lang) not in plan, lang
+        assert marker_pattern(lang) in text_plan, lang
+
+
 def test_warm_build_py4j_budget(spark):
     df = generate_corpus(spark, 8, partitions=1)
     quality_filter(df)  # warm: the stage Columns are memoized here

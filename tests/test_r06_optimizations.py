@@ -281,6 +281,42 @@ def test_simhash_batch_bit_identical(spark, sf_dir):
     )
 
 
+# adversarial batches for the shingle kernel: words repeated across
+# docs, an empty doc, docs shorter than k, non-ASCII words (incl. case
+# mappings that change length), and batches of one
+SHINGLE_BATCHES = [
+    [
+        "the cat sat on the mat", "the cat sat", "", "on",
+        "the mat the mat the cat", "Straße café naïve the cat sat",
+        "Ελληνικά 日本語 İstanbul ǅemal", "x y", None, "the cat sat on",
+    ],
+    ["one lone document in its batch"],
+    ["two"],
+    [""],
+]
+
+
+def test_shingle_kernel_matches_per_doc_reference():
+    """shingle_hashes_batch equals _shingle_hashes64 for every document
+    of an adversarial batch and every k, so the batch-wide unique-word
+    index never lets one document's words change another's hashes."""
+    import numpy as np
+
+    from fingerprint_spark.functions.hashing import (
+        _shingle_hashes64,
+        shingle_hashes_batch,
+    )
+
+    for texts in SHINGLE_BATCHES:
+        docs = [(t or "").lower().split() for t in texts]
+        for k in (1, 2, 3, 5):
+            got = shingle_hashes_batch(docs, k)
+            assert len(got) == len(texts)
+            for t, h in zip(texts, got):
+                assert h.dtype == np.uint64, (t, k)
+                assert h.tolist() == _shingle_hashes64(t, k).tolist(), (t, k)
+
+
 def test_fused_perplexity_matches_join_plan(spark):
     """_ppl_exact_udf's integer totals must be bit-identical to the
     former explode -> broadcast join -> groupBy formulation, and the
