@@ -32,7 +32,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 HEADLINE = [
     "html_pipeline",      # full chain incl. parse UDF (the flagship)
-    "pipeline_keep",      # pure-Column text chain
+    "pipeline_keep",      # text chain: langid kernel + Column stages
     "exact_dedup",
     "sketches",           # simhash + minhash UDFs
     "embedding_topk",

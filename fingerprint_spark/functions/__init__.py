@@ -8,7 +8,7 @@ input_hint, no per-row Python UDF exists anywhere in this package.
 """
 
 from .hashing import content_hash_col, minhash_signature_col
-from .langid import LANG_MARKERS, langid_best
+from .langid import LANG_MARKERS
 from .perplexity import NGramModel, perplexity_col, train_char_ngram
 from .scrub import PII_PATTERNS, scrub_counts, scrub_text
 from .textstats import (
@@ -21,7 +21,6 @@ __all__ = [
     "text_stats",
     "gopher_quality_flags",
     "GOPHER_STOPWORDS",
-    "langid_best",
     "LANG_MARKERS",
     "train_char_ngram",
     "NGramModel",

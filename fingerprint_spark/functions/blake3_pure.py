@@ -96,7 +96,7 @@ def _chunk_blocks(chunk: bytes):
         yield blk.ljust(_BLOCK_LEN, b"\x00"), len(blk)
 
 
-def _chunk_output(chunk: bytes, chunk_counter: int, is_only_chunk: bool):
+def _chunk_output(chunk: bytes, chunk_counter: int):
     """Compress a chunk; returns (cv_words, last_block_state) where the
     ROOT flag is deferred so the caller can finalize the root node."""
     blocks = list(_chunk_blocks(chunk))
@@ -122,13 +122,13 @@ def blake3(data: bytes) -> bytes:
     # leaf chunk CVs; the LAST node's final compression carries ROOT when
     # it is the root of the tree
     if len(chunks) == 1:
-        cv, (blk, counter, blen, flags) = _chunk_output(chunks[0], 0, True)
+        cv, (blk, counter, blen, flags) = _chunk_output(chunks[0], 0)
         out = _compress(cv, blk, counter, blen, flags | _ROOT)
         return struct.pack("<8I", *out)
 
     cvs = []
     for i, ch in enumerate(chunks):
-        cv, (blk, counter, blen, flags) = _chunk_output(ch, i, False)
+        cv, (blk, counter, blen, flags) = _chunk_output(ch, i)
         cvs.append(tuple(_compress(cv, blk, counter, blen, flags)))
 
     # binary tree of parent nodes (left-full tree per spec: combine pairs

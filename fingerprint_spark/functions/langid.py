@@ -8,18 +8,16 @@ reference twin:
 
 - ``marker_langid_batch``, the production kernel, scores a batch of
   texts in Python. The flagship ``quality_filter`` chain runs it inside
-  its enrich Arrow pass, which already holds the text, and ``q_langid``
-  maps it through ``marker_langid_col``. It reproduces Java's regex
-  ``\\b`` exactly (see ``_java_word_before``), so its counts equal the
-  Column form's, not merely resemble them.
-- ``langid_best``, the reference twin, is pure Column expressions.
-  Occurrence counting uses the split trick
-  ``size(split(lower(text), '\\b(w1|w2|...)\\b')) - 1``: one compiled
-  regex pass per language, whole-stage-codegen'd, no higher-order
-  lambdas (interpreted HOFs over token arrays were ~20x slower).
-  ``quality_filter_text`` keeps it: that chain is the pure-Column
-  surface whose every stage has an exact SQL analog, checked against
-  DuckDB through ``pipeline_keep`` and the other text queries.
+  its enrich Arrow pass, which already holds the text;
+  ``quality_filter_text`` (whose verdict the DuckDB oracle checks
+  through ``pipeline_keep`` and the other text queries) and
+  ``q_langid`` map it through ``marker_langid_col``. It reproduces
+  Java's regex ``\\b`` exactly (see ``_java_word_before``), so its
+  counts equal the Column form's, not merely resemble them.
+- ``langid_best``, the reference twin that only tests run, is pure
+  Column expressions: Spark's own evaluation of the split trick
+  ``size(split(lower(text), '\\b(w1|w2|...)\\b')) - 1`` per language,
+  the same counting ``sql_lang_score`` asks of DuckDB.
 
 The DuckDB oracle (``sql_lang_score``) counts with RE2, whose ``\\b``
 sees only ASCII word characters, while Java also counts a non-ASCII

@@ -109,9 +109,14 @@ def domain_reputation(
     aggregate keep-rate per domain, then feed the (tiny) domain table
     back as a broadcast to drop or downweight low-reputation domains on
     the next pass. keep_permille is (1000*keeps) div docs — exact integer
-    division on both engines, so the oracle comparison is exact; below_corpus_rate
-    compares against the corpus-wide permille (a broadcast single-row
-    cross join, not a collect)."""
+    division on both engines, so the oracle comparison is exact;
+    below_corpus_rate compares against the corpus-wide permille.
+
+    One aggregate over the domain table gathers its rows with the
+    corpus-wide sums, so the input plan, and any Python stage in it,
+    runs once (a cross join with a separate corpus aggregate reads the
+    input twice). That aggregate is one task over one row per domain:
+    the table this function exists to broadcast."""
     per_dom = df.groupBy(F.col(domain_col).alias("domain")).agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col(keep_col).cast("long")).alias("n_keep"),
@@ -119,21 +124,18 @@ def domain_reputation(
     # div, not floor(a/b): double division can mis-floor near-integer
     # quotients (and overflows 2^53 exactness at large counts) — the
     # oracle computes exact integer division, so must the engine
-    per_dom = per_dom.withColumn(
-        "keep_permille", F.expr("(1000 * n_keep) div n_docs")
-    )
-    overall = df.agg(
-        F.expr(
-            f"(1000 * sum(cast({keep_col} as bigint))) div count(*)"
-        ).alias("__corpus_permille")
-    )
     return (
-        per_dom.crossJoin(F.broadcast(overall))
+        per_dom.agg(
+            F.collect_list(F.struct("domain", "n_docs", "n_keep")).alias("_doms"),
+            F.expr("(1000 * sum(n_keep)) div sum(n_docs)").alias("_corpus"),
+        )
+        .select(F.inline("_doms"), "_corpus")
+        .withColumn("keep_permille", F.expr("(1000 * n_keep) div n_docs"))
         .withColumn(
             "below_corpus_rate",
-            (F.col("keep_permille") < F.col("__corpus_permille")).cast("int"),
+            (F.col("keep_permille") < F.col("_corpus")).cast("int"),
         )
-        .drop("__corpus_permille")
+        .drop("_corpus")
     )
 
 

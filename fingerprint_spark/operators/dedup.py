@@ -2,8 +2,9 @@
 
 Two tiers, each designed around what actually shuffles at 100 TB:
 
-- exact:     xxhash64 of canonical text -> groupBy hash. Only the
-             8-byte hash + key shuffle, never the text.
+- exact:     xxhash64 of canonical text -> min key per hash over a
+             window partitioned on the hash: one shuffle, one read of
+             the input.
 - minhash:   word-shingle MinHash signatures (pandas UDF, one pass) ->
              LSH banding -> bucket self-join -> signature-estimated
              Jaccard. Classic MMDS construction: a pair with
@@ -22,7 +23,7 @@ them as first-class operators per the round brief.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import canonical_text_col, minhash_signature_col
@@ -32,12 +33,16 @@ def dedup_exact(
     df: DataFrame, text_col: str = "text", key_col: str = "url"
 ) -> DataFrame:
     """Keep one doc per exact content hash (deterministic keeper = min
-    key). Two-phase: hash -> groupBy(hash).min(key) -> semi-join back.
-    Only (hash, key) pairs shuffle."""
-    h = F.xxhash64(canonical_text_col(F.col(text_col))).alias("_chash")
-    hashed = df.withColumn("_chash", h)
-    keepers = hashed.groupBy("_chash").agg(F.min(key_col).alias(key_col))
-    return hashed.join(keepers, ["_chash", key_col], "left_semi").drop("_chash")
+    key; a NULL key is never kept). The min rides a window partitioned
+    on the hash, so the input plan, and any Python stage in it, runs
+    once. A semi-join against a groupBy(hash).min(key) table reads the
+    input twice, and once that table outgrows a broadcast its join
+    shuffles the rows anyway."""
+    h = F.xxhash64(canonical_text_col(F.col(text_col)))
+    keeper = F.min(key_col).over(Window.partitionBy(h))
+    return df.withColumn("_keeper", keeper).filter(
+        F.col(key_col) == F.col("_keeper")
+    ).drop("_keeper")
 
 
 # ---------------------------------------------------------------------------

@@ -665,6 +665,12 @@ def langid_classify_arrow(
     stable softmax, argmax. np.argmax takes the FIRST maximum =
     smallest class index = the Column path's tie-break exactly. Same
     zero-shuffle plan shape: one ArrowEvalPython stage, no joins."""
+    return df.withColumn(out_col, _classify_arrow_udf(model)(F.col(text_col)))
+
+
+def _classify_arrow_udf(model: dict):
+    """langid_classify_arrow's pandas UDF: text -> struct<lang, prob>.
+    The quality chains' trained language-ID stage maps it too."""
     classes = list(model["classes"])
     L = len(classes)
     dim, n = int(model["dim"]), int(model.get("ngram", 3))
@@ -696,4 +702,4 @@ def langid_classify_arrow(
             out_prob[i] = p[c]
         return pd.DataFrame({"lang": out_lang, "prob": out_prob})
 
-    return df.withColumn(out_col, classify(F.col(text_col)))
+    return classify

@@ -19,6 +19,10 @@ Execution shape (the 100 TB design):
   stage exchanges data. Opting into a TRAINED language model
   (langid_model) adds a second ArrowEvalPython stage — still narrow,
   still zero shuffles.
+- quality_filter_text (no html) ends in the same tail, language ID ->
+  Gopher -> scrub -> verdict (_tail_levels, _drop_reason). Its one
+  Python stage maps the same marker-word kernel, and perplexity when a
+  ppl model is given, in one ArrowEvalPython node.
 - Template rules compile at the driver and ride the Catalyst plan as
   literals (broadcast versioned lookup structures). Re-validation against
   a new template version is an incremental pass over the same parsed
@@ -48,7 +52,6 @@ replaced by keying on url (SURVEY §1.7).
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -57,7 +60,7 @@ from . import __version__
 from .caching import ContextCache
 from .dsl.model import FingerprintDefinition
 from .dsl.registry import builtin_rules
-from .functions.langid import UNKNOWN_LANG, langid_best
+from .functions.langid import UNKNOWN_LANG, marker_langid_col
 from .functions.perplexity import (
     DEFAULT_PPL_THRESHOLD,
     NGramModel,
@@ -89,39 +92,59 @@ def default_ppl_model() -> NGramModel:
     return train_char_ngram(texts, order=3)
 
 
-def _heuristic_failure(flags: Column) -> Column:
-    """Name of the first failing Gopher flag in rule order, NULL when
-    every flag passes."""
-    return F.coalesce(
-        *[F.when(~flags[n], F.lit(n)) for n in GOPHER_FLAGS],
+def _drop_reason(
+    target_lang: str, ppl_threshold: float, template: bool, ppl: bool
+) -> Column:
+    """The first failing stage's drop_reason, NULL when every stage
+    passes (the stage-order analog of assertion declaration-order
+    short-circuit): template match (the html chain) -> langid ->
+    perplexity (when the chain scores it) -> the first failing Gopher
+    flag in rule order."""
+    lang = F.col("lang_detected")
+    heur_fail = F.coalesce(
+        *[F.when(~F.col("flags")[n], F.lit(n)) for n in GOPHER_FLAGS],
         F.lit(None).cast("string"),
     )
-
-
-def _verdict(
-    template: Column,
-    lang_best: Column,
-    ppl: Column,
-    flags: Column,
-    target_lang: str,
-    ppl_threshold: float,
-) -> tuple[Column, Column]:
-    """keep boolean + first-failing-stage drop_reason (the stage-order
-    analog of assertion declaration-order short-circuit)."""
-    heur_fail = _heuristic_failure(flags)
-    reason = (
-        F.when(
-            template["matched"],
-            F.concat(F.lit("template:"), template["fingerprint_id"]),
+    clauses = []
+    if template:
+        fp = F.col("fingerprint")
+        clauses.append(
+            (fp["matched"], F.concat(F.lit("template:"), fp["fingerprint_id"]))
         )
-        .when(
-            lang_best["lang"] != target_lang,
-            F.concat(F.lit("langid:"), lang_best["lang"]),
-        )
-        .when(ppl > ppl_threshold, F.lit("perplexity"))
-        .when(heur_fail.isNotNull(), F.concat(F.lit("heuristic:"), heur_fail))
+    clauses.append((lang != target_lang, F.concat(F.lit("langid:"), lang)))
+    if ppl:
+        clauses.append((F.col("ppl") > ppl_threshold, F.lit("perplexity")))
+    clauses.append(
+        (heur_fail.isNotNull(), F.concat(F.lit("heuristic:"), heur_fail))
     )
-    return reason.isNull(), reason
+    reason = F.when(*clauses[0])
+    for cond, val in clauses[1:]:
+        reason = reason.when(cond, val)
+    return reason
+
+
+def _tail_levels(
+    text: Column,
+    first: dict[str, Column],
+    reason: Column,
+) -> tuple[dict[str, Column], ...]:
+    """The quality tail both chains share, as projection levels:
+    ``first`` (the ``_lid`` struct<lang, score> plus the chain's
+    extras), then lang + stats, then flags + scrub, then the verdict."""
+    return (
+        first,
+        {
+            "lang_detected": F.col("_lid.lang"),
+            "lang_score": F.col("_lid.score"),
+            "stats": text_stats(text),
+        },
+        {
+            "flags": gopher_quality_flags(F.col("stats")),
+            "scrub": scrub_counts(text),
+            "scrubbed_text": scrub_text(text),
+        },
+        {"keep": reason.isNull(), "drop_reason": reason},
+    )
 
 
 DEFAULT_LANGID_THRESHOLD = 0.5  # CCNet's fastText-prob gate
@@ -131,28 +154,17 @@ _STAGES = ContextCache(maxsize=8)
 _HELPER_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
 
 
-def _marker_langid(lid: Column) -> tuple[dict, dict]:
-    """The default language-ID stage (a marker-word struct<lang, score>)
-    as two levels: the ``_lid`` struct, then lang_detected +
-    lang_score."""
-    return (
-        {"_lid": lid},
-        {"lang_detected": F.col("_lid.lang"), "lang_score": F.col("_lid.score")},
-    )
-
-
 def _trained_langid(
-    text_col: str,
+    text: Column,
     langid_model: dict | None,
     langid_threshold: float,
-) -> tuple[Callable[[DataFrame], DataFrame], dict] | None:
-    """The opt-in trained language-ID stage, None without a model:
-    (frame -> frame with the ``_lid`` struct, the lang_detected +
-    lang_score level). It is built per call: the model is a dict and
-    the classifier transforms the frame. The classifier is the
-    Arrow-batched kernel (langid_classify_arrow, measured 46x the
-    zero-Python Column fold langid_classify, which tests keep as its
-    parity anchor).
+) -> dict[str, Column]:
+    """The opt-in trained language-ID stage as Column overrides of the
+    ``_lid`` struct and the lang_detected + lang_score level; none
+    without a model. It is built per call (the model is a dict). The
+    classifier is the Arrow-batched kernel (langid_classify_arrow,
+    measured 46x the zero-Python Column fold langid_classify, which
+    tests keep as its parity anchor).
 
     In quality_filter the enrich pass still scores the marker-word
     language ID, and the trained stage discards it: about 0.11 ms of
@@ -167,44 +179,29 @@ def _trained_langid(
     'und' (and drop as langid:und downstream), with lang_score still
     carrying the rejected argmax probability for auditability."""
     if langid_model is None:
-        return None
-    from .operators.langid_classifier import langid_classify_arrow
+        return {}
+    from .operators.langid_classifier import _classify_arrow_udf
 
-    lang = {
+    return {
+        "_lid": _classify_arrow_udf(langid_model)(text),
         "lang_detected": F.when(
             F.col("_lid.prob") >= F.lit(float(langid_threshold)),
             F.col("_lid.lang"),
         ).otherwise(F.lit(UNKNOWN_LANG)),
         "lang_score": F.col("_lid.prob"),
     }
-    return (
-        lambda df: langid_classify_arrow(
-            df, langid_model, text_col=text_col, out_col="_lid"
-        ),
-        lang,
-    )
 
 
 def _apply_levels(
     df: DataFrame,
     levels: tuple[dict, ...],
-    trained: tuple[Callable[[DataFrame], DataFrame], dict] | None,
+    override: dict[str, Column],
 ) -> DataFrame:
     """One ``withColumns`` per dependency level, then drop the helper
-    columns. A trained language-ID stage (_trained_langid) replaces the
-    level's ``_lid`` Column with its classifier and the marker scorer's
-    lang Columns with its own (same names, same positions)."""
-    classify, lang = trained or (None, None)
+    columns. ``override`` (_trained_langid) swaps the Columns of the
+    names it holds, in place."""
     for level in levels:
-        if classify is not None and "_lid" in level:
-            rest = {k: v for k, v in level.items() if k != "_lid"}
-            if rest:
-                df = df.withColumns(rest)
-            df = classify(df)
-            continue
-        if lang is not None and "lang_detected" in level:
-            level = {**level, **lang}
-        df = df.withColumns(level)
+        df = df.withColumns({k: override.get(k, v) for k, v in level.items()})
     return df.drop(*_HELPER_COLS)
 
 
@@ -243,7 +240,7 @@ def quality_filter(
         lambda: _html_levels(rules, model, target_lang, ppl_threshold, html_col),
     )
     return _apply_levels(df, levels, _trained_langid(
-        "extracted_text", langid_model, langid_threshold
+        F.col("extracted_text"), langid_model, langid_threshold
     ))
 
 
@@ -258,16 +255,15 @@ def _html_levels(
     columns of earlier levels, and each level is the Project the
     optimizer settles on for the chain, so the optimized plan is the
     same as one built with a withColumn per column."""
-    text = F.col("extracted_text")
     fold, kids, routing = match_levels(rules, _match_env(ts=True))
-    lid, lang = _marker_langid(F.col("_enriched.lid"))
-    keep, reason = _verdict(
-        F.col("fingerprint"),
-        F.struct(F.col("lang_detected").alias("lang"), F.col("lang_score").alias("score")),
-        F.col("ppl"),
-        F.col("flags"),
-        target_lang,
-        ppl_threshold,
+    # stage 2: language ID — the enrich pass's marker-word struct by
+    # default, or the trained softmax when a model is supplied
+    # (_trained_langid); stage 4: heuristics (pure Column exprs), stats
+    # then flags; stage 5: scrub (regexp_replace chain + counters)
+    *tail, verdict = _tail_levels(
+        F.col("extracted_text"),
+        {**routing, "_lid": F.col("_enriched.lid")},
+        _drop_reason(target_lang, ppl_threshold, template=True, ppl=True),
     )
     # lifecycle: parse failures are skips with warnings, never task
     # failures (enricher.rs:145-159 E_PARSE); skipped docs drop with an
@@ -286,27 +282,17 @@ def _html_levels(
             "simhash": F.col("_enriched.simhash"),
         },
         # stage 1: template match (broadcast fold, enricher.rs:201-268
-        # analog), then the children, then their routing
+        # analog), then the children, then their routing (with _lid)
         {"extracted_text": F.col("parsed.normalized"), **fold},
         kids,
-        # stage 2: language ID — the enrich pass's marker-word struct by
-        # default, or the trained softmax when a model is supplied
-        # (_apply_levels)
-        {**routing, **lid},
-        # stage 4: heuristics (pure Column exprs), stats then flags;
-        # stage 5: scrub (regexp_replace chain + counters)
-        {**lang, "stats": text_stats(text)},
+        *tail,
         {
-            "flags": gopher_quality_flags(F.col("stats")),
-            "scrub": scrub_counts(text),
-            "scrubbed_text": scrub_text(text),
-        },
-        # verdict
-        {
-            "keep": F.when(parse_err.isNotNull(), F.lit(False)).otherwise(keep),
+            "keep": F.when(parse_err.isNotNull(), F.lit(False)).otherwise(
+                verdict["keep"]
+            ),
             "drop_reason": F.when(
                 parse_err.isNotNull(), F.lit("skip:E_PARSE")
-            ).otherwise(reason),
+            ).otherwise(verdict["drop_reason"]),
             "warnings": F.filter(
                 F.array(F.when(parse_err.isNotNull(), F.lit("E_PARSE"))),
                 lambda w: w.isNotNull(),
@@ -330,39 +316,40 @@ def _match_env(ts: bool) -> dict[str, Column]:
 def quality_filter_text(
     df: DataFrame,
     text_col: str = "text",
-    url_col: str = "url",
     target_lang: str = "en",
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
-    with_ppl: bool = False,
     ppl_model: NGramModel | None = None,
     langid_model: dict | None = None,
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
-    """Text-only variant (no html parse): langid -> heuristics -> scrub.
+    """Text-only variant (no html parse): langid -> heuristics -> scrub,
+    the same quality tail as quality_filter.
 
-    Every stage here is a pure Column expression with an exact ANSI-SQL
-    analog — this is the oracle-checkable surface used by the driver's
-    DuckDB comparison. ``with_ppl`` adds the (non-SQL) perplexity stage.
-    ``langid_model`` swaps the marker-word scorer for a TRAINED
+    Language ID is the marker-word kernel (marker_langid_col, one
+    Arrow-batched UDF); the Gopher rules, scrub and verdict are Column
+    expressions. Its keep/drop_reason is the oracle-checkable surface of
+    the driver's DuckDB comparison (pipeline_keep and the other text
+    queries). ``ppl_model`` adds the (non-SQL) perplexity stage, scored
+    in the same ArrowEvalPython node as the langid kernel; None leaves
+    it out. ``langid_model`` swaps the marker-word scorer for a TRAINED
     fastText-shaped softmax (operators/langid_classifier, the
     train-langid CLI output) — zero-shuffle either way; lang_score then
     carries the softmax probability of the predicted class rather than
-    the marker-token fraction. The trained scorer runs as one
-    ArrowEvalPython stage (langid_classify_arrow: 60.6k vs the Column
-    fold's 1.3k docs/s at dim=2048/L=4). Its probabilities agree with
-    the Column fold to 1e-9 (pinned by test_langid_classifier); an
-    EXACT margin tie between two classes could in principle resolve
-    differently (float sum-order ulp) — the fixed-point micro kernels
-    are the bit-exact contract where that matters (the oracle row).
+    the marker-token fraction. The trained scorer is the Arrow kernel
+    of langid_classify_arrow (60.6k vs the Column fold's 1.3k docs/s at
+    dim=2048/L=4). Its probabilities agree with the Column fold to 1e-9
+    (pinned by test_langid_classifier); an EXACT margin tie between two
+    classes could in principle resolve differently (float sum-order
+    ulp) — the fixed-point micro kernels are the bit-exact contract
+    where that matters (the oracle row).
     """
-    model = (ppl_model or default_ppl_model()) if with_ppl else None
     levels = _STAGES.get(
         ("quality_filter_text", text_col, target_lang, ppl_threshold,
-         type(ppl_threshold), model, __version__),
-        lambda: _text_levels(text_col, target_lang, ppl_threshold, model),
+         type(ppl_threshold), ppl_model, __version__),
+        lambda: _text_levels(text_col, target_lang, ppl_threshold, ppl_model),
     )
     return _apply_levels(df, levels, _trained_langid(
-        text_col, langid_model, langid_threshold
+        F.col(text_col), langid_model, langid_threshold
     ))
 
 
@@ -375,37 +362,12 @@ def _text_levels(
     """quality_filter_text's stages as projection levels (see
     _html_levels); ``ppl_model`` None leaves the perplexity stage out."""
     text = F.col(text_col)
-    lid, lang = _marker_langid(langid_best(text))
-    heur_fail = _heuristic_failure(F.col("flags"))
-    # ONE reason chain with the ppl link conditionally inserted —
-    # building two whole chains duplicated the langid/heuristic
-    # clauses (review finding r5c)
-    clauses = [
-        (
-            F.col("lang_detected") != target_lang,
-            F.concat(F.lit("langid:"), F.col("lang_detected")),
-        ),
-    ]
-    scored = {
-        "flags": gopher_quality_flags(F.col("stats")),
-        "scrub": scrub_counts(text),
-        "scrubbed_text": scrub_text(text),
-    }
+    first = {"_lid": marker_langid_col(text)}
     if ppl_model is not None:
-        scored["ppl"] = perplexity_col(text, ppl_model)
-        clauses.append((F.col("ppl") > ppl_threshold, F.lit("perplexity")))
-    clauses.append(
-        (heur_fail.isNotNull(), F.concat(F.lit("heuristic:"), heur_fail))
-    )
-    reason = F.when(*clauses[0])
-    for cond, val in clauses[1:]:
-        reason = reason.when(cond, val)
-    return (
-        lid,
-        {**lang, "stats": text_stats(text)},
-        scored,
-        {"keep": reason.isNull(), "drop_reason": reason},
-    )
+        first["ppl"] = perplexity_col(text, ppl_model)
+    return _tail_levels(text, first, _drop_reason(
+        target_lang, ppl_threshold, template=False, ppl=ppl_model is not None
+    ))
 
 
 def revalidate(

@@ -256,10 +256,7 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(100) * (F.substring("source", 4, 10).cast("int") % 8)
     ).cast("bigint")
     base = (
-        quality_filter_text(
-            docs.withColumnRenamed("doc_id", "url"), "text", "url"
-        )
-        .withColumnRenamed("url", "doc_id")
+        quality_filter_text(docs, "text")
         .select(
             "doc_id",
             F.col("keep").cast("int").alias("keep_quality"),

@@ -339,7 +339,7 @@ def q_pipeline_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import quality_filter_text
 
     df = _fan_out(_doc(spark, sf_dir)).withColumnRenamed("doc_id", "url")
-    kept = quality_filter_text(df, text_col="text", url_col="url").filter(
+    kept = quality_filter_text(df, text_col="text").filter(
         F.col("keep")
     )
     surv = dedup_exact(kept, text_col="text", key_col="url")

@@ -182,7 +182,7 @@ def q_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import quality_filter_text
 
     df = _fan_out(_doc(spark, sf_dir)).withColumnRenamed("doc_id", "url")
-    out = quality_filter_text(df, text_col="text", url_col="url")
+    out = quality_filter_text(df, text_col="text")
     return out.select(
         F.col("url").alias("doc_id"),
         F.col("keep").cast("int").alias("keep"),

@@ -502,20 +502,23 @@ def _curate_mode(argv: list[str]) -> int:
         except (OSError, ValueError) as e:
             print(f"error: --classifier: {e}", file=sys.stderr)
             return 2
-    from fingerprint_spark.pipeline import DEFAULT_LANGID_THRESHOLD
+    from fingerprint_spark.pipeline import (
+        DEFAULT_LANGID_THRESHOLD,
+        DEFAULT_PPL_THRESHOLD,
+    )
 
     langid_threshold = float(
         opts.get("langid_threshold", str(DEFAULT_LANGID_THRESHOLD))
+    )
+    ppl_threshold = float(
+        opts.get("ppl_threshold", str(DEFAULT_PPL_THRESHOLD))
     )
     ppl_model = None
     if "ppl_model" in opts:
         # opt-in trained perplexity gate: the model file comes from
         # `train-lm` (distributed n-gram counting); the threshold
         # folds into keep/drop_reason inside the quality chain
-        from fingerprint_spark.functions.perplexity import (
-            DEFAULT_PPL_THRESHOLD,
-            model_from_json,
-        )
+        from fingerprint_spark.functions.perplexity import model_from_json
 
         try:
             with open(opts["ppl_model"]) as fh:
@@ -526,21 +529,13 @@ def _curate_mode(argv: list[str]) -> int:
             # (a list, logp as a list, ...) must stay a clean error
             print(f"error: --ppl-model: {e}", file=sys.stderr)
             return 2
-        quality = quality_filter_text(
-            df, text_col=text_col, url_col=key_col, with_ppl=True,
-            ppl_model=ppl_model,
-            ppl_threshold=float(
-                opts.get("ppl_threshold", str(DEFAULT_PPL_THRESHOLD))
-            ),
-            langid_model=langid_model,
-            langid_threshold=langid_threshold,
-        )
-    else:
-        quality = quality_filter_text(
-            df, text_col=text_col, url_col=key_col,
-            langid_model=langid_model,
-            langid_threshold=langid_threshold,
-        )
+    quality = quality_filter_text(
+        df, text_col=text_col,
+        ppl_threshold=ppl_threshold,
+        ppl_model=ppl_model,
+        langid_model=langid_model,
+        langid_threshold=langid_threshold,
+    )
     base = quality.select(
         key_col,
         F.col("keep").cast("int").alias("keep_quality"),

@@ -2,7 +2,8 @@
 against its pinned reference twin, the Column scorer langid_best.
 
 The kernel is what production runs: the enrich Arrow pass of
-quality_filter and q_langid's lang_detected. langid_best is Spark's own
+quality_filter, quality_filter_text's language-ID stage and q_langid's
+lang_detected. langid_best is Spark's own
 split/regex evaluation, so exact equality here means the kernel
 reproduces Java's \\b, lower() and split(trim(text), '\\s+') — on the
 corpus and on the word-boundary edges where Java and Python (or RE2)
@@ -20,6 +21,7 @@ from fingerprint_spark.functions.langid import (
     marker_langid_batch,
     marker_langid_col,
 )
+from fingerprint_spark.pipeline import quality_filter_text
 from test_oracle_parity import SF_DIR
 
 ADVERSARIAL = [
@@ -66,10 +68,12 @@ def test_marker_kernel_matches_langid_best(spark):
     df = spark.createDataFrame(
         list(enumerate(texts)), "i long, text string"
     ).repartition(3)  # several docs per Arrow batch
-    rows = df.select(
+    rows = quality_filter_text(df).select(
         "i",
         langid_best(F.col("text")).alias("ref"),
         marker_langid_col(F.col("text")).alias("udf"),
+        "lang_detected",
+        "lang_score",
     ).collect()
     assert len(rows) == len(texts)
     kernel = marker_langid_batch(texts)
@@ -78,6 +82,7 @@ def test_marker_kernel_matches_langid_best(spark):
         ref = (r["ref"]["lang"], r["ref"]["score"])
         assert kernel[r["i"]] == ref, repr(t)
         assert (r["udf"]["lang"], r["udf"]["score"]) == ref, repr(t)
+        assert (r["lang_detected"], r["lang_score"]) == ref, repr(t)
     # the edge cases above do reach both sides of the predicates
     langs = {k[0] for k in kernel[: len(ADVERSARIAL)]}
     assert {"en", "de", "es", "und"} <= langs

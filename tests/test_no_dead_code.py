@@ -14,6 +14,10 @@ so a helper that only dead code calls is dead too.
 References are matched by name: a ``Name``, an attribute name, a name a
 function body imports, or a string constant that is one identifier.
 
+A second check covers parameters: every parameter of a package function
+(methods and nested functions included) must be read by its body, save
+the commented allowlist ``UNREAD_PARAMS``.
+
 Run ``python tests/test_no_dead_code.py`` to print the dead definitions
 with their line counts.
 """
@@ -46,6 +50,7 @@ REFERENCE_TWINS = (
     "sketch_md5_py",  # _sketch_md5_batch, the portable md5 sketch
     "_near_match",  # text_near, the Column form of the TextNear assertion
     "_decode_grid_projection",  # q_xlsx_decode's fused decode UDF
+    "langid_best",  # marker_langid_batch, by Spark's own split/regex count
 )
 
 # Reference capabilities SURVEY.md cites that no CLI mode exposes yet,
@@ -73,6 +78,13 @@ LIBRARY_API = (
     "write_bucketed",  # bucketed layout (sources/bucketed.py); test_sources
     "colocated_join",  # shuffle-free join on that layout; test_sources
 )
+
+# Parameters a signature must keep although the body never reads them,
+# as (function, parameter).
+UNREAD_PARAMS = {
+    ("handle_starttag", "attrs"),  # HTMLParser calls it with (tag, attrs)
+    ("release_tracked", "spark"),  # the benchmark harnesses pass the session
+}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -200,8 +212,43 @@ def test_reference_twins_are_called_by_tests():
     assert not unused, f"reference twins no test calls: {unused}"
 
 
+def unread_parameters() -> list[tuple[str, str, str]]:
+    """(module path, function, parameter) of every parameter (``self``
+    and ``cls`` aside) whose function body never reads it."""
+    found = []
+    for path in _py_files([PACKAGE]):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            read = {
+                n.id
+                for stmt in node.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name)
+            }
+            found += [
+                (str(path.relative_to(ROOT)), node.name, p)
+                for p in params
+                if p not in read and p not in ("self", "cls")
+            ]
+    return sorted(found)
+
+
+def test_package_functions_read_every_parameter():
+    found = unread_parameters()
+    unread = [f for f in found if f[1:] not in UNREAD_PARAMS]
+    assert not unread, f"parameters their function never reads: {unread}"
+    stale = UNREAD_PARAMS - {f[1:] for f in found}
+    assert not stale, f"allowlisted parameters that are read now: {stale}"
+
+
 if __name__ == "__main__":
     rows = dead_definitions()
     for p, n, k in rows:
         print(f"{p}:{n}\t{k}")
     print(f"{len(rows)} dead definitions, {sum(k for *_, k in rows)} lines")
+    for p, f, a in unread_parameters():
+        print(f"{p}:{f}({a}) unread")

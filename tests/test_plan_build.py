@@ -25,7 +25,7 @@ import sys
 from fingerprint_spark.corpus import generate_corpus
 from fingerprint_spark.dsl.registry import builtin_rules
 from fingerprint_spark.pipeline import (
-    quality_filter, quality_filter_text, revalidate,
+    default_ppl_model, quality_filter, quality_filter_text, revalidate,
 )
 
 PLAN_DIR = os.path.join(os.path.dirname(__file__), "fixtures", "plans")
@@ -60,7 +60,9 @@ def plans(spark, work_dir: str) -> dict[str, str]:
     df, stored = tiny_frames(spark, work_dir)
     return {
         "quality_filter": optimized_plan(quality_filter(df)),
-        "quality_filter_text": optimized_plan(quality_filter_text(df, with_ppl=True)),
+        "quality_filter_text": optimized_plan(
+            quality_filter_text(df, ppl_model=default_ppl_model())
+        ),
         "revalidate": optimized_plan(revalidate(stored, builtin_rules())),
     }
 
@@ -77,10 +79,11 @@ def test_optimized_plans_match_fixtures(spark, tmp_path):
 
 
 def test_quality_filter_langid_rides_the_enrich_pass(spark):
-    """The flagship chain scores marker-word language ID inside its
-    enrich Arrow pass: the executed plan has exactly one ArrowEvalPython
-    node and none of langid_best's marker-regex splits, which the text
-    chain (the pure-Column surface the oracle checks) still runs."""
+    """Both chains score marker-word language ID with the kernel in one
+    Arrow pass: the flagship chain inside its enrich UDF, the text chain
+    in one ArrowEvalPython node that also scores perplexity when a ppl
+    model is given. No executed plan runs langid_best's marker-regex
+    splits."""
     from fingerprint_spark.functions.langid import LANGS, marker_pattern
 
     df = generate_corpus(spark, 8, partitions=1)
@@ -88,12 +91,15 @@ def test_quality_filter_langid_rides_the_enrich_pass(spark):
     def executed(out) -> str:
         return out._jdf.queryExecution().executedPlan().toString()
 
-    plan = executed(quality_filter(df))
-    assert plan.count("ArrowEvalPython") == 1, plan
-    text_plan = executed(quality_filter_text(df))
-    for lang in LANGS:
-        assert marker_pattern(lang) not in plan, lang
-        assert marker_pattern(lang) in text_plan, lang
+    for out in (
+        quality_filter(df),
+        quality_filter_text(df),
+        quality_filter_text(df, ppl_model=default_ppl_model()),
+    ):
+        plan = executed(out)
+        assert plan.count("ArrowEvalPython") == 1, plan
+        for lang in LANGS:
+            assert marker_pattern(lang) not in plan, lang
 
 
 def test_warm_build_py4j_budget(spark):

@@ -216,7 +216,7 @@ def test_text_chain_perplexity_gate_matches_scorers(spark, sf_dir):
     df = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)], "url string, text string"
     )
-    rows = quality_filter_text(df, with_ppl=True).select(
+    rows = quality_filter_text(df, ppl_model=m).select(
         "url", "ppl", "lang_detected", "drop_reason"
     ).collect()
     assert len(rows) == len(texts)
