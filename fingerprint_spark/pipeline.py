@@ -155,7 +155,7 @@ _HELPER_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
 
 
 def _trained_langid(
-    text: Column,
+    text_col: str,
     langid_model: dict | None,
     langid_threshold: float,
 ) -> dict[str, Column]:
@@ -183,7 +183,7 @@ def _trained_langid(
     from .operators.langid_classifier import _classify_arrow_udf
 
     return {
-        "_lid": _classify_arrow_udf(langid_model)(text),
+        "_lid": _classify_arrow_udf(langid_model)(F.col(text_col)),
         "lang_detected": F.when(
             F.col("_lid.prob") >= F.lit(float(langid_threshold)),
             F.col("_lid.lang"),
@@ -240,7 +240,7 @@ def quality_filter(
         lambda: _html_levels(rules, model, target_lang, ppl_threshold, html_col),
     )
     return _apply_levels(df, levels, _trained_langid(
-        F.col("extracted_text"), langid_model, langid_threshold
+        "extracted_text", langid_model, langid_threshold
     ))
 
 
@@ -349,7 +349,7 @@ def quality_filter_text(
         lambda: _text_levels(text_col, target_lang, ppl_threshold, ppl_model),
     )
     return _apply_levels(df, levels, _trained_langid(
-        F.col(text_col), langid_model, langid_threshold
+        text_col, langid_model, langid_threshold
     ))
 
 

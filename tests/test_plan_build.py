@@ -17,6 +17,7 @@ Regenerate the fixtures (only when a plan change is intended) with
 root.
 """
 
+import gc
 import os
 import re
 import subprocess
@@ -113,11 +114,16 @@ def test_warm_build_py4j_budget(spark):
         calls[0] += 1
         return orig(*args, **kwargs)
 
+    # a JavaObject's finalizer is a py4j call too: collect what earlier
+    # tests left before counting, and let no collection run while counting
+    gc.collect()
+    gc.disable()
     client.send_command = counting
     try:
         quality_filter(df)
     finally:
         del client.send_command  # back to the class method
+        gc.enable()
     assert 0 < calls[0] <= PY4J_BUDGET, calls[0]
 
 
