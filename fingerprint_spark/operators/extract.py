@@ -50,17 +50,19 @@ def extract_section(parsed: Column, heading_pattern: str) -> Column:
 def extract_table(
     parsed: Column, heading_pattern: str, index: int = 0
 ) -> Column:
-    """{start_line, end_line, columns, row_count} of the k-th table whose
-    heading_ref matches the heading regex (extract.rs:122-159; the
-    reference matches heading_ref EQUAL to the matched heading text — here
-    the regex is applied to heading_ref directly, same selectivity on the
-    corpus shapes)."""
-    t = F.try_element_at(
+    """{start_line, end_line, columns, row_count} of the ``index``-th table
+    whose heading_ref EQUALS the first section heading the regex matches
+    (extract.rs:122-159); null when no heading matches or that heading has
+    fewer tables."""
+    heading = F.try_element_at(
         F.filter(
-            parsed["tables"],
-            lambda t: t["heading_ref"].isNotNull()
-            & t["heading_ref"].rlike(heading_pattern),
+            parsed["sections"],
+            lambda s: s["heading"].isNotNull() & s["heading"].rlike(heading_pattern),
         ),
+        F.lit(1),
+    )["heading"]
+    t = F.try_element_at(
+        F.filter(parsed["tables"], lambda t: t["heading_ref"] == heading),
         F.lit(index + 1),
     )
     return F.when(
@@ -165,7 +167,7 @@ def compile_extract(e: ExtractSection, env: dict[str, Column]) -> Column:
 
 
 def content_hash_for_rule(
-    d: FingerprintDefinition, json_extracts: dict[str, Column], matched: Column
+    d: FingerprintDefinition, json_extracts: dict[str, Column]
 ) -> Column:
     """Canonical hash over extracts in ``over`` order (or sorted names if
     empty — content_hash.rs:24-31); missing extracts are presence-tagged
@@ -178,6 +180,4 @@ def content_hash_for_rule(
         return F.lit(None).cast("string")
     names = list(ch.over) if ch.over else sorted(e.name for e in d.extract)
     cols = [json_extracts[n] for n in names]
-    return F.when(
-        matched, content_hash_col(*cols, algo=ch.algo, names=tuple(names))
-    )
+    return content_hash_col(*cols, algo=ch.algo, names=tuple(names))

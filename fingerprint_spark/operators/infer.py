@@ -286,118 +286,3 @@ def infer_rule(
     d = parse_definition(yaml.safe_load(text), source="inferred")
     return d, text
 
-
-# ---------------------------------------------------------------------------
-# schema-driven infer (reference src/infer/schema_infer.rs:27-248):
-# fields -> locate values -> nearest anchor heading -> text_near(400)
-# assertions + text_match extracts + content_hash
-# ---------------------------------------------------------------------------
-
-import re as _re
-
-
-def _generalize_value(value: str) -> str:
-    """Example value -> regex: digit runs -> \\d+, rest escaped
-    (schema_infer value-pattern generalization)."""
-    parts = _re.split(r"(\d+)", value)
-    out = []
-    for p in parts:
-        if not p:
-            continue
-        out.append(r"\d+" if p.isdigit() else _re.escape(p))
-    return "".join(out) or _re.escape(value)
-
-
-def locate_field(parsed_df: DataFrame, value: str, key_col: str = "url") -> DataFrame:
-    """(key, line, anchor_heading) where the value first occurs; anchor =
-    nearest heading at or above the occurrence line (schema_infer
-    nearest-anchor-above)."""
-    p = F.col("parsed")
-    pos = F.instr(p["normalized"], value)
-    line = F.size(F.split(F.substring(p["normalized"], 1, pos), "\n"))
-    above = F.filter(
-        p["headings"], lambda h: h["line"] <= line
-    )
-    anchor = F.try_element_at(
-        F.transform(above, lambda h: h["text"]), F.lit(-1)
-    )
-    return (
-        parsed_df.filter(pos > 0)
-        .select(
-            F.col(key_col).alias("key"),
-            line.alias("line"),
-            anchor.alias("anchor_heading"),
-        )
-    )
-
-
-def infer_schema_rule(
-    parsed_df: DataFrame,
-    fields: dict[str, str],
-    fingerprint_id: str,
-    format_: str = "html",
-    min_confidence: float = 0.8,
-    within_chars: int = 400,
-    key_col: str = "url",
-) -> tuple[FingerprintDefinition, str, dict]:
-    """fields {name -> example value} -> anchored rule + extracts.
-
-    For each field: locate the value corpus-wide, take the majority
-    anchor heading, emit a ``text_near`` assertion (anchor regex, value
-    pattern, within 400 chars — schema_infer.rs emission) and a
-    ``text_match`` extract; content_hash covers all field extracts.
-    Returns (definition, yaml_text, per-field report)."""
-    total = parsed_df.count()
-    report: dict[str, dict] = {}
-    assertions, extracts = [], []
-    for name in sorted(fields):
-        value = fields[name]
-        loc = locate_field(parsed_df, value, key_col)
-        found = loc.count()
-        support = found / max(total, 1)
-        anchors = (
-            loc.filter(F.col("anchor_heading").isNotNull())
-            .groupBy("anchor_heading").count()
-            .orderBy(F.desc("count"), F.asc("anchor_heading"))
-            .limit(1).collect()
-        )
-        report[name] = {
-            "support": round(support, 4),
-            "anchor": anchors[0]["anchor_heading"] if anchors else None,
-        }
-        if support < min_confidence or not anchors:
-            continue
-        anchor_pat = _re.escape(anchors[0]["anchor_heading"])
-        value_pat = _generalize_value(value)
-        assertions.append(
-            {
-                "name": f"near_{name}",
-                "text_near": {
-                    "anchor": anchor_pat,
-                    "value": value_pat,
-                    "within_chars": within_chars,
-                },
-            }
-        )
-        extracts.append(
-            {
-                "name": name,
-                "text_match": {
-                    "anchor": anchor_pat,
-                    "value": value_pat,
-                    "within_chars": within_chars,
-                },
-            }
-        )
-    if not assertions:
-        raise ValueError("no field reached min_confidence with an anchor")
-    data = {
-        "fingerprint_id": fingerprint_id,
-        "format": format_,
-        "assertions": assertions,
-        "extract": extracts,
-        "content_hash": {"algo": "md5", "over": sorted(e["name"] for e in extracts)},
-    }
-    text = yaml.safe_dump(data, sort_keys=True, allow_unicode=True)
-    d = parse_definition(yaml.safe_load(text), source="inferred-schema")
-    return d, text, report

@@ -3,7 +3,8 @@
 Reference: src/pipeline/enricher.rs:201-268 (root fold, spec
 docs/PLAN.md:635-636), :401-453 (children evaluated independently after a
 root match), :434-450 (routing summary selected/no_child_match/ambiguous),
-src/lib.rs:1043-1058 (ambiguous => partial outcome).
+src/lib.rs:1043-1058 (ambiguous => partial outcome); the winner's
+anchor extraction + content hash, enricher.rs:241-257,470-499.
 
 Spark expression: ``coalesce(when(m1, r1), when(m2, r2), ..., last)`` — a
 deterministic priority fold over broadcast rules, NOT a shuffle join.
@@ -13,11 +14,12 @@ order, preserved exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..dsl.compiler import compile_rule
 from ..dsl.model import FingerprintDefinition
+from .extract import compile_extract, content_hash_for_rule
 
 
 def first_match_fold(
@@ -81,115 +83,64 @@ def match_levels(
     rules: list[FingerprintDefinition],
     env: dict[str, Column],
     result_col: str = "fingerprint",
-) -> tuple[dict[str, Column], dict[str, Column], dict[str, Column]]:
-    """The match pass as its three dependency levels: the root fold,
-    the children (they read the fold's winner) and the routing summary
-    (it reads the children). Each level is one projection; the Columns
-    hold no DataFrame, so callers may build them once and reuse them."""
-    winner = _winner(result_col)
-    return (
+) -> tuple[dict[str, Column], ...]:
+    """The match pass as its dependency levels: the root fold, the
+    children (they read the fold's winner), the routing summary (it
+    reads the children) and, only when a rule declares ``extract``, the
+    winner's extraction (it reads the winner and the routing). Each
+    level is one projection; the Columns hold no DataFrame, so callers
+    may build them once and reuse them."""
+    winner = F.when(
+        F.col(f"{result_col}.matched"), F.col(f"{result_col}.fingerprint_id")
+    )
+    levels = (
         {result_col: first_match_fold(rules, env)},
         {"children": children_array(rules, env, winner)},
         {"child_routing": child_routing(F.col("children"))},
     )
+    if any(r.extract for r in rules):
+        levels += (_extract_level(rules, env, winner),)
+    return levels
 
 
-def _winner(result_col: str) -> Column:
-    return F.when(
-        F.col(f"{result_col}.matched"), F.col(f"{result_col}.fingerprint_id")
-    )
-
-
-def apply_match(
-    df: DataFrame,
-    rules: list[FingerprintDefinition],
-    env: dict[str, Column],
-    result_col: str = "fingerprint",
-    with_extracts: bool = False,
-) -> DataFrame:
-    """Full match pass: root fold + children + routing (+ extraction and
-    content hash for the winning rule), one projection per level."""
-    for level in match_levels(rules, env, result_col):
-        df = df.withColumns(level)
-    if with_extracts:
-        df = apply_extracts(df, rules, env, _winner(result_col))
-    return df
-
-
-def apply_extracts(
-    df: DataFrame,
+def _extract_level(
     rules: list[FingerprintDefinition],
     env: dict[str, Column],
     winner_id: Column,
-) -> DataFrame:
+) -> dict[str, Column]:
     """Winner-rule anchor extraction + content hash (extract.rs:14-29,
-    content_hash.rs:7-69). Per-rule extract schemas differ, so the unified
-    output is ``extracted: map<string, string>`` (extract name -> JSON of
-    the anchor struct) — zero-retention metadata, never content."""
-    from .extract import compile_extract, content_hash_for_rule
-
-    ex_branches, ch_branches = [], []
+    content_hash.rs:7-69, enricher.rs:241-257). Per-rule extract schemas
+    differ, so the unified output is ``extracted: map<string, string>``
+    (extract name -> JSON of the anchor struct) — zero-retention
+    metadata, never content. ``child_content_hash`` is the SELECTED
+    child's hash (enricher.rs:401-453: a matched child emits its
+    content_hash, unmatched children stay null)."""
+    ex_branches, ch_branches, kid_branches = [], [], []
     for r in rules:
-        if r.parent is not None or not r.extract:
+        if not r.extract or (r.parent is not None and r.content_hash is None):
+            continue
+        json_extracts = {
+            e.name: F.to_json(compile_extract(e, env)) for e in r.extract
+        }
+        digest = content_hash_for_rule(r, json_extracts)
+        if r.parent is not None:
+            is_selected = F.col("child_routing").isNotNull() & (
+                F.col("child_routing.selected_id") == F.lit(r.fingerprint_id)
+            )
+            kid_branches.append(F.when(is_selected, digest))
             continue
         is_winner = winner_id == F.lit(r.fingerprint_id)
-        json_extracts = {
-            e.name: F.to_json(compile_extract(e, env)) for e in r.extract
-        }
         entries = []
-        for e in r.extract:
-            entries.append(F.lit(e.name))
-            entries.append(json_extracts[e.name])
+        for name, col in json_extracts.items():
+            entries += [F.lit(name), col]
         ex_branches.append(F.when(is_winner, F.create_map(*entries)))
-        ch_branches.append(
-            F.when(is_winner, content_hash_for_rule(r, json_extracts, F.lit(True)))
-        )
-    if not ex_branches:
-        df = df.withColumn(
-            "extracted", F.lit(None).cast("map<string,string>")
-        )
-        df = df.withColumn("content_hash", F.lit(None).cast("string"))
-    else:
-        df = df.withColumn("extracted", F.coalesce(*ex_branches))
-        df = df.withColumn("content_hash", F.coalesce(*ch_branches))
-    # the SELECTED child's extract hash (enricher.rs:401-453: matched
-    # child emits content_hash, unmatched children stay null)
-    kid_branches = []
-    for r in rules:
-        if r.parent is None or not r.extract or r.content_hash is None:
-            continue
-        is_selected = F.col("child_routing").isNotNull() & (
-            F.col("child_routing.selected_id") == F.lit(r.fingerprint_id)
-        )
-        json_extracts = {
-            e.name: F.to_json(compile_extract(e, env)) for e in r.extract
-        }
-        kid_branches.append(
-            F.when(
-                is_selected, content_hash_for_rule(r, json_extracts, F.lit(True))
-            )
-        )
-    if kid_branches:
-        df = df.withColumn("child_content_hash", F.coalesce(*kid_branches))
-    else:
-        df = df.withColumn(
-            "child_content_hash", F.lit(None).cast("string")
-        )
-    return df
+        ch_branches.append(F.when(is_winner, digest))
 
+    def first(branches: list[Column], null_type: str) -> Column:
+        return F.coalesce(*branches) if branches else F.lit(None).cast(null_type)
 
-def outcome_fold(df: DataFrame, result_col: str = "fingerprint") -> str:
-    """Run outcome: OK unless any record is unmatched / skipped /
-    ambiguous => PARTIAL (src/lib.rs:1012-1058, cli/exit.rs:3-20).
-    Computed as one global aggregate, not a collect-loop."""
-    bad = df.select(
-        F.max(
-            F.when(
-                (~F.col(f"{result_col}.matched"))
-                | (F.col("child_routing").isNotNull()
-                   & (F.col("child_routing.status") != "selected")),
-                1,
-            ).otherwise(0)
-        ).alias("bad")
-    ).first()["bad"]
-    return "PARTIAL" if bad else "OK"
+    return {
+        "extracted": first(ex_branches, "map<string,string>"),
+        "content_hash": first(ch_branches, "string"),
+        "child_content_hash": first(kid_branches, "string"),
+    }

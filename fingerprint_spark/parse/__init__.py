@@ -1,4 +1,5 @@
-"""Vectorized parse stage: one Arrow-batched UDF per document format.
+"""Vectorized parse stage: the html structural parse as an Arrow-batched
+UDF, alone (parse_html_col) or fused with the text signals (enrich_col).
 
 The reference re-opens/re-parses the document for every assertion
 (e.g. xlsx re-open per cell access, src/document/xlsx.rs:25-45; regex
@@ -21,16 +22,12 @@ from pyspark.sql import types as T
 
 from ..caching import context_cached
 from .html_parser import parse_html
-from .markdown import normalize_markdown, parse_markdown
 from .schema import PARSED_TYPE
 
 __all__ = [
     "PARSED_TYPE",
     "parse_html",
-    "parse_markdown",
-    "normalize_markdown",
     "parse_html_col",
-    "parse_markdown_col",
 ]
 
 
@@ -51,22 +48,9 @@ def _parse_html_udf():
     return udf
 
 
-@context_cached(maxsize=1)
-def _parse_markdown_udf():
-    @F.pandas_udf(PARSED_TYPE)
-    def udf(md: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([parse_markdown(_to_str(m)) for m in md])
-
-    return udf
-
-
 def parse_html_col(html: Column) -> Column:
     """html (binary or string) -> parsed struct (schema.PARSED_TYPE)."""
     return _parse_html_udf()(html)
-
-
-def parse_markdown_col(md: Column) -> Column:
-    return _parse_markdown_udf()(md)
 
 
 # ---------------------------------------------------------------------------

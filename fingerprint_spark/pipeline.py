@@ -37,12 +37,12 @@ rebuilt per call. Each stage's Columns are built once and memoized in
 parameters that shape the expressions (rules, ppl model, target_lang,
 ppl_threshold, html_col / text_col, package version); Columns are
 unresolved expressions, so one tree serves every DataFrame (each
-checkpoint bucket, each streaming micro-batch, each revalidate). The
-stages are applied as ONE ``withColumns`` per dependency level — the
-levels are the Projects the optimizer settles on, so the optimized plan
-equals the per-column chain's (pinned by tests/fixtures/plans). The
-cache drops its entries when the SparkContext changes: a Column that
-calls a Python UDF carries the context the UDF was made under.
+checkpoint bucket, each revalidate). The stages are applied as ONE
+``withColumns`` per dependency level — the levels are the Projects the
+optimizer settles on, so the optimized plan equals the per-column
+chain's (pinned by tests/fixtures/plans). The cache drops its entries
+when the SparkContext changes: a Column that calls a Python UDF carries
+the context the UDF was made under.
 
 Reference analog: the run-mode lifecycle of src/lib.rs:739-834 —
 read -> enrich (rules) -> outcome fold -> ordered emit. Ordering is
@@ -219,7 +219,9 @@ def quality_filter(
 
     Returns the input columns plus: extracted_text, fingerprint (match
     struct), children, child_routing, lang_detected, lang_score, ppl,
-    stats, flags, scrub (counters), scrubbed_text, keep, drop_reason.
+    stats, flags, scrub (counters), scrubbed_text, keep, drop_reason;
+    and extracted, content_hash, child_content_hash when a rule
+    declares extract (operators.match.match_levels).
 
     ``langid_model`` swaps stage 2's marker-word scorer for the
     TRAINED fastText-shaped softmax (the curate --langid-model
@@ -255,7 +257,7 @@ def _html_levels(
     columns of earlier levels, and each level is the Project the
     optimizer settles on for the chain, so the optimized plan is the
     same as one built with a withColumn per column."""
-    fold, kids, routing = match_levels(rules, _match_env(ts=True))
+    fold, kids, routing, *extract = match_levels(rules, _match_env(ts=True))
     # stage 2: language ID — the enrich pass's marker-word struct by
     # default, or the trained softmax when a model is supplied
     # (_trained_langid); stage 4: heuristics (pure Column exprs), stats
@@ -302,6 +304,9 @@ def _html_levels(
                 F.lit("fingerprint_spark"), F.lit(__version__)
             ),
         },
+        # the winner's extraction + content hash, when a rule declares
+        # extract (match_levels)
+        *extract,
     )
 
 
@@ -379,10 +384,18 @@ def revalidate(
 
     Input: a frame that already carries the ``parsed`` struct (e.g. the
     stored output of a previous quality_filter run). Applying a NEW rule
-    version is a pure expression pass — no html parse, no Python stage,
-    no shuffle. The physical plan must contain no ArrowEvalPython node
-    (asserted in tests): at 100 TB this is the difference between
-    re-reading stored structs and re-parsing the crawl.
+    version is a pure expression pass — no html parse, no shuffle. The
+    physical plan of a rule set without extracts contains no
+    ArrowEvalPython node (asserted in tests): at 100 TB this is the
+    difference between re-reading stored structs and re-parsing the
+    crawl. A ``text_match`` extract is the one Python expression the
+    pass can carry: it is a pandas UDF over ``parsed.normalized``
+    (operators.extract), so a rule set that declares one adds an
+    Arrow stage, still with no re-parse.
+
+    Returns the input columns plus the match_levels columns: fingerprint
+    (or ``result_col``), children, child_routing, and extracted,
+    content_hash, child_content_hash when a rule declares extract.
     """
     rules = tuple(r for r in rules if r.format == "html")
     has_ts = "warc_ts" in parsed_df.columns

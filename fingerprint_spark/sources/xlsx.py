@@ -18,9 +18,10 @@ conversion) — the typing assertions treat them as numbers, same as the
 reference's raw-value path.
 
 Output shape = the engine's grid model: dict[sheet_name] ->
-list[list[str]] dense row-major grid ("" for absent cells), identical to
-what csv_text_to_sheets produces, so the whole spreadsheet assertion
-family runs unchanged on real xlsx bytes.
+list[list[str]] dense row-major grid ("" for absent cells); as a Column
+(sheets_from_xlsx_col) it is ``map<string, array<array<string>>>``, the
+column the whole spreadsheet assertion family (operators/assertions.py)
+evaluates against.
 
 ``make_xlsx`` (the fixture writer used in tests) emits a minimal valid
 workbook with inline strings and a byte-deterministic zip (fixed

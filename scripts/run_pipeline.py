@@ -50,6 +50,11 @@ OUTPUT_SCHEMA = {
             },
         },
         "child_routing": {"type": ["object", "null"]},
+        # present when the rules declare extract: the winner's anchors
+        # (name -> JSON), its content hash and the selected child's
+        "extracted": {"type": ["object", "null"]},
+        "content_hash": {"type": ["string", "null"]},
+        "child_content_hash": {"type": ["string", "null"]},
         "warnings": {"type": "array", "items": {"type": "string"}},
         "tool_versions": {"type": "object"},
     },
@@ -95,11 +100,11 @@ def _display_surfaces(argv: list[str]) -> int | None:
             "version": __version__,
             "schema_version": "spark-operator.v0",
             "capabilities": {
-                "formats": ["html", "markdown", "text", "csv", "xlsx", "pdf"],
+                "formats": ["html", "text"],
                 "modes": ["run", "resume", "revalidate", "diagnose", "compile", "infer", "witness", "curate", "train-classifier", "train-lm", "train-langid", "frontier"],
             },
             "pipeline": [
-                "parse", "template_match", "langid", "perplexity",
+                "parse", "template_match", "extract", "langid", "perplexity",
                 "heuristics", "scrub", "verdict", "checkpoint",
             ],
             "exit_codes": {"0": "OK", "1": "PARTIAL", "2": "refusal/usage"},
@@ -1164,6 +1169,11 @@ def main() -> int:
             "choose a fresh --output"
         )
 
+    def extract_cols(out):
+        # the winner's extraction, present when the rules declare it
+        names = ("extracted", "content_hash", "child_content_hash")
+        return [c for c in names if c in out.columns]
+
     def stage(part):
         if args.revalidate:
             from fingerprint_spark.pipeline import revalidate
@@ -1172,6 +1182,7 @@ def main() -> int:
             keep = ["url", "fingerprint", "children", "child_routing"]
             if "warc_ts" in part.columns:
                 keep.insert(1, "warc_ts")
+            keep += extract_cols(out)
             if args.keep_parsed:
                 keep.append("parsed")
             return out.select(*keep)
@@ -1189,6 +1200,7 @@ def main() -> int:
             "url", "warc_ts", "keep", "drop_reason", "scrubbed_text",
             "lang_detected", "lang_score", "ppl", "simhash", "scrub",
             "fingerprint", "child_routing", "warnings", "tool_versions",
+            *extract_cols(out),
         ]
         if args.keep_parsed:
             cols.append("parsed")

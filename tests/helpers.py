@@ -1,7 +1,7 @@
 """Test-only fixture writers and output checkers.
 
 Nothing in the package calls these: they build real input bytes for the
-format readers (``make_xls``, ``make_pdf``), write the day-partitioned
+format readers (``make_xls``), write the day-partitioned
 corpus the CLI reads (``write_corpus_partitioned``) and audit what a sink
 wrote (``verify_shards``).
 """
@@ -284,48 +284,6 @@ def make_xls(
     difat = [0] + [_FREESECT] * 108
     struct.pack_into("<109I", header, 76, *difat)
     return bytes(header) + b"".join(sectors)
-
-
-# ---------------------------------------------------------------------------
-# .pdf: minimal valid documents for sources/pdf.py
-# ---------------------------------------------------------------------------
-
-
-def make_pdf(n_pages: int, info: dict[str, str] | None = None) -> bytes:
-    """Minimal valid PDF fixture writer (deterministic bytes): catalog,
-    pages tree, n_pages empty pages, optional Info dict + trailer."""
-    objs: list[bytes] = []
-    kids = " ".join(f"{3 + i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    )
-    for _ in range(n_pages):
-        objs.append(b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>")
-    info_num = None
-    if info:
-        pairs = " ".join(
-            f"/{k} ({v.replace(chr(92), chr(92)*2).replace('(', chr(92)+'(').replace(')', chr(92)+')')})"
-            for k, v in sorted(info.items())
-        )
-        objs.append(f"<< {pairs} >>".encode())
-        info_num = len(objs)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    trailer = f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R"
-    if info_num:
-        trailer += f" /Info {info_num} 0 R"
-    trailer += f" >>\nstartxref\n{xref_at}\n%%EOF\n"
-    out += trailer.encode()
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

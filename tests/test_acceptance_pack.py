@@ -18,8 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.registry import Registry
-from fingerprint_spark.operators.match import apply_match, outcome_fold
 from fingerprint_spark.parse import parse_html_col
+from fingerprint_spark.pipeline import revalidate
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "html")
 RULES_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), "rules")
@@ -59,12 +59,11 @@ def registry():
     return Registry.load_dir(RULES_DIR)
 
 
-def _match_df(spark, rules, fixture_ids, with_extracts=False):
+def _match_df(spark, rules, fixture_ids):
     rows = [(fid, _fixture(fid)) for fid in fixture_ids]
     df = spark.createDataFrame(rows, ["url", "html"])
     df = df.withColumn("parsed", parse_html_col(F.col("html")))
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    return apply_match(df, rules, env, with_extracts=with_extracts)
+    return revalidate(df, rules)
 
 
 def test_pack_rules_parse_validate_and_register(registry):
@@ -92,7 +91,6 @@ def test_parent_matches_families_rejects_negatives(spark, registry):
         assert got[fid] is True, fid
     for fid in NEGATIVES:
         assert got[fid] is False, fid
-    assert outcome_fold(_match_df(spark, rules, [f for f, _ in FAMILY_CASES])) == "OK"
 
 
 def test_family_matrix_routes_unique_children_with_hashes(spark, registry):
@@ -102,9 +100,7 @@ def test_family_matrix_routes_unique_children_with_hashes(spark, registry):
     unmatched siblings stay null, and the five hashes are pairwise
     distinct."""
     rules = registry.resolve(PACK_IDS)
-    out = _match_df(
-        spark, rules, [f for f, _ in FAMILY_CASES], with_extracts=True
-    ).collect()
+    out = _match_df(spark, rules, [f for f, _ in FAMILY_CASES]).collect()
     by_url = {r["url"]: r for r in out}
     hashes = {}
     for fid, child_id in FAMILY_CASES:
@@ -121,8 +117,6 @@ def test_family_matrix_routes_unique_children_with_hashes(spark, registry):
         ), fid
         hashes[fid] = r["child_content_hash"]
     assert len(set(hashes.values())) == len(hashes), hashes
-    df = _match_df(spark, rules, [f for f, _ in FAMILY_CASES])
-    assert outcome_fold(df) == "OK"
 
 
 def test_diagnose_mismatch_keeps_sibling_payloads(spark, registry):
@@ -135,7 +129,6 @@ def test_diagnose_mismatch_keeps_sibling_payloads(spark, registry):
     assert r["child_routing"]["status"] == "no_child_match"
     assert len(r["children"]) == 4
     assert all(not c["matched"] for c in r["children"])
-    assert outcome_fold(_match_df(spark, rules, ["soi_alder_like"])) == "PARTIAL"
 
 
 def test_hash_pair_triplets(spark, registry):
@@ -145,7 +138,7 @@ def test_hash_pair_triplets(spark, registry):
     between base and markup variant."""
     rules = registry.resolve(["maint-log.v1"])
     ids = ["hash_pair_base", "hash_pair_markup_variant", "hash_pair_value_change"]
-    out = _match_df(spark, rules, ids, with_extracts=True)
+    out = _match_df(spark, rules, ids)
     rows = {
         r["url"]: r
         for r in out.select(

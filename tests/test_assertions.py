@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.compiler import compile_assertion
 from fingerprint_spark.dsl.model import make_assertion
-from fingerprint_spark.parse import parse_html_col, parse_markdown_col
+from fingerprint_spark.parse import parse_html_col
 
 HTML = """<html><body>
 <section data-page-number="1">
@@ -182,32 +182,3 @@ CASES = [
 def test_assertion(doc, type_, params, expected):
     assert _eval(doc, type_, params) is expected
 
-
-def test_markdown_parse_assertions(spark):
-    md = """Title Line
-==========
-
-**Bold As Heading**
-
-content under bold heading here
-
-| Region | Amount |
-|--------|--------|
-| north  | 100    |
-| south  | 200    |
-"""
-    df = spark.createDataFrame([("u", md)], ["url", "md"]).withColumn(
-        "parsed", parse_markdown_col(F.col("md"))
-    )
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-
-    def ev(t, p):
-        return df.select(
-            compile_assertion(make_assertion(t, "t", p), env).alias("r")
-        ).first()["r"]
-
-    assert ev("heading_level", {"level": 1, "pattern": "Title Line"}) is True
-    # **bold** line promoted to H2 (markdown.rs:111-135)
-    assert ev("heading_level", {"level": 2, "pattern": "Bold As Heading"}) is True
-    assert ev("table_min_rows", {"min_rows": 2}) is True
-    assert ev("table_columns", {"patterns": ["Region", "Amount"]}) is True

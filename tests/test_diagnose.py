@@ -6,6 +6,7 @@ from fingerprint_spark.dsl.parser import parse_yaml
 from fingerprint_spark.dsl.registry import Registry
 from fingerprint_spark.operators.diagnose import diagnose_rule
 from fingerprint_spark.parse import parse_html_col
+from fingerprint_spark.pipeline import revalidate
 
 HTML = """<html><body>
 <h1>Quarterly Repord</h1>
@@ -53,10 +54,7 @@ def test_shipped_rules_load_and_run(spark):
     df = spark.createDataFrame([("u", html)], ["url", "html"]).withColumn(
         "parsed", parse_html_col(F.col("html"))
     )
-    from fingerprint_spark.operators.match import apply_match
-
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    out = apply_match(df, [d], env, with_extracts=True).first()
+    out = revalidate(df, [d]).first()
     assert out["fingerprint"]["matched"] is True
     assert out["content_hash"] is not None
 

@@ -43,10 +43,9 @@ def test_text_regex_boundary_conditions(spark, text_doc):
 def test_missing_cell_is_not_empty_string(spark):
     """cell_eq against an out-of-grid cell is FALSE even for an expected
     empty string (missing != empty, edge_cases.rs:171-213)."""
-    from fingerprint_spark.sources.grid import csv_text_to_sheets
-
-    df = spark.createDataFrame([("Tenant,SF\nAcme,1200",)], ["text"]).select(
-        csv_text_to_sheets(F.col("text"), F.lit("sample")).alias("sheets")
+    df = spark.createDataFrame(
+        [({"Sheet1": [["Tenant", "SF"], ["Acme", "1200"]]},)],
+        "sheets map<string, array<array<string>>>",
     )
     env = {"sheets": F.col("sheets")}
     assert _run(spark, df, env, "cell_eq",

@@ -6,8 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.parser import parse_yaml
-from fingerprint_spark.operators.match import apply_match
 from fingerprint_spark.parse import parse_html_col
+from fingerprint_spark.pipeline import revalidate
 
 RULE = """
 fingerprint_id: report.v1
@@ -61,9 +61,7 @@ def _run(spark, htmls):
         [(f"u{i}", h) for i, h in enumerate(htmls)], ["url", "html"]
     )
     df = df.withColumn("parsed", parse_html_col(F.col("html")))
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    rule = parse_yaml(RULE)
-    out = apply_match(df, [rule], env, with_extracts=True)
+    out = revalidate(df, [parse_yaml(RULE)])
     return {r["url"]: r for r in out.collect()}
 
 
@@ -107,6 +105,33 @@ def test_content_hash_changes_on_anchor_change(spark):
     )
     rows = _run(spark, [BASE, moved])
     assert rows["u0"]["content_hash"] != rows["u1"]["content_hash"]
+
+
+def test_table_extract_reads_tables_under_first_matching_heading(spark):
+    """extract.rs:122-159: the FIRST section heading the regex matches
+    picks the heading, then the index-th table whose heading_ref EQUALS
+    it. Both headings below match; the second table sits under the
+    second heading, so index 1 is null."""
+    from fingerprint_spark.operators.extract import extract_table
+
+    html = """<html><body><h1>Report</h1>
+<h2>Figures 2023</h2>
+<table><tr><th>Item</th></tr><tr><td>a</td></tr></table>
+<h2>Figures 2024</h2>
+<table><tr><th>Item</th><th>Value</th></tr><tr><td>b</td><td>1</td></tr>
+<tr><td>c</td><td>2</td></tr></table>
+</body></html>"""
+    df = spark.createDataFrame([(html,)], ["html"]).select(
+        parse_html_col(F.col("html")).alias("parsed")
+    )
+    r = df.select(
+        extract_table(F.col("parsed"), "^Figures", 0).alias("t0"),
+        extract_table(F.col("parsed"), "^Figures", 1).alias("t1"),
+        extract_table(F.col("parsed"), "2024$", 0).alias("t2024"),
+    ).first()
+    assert (r["t0"]["columns"], r["t0"]["row_count"]) == (1, 1)
+    assert r["t1"] is None
+    assert (r["t2024"]["columns"], r["t2024"]["row_count"]) == (2, 2)
 
 
 def test_unmatched_has_no_extracts(spark):
@@ -177,12 +202,6 @@ def test_blake3_rule_hash_pairs_end_to_end(spark):
     reference's blake3:<hex>."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from fingerprint_spark.dsl.parser import parse_yaml
-    from fingerprint_spark.operators.match import apply_match
-    from fingerprint_spark.parse import parse_html_col
-
     rule = parse_yaml("""
 fingerprint_id: maint-log-b3.v1
 format: html
@@ -211,9 +230,63 @@ content_hash:
     df = spark.createDataFrame(rows, ["url", "html"]).withColumn(
         "parsed", parse_html_col(F.col("html"))
     )
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    out = apply_match(df, [rule], env, with_extracts=True)
+    out = revalidate(df, [rule])
     h = {r["url"]: r["content_hash"] for r in out.collect()}
     assert all(v and v.startswith("blake3:") for v in h.values()), h
     assert h["hash_pair_base"] == h["hash_pair_markup_variant"]
     assert h["hash_pair_base"] != h["hash_pair_value_change"]
+
+
+def test_extract_level_reproduces_oracle_checked_query(spark, sf_dir):
+    """The rule-engine extraction (revalidate's match_levels) computes
+    the same content_hash per document as the oracle-checked
+    extract_hash query over its html scaffold: section ^Body$ plus
+    text_match Doc/[0-9]+/400, md5 over both."""
+    from fingerprint_spark.queries._common import _doc, _escape_html
+    from fingerprint_spark.queries.rules import q_extract_hash
+
+    rule = parse_yaml("""
+fingerprint_id: extract-hash.v1
+format: html
+assertions:
+  - heading_regex:
+      pattern: "^Body$"
+extract:
+  - name: sec
+    section:
+      heading_pattern: "^Body$"
+  - name: tm
+    text_match:
+      anchor: "Doc"
+      value: "[0-9]+"
+      within_chars: 400
+content_hash:
+  algo: md5
+  over: [sec, tm]
+""")
+    html = F.concat(
+        F.lit("<html><body><h1>Doc "), F.col("doc_id").cast("string"),
+        F.lit("</h1><h2>Body</h2><p>"),
+        F.replace(_escape_html(F.col("text")), F.lit("\n"), F.lit("</p><p>")),
+        F.lit("</p></body></html>"),
+    )
+    parsed = _doc(spark, sf_dir).select(
+        "doc_id",
+        F.col("doc_id").cast("string").alias("url"),
+        parse_html_col(html).alias("parsed"),
+    )
+    got = {
+        r["doc_id"]: (r["matched"], r["content_hash"])
+        for r in revalidate(parsed, [rule])
+        .select("doc_id", "fingerprint.matched", "content_hash")
+        .collect()
+    }
+    want = {
+        r["doc_id"]: r["content_hash"]
+        for r in q_extract_hash(spark, sf_dir).select(
+            "doc_id", "content_hash"
+        ).collect()
+    }
+    assert len(want) > 0 and set(got) == set(want)
+    assert all(m for m, _h in got.values())
+    assert {d: h for d, (_m, h) in got.items()} == want

@@ -1,19 +1,11 @@
-"""Infer mode + hybrid search tests (reference infer_mode.rs model:
-corpus -> deterministic rule; rule matches its own corpus)."""
+"""Infer mode tests (reference infer_mode.rs model: corpus ->
+deterministic rule; rule matches its own corpus)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from fingerprint_spark.corpus import generate_corpus
 from fingerprint_spark.dsl.compiler import compile_rule
 from fingerprint_spark.operators.infer import aggregate_candidates, infer_rule, observe
-from fingerprint_spark.operators.search import (
-    bm25_search,
-    build_bm25_index,
-    hybrid_search,
-    rrf_fuse,
-    support_for_query,
-)
 from fingerprint_spark.parse import parse_html_col
 
 
@@ -74,64 +66,3 @@ def test_infer_rejects_heterogeneous_noise(spark, report_corpus):
     ]
     assert "Unrelated" not in heads
 
-
-@pytest.fixture(scope="module")
-def text_corpus(spark):
-    return generate_corpus(spark, 120, partitions=4).select("url", "text")
-
-
-def test_bm25_finds_spam(spark, text_corpus):
-    index = build_bm25_index(text_corpus)
-    hits = bm25_search(index, "casino bonus jackpot", k=5).collect()
-    assert hits, "bm25 returned nothing"
-    # top hits must actually contain the query terms
-    top_urls = [r["key"] for r in hits]
-    texts = {
-        r["url"]: r["text"]
-        for r in text_corpus.filter(F.col("url").isin(top_urls)).collect()
-    }
-    assert any("casino" in t for t in texts.values())
-    assert hits == sorted(hits, key=lambda r: (-r["score"], r["key"]))
-
-
-def test_hybrid_search_and_rrf(spark, text_corpus):
-    res = hybrid_search(text_corpus, "weight loss miracle supplement", k=5)
-    rows = res.collect()
-    assert len(rows) == 5
-    top = text_corpus.filter(F.col("url") == rows[0]["key"]).first()["text"]
-    assert "weight loss" in top
-
-    # RRF determinism: same inputs -> same fused ranking
-    r2 = hybrid_search(text_corpus, "weight loss miracle supplement", k=5).collect()
-    assert [r["key"] for r in rows] == [r["key"] for r in r2]
-
-
-def test_support_for_query(spark, text_corpus):
-    n = support_for_query(text_corpus, "casino bonus free spins")
-    total = text_corpus.count()
-    assert 0 < n < total
-
-
-def test_infer_schema_rule(spark, report_corpus):
-    """infer-schema: fields -> anchored text_near rule + text_match
-    extracts that match and extract on the training corpus."""
-    from fingerprint_spark.operators.infer import infer_schema_rule
-    from fingerprint_spark.operators.match import apply_match
-
-    # every report doc mentions 'Revenue details for period <i>'
-    d, text, report = infer_schema_rule(
-        report_corpus, {"period": "Revenue details for period 3"},
-        "schema_rule.v1", min_confidence=0.05,
-    )
-    assert report["period"]["anchor"] == "Summary"
-    assert d.assertions[0].type == "text_near"
-    assert d.extract[0].type == "text_match"
-    assert d.content_hash is not None
-
-    # the generalized pattern (digits -> \d+) matches EVERY doc
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    out = apply_match(report_corpus, [d], env, with_extracts=True)
-    assert out.filter(~F.col("fingerprint.matched")).count() == 0
-    row = out.first()
-    assert row["extracted"]["period"] is not None
-    assert row["content_hash"].startswith("md5:")

@@ -67,29 +67,6 @@ def test_query_plan_invariants(spark, name):
     )
 
 
-def test_search_operators_plan_no_global_window(spark):
-    """The round-2 regression site specifically: hybrid search rankings
-    must never plan an unpartitioned window (operators/search.py)."""
-    from fingerprint_spark.operators.search import (
-        build_bm25_index,
-        bm25_search,
-        embedding_search,
-        hybrid_search,
-    )
-
-    docs = spark.createDataFrame(
-        [(f"u{i}", f"alpha beta doc {i} " + "casino " * (i % 3)) for i in range(40)],
-        ["url", "text"],
-    )
-    idx = build_bm25_index(docs)
-    for df in (
-        bm25_search(idx, "casino alpha", k=5),
-        embedding_search(docs, "casino alpha", k=5),
-        hybrid_search(docs, "casino alpha", k=5),
-    ):
-        assert _global_windows(df) == 0
-
-
 _COLLECT_RE = re.compile(r"\.(collect|toPandas)\(\)")
 
 

@@ -1,12 +1,12 @@
-"""Match semantics: first-match-wins order, child routing, outcome fold
+"""Match semantics: first-match-wins order, child routing
 (reference chained_fingerprints.rs / chained_routing_run_mode.rs)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.parser import parse_yaml
-from fingerprint_spark.operators.match import apply_match, outcome_fold
 from fingerprint_spark.parse import parse_html_col
+from fingerprint_spark.pipeline import revalidate
 
 
 def _rules(*yamls):
@@ -44,8 +44,7 @@ def _run(spark, html, *yamls):
     df = spark.createDataFrame([("u", html)], ["url", "html"]).withColumn(
         "parsed", parse_html_col(F.col("html"))
     )
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    return apply_match(df, _rules(*yamls), env)
+    return revalidate(df, _rules(*yamls))
 
 
 def test_first_match_wins_order(spark):
@@ -94,19 +93,3 @@ def test_children_not_evaluated_without_root_match(spark):
     assert r["children"] == []
     assert r["child_routing"] is None
 
-
-def test_outcome_fold(spark):
-    ok = "<html><body><h1>Alpha</h1><p>the first option</p></body></html>"
-    bad = "<html><body><h1>Gamma</h1></body></html>"
-    df = spark.createDataFrame(
-        [("u1", ok), ("u2", ok)], ["url", "html"]
-    ).withColumn("parsed", parse_html_col(F.col("html")))
-    env = {"url": F.col("url"), "parsed": F.col("parsed")}
-    matched = apply_match(df, _rules(ROOT_A, CHILD_A1, CHILD_A2), env)
-    assert outcome_fold(matched) == "OK"
-
-    df2 = spark.createDataFrame(
-        [("u1", ok), ("u2", bad)], ["url", "html"]
-    ).withColumn("parsed", parse_html_col(F.col("html")))
-    matched2 = apply_match(df2, _rules(ROOT_A, CHILD_A1, CHILD_A2), env)
-    assert outcome_fold(matched2) == "PARTIAL"

@@ -5,7 +5,8 @@ module constant) is live when a production path reaches it. The roots
 are every other module-level statement of the package except imports
 and ``__all__``, every statement of the production entry points
 (``scripts/``, ``bench.py``, ``bench_extra.py``, ``qfbench/`` except its
-smoke test, and ``__spark_entry__.py``) and the two allowlists below.
+smoke test, and ``__spark_entry__.py``) and the ``REFERENCE_TWINS``
+allowlist below.
 A module-level import or an ``__all__`` entry is not a caller: a name
 that only a package re-export mentions is dead. Reachability is
 transitive: the body of a live definition makes the names it uses live,
@@ -51,32 +52,6 @@ REFERENCE_TWINS = (
     "_near_match",  # text_near, the Column form of the TextNear assertion
     "_decode_grid_projection",  # q_xlsx_decode's fused decode UDF
     "langid_best",  # marker_langid_batch, by Spark's own split/regex count
-)
-
-# Reference capabilities SURVEY.md cites that no CLI mode exposes yet,
-# kept until they are wired into a mode or dropped.
-LIBRARY_API = (
-    "apply_match",  # rule-engine match pass; test_acceptance_pack pins it
-    "apply_extracts",  # rule-engine winner extraction; test_acceptance_pack
-    "outcome_fold",  # rule-engine outcome fold; test_acceptance_pack
-    "compile_extract",  # rule-engine extraction; test_acceptance_pack
-    "extract_table",  # rule-engine table extraction; test_acceptance_pack
-    "extract_range",  # rule-engine range extraction; test_acceptance_pack
-    "content_hash_for_rule",  # rule-engine content hash; test_acceptance_pack
-    "infer_schema_rule",  # SURVEY §3.3 infer-schema
-    "locate_field",  # SURVEY §3.3 infer-schema: where a field sits
-    "_generalize_value",  # SURVEY §3.3 infer-schema: value -> pattern
-    "hybrid_search",  # SURVEY hybrid-search/RRF rows (operators/search.py)
-    "support_for_query",  # SURVEY hybrid-search rows (operators/search.py)
-    "parse_by_format",  # format dispatch (md/csv/pdf); ARCHITECTURE.md, --describe
-    "read_manifest",  # SURVEY §1.1 record model: manifest validation
-    "load_text_paths",  # SURVEY §1.1 record model: manifest text loading
-    "stream_quality_filter",  # streaming/pipeline.py row of the module map
-    "streaming_dedup",  # streaming/pipeline.py row of the module map
-    "stream_decontaminate",  # streaming/pipeline.py row of the module map
-    "stream_metrics_by_window",  # streaming/pipeline.py row of the module map
-    "write_bucketed",  # bucketed layout (sources/bucketed.py); test_sources
-    "colocated_join",  # shuffle-free join on that layout; test_sources
 )
 
 # Parameters a signature must keep although the body never reads them,
@@ -170,7 +145,7 @@ def dead_definitions() -> list[tuple[str, str, int]]:
     """(module path, name, lines) of every unreachable definition."""
     defs, roots = _scan()
     live: set[str] = set()
-    todo = list(roots | set(REFERENCE_TWINS) | set(LIBRARY_API))
+    todo = list(roots | set(REFERENCE_TWINS))
     while todo:
         name = todo.pop()
         if name in live:
@@ -197,7 +172,7 @@ def test_package_has_no_dead_code():
 
 def test_allowlists_name_existing_definitions():
     defs, _roots = _scan()
-    missing = sorted((set(REFERENCE_TWINS) | set(LIBRARY_API)) - set(defs))
+    missing = sorted(set(REFERENCE_TWINS) - set(defs))
     assert not missing, f"allowlisted names not defined in the package: {missing}"
 
 

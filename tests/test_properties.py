@@ -8,7 +8,6 @@ from fingerprint_spark.functions.hashing import (
     simhash64_py,
 )
 from fingerprint_spark.parse.html_parser import normalize_ws, parse_html
-from fingerprint_spark.parse.markdown import normalize_markdown, parse_markdown
 
 text_strategy = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
@@ -22,19 +21,6 @@ def test_html_parser_never_throws(s):
     (enricher.rs:145-159: parse failure is a skip, not a crash)."""
     out = parse_html(s)
     assert out["parse_error"] is None or out["normalized"] is None
-
-
-@settings(max_examples=150, deadline=None)
-@given(text_strategy)
-def test_markdown_parser_never_throws(s):
-    parse_markdown(s)
-
-
-@settings(max_examples=150, deadline=None)
-@given(text_strategy)
-def test_markdown_normalization_idempotent(s):
-    once = normalize_markdown(s)
-    assert normalize_markdown(once) == once
 
 
 @settings(max_examples=150, deadline=None)

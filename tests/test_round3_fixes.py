@@ -5,13 +5,11 @@
 2. text_near regex validation must be judged by the EXECUTING engine
    (java.util.regex), not Python ``re`` — Java-only syntax is accepted,
    Java-invalid or zero-width-in-Java patterns are refused;
-3. the manifest reader's string-type probe must be anchored to the
-   actual field (variant typing), not a substring regex over the line;
+3. (the manifest reader's string-type probe: the JSONL manifest reader
+   was removed, and its test with it);
 4. operators that persist self-join inputs must expose a release path
    so long-lived drivers don't accumulate cached partitions.
 """
-
-import json
 
 import pytest
 
@@ -58,33 +56,6 @@ def test_text_near_plain_patterns_still_validate(spark):
     validate_definition(_near_def("Total"))
     with pytest.raises(ValidationError, match="empty string"):
         validate_definition(_near_def("a*"))
-
-
-def test_manifest_string_probe_anchored_to_field(spark, tmp_path):
-    """ADVICE #3 trap: a NUMERIC version field with the text
-    '\"version\": \"x\"' embedded inside ANOTHER field's string value
-    fooled the old substring-regex probe into accepting the record."""
-    from fingerprint_spark.sources.manifest import read_manifest
-
-    trap = {
-        "version": 1,
-        "path": 'x"version": "x"y',
-        "bytes_hash": "h",
-    }
-    ok = {"version": "hash.v0", "path": "/a", "bytes_hash": "h"}
-    str_skip = {"version": "hash.v0", "bytes_hash": "h", "_skipped": "true"}
-    p = str(tmp_path / "m.jsonl")
-    with open(p, "w") as f:
-        for rec in (trap, ok, str_skip):
-            f.write(json.dumps(rec) + "\n")
-    rows = {
-        r["path"]: r["refusal"]
-        for r in read_manifest(spark, p, strict=False).collect()
-    }
-    assert rows['x"version": "x"y'] == "E_BAD_INPUT:invalid_field_type:version"
-    assert rows["/a"] is None
-    # a STRING "true" is not a boolean — the raw-text probe accepted it
-    assert rows[None] == "E_BAD_INPUT:invalid_field_type:_skipped"
 
 
 def test_tracked_persist_released(spark, sf_dir):

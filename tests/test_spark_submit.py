@@ -245,6 +245,50 @@ def test_cli_revalidate_over_stored_parsed(spark, tmp_path):
     )
 
 
+def test_cli_run_and_revalidate_keep_extraction(spark, tmp_path):
+    """run --rules-dir rules/ --fp maint-log.v1 writes the winner's
+    extracted anchors and content_hash; --revalidate over the kept
+    parsed structs writes the same hashes. The hash-pair fixtures: the
+    markup variant hashes as the base, the value change does not."""
+    import datetime
+    import sys
+
+    fix = os.path.join(REPO, "tests", "fixtures", "html")
+    ids = ["hash_pair_base", "hash_pair_markup_variant", "hash_pair_value_change"]
+    ts = datetime.datetime(2024, 1, 1)
+    rows = []
+    for fid in ids:
+        with open(os.path.join(fix, f"{fid}.html"), "rb") as f:
+            rows.append((fid, ts, bytearray(f.read()), "", "en"))
+    corpus = str(tmp_path / "corpus")
+    write_corpus_partitioned(spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    ), corpus)
+    script = os.path.join(REPO, "scripts", "run_pipeline.py")
+    rule_args = ["--rules-dir", os.path.join(REPO, "rules"),
+                 "--fp", "maint-log.v1", "--buckets", "1", "--no-witness"]
+
+    def hashes(inp, out, *extra):
+        r = subprocess.run(
+            [sys.executable, script, "--input", inp, "--output", out,
+             *rule_args, *extra],
+            capture_output=True, text=True, timeout=400,
+        )
+        assert r.returncode == 0, r.stderr[-1500:]
+        got = spark.read.parquet(os.path.join(out, "bucket=*")).collect()
+        assert all(g["extracted"]["ratio"] for g in got)
+        return {g["url"]: g["content_hash"] for g in got}
+
+    out1 = str(tmp_path / "out1")
+    run = hashes(corpus, out1, "--keep-parsed")
+    assert run["hash_pair_base"].startswith("md5:")
+    assert run["hash_pair_base"] == run["hash_pair_markup_variant"]
+    assert run["hash_pair_base"] != run["hash_pair_value_change"]
+    again = hashes(os.path.join(out1, "bucket=*"), str(tmp_path / "out2"),
+                   "--revalidate")
+    assert again == run
+
+
 def test_cli_witness_surface(tmp_path):
     """witness query|last|count over the JSONL ledger with tool/outcome/
     since filters (reference witness subcommands) — no SparkSession."""

@@ -1,10 +1,9 @@
-"""text_near gap semantics + markdown normalization pass tests
-(assertions.rs:1691-1740, markdown.rs:64-175)."""
+"""text_near gap semantics (assertions.rs:1691-1740) and the toxicity
+scrub."""
 
 import pytest
 
 from fingerprint_spark.operators.assertions import _near_match
-from fingerprint_spark.parse.markdown import normalize_markdown, parse_markdown
 
 
 def _near_agrees(spark, text, anchor, value, within, expected):
@@ -118,46 +117,6 @@ def test_text_near_column_matches_python_reference(spark):
         ]
         want = [_near_match(t, "Anchor", r"\d{4}", within) for t in cases]
         assert got == want, f"within={within}: {list(zip(cases, got, want))}"
-
-
-class TestMarkdownNormalization:
-    def test_setext_to_atx(self):
-        md = "Title\n=====\n\nSub\n---\n"
-        out = normalize_markdown(md)
-        assert "# Title" in out and "## Sub" in out
-        assert "=====" not in out
-
-    def test_bold_line_as_h2_with_blank_guards(self):
-        md = "\n**Section Name**\n\nbody"
-        assert "## Section Name" in normalize_markdown(md)
-        # no blank-line guard -> NOT promoted (markdown.rs:111-135)
-        md2 = "text before\n**Not A Heading**\ntext after"
-        assert "## Not A Heading" not in normalize_markdown(md2)
-
-    def test_blank_collapse_and_trailing_ws(self):
-        md = "a   \n\n\n\nb\t\n"
-        assert normalize_markdown(md) == "a\n\nb"
-
-    def test_table_pipe_spacing(self):
-        md = "|a|b|\n|---|---|\n|1|2|"
-        out = normalize_markdown(md)
-        assert "| a | b |" in out and "| 1 | 2 |" in out
-
-    def test_idempotent(self):
-        md = "Title\n=====\n\n**Bold**\n\n|a|b|\n|-|-|\n|1|2|\n\n\ntext"
-        once = normalize_markdown(md)
-        assert normalize_markdown(once) == once
-
-    def test_structure_sections_and_preamble(self):
-        md = "preamble line\n\n# A\nbody a\n## A1\nbody a1\n# B\nbody b"
-        p = parse_markdown(md)
-        secs = {(s["heading"], s["start_line"], s["end_line"]) for s in p["sections"]}
-        # preamble before first heading has heading=None
-        assert (None, 1, 2) in secs
-        # A extends to the line before B (contains A1 subsection)
-        a = next(s for s in p["sections"] if s["heading"] == "A")
-        b = next(s for s in p["sections"] if s["heading"] == "B")
-        assert a["end_line"] == b["start_line"] - 1
 
 
 class TestScrubToxicity:
