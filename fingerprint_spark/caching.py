@@ -45,11 +45,9 @@ V = TypeVar("V")
 _TRACKED: list[DataFrame] = []
 
 
-def track_persist(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """persist() + register for a later release_tracked()."""
-    df.persist(level)
+def track_persist(df: DataFrame) -> DataFrame:
+    """persist(MEMORY_AND_DISK) + register for a later release_tracked()."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

@@ -101,7 +101,6 @@ class CheckpointedRun:
         df: DataFrame,
         pipeline_fn: Callable[[DataFrame], DataFrame],
         max_buckets: int | None = None,
-        observe: bool = True,
     ) -> dict:
         """Process all not-yet-committed buckets; returns a summary.
 
@@ -123,9 +122,7 @@ class CheckpointedRun:
             # quality-filter counter metrics reference keep/fingerprint/
             # scrub/ppl — only attach them when the pipeline_fn actually
             # produced that schema (run() accepts arbitrary callables).
-            if observe and {"keep", "fingerprint", "scrub", "ppl"} <= set(
-                out.columns
-            ):
+            if {"keep", "fingerprint", "scrub", "ppl"} <= set(out.columns):
                 out, obs = observe_pipeline(out, name=f"bucket_{b}_{time.time_ns()}")
             path = self.bucket_path(b)
             out.write.mode("overwrite").parquet(path)

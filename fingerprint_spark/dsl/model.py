@@ -55,11 +55,11 @@ class Assertion:
     name: str
     params: tuple[tuple[str, object], ...]  # sorted, hashable
 
-    def param(self, key: str, default=None):
+    def param(self, key: str):
         for k, v in self.params:
             if k == key:
                 return v
-        return default
+        return None
 
     @property
     def params_dict(self) -> dict:
@@ -74,11 +74,11 @@ class ExtractSection:
     type: str  # range | section | table | text_match
     params: tuple[tuple[str, object], ...]
 
-    def param(self, key: str, default=None):
+    def param(self, key: str):
         for k, v in self.params:
             if k == key:
                 return v
-        return default
+        return None
 
 
 @dataclass(frozen=True)

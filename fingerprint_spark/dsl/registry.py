@@ -14,7 +14,6 @@ broadcast-lookup-structure pattern — no data-plane join).
 from __future__ import annotations
 
 import fnmatch
-import os
 from pathlib import Path
 
 from .model import FingerprintDefinition, make_assertion
@@ -144,12 +143,11 @@ class Registry:
     def load_dir(
         path: str | Path,
         trusted_globs: list[str] | None = None,
-        base: "Registry | None" = None,
     ) -> "Registry":
         """Scan a directory for *.fp.yaml (installed.rs:67-149). Builtin
         rules are always trusted; installed files must match a trust glob
         (core.rs:229-239) when a trust list is supplied."""
-        reg = base or Registry(builtin_rules())
+        reg = Registry(builtin_rules())
         p = Path(path)
         for f in sorted(p.glob("*.fp.yaml")):
             if trusted_globs is not None and not any(
@@ -161,12 +159,4 @@ class Registry:
                 )
             d = parse_yaml(f.read_text(), source=str(f))
             reg.register(d)
-        return reg
-
-    @staticmethod
-    def default(env_var: str = "FINGERPRINT_SPARK_DEFINITIONS") -> "Registry":
-        reg = Registry(builtin_rules())
-        path = os.environ.get(env_var)
-        if path and Path(path).is_dir():
-            reg = Registry.load_dir(path, base=reg)
         return reg

@@ -7,6 +7,8 @@ requirements, content_hash must reference known extracts.
 
 from __future__ import annotations
 
+import re
+
 from .model import (
     FORMATS,
     HTML_ONLY,
@@ -23,6 +25,7 @@ class ValidationError(ValueError):
 
 
 _INVALID = object()  # sentinel: pattern refused by the executing engine
+_A1 = r"[A-Za-z]+[0-9]+"  # one A1 cell; a range is _A1:_A1
 
 
 def _regex_matches_empty(pat: str):
@@ -92,6 +95,11 @@ _REQUIRED_PARAMS: dict[str, list[str]] = {
 }
 
 
+def _check_a1_range(what: str, rng) -> None:
+    if rng is not None and not re.fullmatch(f"{_A1}:{_A1}", str(rng)):
+        raise ValidationError("E_INVALID_YAML", f"{what}: bad A1 range {rng!r}")
+
+
 def validate_definition(d: FingerprintDefinition) -> None:
     if d.format not in FORMATS:
         raise ValidationError(
@@ -130,23 +138,14 @@ def validate_definition(d: FingerprintDefinition) -> None:
         # code instead of a raw error at expression-compile time (the
         # reference's eval path tolerates these as non-matches; a
         # compiled-expression engine must reject them before broadcast)
-        import re as _re
-
-        _a1 = r"[A-Za-z]+[0-9]+"
         if a.type in ("cell_eq", "cell_regex", "sum_eq", "within_tolerance"):
             cell = a.param("cell")
-            if cell is not None and not _re.fullmatch(_a1, str(cell)):
+            if cell is not None and not re.fullmatch(_A1, str(cell)):
                 raise ValidationError(
                     "E_INVALID_YAML", f"assertion {a.name}: bad A1 cell {cell!r}"
                 )
         if a.type in ("range_non_null", "range_populated", "sum_eq"):
-            rng = a.param("range")
-            if rng is not None and not _re.fullmatch(
-                f"{_a1}:{_a1}", str(rng)
-            ):
-                raise ValidationError(
-                    "E_INVALID_YAML", f"assertion {a.name}: bad A1 range {rng!r}"
-                )
+            _check_a1_range(f"assertion {a.name}", a.param("range"))
         if a.type == "text_near":
             # positional span reconstruction (match_spans: split +
             # regexp_extract_all) desyncs on zero-width matches — refuse
@@ -175,6 +174,21 @@ def validate_definition(d: FingerprintDefinition) -> None:
     extract_names = {e.name for e in d.extract}
     if len(extract_names) != len(d.extract):
         raise ValidationError("E_INVALID_YAML", "duplicate extract names")
+    for e in d.extract:
+        # a range extract reads the decoded sheets, which only a
+        # spreadsheet rule's match has (the SPREADSHEET_ONLY gate)
+        if e.type == "range" and d.format not in ("xlsx", "csv"):
+            raise ValidationError(
+                "E_INVALID_YAML",
+                f"extract {e.name}: range only valid for xlsx/csv formats",
+            )
+        if e.type == "range":
+            missing = [p for p in ("sheet", "range") if e.param(p) is None]
+            if missing:
+                raise ValidationError(
+                    "E_MISSING_FIELD", f"extract {e.name} (range) missing {missing}"
+                )
+            _check_a1_range(f"extract {e.name}", e.param("range"))
     if d.content_hash is not None:
         unknown = [o for o in d.content_hash.over if o not in extract_names]
         if unknown:

@@ -173,9 +173,9 @@ def _jvm_words(text: str) -> list[str]:
 _NULL_SHINGLE = -7046029254386353131  # int64 view of 0x9E3779B97F4A7C15
 
 
-@context_cached(maxsize=2)
-def _jaccard_shingle_udf(k: int):
-    """Distinct word-k-shingle hash set per document as a SORTED
+@context_cached(maxsize=1)
+def _jaccard_shingle_udf():
+    """Distinct word-3-shingle hash set per document as a SORTED
     array<long> — the Arrow replacement for the interpreted JVM
     transform(xxhash64(slice(words, i, k))) fold (measured 2x; guide
     §4.2 "hand whole batches to vectorized native libraries").
@@ -191,7 +191,7 @@ def _jaccard_shingle_udf(k: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
         hashes = shingle_hashes_batch(
-            [[] if t is None else _jvm_words(t.lower()) for t in texts], k
+            [[] if t is None else _jvm_words(t.lower()) for t in texts], 3
         )
         return pd.Series(
             [
@@ -204,11 +204,11 @@ def _jaccard_shingle_udf(k: int):
     return udf
 
 
-def jaccard_shingle_hashes_col(text: Column, k: int = 3) -> Column:
-    """text -> sorted distinct int64 word-k-shingle hashes (see
+def jaccard_shingle_hashes_col(text: Column) -> Column:
+    """text -> sorted distinct int64 word-3-shingle hashes (see
     _jaccard_shingle_udf); NULL text -> a singleton sentinel set, the
     JVM fold's behavior (xxhash64 of a NULL slice is the seed)."""
-    return _jaccard_shingle_udf(k)(text)
+    return _jaccard_shingle_udf()(text)
 
 
 def simhash64_py(text: str, k: int = 3) -> int:
@@ -294,23 +294,23 @@ def simhash64_batch_py(texts, k: int = 3) -> list[int]:
 
 
 @context_cached(maxsize=2)
-def _minhash_udf(num_hashes: int, k: int):
+def _minhash_udf(num_hashes: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
         return pd.Series(
             [
                 _minhash_from_hashes(h, num_hashes)
-                for h in _batch_shingle_hashes(texts, k)
+                for h in _batch_shingle_hashes(texts, 3)
             ]
         )
 
     return udf
 
 
-def minhash_signature_col(text: Column, num_hashes: int = 64, k: int = 3) -> Column:
-    """text -> MinHash signature (minhash_signature_py per doc, batch
-    kernel)."""
-    return _minhash_udf(num_hashes, k)(text)
+def minhash_signature_col(text: Column, num_hashes: int = 64) -> Column:
+    """text -> MinHash signature over word 3-shingles
+    (minhash_signature_py per doc, batch kernel)."""
+    return _minhash_udf(num_hashes)(text)
 
 
 def content_hash_bytes_blake3(

@@ -248,9 +248,9 @@ def marker_langid_col(text: Column) -> Column:
 
 # -- DuckDB oracle fragments -------------------------------------------------
 
-def sql_lang_score(lang: str, text_expr: str = "text") -> str:
+def sql_lang_score(lang: str) -> str:
     pat = marker_pattern(lang)
     return (
-        f"(len(string_split_regex(lower({text_expr}), '{pat}')) - 1)::double"
-        f" / greatest(len(string_split_regex(trim({text_expr}), '\\s+')), 1)"
+        f"(len(string_split_regex(lower(text), '{pat}')) - 1)::double"
+        " / greatest(len(string_split_regex(trim(text), '\\s+')), 1)"
     )

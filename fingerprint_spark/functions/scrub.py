@@ -50,18 +50,18 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def scrub_text(text: Column, patterns: list[tuple[str, str, str]] | None = None) -> Column:
+def scrub_text(text: Column) -> Column:
     """Apply the ordered replacement chain."""
     out = text
-    for _name, pat, repl in patterns or PII_PATTERNS:
+    for _name, pat, repl in PII_PATTERNS:
         out = F.regexp_replace(out, pat, repl)
     return out
 
 
-def scrub_counts(text: Column, patterns: list[tuple[str, str, str]] | None = None) -> Column:
+def scrub_counts(text: Column) -> Column:
     """Struct<name:int> of per-pattern match counts (pre-replacement)."""
     fields = []
-    for name, pat, _repl in patterns or PII_PATTERNS:
+    for name, pat, _repl in PII_PATTERNS:
         fields.append(
             F.size(F.regexp_extract_all(text, F.lit(pat), F.lit(0))).alias(name)
         )

@@ -79,21 +79,16 @@ def url_canonical(url: Column) -> Column:
     )
 
 
-def registered_domain(
-    host: Column, multipart_suffixes: list[str] | None = None
-) -> Column:
-    """eTLD+1 per the PSL algorithm over the given multi-label suffix
-    set: one extra label beyond the longest matching public suffix.
-    A bare TLD or single-label host returns itself."""
-    suffixes = (
-        MULTIPART_SUFFIXES if multipart_suffixes is None else multipart_suffixes
-    )
+def registered_domain(host: Column) -> Column:
+    """eTLD+1 per the PSL algorithm over MULTIPART_SUFFIXES: one extra
+    label beyond the longest matching public suffix. A bare TLD or
+    single-label host returns itself."""
     parts = F.split(host, r"\.")
     n = F.size(parts)
     last2 = F.array_join(F.slice(parts, n - 1, 2), ".")
     last3 = F.array_join(F.slice(parts, n - 2, 3), ".")
     return F.when(n <= 1, host).when(
-        (n >= 3) & last2.isin(suffixes), last3
+        (n >= 3) & last2.isin(MULTIPART_SUFFIXES), last3
     ).otherwise(last2)
 
 

@@ -17,14 +17,16 @@ _P2 = 0xC2B2AE3D27D4EB4F
 _P3 = 0x165667B19E3779F9
 _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
+_SEED = 42  # F.xxhash64's seed
 
 
 def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M
 
 
-def xxh64(data: bytes, seed: int = 42) -> int:
-    """Unsigned XXH64 of ``data``. Spark's default seed is 42."""
+def xxh64(data: bytes) -> int:
+    """Unsigned XXH64 of ``data`` under Spark's seed, 42."""
+    seed = _SEED
     n = len(data)
     i = 0
     if n >= 32:
@@ -70,8 +72,8 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     return h
 
 
-def xxh64_signed(data: bytes, seed: int = 42) -> int:
+def xxh64_signed(data: bytes) -> int:
     """Two's-complement signed view — exactly what F.xxhash64 emits
     as a Spark bigint."""
-    h = xxh64(data, seed)
+    h = xxh64(data)
     return h - (1 << 64) if h >= (1 << 63) else h

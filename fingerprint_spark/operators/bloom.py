@@ -143,10 +143,8 @@ def _probe_broadcast(
     key_col: str,
     n_bits: int,
     k: int,
-    out_col: str,
 ) -> DataFrame:
-    """k broadcast joins; zero Exchange on the probe side. Streaming-
-    safe (stateless stream-static joins)."""
+    """k broadcast joins; zero Exchange on the probe side."""
     key = F.col(key_col)
     out = df
     hits = []
@@ -171,7 +169,7 @@ def _probe_broadcast(
     member = hits[0]
     for h in hits[1:]:
         member = member & h
-    out = out.withColumn(out_col, member.cast("int"))
+    out = out.withColumn("maybe_member", member.cast("int"))
     return out.drop(*[f"__p{i}" for i in range(k)],
                     *[f"__w{i}" for i in range(k)])
 
@@ -182,7 +180,6 @@ def _probe_sharded(
     key_col: str,
     n_bits: int,
     k: int,
-    out_col: str,
 ) -> DataFrame:
     """Beyond-broadcast path: ONE co-partitioned shuffle join on
     word_idx. The filter shuffles as (word_idx bigint, word bigint)
@@ -192,8 +189,7 @@ def _probe_sharded(
     (k rows per input row), membership folds back per key via
     bool-and groupBy + a null-safe join on the key. Duplicate probe
     keys cost duplicate probe rows but collapse in the groupBy, so the
-    join-back never multiplies rows. Batch-only (the groupBy is a
-    streaming-incompatible aggregation; streams keep broadcast)."""
+    join-back never multiplies rows."""
     key = F.col(key_col)
     exploded = (
         df.select(
@@ -222,7 +218,7 @@ def _probe_sharded(
     # the broadcast path, not a NULL from a failed equi-join
     out = df.join(member, key.eqNullSafe(F.col("__key")), "left")
     return out.withColumn(
-        out_col, F.coalesce(F.col("__member"), F.lit(0)).cast("int")
+        "maybe_member", F.coalesce(F.col("__member"), F.lit(0)).cast("int")
     ).drop("__key", "__member")
 
 
@@ -232,11 +228,9 @@ def bloom_probe(
     key_col: str = "url",
     n_bits: int = 1 << 24,
     k: int = 5,
-    out_col: str = "maybe_member",
     strategy: str | None = None,
-    broadcast_cap_bytes: int = DEFAULT_BLOOM_BROADCAST_CAP,
 ) -> DataFrame:
-    """Tag every row with ``out_col`` (int 0/1): 1 iff all k bits are
+    """Tag every row with ``maybe_member`` (int 0/1): 1 iff all k bits are
     set — possibly-present (false positives possible at the configured
     rate, false negatives impossible). Refuses a filter built with
     different (n_bits, k) than the probe's — a silent mismatch would
@@ -244,43 +238,17 @@ def bloom_probe(
 
     strategy: "broadcast" | "sharded" | None (auto — broadcast while
     the worst-case word table (n_bits/4 bytes) fits
-    ``broadcast_cap_bytes``, else the co-partitioned sharded join).
-    Both strategies are output-identical; streams require broadcast."""
+    DEFAULT_BLOOM_BROADCAST_CAP, else the co-partitioned sharded join).
+    Both strategies are output-identical."""
     _check_pow2_words(n_bits)
     _validate_bloom_params(bloom, n_bits, k)
     bloom = bloom.filter(F.col("word_idx") >= 0)
-    if df.isStreaming:
-        # the sharded path's groupBy + join-back is a streaming-
-        # incompatible aggregation; a stream either broadcasts or
-        # fails LOUDLY here instead of at query start — including on
-        # the AUTO path when the filter is beyond the broadcast cap
-        # (silently broadcasting a beyond-cap filter is the exact
-        # failure the guard exists to prevent; review finding r5b)
-        if strategy == "sharded":
-            raise ValueError(
-                "sharded bloom probe is batch-only (its membership "
-                "fold is a streaming-incompatible aggregation); "
-                "streams must use strategy='broadcast' with a filter "
-                "that fits the broadcast cap"
-            )
-        if (
-            strategy is None
-            and _bloom_strategy(n_bits, broadcast_cap_bytes) != "broadcast"
-        ):
-            raise ValueError(
-                f"streaming bloom probe with n_bits={n_bits} is beyond "
-                f"the broadcast cap ({broadcast_cap_bytes} B) and the "
-                "sharded path is batch-only — probe the stream against "
-                "a smaller filter, or route through foreachBatch into "
-                "the batch sharded path"
-            )
-        strategy = "broadcast"
     if strategy is None:
-        strategy = _bloom_strategy(n_bits, broadcast_cap_bytes)
+        strategy = _bloom_strategy(n_bits)
     if strategy == "broadcast":
-        return _probe_broadcast(df, bloom, key_col, n_bits, k, out_col)
+        return _probe_broadcast(df, bloom, key_col, n_bits, k)
     if strategy == "sharded":
-        return _probe_sharded(df, bloom, key_col, n_bits, k, out_col)
+        return _probe_sharded(df, bloom, key_col, n_bits, k)
     raise ValueError(f"unknown bloom probe strategy: {strategy!r}")
 
 

@@ -127,23 +127,19 @@ def segment_blocks(html: str) -> list[dict]:
     return out
 
 
-def classify_blocks(
-    blocks: list[dict],
-    max_link_density: float = 0.4,
-    min_len_good: int = 80,
-    min_stop_density: float = 0.02,
-    neighbour_window: int = 2,
-) -> list[str]:
-    """-> per-block 'good' | 'bad' | 'near' after the context pass.
-    Context rule (JusText §4.3 simplified): near-good blocks become
-    good iff a good block lies within neighbour_window blocks;
-    headings get the same adoption looking FORWARD only (a heading is
-    as good as the content it introduces)."""
+def classify_blocks(blocks: list[dict]) -> list[str]:
+    """-> per-block 'good' | 'bad' after the context pass. Context-free,
+    a block is bad above 0.4 link density, good at >= 80 chars with
+    >= 0.02 stop-word density, else near. Context rule (JusText §4.3
+    simplified): near-good blocks become good iff a good block lies
+    within 2 blocks; headings get the same adoption looking FORWARD
+    only (a heading is as good as the content it introduces)."""
+    neighbour_window = 2
     ctx_free = []
     for b in blocks:
-        if b["link_density"] > max_link_density:
+        if b["link_density"] > 0.4:
             ctx_free.append("bad")
-        elif b["n_chars"] >= min_len_good and b["stop_density"] >= min_stop_density:
+        elif b["n_chars"] >= 80 and b["stop_density"] >= 0.02:
             ctx_free.append("good")
         else:
             ctx_free.append("near")

@@ -57,25 +57,21 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components(
-    pairs: DataFrame,
-    key_a: str = "key_a",
-    key_b: str = "key_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node, component) — component = min key of the node's component.
-    Nodes appearing only as singletons in ``pairs`` are not emitted
-    (callers left-join and coalesce to self).
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, component) over the (key_a, key_b) edges of ``pairs`` —
+    component = min key of the node's component, after at most 25
+    large/small-star rounds. Nodes appearing only as singletons in
+    ``pairs`` are not emitted (callers left-join and coalesce to self).
 
     Keys must be orderable (long/string). Deterministic: labels only
     ever decrease toward the component minimum."""
     edges = (
-        pairs.select(F.col(key_a).alias("u"), F.col(key_b).alias("v"))
+        pairs.select(F.col("key_a").alias("u"), F.col("key_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         after_large = _star_round(edges, large=True)
         after_small = _star_round(after_large, large=False).localCheckpoint()
         # converged when the oriented edge sets match
@@ -104,7 +100,6 @@ def pagerank(
     key_col: str = "doc_id",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Power-iteration PageRank: (key, score) after a FIXED number of
     iterations (fixed-count, not convergence-tested, so two engines can
@@ -113,8 +108,8 @@ def pagerank(
     The 100 TB iterative shape: edges are hash-partitioned on the
     source key ONCE and persisted, so every iteration's join reuses the
     same partitioning (one shuffle per iteration for the groupBy, none
-    for the edge scan); ranks are localCheckpoint'd every
-    ``checkpoint_every`` rounds — without lineage truncation the plan
+    for the edge scan); ranks are localCheckpoint'd every 3 rounds —
+    without lineage truncation the plan
     doubles per iteration and the driver OOMs planning long chains
     (same pattern as the large/small-star loop above).
 
@@ -157,7 +152,7 @@ def pagerank(
                  ).alias("score"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % 3 == 0 and i + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     # e stays pinned through the caller's action (track_persist —
     # released via caching.release_tracked AFTER materialization; an

@@ -131,7 +131,6 @@ def boilerplate_filter(
     key_col: str = "doc_id",
     chunk_words: int = 12,
     max_docs: int = 2,
-    broadcast_popular: bool = True,
 ) -> DataFrame:
     """RefinedWeb-style boilerplate removal: a chunk occurring in MORE
     than ``max_docs`` distinct documents is dropped from EVERY document
@@ -142,11 +141,9 @@ def boilerplate_filter(
     hash (partial-aggregated map-side, so a corpus-wide banner chunk
     contributes one row per upstream task, never a hot reduce key) and
     the over-threshold hash set is FILTERED before joining back —
-    boilerplate hashes are a tiny fraction of all chunks. With
-    ``broadcast_popular`` (default) the hot set broadcasts and the
-    corpus side stays narrow until the per-document reassembly groupBy;
-    disable it if the threshold is set low enough that the hot set can
-    outgrow executor memory, and AQE plans the join instead.
+    boilerplate hashes are a tiny fraction of all chunks. The hot set
+    broadcasts, so the corpus side stays narrow until the per-document
+    reassembly groupBy.
     """
     key = F.col(key_col)
     ex = df.select(
@@ -157,14 +154,12 @@ def boilerplate_filter(
             "__idx", "__chunk"
         ),
     ).withColumn("__h", F.xxhash64("__chunk"))
-    popular = (
+    popular = F.broadcast(
         ex.groupBy("__h")
         .agg(F.count_distinct("__key").alias("__nd"))
         .filter(F.col("__nd") > max_docs)
         .select("__h", F.lit(True).alias("__hot"))
     )
-    if broadcast_popular:
-        popular = F.broadcast(popular)
     marked = ex.join(popular, "__h", "left").withColumn(
         "__keep", F.col("__hot").isNull()
     )

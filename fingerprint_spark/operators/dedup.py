@@ -56,10 +56,10 @@ def minhash_candidates(
     key_col: str = "url",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """LSH candidate pairs (key_a < key_b) with signature-estimated
-    Jaccard. rows-per-band r = num_hashes/bands sets the S-curve."""
+    Jaccard over word 3-shingles. rows-per-band r = num_hashes/bands
+    sets the S-curve."""
     if num_hashes % bands != 0:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
@@ -67,7 +67,7 @@ def minhash_candidates(
 
     sig = df.select(
         F.col(key_col).alias("key"),
-        minhash_signature_col(F.col(text_col), num_hashes, shingle_k).alias("sig"),
+        minhash_signature_col(F.col(text_col), num_hashes).alias("sig"),
     )
     # consumed twice (banding + pair rejoin): persist so the signature
     # UDF runs ONCE. Compact frame — key + 64 longs ≈ 550 B/doc,
@@ -137,20 +137,19 @@ def ngram_jaccard_verify(
     docs: DataFrame,
     text_col: str = "text",
     key_col: str = "url",
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs: join texts back (the pair
-    set is small), compute |A∩B|/|A∪B| over word shingle sets JVM-side via
-    array_intersect/array_union on split-built shingle arrays."""
+    set is small), compute |A∩B|/|A∪B| over word 3-shingle sets JVM-side
+    via array_intersect/array_union on split-built shingle arrays."""
     def shingles(col: Column) -> Column:
         words = F.split(F.trim(F.lower(col)), r"\s+")
         idx = F.sequence(
-            F.lit(0), F.greatest(F.size(words) - shingle_k, F.lit(0))
+            F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))
         )
         return F.array_distinct(
             F.transform(
                 idx,
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_k)),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)),
             )
         )
 

@@ -31,9 +31,9 @@ def nearest_heading(parsed: Column, target: str) -> Column:
     return F.array_min(scored)
 
 
-def headings_found(parsed: Column, limit: int = 10) -> Column:
+def headings_found(parsed: Column) -> Column:
     return F.slice(
-        F.transform(parsed["headings"], lambda h: h["text"]), 1, limit
+        F.transform(parsed["headings"], lambda h: h["text"]), 1, 10
     )
 
 
@@ -52,7 +52,7 @@ def _hint_tokens(target: str) -> list[str]:
     return [t for t in norm.split() if len(t) >= 3][:6]
 
 
-def partial_matches(parsed: Column, target: str, limit: int = 5) -> Column:
+def partial_matches(parsed: Column, target: str) -> Column:
     """Top-5 partial matches for a failed text/heading target
     (assertions.rs:786-833 collect_partial_matches): non-empty normalized
     lines containing ANY hint token; if none, the Levenshtein-nearest
@@ -69,9 +69,9 @@ def partial_matches(parsed: Column, target: str, limit: int = 5) -> Column:
                 hit = hit | F.lower(l).contains(t)
             return hit
 
-        hits = F.slice(F.filter(lines, has_token), 1, limit)
+        hits = F.slice(F.filter(lines, has_token), 1, 5)
     else:
-        hits = F.slice(F.filter(lines, lambda l: F.lit(False)), 1, limit)
+        hits = F.slice(F.filter(lines, lambda l: F.lit(False)), 1, 5)
     norm_target = F.lit(
         __import__("re").sub(r"[^a-z0-9]+", " ", target.lower()).strip()
     )
@@ -89,7 +89,7 @@ def partial_matches(parsed: Column, target: str, limit: int = 5) -> Column:
                 )
             ),
             1,
-            limit,
+            5,
         ),
         lambda s: s["text"],
     )
@@ -97,7 +97,7 @@ def partial_matches(parsed: Column, target: str, limit: int = 5) -> Column:
 
 
 def text_near_out_of_range(
-    parsed: Column, anchor: str, value: str, within_chars: int, limit: int = 5
+    parsed: Column, anchor: str, value: str, within_chars: int
 ) -> Column:
     """For a failed text_near: up to 5 (anchor excerpt, value match,
     distance) pairs that EXIST but fall outside within_chars
@@ -138,7 +138,7 @@ def text_near_out_of_range(
         F.transform(a_sp, lambda a: F.transform(v_sp, lambda v: pair(a, v)))
     )
     out_of = F.slice(
-        F.filter(pairs, lambda p: p["distance"] > within_chars), 1, limit
+        F.filter(pairs, lambda p: p["distance"] > within_chars), 1, 5
     )
     return F.struct(
         (F.size(a_sp) > 0).alias("anchor_found"),

@@ -38,12 +38,12 @@ from ..dsl.parser import parse_definition
 from ..functions.textstats import GOPHER_STOPWORDS
 
 
-def observe(parsed_df: DataFrame, key_col: str = "url") -> DataFrame:
+def observe(parsed_df: DataFrame) -> DataFrame:
     """Per-doc structural facts (observer.rs:50-240) from the parsed
     struct: one narrow projection, no Python."""
     p = F.col("parsed")
     return parsed_df.select(
-        F.col(key_col).alias("key"),
+        F.col("url").alias("key"),
         F.transform(p["headings"], lambda h: h["text"]).alias("headings"),
         p["page_sections"].alias("page_sections"),
         F.transform(
@@ -275,10 +275,9 @@ def infer_rule(
     fingerprint_id: str,
     format_: str = "html",
     min_confidence: float = 0.8,
-    key_col: str = "url",
 ) -> tuple[FingerprintDefinition, str]:
     """Corpus -> (validated definition, deterministic YAML)."""
-    obs = observe(parsed_df, key_col)
+    obs = observe(parsed_df)
     cands = aggregate_candidates(obs, min_confidence)
     if not cands["assertions"]:
         raise ValueError("no candidate assertions reached min_confidence")

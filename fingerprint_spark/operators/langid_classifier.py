@@ -352,17 +352,18 @@ def train_langid_softmax(
 def train_langid_softmax_py(
     rows: list[tuple[str, str]],
     dim: int = 2048,
-    n: int = 3,
     epochs: int = 8,
     lr: float = 2.0,
     hasher: str = "xxhash",
     grad_round_dp: int = 6,
 ) -> dict:
-    """Pure-Python twin of train_langid_softmax: identical GD
-    arithmetic, identical stable softmax, identical per-epoch HALF_UP
-    gradient rounding — learned weights are bit-identical to the Spark
-    trainer's (the margin-sum order differs only in the last ulp; the
-    rounding absorbs it, same argument as train_quality_logreg_py)."""
+    """Pure-Python twin of train_langid_softmax over char 3-grams:
+    identical GD arithmetic, identical stable softmax, identical
+    per-epoch HALF_UP gradient rounding — learned weights are
+    bit-identical to the Spark trainer's (the margin-sum order differs
+    only in the last ulp; the rounding absorbs it, same argument as
+    train_quality_logreg_py)."""
+    n = 3
     labels = {lbl for _, lbl in rows}
     if not labels:
         raise ValueError("train_langid_softmax_py: empty training set")
@@ -449,13 +450,21 @@ def langid_model_from_json(s: str) -> dict:
             raise ValueError(
                 f"weight index out of range [0, {dim}): {bad[:3]}"
             )
+        # both would otherwise fail only while the quality chains
+        # build their plan (_gid_fn / the gram extractor)
+        ngram = int(m.get("ngram", 3))
+        if ngram < 1:
+            raise ValueError(f"ngram must be >= 1, got {ngram}")
+        hasher = str(m.get("hasher", "xxhash"))
+        if hasher not in ("xxhash", "md5"):
+            raise ValueError(f"unknown feature hasher: {hasher!r}")
         return {
             "classes": classes,
             "weights": weights,
             "bias": bias,
-            "dim": int(m["dim"]),
-            "ngram": int(m.get("ngram", 3)),
-            "hasher": str(m.get("hasher", "xxhash")),
+            "dim": dim,
+            "ngram": ngram,
+            "hasher": hasher,
         }
     except (KeyError, TypeError, AttributeError) as e:
         raise ValueError(f"malformed langid model: {e!r}") from e
@@ -479,12 +488,7 @@ def _model_dense_flat(model: dict) -> list[float]:
     return dense
 
 
-def langid_classify(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "lang_pred",
-) -> DataFrame:
+def langid_classify(df: DataFrame, model: dict) -> DataFrame:
     """Corpus inference, pure Columns: ZERO shuffles, zero joins, zero
     Python. The flattened weight matrix folds into one dense array
     literal (element_at O(1)); per-class margins are L aggregates over
@@ -492,7 +496,8 @@ def langid_classify(
     deterministic tie-break (max prob, ties to the lexicographically
     smallest class — the langid_best nrank trick). The Arrow kernel
     (langid_classify_arrow) is the measured-faster corpus path; this
-    fold is the zero-Python option and the parity anchor."""
+    fold is the zero-Python option and the parity anchor. Reads
+    ``text``, writes ``lang_pred``."""
     classes = model["classes"]
     L = len(classes)
     dim, n = int(model["dim"]), int(model.get("ngram", 3))
@@ -508,7 +513,7 @@ def langid_classify(
     # dim*L; the Arrow kernel (weights in the closure, not the plan) is
     # the corpus-scale path.
     df = df.withColumn(
-        "__lid_feats", gram_features_col(F.col(text_col), dim, n, hasher)
+        "__lid_feats", gram_features_col(F.col("text"), dim, n, hasher)
     )
     init = F.array(*[F.lit(float(b)) for b in model["bias"]])
     if model["weights"]:
@@ -535,7 +540,7 @@ def langid_classify(
     )
     best = F.array_max(pairs)
     return df.withColumn(
-        out_col,
+        "lang_pred",
         F.struct(best["lang"].alias("lang"), best["prob"].alias("prob")),
     ).drop("__lid_feats", "__lid_margins")
 
@@ -590,14 +595,19 @@ def _batch_margins(texts, bias: np.ndarray, weights: np.ndarray,
         yield m
 
 
-def model_micro(model: dict, scale: int = 10**6) -> tuple[list[int], list[int]]:
+_MICRO_SCALE = 10**6  # model_micro's fixed-point unit is 1e-6
+
+
+def model_micro(model: dict) -> tuple[list[int], list[int]]:
     """Fixed-point quantization of the flat weight matrix + bias
-    (HALF_UP at 1/scale): integer margin sums are EXACT in any engine
-    — the perplexity row's micro-logp contract, applied to the softmax.
-    Returns (flat_micro, bias_micro)."""
+    (HALF_UP at 1/_MICRO_SCALE): integer margin sums are EXACT in any
+    engine — the perplexity row's micro-logp contract, applied to the
+    softmax. Returns (flat_micro, bias_micro)."""
     flat = _model_dense_flat(model)
-    fm = [int(_round_half_up(v * scale, 0)) for v in flat]
-    bm = [int(_round_half_up(float(b) * scale, 0)) for b in model["bias"]]
+    fm = [int(_round_half_up(v * _MICRO_SCALE, 0)) for v in flat]
+    bm = [
+        int(_round_half_up(float(b) * _MICRO_SCALE, 0)) for b in model["bias"]
+    ]
     return fm, bm
 
 
@@ -606,7 +616,6 @@ def langid_classify_micro_arrow(
     model: dict,
     text_col: str = "text",
     out_col: str = "lang_pred",
-    scale: int = 10**6,
 ) -> DataFrame:
     """Fixed-point langid kernel (exact int64 margin sums; argmax on
     integers; exp inputs are IEEE-identical doubles) at corpus speed. A
@@ -620,10 +629,10 @@ def langid_classify_micro_arrow(
     L = len(classes)
     dim, n = int(model["dim"]), int(model.get("ngram", 3))
     hasher = model.get("hasher", "xxhash")
-    fm, bm = model_micro(model, scale)
+    fm, bm = model_micro(model)
     weights = np.asarray(fm, dtype=np.int64).reshape(dim, L)
     bias = np.asarray(bm, dtype=np.int64)
-    fscale = float(scale)
+    fscale = float(_MICRO_SCALE)
     gid = _gid_fn(hasher, dim)
     memo: dict = {}  # per-worker, survives batches (worker reuse — r6)
 

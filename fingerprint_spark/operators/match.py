@@ -82,7 +82,6 @@ def child_routing(children: Column) -> Column:
 def match_levels(
     rules: list[FingerprintDefinition],
     env: dict[str, Column],
-    result_col: str = "fingerprint",
 ) -> tuple[dict[str, Column], ...]:
     """The match pass as its dependency levels: the root fold, the
     children (they read the fold's winner), the routing summary (it
@@ -91,10 +90,10 @@ def match_levels(
     level is one projection; the Columns hold no DataFrame, so callers
     may build them once and reuse them."""
     winner = F.when(
-        F.col(f"{result_col}.matched"), F.col(f"{result_col}.fingerprint_id")
+        F.col("fingerprint.matched"), F.col("fingerprint.fingerprint_id")
     )
     levels = (
-        {result_col: first_match_fold(rules, env)},
+        {"fingerprint": first_match_fold(rules, env)},
         {"children": children_array(rules, env, winner)},
         {"child_routing": child_routing(F.col("children"))},
     )

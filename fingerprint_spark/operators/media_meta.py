@@ -110,19 +110,18 @@ def _parse_mp4_inner(payload: bytes) -> dict:
 
 
 def make_mp4(
-    duration_ms: int, width: int | None = None, height: int | None = None,
-    timescale: int = 1000,
+    duration_ms: int, width: int | None = None, height: int | None = None
 ) -> bytes:
-    """Minimal REAL mp4: ftyp + moov(mvhd [+ trak(tkhd+mdia/hdlr)])."""
+    """Minimal REAL mp4: ftyp + moov(mvhd [+ trak(tkhd+mdia/hdlr)]),
+    timescale 1000 (durations in ms)."""
 
     def box(btype: bytes, payload: bytes) -> bytes:
         return struct.pack(">I4s", 8 + len(payload), btype) + payload
 
     ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
-    dur = duration_ms * timescale // 1000
     mvhd = box(
         b"mvhd",
-        struct.pack(">B3xIIII", 0, 0, 0, timescale, dur)
+        struct.pack(">B3xIIII", 0, 0, 0, 1000, duration_ms)
         + b"\x00" * 80,
     )
     traks = b""
@@ -130,7 +129,7 @@ def make_mp4(
         tkhd = box(
             b"tkhd",
             struct.pack(">B3xIIII", 0, 0, 0, 1, 0)
-            + struct.pack(">I", dur)
+            + struct.pack(">I", duration_ms)
             + b"\x00" * 52
             + struct.pack(">II", width << 16, height << 16),
         )
@@ -218,11 +217,11 @@ def parse_mp3(payload: bytes) -> dict:
 
 
 def make_mp3(
-    n_frames: int, bitrate_kbps: int = 128, sample_rate: int = 44100,
-    stereo: bool = True,
+    n_frames: int, bitrate_kbps: int = 128, sample_rate: int = 44100
 ) -> bytes:
-    """Minimal REAL mp3: valid MPEG-1 Layer III frame headers with
-    silent (zero) payloads; byte-walkable by any mp3 header parser."""
+    """Minimal REAL mp3: valid MPEG-1 Layer III stereo frame headers
+    with silent (zero) payloads; byte-walkable by any mp3 header
+    parser."""
     br_idx = _MP3_BITRATES.index(bitrate_kbps)
     sr_idx = _MP3_RATES.index(sample_rate)
     hdr = bytes(
@@ -230,7 +229,7 @@ def make_mp3(
             0xFF,
             0xFB,  # MPEG-1, Layer III, no CRC
             (br_idx << 4) | (sr_idx << 2),
-            (0x00 if stereo else 0x03) << 6,
+            0x00,  # channel mode: stereo
         ]
     )
     frame_len = 144 * bitrate_kbps * 1000 // sample_rate

@@ -254,7 +254,6 @@ def quality_score_arrow(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
-    out_col: str = "quality_prob",
     hasher: str = "xxhash",
 ) -> DataFrame:
     """Arrow-batched inference kernel — the upgrade path named in
@@ -305,7 +304,7 @@ def quality_score_arrow(
             out[i] = 1.0 / (1.0 + math.exp(-m))
         return pd.Series(out)
 
-    return df.withColumn(out_col, score(F.col(text_col)))
+    return df.withColumn("quality_prob", score(F.col(text_col)))
 
 
 _TOKEN_SPLIT = None
@@ -430,7 +429,6 @@ def quality_score(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
-    out_col: str = "quality_prob",
     hasher: str = "xxhash",
 ) -> DataFrame:
     """Corpus inference pass — the 10^12-doc side: the weight vector
@@ -460,6 +458,6 @@ def quality_score(
         "__feats", _features_col(F.col(text_col), model["dim"], hasher)
     )
     prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-    return feats.withColumn(out_col, prob).drop("__feats")
+    return feats.withColumn("quality_prob", prob).drop("__feats")
 
 

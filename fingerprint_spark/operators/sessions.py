@@ -20,19 +20,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    gap_s: int = 1800,
-) -> DataFrame:
-    """Add ``session_index`` (1-based per user) to every event."""
-    w = W.partitionBy(user_col).orderBy(ts_col, order_col)
-    prev = F.lag(F.unix_timestamp(F.col(ts_col))).over(w)
+def sessionize(df: DataFrame, gap_s: int) -> DataFrame:
+    """Add ``session_index`` (1-based per user_id) to every
+    (user_id, ts, event_id) event."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag(F.unix_timestamp(F.col("ts"))).over(w)
     new_session = (
         prev.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - prev) > gap_s)
+        | ((F.unix_timestamp(F.col("ts")) - prev) > gap_s)
     ).cast("int")
     return df.withColumn(
         "session_index",
@@ -42,18 +37,12 @@ def sessionize(
     )
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    gap_s: int = 1800,
-) -> DataFrame:
-    """One row per (user, session): event count, span, first event."""
-    s = sessionize(df, user_col, ts_col, order_col, gap_s)
-    return s.groupBy(user_col, "session_index").agg(
+def session_stats(df: DataFrame, gap_s: int = 1800) -> DataFrame:
+    """One row per (user_id, session): event count, span, first event."""
+    s = sessionize(df, gap_s)
+    return s.groupBy("user_id", "session_index").agg(
         F.count("*").alias("n_events"),
-        F.min(F.unix_timestamp(F.col(ts_col))).alias("start_epoch"),
-        F.max(F.unix_timestamp(F.col(ts_col))).alias("end_epoch"),
-        F.min(order_col).alias("first_event"),
+        F.min(F.unix_timestamp(F.col("ts"))).alias("start_epoch"),
+        F.max(F.unix_timestamp(F.col("ts"))).alias("end_epoch"),
+        F.min("event_id").alias("first_event"),
     )

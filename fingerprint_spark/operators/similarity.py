@@ -7,8 +7,8 @@
   deterministically, vectors assigned to nearest centroid (one narrow
   pass), queries probe ``n_probe`` nearest cells only.
 
-All arithmetic is JVM-side (zip_with/aggregate); no Python in the hot
-path.
+Vectors are the ``embedding`` array column, keyed by ``vec_id``. All
+arithmetic is JVM-side (zip_with/aggregate); no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -42,8 +42,6 @@ def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Exact brute-force top-k: (key, cosine, rank), deterministic
@@ -53,11 +51,11 @@ def cosine_topk(
     recomputes the same rounded scores, so last-ulp float divergence
     cannot flip a rank)."""
     q = _as_double_array(query_vec)
-    cos = _cosine(F.col(emb_col), q)
+    cos = _cosine(F.col("embedding"), q)
     if round_dp is not None:
         cos = F.round(cos, round_dp)
     scored = df.select(
-        F.col(key_col).alias("key"),
+        F.col("vec_id").alias("key"),
         cos.alias("cosine"),
     )
     # TakeOrderedAndProject + k-row rank window (operators/topk.py);
@@ -68,7 +66,6 @@ def cosine_topk(
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
-    emb_col: str = "embedding",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (cell) — one narrow
@@ -78,7 +75,7 @@ def ivf_assign(
     contract (see cosine_topk)."""
 
     def _score(c):
-        cos = _cosine(F.col(emb_col), _as_double_array(c))
+        cos = _cosine(F.col("embedding"), _as_double_array(c))
         return F.round(cos, round_dp) if round_dp is not None else cos
 
     scored = F.array(
@@ -94,13 +91,11 @@ def ivf_assign(
     return df.withColumn("cell", best["cell"])
 
 
-def sample_centroids(
-    df: DataFrame, n_cells: int, emb_col: str = "embedding", key_col: str = "vec_id"
-) -> list[list[float]]:
+def sample_centroids(df: DataFrame, n_cells: int) -> list[list[float]]:
     """Deterministic centroid choice: the n_cells vectors with the
     smallest xxhash64(key) — a seeded uniform sample without RNG state."""
     rows = (
-        df.select(F.col(key_col).alias("k"), F.col(emb_col).alias("e"))
+        df.select(F.col("vec_id").alias("k"), F.col("embedding").alias("e"))
         .withColumn("h", F.xxhash64("k"))
         .orderBy("h")
         .limit(n_cells)
@@ -109,19 +104,14 @@ def sample_centroids(
     return [[float(x) for x in r["e"]] for r in rows]
 
 
-def sample_centroids_md5(
-    df: DataFrame,
-    n_cells: int,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
-) -> list[list[float]]:
+def sample_centroids_md5(df: DataFrame, n_cells: int) -> list[list[float]]:
     """Portable-contract centroid sample: the n_cells vectors with the
     smallest (md5-prefix of the key string, key) — same uniform-sample
     idea as sample_centroids but recomputable in any engine with md5
     (the ann_recall oracle recomputes it in DuckDB; xxhash64 is
     Spark-only)."""
     rows = (
-        df.select(F.col(key_col).alias("k"), F.col(emb_col).alias("e"))
+        df.select(F.col("vec_id").alias("k"), F.col("embedding").alias("e"))
         .withColumn(
             "h",
             F.expr(
@@ -140,8 +130,6 @@ def kmeans_centroids(
     df: DataFrame,
     n_cells: int,
     n_iter: int = 3,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
     seeds: list[list[float]] | None = None,
     round_dp: int | None = None,
 ) -> list[list[float]]:
@@ -158,14 +146,14 @@ def kmeans_centroids(
     cents = (
         [list(map(float, s)) for s in seeds]
         if seeds is not None
-        else sample_centroids(df, n_cells, emb_col, key_col)
+        else sample_centroids(df, n_cells)
     )
     dim = len(cents[0]) if cents else 0
     for _ in range(n_iter):
-        assigned = ivf_assign(df, cents, emb_col, round_dp=round_dp)
+        assigned = ivf_assign(df, cents, round_dp=round_dp)
         means = (
             assigned.select(
-                "cell", F.posexplode(F.col(emb_col)).alias("dim", "val")
+                "cell", F.posexplode(F.col("embedding")).alias("dim", "val")
             )
             .groupBy("cell", "dim")
             .agg(F.avg(F.col("val").cast("double")).alias("m"))
@@ -197,8 +185,6 @@ def ivf_topk(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 2,
-    emb_col: str = "embedding",
-    key_col: str = "vec_id",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Probe the n_probe cells nearest to the query (un-normalized dot,
@@ -215,7 +201,7 @@ def ivf_topk(
     )
     probe_cells = [i for _s, i in sims[:n_probe]]
     cand = assigned.filter(F.col("cell").isin(probe_cells))
-    return cosine_topk(cand, query_vec, k, emb_col, key_col, round_dp=round_dp)
+    return cosine_topk(cand, query_vec, k, round_dp=round_dp)
 
 
 def clustered_embeddings(
@@ -279,16 +265,16 @@ def ivf_recall_curve(
     n_cells: int,
     n_probes: list[int],
     n_queries: int = 10,
-    k: int = 10,
-    n_iter: int = 1,
 ) -> list[dict]:
-    """Measured recall@k of the IVF probe path vs exact brute force,
-    per n_probe, plus the probed corpus fraction — the probe-fraction/
-    recall curve the index quality is judged by. Queries are vec_id
+    """Measured recall@k (k = 10) of the IVF probe path vs exact brute
+    force, per n_probe, plus the probed corpus fraction — the
+    probe-fraction/recall curve the index quality is judged by.
+    Centroids get one Lloyd iteration. Queries are vec_id
     0..n_queries-1 (excluded from their own candidate sets)."""
+    k = 10
     df = df.select("vec_id", "embedding")
     seeds = sample_centroids_md5(df, n_cells)
-    cents = kmeans_centroids(df, n_cells, n_iter=n_iter, seeds=seeds)
+    cents = kmeans_centroids(df, n_cells, n_iter=1, seeds=seeds)
     assigned = ivf_assign(df, cents).localCheckpoint(eager=True)
     n_total = assigned.count()
     cell_sizes = {

@@ -33,11 +33,11 @@ def _glob_re(g: str) -> str:
     return fnmatch.translate(g).replace("\\Z", "$")
 
 
-def dirs_from_manifest(manifest: DataFrame, path_col: str = "path") -> DataFrame:
-    """(dir, files: array<string>) from a flat file manifest
-    (checker.rs:78-146). Files are sort_array'd for deterministic
+def dirs_from_manifest(manifest: DataFrame) -> DataFrame:
+    """(dir, files: array<string>) from a flat file manifest's ``path``
+    column (checker.rs:78-146). Files are sort_array'd for deterministic
     downstream output."""
-    p = F.col(path_col)
+    p = F.col("path")
     return (
         manifest.select(
             F.regexp_extract(p, r"^(.*)/[^/]+$", 1).alias("dir"),
@@ -95,11 +95,9 @@ def check_rule(dirs: DataFrame, rule: StructRule) -> DataFrame:
     )
 
 
-def struct_check(
-    manifest: DataFrame, rules: list[StructRule], path_col: str = "path"
-) -> DataFrame:
+def struct_check(manifest: DataFrame, rules: list[StructRule]) -> DataFrame:
     """All rules -> union of per-dir outcomes, deterministic order."""
-    dirs = dirs_from_manifest(manifest, path_col)
+    dirs = dirs_from_manifest(manifest)
     out = None
     for r in rules:
         part = check_rule(dirs, r)

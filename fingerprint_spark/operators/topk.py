@@ -36,7 +36,6 @@ def ranked_topk(
     order: list[Column],
     k: int,
     key: Column | str = "key",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Global top-k of ``scored`` by ``order`` (give a deterministic
     tie-break as the last order column) with a 1-based ``rank`` column;
@@ -49,4 +48,4 @@ def ranked_topk(
     key = F.col(key) if isinstance(key, str) else key
     top = scored.orderBy(*order).limit(k)
     w = W.partitionBy(_nonfoldable_zero(key)).orderBy(*order)
-    return top.withColumn(rank_col, F.row_number().over(w))
+    return top.withColumn("rank", F.row_number().over(w))

@@ -82,7 +82,7 @@ def enrich_type():
 
 
 @context_cached(maxsize=4)
-def _enrich_udf(model, simhash_k: int):
+def _enrich_udf(model):
     from ..functions.hashing import simhash64_batch_py
     from ..functions.langid import marker_langid_batch
     from ..functions.perplexity import score_text_fast_fn
@@ -105,7 +105,7 @@ def _enrich_udf(model, simhash_k: int):
             {
                 "parsed": parsed_col,
                 "ppl": [score(t) for t in texts],
-                "simhash": simhash64_batch_py(texts, simhash_k),
+                "simhash": simhash64_batch_py(texts),
                 # NULL text scores (und, NULL), as langid_best does
                 "lid": [
                     {"lang": lang, "score": s}
@@ -117,7 +117,8 @@ def _enrich_udf(model, simhash_k: int):
     return udf
 
 
-def enrich_col(html: Column, model, simhash_k: int = 3) -> Column:
-    """html -> struct(parsed, ppl, simhash, lid) in one vectorized pass;
-    lid is the marker-word language ID of parsed.normalized."""
-    return _enrich_udf(model, simhash_k)(html)
+def enrich_col(html: Column, model) -> Column:
+    """html -> struct(parsed, ppl, simhash over 3-word shingles, lid) in
+    one vectorized pass; lid is the marker-word language ID of
+    parsed.normalized."""
+    return _enrich_udf(model)(html)

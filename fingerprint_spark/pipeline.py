@@ -33,11 +33,12 @@ Execution shape (the 100 TB design):
 Driver-side build shape: every ``F.*`` call is a py4j round trip and
 every ``withColumn`` re-analyses the whole plan, so the chains are NOT
 rebuilt per call. Each stage's Columns are built once and memoized in
-``_STAGES``, a bounded LRU keyed on the live SparkContext and the
-parameters that shape the expressions (rules, ppl model, target_lang,
-ppl_threshold, html_col / text_col, package version); Columns are
-unresolved expressions, so one tree serves every DataFrame (each
-checkpoint bucket, each revalidate). The stages are applied as ONE
+``_STAGES``, a bounded LRU keyed on the live SparkContext, the package
+version and the arguments that shape the expressions (quality_filter:
+the rules; quality_filter_text: text_col, ppl_threshold and the ppl
+model; revalidate: the rules and whether the frame has warc_ts).
+Columns are unresolved expressions, so one tree serves every DataFrame
+(each checkpoint bucket, each revalidate). The stages are applied as ONE
 ``withColumns`` per dependency level — the levels are the Projects the
 optimizer settles on, so the optimized plan equals the per-column
 chain's (pinned by tests/fixtures/plans). The cache drops its entries
@@ -92,13 +93,11 @@ def default_ppl_model() -> NGramModel:
     return train_char_ngram(texts, order=3)
 
 
-def _drop_reason(
-    target_lang: str, ppl_threshold: float, template: bool, ppl: bool
-) -> Column:
+def _drop_reason(ppl_threshold: float, template: bool, ppl: bool) -> Column:
     """The first failing stage's drop_reason, NULL when every stage
     passes (the stage-order analog of assertion declaration-order
-    short-circuit): template match (the html chain) -> langid ->
-    perplexity (when the chain scores it) -> the first failing Gopher
+    short-circuit): template match (the html chain) -> langid (the
+    target language is en) -> perplexity (when the chain scores it) -> the first failing Gopher
     flag in rule order."""
     lang = F.col("lang_detected")
     heur_fail = F.coalesce(
@@ -111,7 +110,7 @@ def _drop_reason(
         clauses.append(
             (fp["matched"], F.concat(F.lit("template:"), fp["fingerprint_id"]))
         )
-    clauses.append((lang != target_lang, F.concat(F.lit("langid:"), lang)))
+    clauses.append((lang != "en", F.concat(F.lit("langid:"), lang)))
     if ppl:
         clauses.append((F.col("ppl") > ppl_threshold, F.lit("perplexity")))
     clauses.append(
@@ -208,10 +207,6 @@ def _apply_levels(
 def quality_filter(
     df: DataFrame,
     rules: list[FingerprintDefinition] | None = None,
-    ppl_model: NGramModel | None = None,
-    target_lang: str = "en",
-    ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
-    html_col: str = "html",
     langid_model: dict | None = None,
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
@@ -233,13 +228,8 @@ def quality_filter(
     # constant-fold the format gate at the driver: only html rules can
     # match an html corpus (enricher.rs:455-468 done at compile time)
     rules = tuple(r for r in rules if r.format == "html")
-    model = ppl_model or default_ppl_model()
-    # ppl_threshold's type is keyed too: 36 and 36.0 are equal keys but
-    # build different literals (and so different plans)
     levels = _STAGES.get(
-        ("quality_filter", rules, model, target_lang, ppl_threshold,
-         type(ppl_threshold), html_col, __version__),
-        lambda: _html_levels(rules, model, target_lang, ppl_threshold, html_col),
+        ("quality_filter", rules, __version__), lambda: _html_levels(rules)
     )
     return _apply_levels(df, levels, _trained_langid(
         "extracted_text", langid_model, langid_threshold
@@ -248,10 +238,6 @@ def quality_filter(
 
 def _html_levels(
     rules: tuple[FingerprintDefinition, ...],
-    model: NGramModel,
-    target_lang: str,
-    ppl_threshold: float,
-    html_col: str,
 ) -> tuple[dict[str, Column], ...]:
     """quality_filter's stages as projection levels. A column reads only
     columns of earlier levels, and each level is the Project the
@@ -265,7 +251,7 @@ def _html_levels(
     *tail, verdict = _tail_levels(
         F.col("extracted_text"),
         {**routing, "_lid": F.col("_enriched.lid")},
-        _drop_reason(target_lang, ppl_threshold, template=True, ppl=True),
+        _drop_reason(DEFAULT_PPL_THRESHOLD, template=True, ppl=True),
     )
     # lifecycle: parse failures are skips with warnings, never task
     # failures (enricher.rs:145-159 E_PARSE); skipped docs drop with an
@@ -276,7 +262,7 @@ def _html_levels(
         # perplexity + simhash + marker-word language ID in a single
         # Arrow-batched UDF (separate chained UDFs would double the
         # Python worker pool and re-serialize the parsed struct)
-        {"_enriched": enrich_col(F.col(html_col), model)},
+        {"_enriched": enrich_col(F.col("html"), default_ppl_model())},
         # (stage 3, perplexity, is computed in the enrich pass)
         {
             "parsed": F.col("_enriched.parsed"),
@@ -321,7 +307,6 @@ def _match_env(ts: bool) -> dict[str, Column]:
 def quality_filter_text(
     df: DataFrame,
     text_col: str = "text",
-    target_lang: str = "en",
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
     ppl_model: NGramModel | None = None,
     langid_model: dict | None = None,
@@ -349,9 +334,11 @@ def quality_filter_text(
     where that matters (the oracle row).
     """
     levels = _STAGES.get(
-        ("quality_filter_text", text_col, target_lang, ppl_threshold,
-         type(ppl_threshold), ppl_model, __version__),
-        lambda: _text_levels(text_col, target_lang, ppl_threshold, ppl_model),
+        # ppl_threshold's type is keyed too: 36 and 36.0 are equal keys
+        # but build different literals (and so different plans)
+        ("quality_filter_text", text_col, ppl_threshold, type(ppl_threshold),
+         ppl_model, __version__),
+        lambda: _text_levels(text_col, ppl_threshold, ppl_model),
     )
     return _apply_levels(df, levels, _trained_langid(
         text_col, langid_model, langid_threshold
@@ -360,7 +347,6 @@ def quality_filter_text(
 
 def _text_levels(
     text_col: str,
-    target_lang: str,
     ppl_threshold: float,
     ppl_model: NGramModel | None,
 ) -> tuple[dict[str, Column], ...]:
@@ -371,14 +357,13 @@ def _text_levels(
     if ppl_model is not None:
         first["ppl"] = perplexity_col(text, ppl_model)
     return _tail_levels(text, first, _drop_reason(
-        target_lang, ppl_threshold, template=False, ppl=ppl_model is not None
+        ppl_threshold, template=False, ppl=ppl_model is not None
     ))
 
 
 def revalidate(
     parsed_df: DataFrame,
     rules: list[FingerprintDefinition],
-    result_col: str = "fingerprint",
 ) -> DataFrame:
     """Incremental template re-validation (north_star requirement).
 
@@ -393,15 +378,15 @@ def revalidate(
     (operators.extract), so a rule set that declares one adds an
     Arrow stage, still with no re-parse.
 
-    Returns the input columns plus the match_levels columns: fingerprint
-    (or ``result_col``), children, child_routing, and extracted,
+    Returns the input columns plus the match_levels columns: fingerprint,
+    children, child_routing, and extracted,
     content_hash, child_content_hash when a rule declares extract.
     """
     rules = tuple(r for r in rules if r.format == "html")
     has_ts = "warc_ts" in parsed_df.columns
     levels = _STAGES.get(
-        ("revalidate", rules, has_ts, result_col, __version__),
-        lambda: match_levels(rules, _match_env(has_ts), result_col),
+        ("revalidate", rules, has_ts, __version__),
+        lambda: match_levels(rules, _match_env(has_ts)),
     )
     for level in levels:
         parsed_df = parsed_df.withColumns(level)

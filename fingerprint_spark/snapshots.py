@@ -296,24 +296,24 @@ class SnapshotConflict(RuntimeError):
     the concurrent writer's changes)."""
 
 
+_MAX_COMMIT_RETRIES = 50
+# how long a race loser waits for the winner's manifest to appear before
+# concluding the claim is stale
+_PUBLISH_WAIT_SECS = 10.0
+
+
 def commit_snapshot(
     df: DataFrame,
     table_path: str,
     mode: str = "append",
-    max_retries: int = 50,
-    publish_wait_secs: float = 10.0,
     expected_parent: int | None = None,
 ) -> dict:
     """Write df's rows as new immutable data files + publish the next
     snapshot manifest atomically. mode='append' carries the parent's
     file list forward; 'overwrite' starts fresh (the old files stay on
     disk — pinned readers of older snapshots keep working; nothing
-    reclaims them yet). Returns the committed manifest.
-
-    publish_wait_secs: how long a race loser waits for the winner's
-    manifest to appear before concluding the claim is stale. Raise it
-    on slow object stores where writing a huge manifest between claim
-    and rename can legitimately exceed the default.
+    reclaims them yet). Returns the committed manifest. A commit that
+    loses the publish race retries on the next id, up to 50 times.
 
     expected_parent: compare-and-swap guard for read-modify-write
     commits — raise SnapshotConflict (instead of silently retrying on
@@ -335,7 +335,7 @@ def commit_snapshot(
     spark = df.sparkSession
     n_new = spark.read.schema(df.schema).parquet(data_dir).count()
 
-    for _ in range(max_retries):
+    for _ in range(_MAX_COMMIT_RETRIES):
         parent = current_snapshot_id(table_path, fs)
         if expected_parent is not None and parent != expected_parent:
             raise SnapshotConflict(
@@ -379,23 +379,22 @@ def commit_snapshot(
         # the Hadoop claim+rename backend has a tiny claim->rename
         # window — and a writer that CRASHED between claim and rename
         # would wedge the id forever, so surface that as an actionable
-        # error instead of spinning through max_retries
-        deadline = time.monotonic() + publish_wait_secs
+        # error instead of spinning through the retries
+        deadline = time.monotonic() + _PUBLISH_WAIT_SECS
         while not fs.exists(final):
             if time.monotonic() > deadline:
                 raise RuntimeError(
                     f"snapshot id {snapshot_id} of {table_path} is "
                     f"claimed but not yet published after "
-                    f"{publish_wait_secs}s — either a writer crashed "
+                    f"{_PUBLISH_WAIT_SECS}s — either a writer crashed "
                     f"mid-commit (then remove the stale "
                     f"'{final}.claim' to unblock the table) or a live "
-                    f"writer is slower than publish_wait_secs (then "
-                    f"retry with a larger value; do NOT remove a live "
-                    f"writer's claim)"
+                    f"writer is still publishing (then retry; do NOT "
+                    f"remove a live writer's claim)"
                 )
             time.sleep(0.025)
     raise RuntimeError(
-        f"commit_snapshot: lost the publish race {max_retries} times "
+        f"commit_snapshot: lost the publish race {_MAX_COMMIT_RETRIES} times "
         f"on {table_path}"
     )
 

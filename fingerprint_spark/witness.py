@@ -34,7 +34,6 @@ def append_witness(
     params: dict,
     outcome: str,
     exit_code: int = 0,
-    output_hash: str | None = None,
     path: str | None = None,
 ) -> dict:
     """Append one receipt; returns the record (record.rs:7-71)."""
@@ -50,7 +49,7 @@ def append_witness(
         "params": params,
         "outcome": outcome,
         "exit_code": exit_code,
-        "output_hash": output_hash,
+        "output_hash": None,  # record.rs field; no output is hashed yet
         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     os.makedirs(os.path.dirname(path), exist_ok=True)

@@ -86,43 +86,6 @@ def test_parameter_mismatch_refused(spark):
         bloom_probe(_urls(spark, 0, 10), bloom, "url", N_BITS, K + 1)
 
 
-def test_bloom_probe_works_on_a_stream(spark, tmp_path):
-    """The crawl-frontier shape: a STREAM of discovered URLs probed
-    against a static snapshot filter — stream-static broadcast joins
-    are supported by Structured Streaming, so bloom_probe composes
-    with readStream unchanged (stateless: no watermark, no state
-    store)."""
-    seen = _urls(spark, 0, 1000)
-    bloom = bloom_build(seen, "url", N_BITS, K).persist()
-    bloom.count()
-
-    src = str(tmp_path / "src")
-    _urls(spark, 500, 1500).coalesce(1).write.parquet(src)
-    stream = (
-        spark.readStream.schema("url string").parquet(src)
-    )
-    probed = bloom_probe(stream, bloom, "url", N_BITS, K)
-    q = (
-        probed.filter("maybe_member = 0")
-        .writeStream.format("memory")
-        .queryName("frontier")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        assert q.awaitTermination(240)
-    finally:
-        q.stop()
-    got = {r["url"] for r in spark.sql("SELECT * FROM frontier").collect()}
-    # streaming emits exactly the unseen tail (no FN; FP may only
-    # shrink it, not grow it)
-    assert all(int(u.rsplit("/", 1)[1]) >= 1000 for u in got)
-    assert len(got) >= 495
-    bloom.unpersist()
-
-
 def test_sharded_probe_parity_with_broadcast(spark):
     """VERDICT r4 #1: the beyond-broadcast path must be output-
     identical to the broadcast path (the decontam-guard contract)."""
@@ -274,18 +237,3 @@ def test_bloom_filter_persists_as_snapshot_table(spark, tmp_path):
     final = read_snapshot(spark, t)
     probed = bloom_probe(_urls(spark, 0, 1200), final, "url", N_BITS, K)
     assert probed.filter("maybe_member = 0").count() == 0
-
-
-def test_streaming_beyond_cap_auto_refused(spark, tmp_path):
-    """Review finding r5b: a STREAMING probe whose filter is beyond
-    the broadcast cap must refuse loudly on the auto path too —
-    silently broadcasting a beyond-cap filter is the failure the
-    guard exists to prevent."""
-    bloom = bloom_build(_urls(spark, 0, 50), "url", 1 << 32, K)
-    src = str(tmp_path / "src")
-    _urls(spark, 0, 10).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("url string").parquet(src)
-    with pytest.raises(ValueError, match="beyond"):
-        bloom_probe(stream, bloom, "url", 1 << 32, K)
-    with pytest.raises(ValueError, match="batch-only"):
-        bloom_probe(stream, bloom, "url", 1 << 32, K, strategy="sharded")

@@ -136,3 +136,25 @@ def test_observe_metrics_single_pass(spark, corpus):
     assert m["scrub_email"] > 0            # pii pages scrubbed
     hist_total = sum(v for k, v in m.items() if k.startswith("ppl_"))
     assert hist_total == N
+
+
+def test_observe_template_hits_per_rule(spark, corpus):
+    """observe_pipeline(rule_ids=...) emits one hits_<id> counter per
+    rule ("template hits per version"), each equal to a groupBy count
+    of the matched fingerprint_id; a rule that matches nothing reads 0."""
+    qf = quality_filter(corpus)
+    want = {
+        r["id"]: r["n"]
+        for r in qf.filter("fingerprint.matched")
+        .groupBy(F.col("fingerprint.fingerprint_id").alias("id"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert want  # the spam pages match templates
+    rule_ids = sorted(want) + ["no-such-rule.v1"]
+    out, obs = observe_pipeline(qf, name="hits_per_rule", rule_ids=rule_ids)
+    out.write.mode("overwrite").format("noop").save()
+    m = obs.get
+    for rid in rule_ids:
+        assert m[f"hits_{rid.replace('.', '_')}"] == want.get(rid, 0), rid
+    assert sum(want.values()) == m["template_hits"]

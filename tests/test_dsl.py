@@ -102,6 +102,35 @@ content_hash:
         validate_definition(parse_yaml(bad))
 
 
+def test_validate_range_extract_gating():
+    """A range extract reads decoded sheets: valid only on xlsx/csv
+    rules, with an A1 range; an html rule's range extract would
+    otherwise reach the match plan and fail there."""
+    rule = """
+fingerprint_id: x.v1
+format: {fmt}
+assertions:
+  - {assertion}
+extract:
+  - name: r1
+    range: {{sheet: "S", range: "{rng}"}}
+"""
+    html = rule.format(fmt="html", assertion='text_regex: {pattern: "x"}',
+                       rng="A1:B2")
+    with pytest.raises(ValidationError, match="range only valid") as e:
+        validate_definition(parse_yaml(html))
+    assert e.value.code == "E_INVALID_YAML"
+    sheet = 'sheet_exists: {sheet: "S"}'
+    with pytest.raises(ValidationError, match="bad A1 range") as e:
+        validate_definition(
+            parse_yaml(rule.format(fmt="xlsx", assertion=sheet, rng="A1-B2"))
+        )
+    assert e.value.code == "E_INVALID_YAML"
+    validate_definition(
+        parse_yaml(rule.format(fmt="xlsx", assertion=sheet, rng="A1:B2"))
+    )
+
+
 def test_registry_duplicate_refusal():
     reg = Registry(builtin_rules())
     with pytest.raises(RegistryError) as e:

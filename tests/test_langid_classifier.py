@@ -294,6 +294,12 @@ def test_langid_model_validation_refusals(spark):
                         "weights": {}}))
     with pytest.raises(ValueError, match="out of range"):
         _model_dense_flat({**base, "weights": {-1: [1.0, 2.0]}})
+    with pytest.raises(ValueError, match="unknown feature hasher"):
+        langid_model_from_json(
+            json.dumps({**base, "hasher": "sha1", "weights": {}}))
+    with pytest.raises(ValueError, match="ngram must be >= 1"):
+        langid_model_from_json(
+            json.dumps({**base, "ngram": 0, "weights": {}}))
 
     with pytest.raises(ValueError, match="NULL"):
         train_langid_softmax(

@@ -19,8 +19,16 @@ A second check covers parameters: every parameter of a package function
 (methods and nested functions included) must be read by its body, save
 the commented allowlist ``UNREAD_PARAMS``.
 
+A third check covers options: every defaulted parameter of a package
+function must be supplied, by keyword or by position, at some call site
+in the package, the entry points or ``tests/``, save the commented
+allowlist ``UNSET_OPTIONS``. An option no caller sets is a constant.
+Calls are matched by name: ``f(...)`` to functions, ``x.f(...)`` to
+methods and functions, a class call to its ``__init__``; a call that
+passes ``*args`` or ``**kwargs`` supplies every parameter.
+
 Run ``python tests/test_no_dead_code.py`` to print the dead definitions
-with their line counts.
+with their line counts, the unread parameters and the unset options.
 """
 
 from __future__ import annotations
@@ -60,6 +68,9 @@ UNREAD_PARAMS = {
     ("handle_starttag", "attrs"),  # HTMLParser calls it with (tag, attrs)
     ("release_tracked", "spark"),  # the benchmark harnesses pass the session
 }
+
+# Defaulted parameters no call site supplies, as (function, parameter).
+UNSET_OPTIONS: set[tuple[str, str]] = set()
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -220,6 +231,98 @@ def test_package_functions_read_every_parameter():
     assert not stale, f"allowlisted parameters that are read now: {stale}"
 
 
+def _functions(tree: ast.Module):
+    """(qualified name, class name or None, positional offset, node) of
+    every function in ``tree``; the class is set for methods only, and
+    the offset is 1 where the call omits self/cls."""
+    found = []
+
+    def visit(node: ast.AST, cls: str | None, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in child.decorator_list
+                )
+                offset = int(cls is not None and not static)
+                found.append((prefix + child.name, cls, offset, child))
+                visit(child, None, f"{prefix}{child.name}.")
+            elif isinstance(child, ast.ClassDef):
+                visit(child, child.name, f"{prefix}{child.name}.")
+            else:
+                visit(child, cls, prefix)
+
+    visit(tree, None, "")
+    return found
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None when keyword-only, name) of each parameter
+    with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (None, p.arg)
+        for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _supplies(call: ast.Call, offset: int, position: int | None, name: str) -> bool:
+    if any(isinstance(x, ast.Starred) for x in call.args):
+        return True
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    return position is not None and 0 <= position - offset < len(call.args)
+
+
+def unset_options() -> list[tuple[str, str, str]]:
+    """(module path, function, parameter) of every defaulted parameter
+    of a package function that no call site supplies."""
+    by_name: dict[str, list[ast.Call]] = {}
+    by_attr: dict[str, list[ast.Call]] = {}
+    for path in _py_files([PACKAGE, *ENTRY_POINTS, TESTS]):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                if isinstance(f, ast.Name):
+                    by_name.setdefault(f.id, []).append(node)
+                elif isinstance(f, ast.Attribute):
+                    by_attr.setdefault(f.attr, []).append(node)
+    found = []
+    for path in _py_files([PACKAGE]):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for qual, cls, offset, fn in _functions(tree):
+            if cls is None:
+                # a function: f(...) or module.f(...)
+                calls = by_name.get(fn.name, []) + by_attr.get(fn.name, [])
+            elif fn.name == "__init__":
+                calls = by_name.get(cls, []) + by_attr.get(cls, [])
+            else:
+                calls = by_attr.get(fn.name, [])
+            found += [
+                (str(path.relative_to(ROOT)), qual, name)
+                for position, name in _defaulted(fn)
+                if not any(_supplies(c, offset, position, name) for c in calls)
+            ]
+    return sorted(found)
+
+
+def test_package_options_are_set():
+    found = unset_options()
+    unset = [f for f in found if f[1:] not in UNSET_OPTIONS]
+    listing = "\n".join(f"  {p}:{f}({a})" for p, f, a in unset)
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no call site supplies "
+        f"(make each a constant):\n{listing}"
+    )
+    stale = UNSET_OPTIONS - {f[1:] for f in found}
+    assert not stale, f"allowlisted options that a call sets now: {stale}"
+
+
 if __name__ == "__main__":
     rows = dead_definitions()
     for p, n, k in rows:
@@ -227,3 +330,7 @@ if __name__ == "__main__":
     print(f"{len(rows)} dead definitions, {sum(k for *_, k in rows)} lines")
     for p, f, a in unread_parameters():
         print(f"{p}:{f}({a}) unread")
+    options = unset_options()
+    for p, f, a in options:
+        print(f"{p}:{f}({a}) unset")
+    print(f"{len(options)} options no call site sets")

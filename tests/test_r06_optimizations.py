@@ -155,6 +155,48 @@ def test_sketch_md5_batch_matches_reference():
         assert mins[i] == ref_min, (i, t)
 
 
+def test_worker_memos_overflow_keep_outputs(monkeypatch):
+    """The worker memos are cleared when they pass their cap. With each
+    cap at 1 every batch overflows, and the outputs must still equal
+    the per-doc reference (sketch) and a fresh memo (langid margins)."""
+    import numpy as np
+
+    from fingerprint_spark.functions import hashing
+    from fingerprint_spark.operators import langid_classifier as lc
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox naps under the busy dog",
+        "der schnelle braune fuchs springt",
+        "",
+        None,
+        "a b a b a b a b",
+    ]
+    seeds = (0, 7, 15)
+    want = [hashing.sketch_md5_py(t, seeds, 3) for t in texts]
+    uncapped: dict = {}
+    hashing._sketch_md5_batch(texts, seeds, 3, uncapped)
+    monkeypatch.setattr(hashing, "_SKETCH_MEMO_CAP", 1)
+    memo: dict = {}
+    for _batch in range(2):
+        sims, mins = hashing._sketch_md5_batch(texts, seeds, 3, memo)
+        assert list(zip(sims, mins)) == want
+    assert len(memo) < len(uncapped)  # the capped memo was cleared
+
+    model = lc.train_langid_softmax_py(lc.LANGID_TRAIN_FIXTURE, dim=256, epochs=2)
+    L = len(model["classes"])
+    weights = np.asarray(lc._model_dense_flat(model)).reshape(256, L)
+    bias = np.asarray([float(b) for b in model["bias"]])
+    gid = lc._gid_fn(model["hasher"], 256)
+    fresh = list(lc._batch_margins(texts, bias, weights, 3, gid))
+    monkeypatch.setattr(lc, "_GRAM_MEMO_CAP", 1)
+    memo = {}
+    for _batch in range(2):
+        got = list(lc._batch_margins(texts, bias, weights, 3, gid, memo))
+        assert all(np.array_equal(g, f) for g, f in zip(got, fresh))
+        assert len(got) == len(texts)
+
+
 def _corpus_texts(sf_dir: str, limit: int | None = None) -> list:
     """The text column of the sf_dir documents table; skips the test
     when the table is not there."""
