@@ -97,7 +97,9 @@ _REQUIRED_PARAMS: dict[str, list[str]] = {
 
 def _check_a1_range(what: str, rng) -> None:
     if rng is not None and not re.fullmatch(f"{_A1}:{_A1}", str(rng)):
-        raise ValidationError("E_INVALID_YAML", f"{what}: bad A1 range {rng!r}")
+        raise ValidationError(
+            "E_INVALID_YAML", f"{what}: bad A1 range {rng!r}"
+        )
 
 
 def validate_definition(d: FingerprintDefinition) -> None:
@@ -175,20 +177,21 @@ def validate_definition(d: FingerprintDefinition) -> None:
     if len(extract_names) != len(d.extract):
         raise ValidationError("E_INVALID_YAML", "duplicate extract names")
     for e in d.extract:
+        if e.type != "range":
+            continue
         # a range extract reads the decoded sheets, which only a
         # spreadsheet rule's match has (the SPREADSHEET_ONLY gate)
-        if e.type == "range" and d.format not in ("xlsx", "csv"):
+        if d.format not in ("xlsx", "csv"):
             raise ValidationError(
                 "E_INVALID_YAML",
                 f"extract {e.name}: range only valid for xlsx/csv formats",
             )
-        if e.type == "range":
-            missing = [p for p in ("sheet", "range") if e.param(p) is None]
-            if missing:
-                raise ValidationError(
-                    "E_MISSING_FIELD", f"extract {e.name} (range) missing {missing}"
-                )
-            _check_a1_range(f"extract {e.name}", e.param("range"))
+        missing = [p for p in ("sheet", "range") if e.param(p) is None]
+        if missing:
+            raise ValidationError(
+                "E_MISSING_FIELD", f"extract {e.name} (range) missing {missing}"
+            )
+        _check_a1_range(f"extract {e.name}", e.param("range"))
     if d.content_hash is not None:
         unknown = [o for o in d.content_hash.over if o not in extract_names]
         if unknown:

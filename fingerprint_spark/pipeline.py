@@ -97,8 +97,8 @@ def _drop_reason(ppl_threshold: float, template: bool, ppl: bool) -> Column:
     """The first failing stage's drop_reason, NULL when every stage
     passes (the stage-order analog of assertion declaration-order
     short-circuit): template match (the html chain) -> langid (the
-    target language is en) -> perplexity (when the chain scores it) -> the first failing Gopher
-    flag in rule order."""
+    target language is en) -> perplexity (when the chain scores it) ->
+    the first failing Gopher flag in rule order."""
     lang = F.col("lang_detected")
     heur_fail = F.coalesce(
         *[F.when(~F.col("flags")[n], F.lit(n)) for n in GOPHER_FLAGS],

@@ -271,7 +271,11 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
-def _supplies(call: ast.Call, offset: int, position: int | None, name: str) -> bool:
+def _supplies(
+    call: ast.Call, offset: int, position: int | None, name: str
+) -> bool:
+    """Whether ``call`` passes the parameter, by keyword, by position
+    (``offset`` skips self/cls) or through ``*args`` / ``**kwargs``."""
     if any(isinstance(x, ast.Starred) for x in call.args):
         return True
     if any(k.arg is None or k.arg == name for k in call.keywords):

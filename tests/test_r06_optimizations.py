@@ -183,7 +183,9 @@ def test_worker_memos_overflow_keep_outputs(monkeypatch):
         assert list(zip(sims, mins)) == want
     assert len(memo) < len(uncapped)  # the capped memo was cleared
 
-    model = lc.train_langid_softmax_py(lc.LANGID_TRAIN_FIXTURE, dim=256, epochs=2)
+    model = lc.train_langid_softmax_py(
+        lc.LANGID_TRAIN_FIXTURE, dim=256, epochs=2
+    )
     L = len(model["classes"])
     weights = np.asarray(lc._model_dense_flat(model)).reshape(256, L)
     bias = np.asarray([float(b) for b in model["bias"]])
