@@ -9,11 +9,12 @@ in the result struct).
 
 The column environment is a dict of input columns:
     url     string
-    ts      timestamp          (valid_from/valid_until gate)
-    format  string             (format gate, enricher.rs:455-468)
+    ts      timestamp          (valid_from/valid_until gate; optional)
     parsed  parse.schema.PARSED_TYPE
-    sheets  map<string,array<array<string>>>
-    pdf     struct<page_count int, metadata map<string,string>>
+
+Every rule is html (model.FORMATS), so no format gate is compiled: the
+reference's per-document format check (enricher.rs:455-468) is decided
+once, at validation.
 """
 
 from __future__ import annotations
@@ -31,8 +32,6 @@ def compile_assertion(a: Assertion, env: dict[str, Column]) -> Column:
     the fold (reference: parse failure -> skip, enricher.rs:145-159)."""
     p = a.params_dict
     parsed = env.get("parsed")
-    sheets = env.get("sheets")
-    pdf = env.get("pdf")
     t = a.type
 
     if t == "filename_regex":
@@ -70,10 +69,6 @@ def compile_assertion(a: Assertion, env: dict[str, Column]) -> Column:
             parsed, int(p["min_rows"]), p.get("heading_pattern"),
             int(p.get("index", 0)),
         )
-    elif t == "page_count":
-        col = A.page_count(pdf, int(p["min_pages"]), int(p["max_pages"]))
-    elif t == "metadata_regex":
-        col = A.metadata_regex(pdf, p["key"], p["pattern"])
     elif t == "header_token_search":
         col = A.header_token_search(
             parsed, list(p["tokens"]), int(p.get("min_matches", 1)),
@@ -88,50 +83,15 @@ def compile_assertion(a: Assertion, env: dict[str, Column]) -> Column:
         col = A.full_width_row(parsed, p["pattern"], int(p.get("min_cells", 2)))
     elif t == "page_section_count":
         col = A.page_section_count(parsed, int(p["min_count"]), int(p["max_count"]))
-    elif t == "sheet_exists":
-        col = A.sheet_exists(sheets, p["sheet"])
-    elif t == "sheet_name_regex":
-        col = A.sheet_name_regex(sheets, p["pattern"])
-    elif t == "cell_eq":
-        col = A.cell_eq(sheets, p["sheet"], p["cell"], p["value"])
-    elif t == "cell_regex":
-        col = A.cell_regex(sheets, p["sheet"], p["cell"], p["pattern"])
-    elif t == "range_non_null":
-        col = A.range_non_null(sheets, p["sheet"], p["range"])
-    elif t == "range_populated":
-        col = A.range_populated(sheets, p["sheet"], p["range"], float(p["min_pct"]))
-    elif t == "sheet_min_rows":
-        col = A.sheet_min_rows(sheets, p["sheet"], int(p["min_rows"]))
-    elif t == "column_search":
-        col = A.column_search(
-            sheets, p["sheet"], p["column"], int(p["row_start"]),
-            int(p["row_end"]), p["pattern"],
-        )
-    elif t == "header_row_match":
-        col = A.header_row_match(
-            sheets, p["sheet"], int(p["row_start"]), int(p["row_end"]),
-            list(p["patterns"]), int(p["min_match"]),
-        )
-    elif t == "sum_eq":
-        col = A.sum_eq(
-            sheets, p["sheet"], p["range"], p["cell"],
-            float(p.get("tolerance", 0.01)),
-        )
-    elif t == "within_tolerance":
-        col = A.within_tolerance(
-            sheets, p["sheet"], p["cell"], float(p["min_value"]),
-            float(p["max_value"]),
-        )
     else:  # pragma: no cover — parser already rejects unknown types
         raise ValueError(f"E_UNKNOWN_ASSERTION: {t}")
     return F.coalesce(col, F.lit(False))
 
 
 def rule_applicable(d: FingerprintDefinition, env: dict[str, Column]) -> Column:
-    """Format gate (enricher.rs:455-468) + valid_from/valid_until window
-    against the document timestamp (parser.rs:11-12 -> warc_ts predicate
-    per SURVEY §1.6)."""
-    gate = env["format"] == F.lit(d.format) if "format" in env else F.lit(True)
+    """valid_from/valid_until window against the document timestamp
+    (parser.rs:11-12 -> warc_ts predicate per SURVEY §1.6)."""
+    gate = F.lit(True)
     ts = env.get("ts")
     if ts is not None:
         if d.valid_from:

@@ -12,38 +12,41 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-FORMATS = ("xlsx", "csv", "pdf", "markdown", "text", "html")
+# html is the one rule format: the engine filters a table of web pages,
+# so every match path evaluates html rules and validation refuses the
+# rest (the reference's xlsx/csv/pdf/markdown/text formats)
+FORMATS = ("html",)
 
-# the full 30-variant assertion surface (src/dsl/assertions.rs:33-164)
-ASSERTION_TYPES = frozenset(
-    [
-        # universal
-        "filename_regex",
-        # spreadsheet
-        "sheet_exists", "sheet_name_regex", "cell_eq", "cell_regex",
-        "range_non_null", "range_populated", "sheet_min_rows",
-        "column_search", "header_row_match", "sum_eq", "within_tolerance",
-        # content
-        "heading_exists", "heading_regex", "heading_level", "text_contains",
-        "text_regex", "text_near", "section_non_empty", "section_min_lines",
-        "table_exists", "table_columns", "table_shape", "table_min_rows",
-        "page_count", "metadata_regex",
-        # html-only
-        "header_token_search", "dominant_column_count", "full_width_row",
-        "page_section_count",
-    ]
-)
+# assertion type -> required params (src/dsl/assertions.rs:33-164, the
+# variants an html document can answer); the table IS the type list
+REQUIRED_PARAMS: dict[str, tuple[str, ...]] = {
+    "filename_regex": ("pattern",),
+    "heading_exists": ("text",),
+    "heading_regex": ("pattern",),
+    "heading_level": ("level", "pattern"),
+    "text_contains": ("value",),
+    "text_regex": ("pattern",),
+    "text_near": ("anchor", "value", "within_chars"),
+    "section_non_empty": ("heading_pattern",),
+    "section_min_lines": ("heading_pattern", "min_lines"),
+    "table_exists": (),
+    "table_columns": ("patterns",),
+    "table_shape": ("min_columns", "types"),
+    "table_min_rows": ("min_rows",),
+    "header_token_search": ("tokens", "min_matches"),
+    "dominant_column_count": ("expected",),
+    "full_width_row": ("pattern",),
+    "page_section_count": ("min_count", "max_count"),
+}
+ASSERTION_TYPES = frozenset(REQUIRED_PARAMS)
 
-HTML_ONLY = frozenset(
-    ["header_token_search", "dominant_column_count", "full_width_row",
-     "page_section_count"]
-)
-SPREADSHEET_ONLY = frozenset(
-    ["sheet_exists", "sheet_name_regex", "cell_eq", "cell_regex",
-     "range_non_null", "range_populated", "sheet_min_rows", "column_search",
-     "header_row_match", "sum_eq", "within_tolerance"]
-)
-PDF_ONLY = frozenset(["page_count", "metadata_regex"])
+# extract type -> required params (src/dsl/extract.rs:14-29)
+EXTRACT_PARAMS: dict[str, tuple[str, ...]] = {
+    "section": ("heading_pattern",),
+    "table": ("heading_pattern",),
+    "text_match": ("anchor", "value"),
+}
+EXTRACT_TYPES = frozenset(EXTRACT_PARAMS)
 
 
 @dataclass(frozen=True)
@@ -71,7 +74,7 @@ class ExtractSection:
     """Anchor extraction config (src/dsl/extract.rs:14-29)."""
 
     name: str
-    type: str  # range | section | table | text_match
+    type: str  # section | table | text_match
     params: tuple[tuple[str, object], ...]
 
     def param(self, key: str):

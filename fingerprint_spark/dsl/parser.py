@@ -34,14 +34,13 @@ import yaml
 
 from .model import (
     ASSERTION_TYPES,
+    EXTRACT_TYPES,
     Assertion,
     ContentHashConfig,
     ExtractSection,
     FingerprintDefinition,
     make_assertion,
 )
-
-EXTRACT_TYPES = frozenset(["range", "section", "table", "text_match"])
 
 
 class ParseError(ValueError):
@@ -90,6 +89,8 @@ def _parse_extract(entry: dict, counters: dict[str, int]) -> ExtractSection:
     (type_, params), = entry.items()
     if type_ not in EXTRACT_TYPES:
         raise ParseError("E_INVALID_YAML", f"unknown extract type {type_!r}")
+    if not isinstance(params or {}, dict):
+        raise ParseError("E_INVALID_YAML", f"{type_} params must be a map")
     name = explicit_name or _auto_name(f"extract_{type_}", counters)
     return ExtractSection(
         name=name, type=type_,
@@ -101,6 +102,9 @@ def parse_definition(data: dict, source: str = "inline") -> FingerprintDefinitio
     for required in ("fingerprint_id", "format", "assertions"):
         if required not in data:
             raise ParseError("E_MISSING_FIELD", f"missing required field {required!r}")
+    for key in ("assertions", "extract"):
+        if not isinstance(data.get(key) or [], list):
+            raise ParseError("E_INVALID_YAML", f"{key} must be a list")
     counters: dict[str, int] = {}
     assertions = tuple(
         _parse_assertion(e, counters) for e in data["assertions"] or []

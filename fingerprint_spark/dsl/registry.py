@@ -2,8 +2,8 @@
 trust allowlist, orphan-child validation.
 
 Reference: src/registry/core.rs:121-164 (duplicate refusal), :229-239
-(trust), src/registry/builtin.rs:7-14 (builtins csv.v0/xlsx.v0/pdf.v0/
-markdown.v0), src/registry/installed.rs:67-149 (scan *.fp.yaml),
+(trust), src/registry/builtin.rs:7-14 (builtins),
+src/registry/installed.rs:67-149 (scan *.fp.yaml),
 src/lib.rs:976-1010 (E_ORPHAN_CHILD).
 
 All driver-side: rules load, validate, and compile at the driver; the
@@ -28,9 +28,9 @@ class RegistryError(ValueError):
 
 
 def builtin_rules() -> list[FingerprintDefinition]:
-    """Builtin format-sanity rules (analog of builtin.rs csv.v0/xlsx.v0/
-    pdf.v0/markdown.v0) plus the web-corpus spam/boilerplate templates
-    used by the quality-filter pipeline."""
+    """The web-corpus spam templates the quality-filter pipeline uses
+    (the analog of builtin.rs, whose csv.v0/xlsx.v0/pdf.v0/markdown.v0
+    format-sanity rules check formats this engine refuses)."""
     return [
         FingerprintDefinition(
             fingerprint_id="spam_pharma.v1",

@@ -1,21 +1,14 @@
 """Driver-side rule validation before broadcast.
 
-Reference: src/compile/validate.rs:5-214 — format whitelist, html-only
-assertion gating, per-assertion parameter/bounds checks, extract field
-requirements, content_hash must reference known extracts.
+Reference: src/compile/validate.rs:5-214 — format whitelist,
+per-assertion parameter/bounds checks, extract field requirements,
+content_hash must reference known extracts. The whitelist is html
+alone (model.FORMATS).
 """
 
 from __future__ import annotations
 
-import re
-
-from .model import (
-    FORMATS,
-    HTML_ONLY,
-    PDF_ONLY,
-    SPREADSHEET_ONLY,
-    FingerprintDefinition,
-)
+from .model import EXTRACT_PARAMS, FORMATS, REQUIRED_PARAMS, FingerprintDefinition
 
 
 class ValidationError(ValueError):
@@ -25,7 +18,6 @@ class ValidationError(ValueError):
 
 
 _INVALID = object()  # sentinel: pattern refused by the executing engine
-_A1 = r"[A-Za-z]+[0-9]+"  # one A1 cell; a range is _A1:_A1
 
 
 def _regex_matches_empty(pat: str):
@@ -61,45 +53,26 @@ def _regex_matches_empty(pat: str):
         return None
 
 
-_REQUIRED_PARAMS: dict[str, list[str]] = {
-    "filename_regex": ["pattern"],
-    "sheet_exists": ["sheet"],
-    "sheet_name_regex": ["pattern"],
-    "cell_eq": ["sheet", "cell", "value"],
-    "cell_regex": ["sheet", "cell", "pattern"],
-    "range_non_null": ["sheet", "range"],
-    "range_populated": ["sheet", "range", "min_pct"],
-    "sheet_min_rows": ["sheet", "min_rows"],
-    "column_search": ["sheet", "column", "row_start", "row_end", "pattern"],
-    "header_row_match": ["sheet", "row_start", "row_end", "patterns", "min_match"],
-    "sum_eq": ["sheet", "range", "cell"],
-    "within_tolerance": ["sheet", "cell", "min_value", "max_value"],
-    "heading_exists": ["text"],
-    "heading_regex": ["pattern"],
-    "heading_level": ["level", "pattern"],
-    "text_contains": ["value"],
-    "text_regex": ["pattern"],
-    "text_near": ["anchor", "value", "within_chars"],
-    "section_non_empty": ["heading_pattern"],
-    "section_min_lines": ["heading_pattern", "min_lines"],
-    "table_exists": [],
-    "table_columns": ["patterns"],
-    "table_shape": ["min_columns", "types"],
-    "table_min_rows": ["min_rows"],
-    "page_count": ["min_pages", "max_pages"],
-    "metadata_regex": ["key", "pattern"],
-    "header_token_search": ["tokens", "min_matches"],
-    "dominant_column_count": ["expected"],
-    "full_width_row": ["pattern"],
-    "page_section_count": ["min_count", "max_count"],
-}
-
-
-def _check_a1_range(what: str, rng) -> None:
-    if rng is not None and not re.fullmatch(f"{_A1}:{_A1}", str(rng)):
+def _check_span_pattern(what: str, pat) -> None:
+    """Refuse a pattern the positional scans cannot run: text_near's
+    match_spans and text_match's split + regexp_extract desync on
+    zero-width matches (a*, bare ^, ...), and a pattern the executing
+    engine does not compile would fail the job mid-run."""
+    empty = _regex_matches_empty(str(pat))
+    if empty is True:
         raise ValidationError(
-            "E_INVALID_YAML", f"{what}: bad A1 range {rng!r}"
+            "E_INVALID_YAML", f"{what} pattern {pat!r} can match the empty string"
         )
+    if empty is _INVALID:
+        raise ValidationError(
+            "E_INVALID_YAML",
+            f"{what} pattern {pat!r} does not compile in the executing "
+            "regex engine",
+        )
+    # empty is None: Java-only syntax with no JVM up — accept with a
+    # warning (the executing engine is authoritative; Python `re`
+    # rejecting a*+/\h/\R must not refuse a rule Java runs fine,
+    # ADVICE round 2)
 
 
 def validate_definition(d: FingerprintDefinition) -> None:
@@ -115,20 +88,11 @@ def validate_definition(d: FingerprintDefinition) -> None:
         if a.name in seen_names:
             raise ValidationError("E_INVALID_YAML", f"duplicate assertion name {a.name}")
         seen_names.add(a.name)
-        if a.type in HTML_ONLY and d.format != "html":
+        if a.type not in REQUIRED_PARAMS:
             raise ValidationError(
-                "E_INVALID_YAML",
-                f"{a.type} only valid for format html (validate.rs:107-115)",
+                "E_UNKNOWN_ASSERTION", f"unknown assertion type {a.type!r}"
             )
-        if a.type in SPREADSHEET_ONLY and d.format not in ("xlsx", "csv"):
-            raise ValidationError(
-                "E_INVALID_YAML", f"{a.type} only valid for xlsx/csv formats"
-            )
-        if a.type in PDF_ONLY and d.format != "pdf":
-            raise ValidationError(
-                "E_INVALID_YAML", f"{a.type} only valid for pdf format"
-            )
-        missing = [p for p in _REQUIRED_PARAMS[a.type] if a.param(p) is None]
+        missing = [p for p in REQUIRED_PARAMS[a.type] if a.param(p) is None]
         if missing:
             raise ValidationError(
                 "E_MISSING_FIELD", f"assertion {a.name} ({a.type}) missing {missing}"
@@ -136,62 +100,29 @@ def validate_definition(d: FingerprintDefinition) -> None:
         level = a.param("level")
         if a.type == "heading_level" and not (1 <= int(level) <= 6):
             raise ValidationError("E_INVALID_YAML", "heading_level must be 1-6")
-        # A1/range format checks: refuse at rule validation with a clean
-        # code instead of a raw error at expression-compile time (the
-        # reference's eval path tolerates these as non-matches; a
-        # compiled-expression engine must reject them before broadcast)
-        if a.type in ("cell_eq", "cell_regex", "sum_eq", "within_tolerance"):
-            cell = a.param("cell")
-            if cell is not None and not re.fullmatch(_A1, str(cell)):
-                raise ValidationError(
-                    "E_INVALID_YAML", f"assertion {a.name}: bad A1 cell {cell!r}"
-                )
-        if a.type in ("range_non_null", "range_populated", "sum_eq"):
-            _check_a1_range(f"assertion {a.name}", a.param("range"))
         if a.type == "text_near":
-            # positional span reconstruction (match_spans: split +
-            # regexp_extract_all) desyncs on zero-width matches — refuse
-            # patterns that can match the empty string (a*, bare ^, ...)
             for pname in ("anchor", "value"):
-                pat = a.param(pname)
-                if pat is None:
-                    continue
-                empty = _regex_matches_empty(str(pat))
-                if empty is True:
-                    raise ValidationError(
-                        "E_INVALID_YAML",
-                        f"assertion {a.name}: text_near {pname} pattern "
-                        f"{pat!r} can match the empty string",
-                    )
-                if empty is _INVALID:
-                    raise ValidationError(
-                        "E_INVALID_YAML",
-                        f"assertion {a.name}: {pname} pattern {pat!r} does "
-                        "not compile in the executing regex engine",
-                    )
-                # empty is None: Java-only syntax with no JVM up — accept
-                # with a warning (the executing engine is authoritative;
-                # Python `re` rejecting a*+/\h/\R must not refuse a rule
-                # Java runs fine, ADVICE round 2)
+                _check_span_pattern(
+                    f"assertion {a.name}: text_near {pname}", a.param(pname)
+                )
     extract_names = {e.name for e in d.extract}
     if len(extract_names) != len(d.extract):
         raise ValidationError("E_INVALID_YAML", "duplicate extract names")
     for e in d.extract:
-        if e.type != "range":
-            continue
-        # a range extract reads the decoded sheets, which only a
-        # spreadsheet rule's match has (the SPREADSHEET_ONLY gate)
-        if d.format not in ("xlsx", "csv"):
+        if e.type not in EXTRACT_PARAMS:
             raise ValidationError(
-                "E_INVALID_YAML",
-                f"extract {e.name}: range only valid for xlsx/csv formats",
+                "E_INVALID_YAML", f"unknown extract type {e.type!r}"
             )
-        missing = [p for p in ("sheet", "range") if e.param(p) is None]
+        missing = [p for p in EXTRACT_PARAMS[e.type] if e.param(p) is None]
         if missing:
             raise ValidationError(
-                "E_MISSING_FIELD", f"extract {e.name} (range) missing {missing}"
+                "E_MISSING_FIELD", f"extract {e.name} ({e.type}) missing {missing}"
             )
-        _check_a1_range(f"extract {e.name}", e.param("range"))
+        if e.type == "text_match":
+            for pname in ("anchor", "value"):
+                _check_span_pattern(
+                    f"extract {e.name}: text_match {pname}", e.param(pname)
+                )
     if d.content_hash is not None:
         unknown = [o for o in d.content_hash.over if o not in extract_names]
         if unknown:

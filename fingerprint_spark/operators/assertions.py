@@ -1,22 +1,20 @@
-"""The 30 assertion types as Catalyst Column-expression builders.
+"""The 17 html assertion types as Catalyst Column-expression builders.
 
 Reference: the 30-variant tagged enum in
 ``/root/reference/src/dsl/assertions.rs:33-164`` with dispatchers at
-:264-343 (non-content) and :937-991 (content). Each builder here returns a
-``Column<boolean>`` over the document's ``parsed`` struct (see
-parse.schema), the ``url`` column, a ``sheets`` grid column
-(``map<string, array<array<string>>>``) for the spreadsheet family, or a
-``pdf`` struct (``page_count int, metadata map<string,string>``).
+:264-343 (non-content) and :937-991 (content). html is the one rule
+format (dsl.model.FORMATS), so this module keeps the variants an html
+document answers: each builder returns a ``Column<boolean>`` over the
+document's ``parsed`` struct (see parse.schema) or the ``url`` column.
+The reference's spreadsheet and pdf variants are refused at validation.
 
 Every assertion — including ``text_near`` — is a pure JVM-side
 expression: text_near's positional regex scans are reconstructed from
 ``split`` + ``regexp_extract_all`` (see ``match_spans``), so a rule set
 adds no Python stages beyond the single enrich UDF.
 
-Three assertion types are declared but unimplemented in the reference
-("not implemented in v0.1", assertions.rs:315-319): ``range_populated``,
-``sum_eq``, ``within_tolerance``. This engine implements their documented
-semantics and marks them implemented.
+The sheet accessors at the end (``_sheet``, ``_cell``, ``sheet_exists``)
+serve the ``xlsx_decode`` driver query over decoded grids.
 """
 
 from __future__ import annotations
@@ -235,24 +233,6 @@ def table_shape(
     return t.isNotNull() & (width >= min_columns) & ok
 
 
-# -- pdf structural family (assertions.rs:1518-1580) ------------------------
-
-
-def page_count(pdf: Column, min_pages: int, max_pages: int) -> Column:
-    """PDF page count in [min,max] (assertions.rs:1518-1544)."""
-    return pdf["page_count"].between(min_pages, max_pages)
-
-
-def metadata_regex(pdf: Column, key: str, pattern: str) -> Column:
-    """Info-dict value for key (case-insensitive) matches
-    (assertions.rs:1546-1580)."""
-    meta = pdf["metadata"]
-    matched_key = F.try_element_at(
-        F.filter(F.map_keys(meta), lambda k: F.lower(k) == key.lower()), F.lit(1)
-    )
-    return matched_key.isNotNull() & F.try_element_at(meta, matched_key).rlike(pattern)
-
-
 # -- html-only family (assertions.rs:1952-2074) -----------------------------
 
 
@@ -435,9 +415,8 @@ def text_near(parsed: Column, anchor: str, value: str, within_chars: int) -> Col
 
 
 # ---------------------------------------------------------------------------
-# spreadsheet family — over sheets: map<string, array<array<string>>>
-# (reference: src/document/xlsx.rs / csv.rs; csv gets virtual sheet names
-# Sheet1/csv/file-stem, assertions.rs:1474-1494)
+# sheet accessors over decoded grids: map<string, array<array<string>>>
+# (reference: src/document/xlsx.rs; the xlsx_decode driver query)
 # ---------------------------------------------------------------------------
 
 _A1_RE = re.compile(r"^([A-Za-z]+)([0-9]+)$")
@@ -466,152 +445,7 @@ def sheet_exists(sheets: Column, name: str) -> Column:
     return F.exists(F.map_keys(sheets), lambda k: F.lower(k) == name.lower())
 
 
-def sheet_name_regex(sheets: Column, pattern: str) -> Column:
-    """Any sheet name matches (assertions.rs:1077-1113). The optional
-    ``bind`` to a $var is not implemented."""
-    return F.exists(F.map_keys(sheets), lambda k: k.rlike(pattern))
-
-
 def _cell(sheets: Column, sheet: str, ref: str) -> Column:
     r, c = a1_to_rc(ref)
     grid = _sheet(sheets, sheet)
     return F.try_element_at(F.try_element_at(grid, F.lit(r + 1)), F.lit(c + 1))
-
-
-def cell_eq(sheets: Column, sheet: str, ref: str, value: str) -> Column:
-    """A1-cell exact equality (assertions.rs:1115-1125)."""
-    return _cell(sheets, sheet, ref) == value
-
-
-def cell_regex(sheets: Column, sheet: str, ref: str, pattern: str) -> Column:
-    """A1-cell regex (assertions.rs:1127-1144)."""
-    return _cell(sheets, sheet, ref).rlike(pattern)
-
-
-def _range_cells(sheets: Column, sheet: str, a1_range: str) -> Column:
-    """Flattened cells of 'A1:C3' (missing cells -> null)."""
-    start, end = a1_range.split(":")
-    r0, c0 = a1_to_rc(start)
-    r1, c1 = a1_to_rc(end)
-    grid = _sheet(sheets, sheet)
-    rows = F.slice(grid, r0 + 1, r1 - r0 + 1)
-    return F.flatten(
-        F.transform(rows, lambda row: F.slice(row, c0 + 1, c1 - c0 + 1))
-    )
-
-
-def range_non_null(sheets: Column, sheet: str, a1_range: str) -> Column:
-    """Every cell in range non-empty (assertions.rs:1146-1160)."""
-    cells = _range_cells(sheets, sheet, a1_range)
-    return (F.size(cells) > 0) & F.forall(
-        cells, lambda c: c.isNotNull() & (F.trim(c) != "")
-    )
-
-
-def range_populated(sheets: Column, sheet: str, a1_range: str, min_pct: float) -> Column:
-    """>= pct of cells non-empty. Declared but unimplemented in the
-    reference (assertions.rs:315-319); implemented here per its docs."""
-    cells = _range_cells(sheets, sheet, a1_range)
-    non_empty = F.size(
-        F.filter(cells, lambda c: c.isNotNull() & (F.trim(c) != ""))
-    )
-    return (F.size(cells) > 0) & (
-        non_empty / F.size(cells) >= F.lit(min_pct)
-    )
-
-
-def sheet_min_rows(sheets: Column, sheet: str, min_rows: int) -> Column:
-    """>= N non-empty rows (assertions.rs:1162-1171)."""
-    grid = _sheet(sheets, sheet)
-    non_empty = F.size(
-        F.filter(
-            grid,
-            lambda row: F.exists(row, lambda c: c.isNotNull() & (F.trim(c) != "")),
-        )
-    )
-    return non_empty >= min_rows
-
-
-def column_search(
-    sheets: Column, sheet: str, column: str, row_start: int, row_end: int, pattern: str
-) -> Column:
-    """Regex match in one column within 1-based row range
-    (assertions.rs:1173-1197)."""
-    _, c = a1_to_rc(f"{column}1")
-    grid = _sheet(sheets, sheet)
-    rows = F.slice(grid, row_start, row_end - row_start + 1)
-    return F.exists(
-        rows,
-        lambda row: F.coalesce(
-            F.try_element_at(row, F.lit(c + 1)).rlike(pattern), F.lit(False)
-        ),
-    )
-
-
-def header_row_match(
-    sheets: Column,
-    sheet: str,
-    row_start: int,
-    row_end: int,
-    patterns: list[str],
-    min_match: int,
-) -> Column:
-    """Find row in range where >= min_match of the column-patterns match
-    DISTINCT cells; best-row scoring (assertions.rs:1199-1286).
-
-    Distinctness approximated as: count of patterns that match at least
-    one cell, capped by the number of non-empty cells in the row.
-    """
-    grid = _sheet(sheets, sheet)
-    rows = F.slice(grid, row_start, row_end - row_start + 1)
-    pats = F.array(*[F.lit(p) for p in patterns])
-    per_row = F.transform(
-        rows,
-        lambda row: F.least(
-            F.size(
-                F.filter(
-                    pats,
-                    lambda p: F.exists(
-                        row, lambda c: F.coalesce(F.regexp_like(c, p), F.lit(False))
-                    ),
-                )
-            ),
-            F.size(F.filter(row, lambda c: c.isNotNull() & (F.trim(c) != ""))),
-        ),
-    )
-    return F.coalesce(F.array_max(per_row), F.lit(0)) >= min_match
-
-
-def sum_eq(
-    sheets: Column, sheet: str, a1_range: str, cell_ref: str, tolerance: float = 0.01
-) -> Column:
-    """Sum of numeric cells in range == cell value +/- tolerance.
-    Declared but unimplemented in the reference (assertions.rs:315-319);
-    implemented per docs."""
-    cells = _range_cells(sheets, sheet, a1_range)
-    nums = F.transform(
-        cells,
-        lambda c: F.regexp_replace(F.coalesce(c, F.lit("")), r"[$,€£¥\s]", "").try_cast(
-            "double"
-        ),
-    )
-    total = F.aggregate(
-        F.filter(nums, lambda x: x.isNotNull()),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    target = F.regexp_replace(
-        F.coalesce(_cell(sheets, sheet, cell_ref), F.lit("")), r"[$,€£¥\s]", ""
-    ).try_cast("double")
-    return target.isNotNull() & (F.abs(total - target) <= tolerance)
-
-
-def within_tolerance(
-    sheets: Column, sheet: str, cell_ref: str, min_value: float, max_value: float
-) -> Column:
-    """Cell numeric value in [min,max]. Declared but unimplemented in the
-    reference (assertions.rs:315-319); implemented per docs."""
-    v = F.regexp_replace(
-        F.coalesce(_cell(sheets, sheet, cell_ref), F.lit("")), r"[$,€£¥\s%]", ""
-    ).try_cast("double")
-    return v.isNotNull() & v.between(min_value, max_value)

@@ -6,25 +6,21 @@ pass; a missed target is NON-fatal (the key is simply null — extract.rs:
 (line numbers, offsets, counts), never content — the zero-retention
 contract.
 
-Each builder returns a Column (struct or null) over the parsed struct /
-sheets grid; ``compile_extract`` dispatches one extract section and
-``content_hash_for_rule`` hashes selected extracts in ``over`` order
-(content_hash.rs:24-31).
+Each builder returns a Column (struct or null) over the parsed struct,
+JVM-side like the assertions; ``compile_extract`` dispatches one extract
+section and ``content_hash_for_rule`` hashes selected extracts in
+``over`` order (content_hash.rs:24-31).
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..caching import context_cached
 from ..dsl.model import ContentHashConfig, ExtractSection, FingerprintDefinition
 from ..functions.hashing import content_hash_col
-from .assertions import a1_to_rc, _sheet
 
 
 def extract_section(parsed: Column, heading_pattern: str) -> Column:
@@ -76,77 +72,54 @@ def extract_table(
     )
 
 
-def extract_range(sheets: Column, sheet: str, a1_range: str) -> Column:
-    """{range, row_count} — count of non-empty rows within the A1 range
-    (extract.rs:41-84)."""
-    start, end = a1_range.split(":")
-    r0, c0 = a1_to_rc(start)
-    r1, c1 = a1_to_rc(end)
-    grid = _sheet(sheets, sheet)
-    rows = F.slice(grid, r0 + 1, r1 - r0 + 1)
-    non_empty = F.size(
-        F.filter(
-            F.transform(rows, lambda row: F.slice(row, c0 + 1, c1 - c0 + 1)),
-            lambda row: F.exists(row, lambda c: c.isNotNull() & (F.trim(c) != "")),
-        )
-    )
-    return F.when(
-        grid.isNotNull(),
-        F.struct(
-            F.lit(a1_range).alias("range"), non_empty.alias("row_count")
-        ),
-    )
-
-
-_TEXT_MATCH_TYPE = T.StructType(
-    [
-        T.StructField("line", T.IntegerType()),
-        T.StructField("char_offset", T.IntegerType()),
-        T.StructField("matched", T.StringType()),
-    ]
-)
-
-
 def _text_match_py(
     text: str, anchor: str, value: str, within_chars: int
 ) -> dict | None:
-    """First value-match within within_chars AFTER the FIRST anchor match —
-    unidirectional here, unlike the text_near assertion (extract.rs:
-    161-220)."""
+    """Reference implementation (pure Python) of ``extract_text_match``
+    — kept as the test oracle for the Column version below."""
     if not text:
         return None
     a = re.search(anchor, text)
     if not a:
         return None
-    window_end = a.end() + within_chars
-    m = re.compile(value).search(text, a.end(), window_end)
+    m = re.search(value, text[a.end() : a.end() + within_chars])
     if not m:
         return None
-    upto = text[: m.start()]
+    upto = text[: a.end() + m.start()]
     line = upto.count("\n") + 1
-    last_nl = upto.rfind("\n")
-    char_offset = m.start() - (last_nl + 1)
+    char_offset = len(upto) - (upto.rfind("\n") + 1)
     return {"line": line, "char_offset": char_offset, "matched": m.group(0)}
 
 
-@context_cached(maxsize=64)
-def _text_match_udf(anchor: str, value: str, within_chars: int):
-    @F.pandas_udf(_TEXT_MATCH_TYPE)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            r = _text_match_py(t or "", anchor, value, within_chars)
-            rows.append(r or {"line": None, "char_offset": None, "matched": None})
-        return pd.DataFrame(rows)
-
-    return udf
-
-
 def extract_text_match(
-    parsed: Column, anchor: str, value: str, within_chars: int = 400
+    parsed: Column, anchor: str, value: str, within_chars: int
 ) -> Column:
-    col = _text_match_udf(anchor, value, within_chars)(parsed["normalized"])
-    return F.when(col["matched"].isNotNull(), col)
+    """{line, char_offset, matched} of the first ``value`` match within
+    ``within_chars`` characters AFTER the FIRST ``anchor`` match —
+    unidirectional, unlike the text_near assertion (extract.rs:161-220).
+
+    Java regex, like every assertion, and no Python: ``split(text,
+    anchor, 2)`` leaves the text after the first anchor match, the
+    window is its first ``within_chars`` characters, and the value is
+    searched in the window as a string of its own — so ``^`` and ``\\b``
+    see the window's start as the text's start, and a match may not run
+    past its end. The text before the value match (``split`` again, as
+    in match_spans) gives the line and the offset in it."""
+    text = parsed["normalized"]
+    after = F.try_element_at(F.split(text, anchor, 2), F.lit(2))
+    window = F.substring(after, 1, within_chars)
+    matched = F.regexp_extract(window, value, 0)
+    before = F.try_element_at(F.split(window, value, 2), F.lit(1))
+    upto = text.substr(F.lit(1), F.length(text) - F.length(after) + F.length(before))
+    lines = F.split(upto, "\n", -1)
+    return F.when(
+        matched != "",
+        F.struct(
+            F.size(lines).alias("line"),
+            F.length(F.element_at(lines, -1)).alias("char_offset"),
+            matched.alias("matched"),
+        ),
+    )
 
 
 def compile_extract(e: ExtractSection, env: dict[str, Column]) -> Column:
@@ -157,8 +130,6 @@ def compile_extract(e: ExtractSection, env: dict[str, Column]) -> Column:
         return extract_table(
             env["parsed"], p["heading_pattern"], int(p.get("index", 0))
         )
-    if e.type == "range":
-        return extract_range(env["sheets"], p["sheet"], p["range"])
     if e.type == "text_match":
         return extract_text_match(
             env["parsed"], p["anchor"], p["value"], int(p.get("within_chars", 400))

@@ -247,13 +247,11 @@ def _re_escape(s: str) -> str:
     return re.escape(s)
 
 
-def emit_yaml(
-    candidates: dict, fingerprint_id: str, format_: str = "html"
-) -> str:
+def emit_yaml(candidates: dict, fingerprint_id: str) -> str:
     """Deterministic .fp.yaml (emitter.rs; same input => same bytes)."""
     data = {
         "fingerprint_id": fingerprint_id,
-        "format": format_,
+        "format": "html",
         "assertions": [
             {c["type"]: dict(sorted(c["params"].items()))}
             for c in candidates["assertions"]
@@ -273,7 +271,6 @@ def emit_yaml(
 def infer_rule(
     parsed_df: DataFrame,
     fingerprint_id: str,
-    format_: str = "html",
     min_confidence: float = 0.8,
 ) -> tuple[FingerprintDefinition, str]:
     """Corpus -> (validated definition, deterministic YAML)."""
@@ -281,7 +278,7 @@ def infer_rule(
     cands = aggregate_candidates(obs, min_confidence)
     if not cands["assertions"]:
         raise ValueError("no candidate assertions reached min_confidence")
-    text = emit_yaml(cands, fingerprint_id, format_)
+    text = emit_yaml(cands, fingerprint_id)
     d = parse_definition(yaml.safe_load(text), source="inferred")
     return d, text
 

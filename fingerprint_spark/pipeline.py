@@ -223,11 +223,8 @@ def quality_filter(
     semantics, now first-class in the flagship chain); lang_score then
     carries the softmax probability.
     """
-    if rules is None:
-        rules = builtin_rules()
-    # constant-fold the format gate at the driver: only html rules can
-    # match an html corpus (enricher.rs:455-468 done at compile time)
-    rules = tuple(r for r in rules if r.format == "html")
+    # a tuple: the rules key the _STAGES memo, so they must hash
+    rules = tuple(builtin_rules() if rules is None else rules)
     levels = _STAGES.get(
         ("quality_filter", rules, __version__), lambda: _html_levels(rules)
     )
@@ -370,19 +367,15 @@ def revalidate(
     Input: a frame that already carries the ``parsed`` struct (e.g. the
     stored output of a previous quality_filter run). Applying a NEW rule
     version is a pure expression pass — no html parse, no shuffle. The
-    physical plan of a rule set without extracts contains no
-    ArrowEvalPython node (asserted in tests): at 100 TB this is the
-    difference between re-reading stored structs and re-parsing the
-    crawl. A ``text_match`` extract is the one Python expression the
-    pass can carry: it is a pandas UDF over ``parsed.normalized``
-    (operators.extract), so a rule set that declares one adds an
-    Arrow stage, still with no re-parse.
+    physical plan contains no ArrowEvalPython node, extracts included
+    (asserted in tests): at 100 TB this is the difference between
+    re-reading stored structs and re-parsing the crawl.
 
     Returns the input columns plus the match_levels columns: fingerprint,
     children, child_routing, and extracted,
     content_hash, child_content_hash when a rule declares extract.
     """
-    rules = tuple(r for r in rules if r.format == "html")
+    rules = tuple(rules)  # hashable: the _STAGES memo key
     has_ts = "warc_ts" in parsed_df.columns
     levels = _STAGES.get(
         ("revalidate", rules, has_ts, __version__),

@@ -116,18 +116,14 @@ def _display_surfaces(argv: list[str]) -> int | None:
         print(json.dumps(OUTPUT_SCHEMA, sort_keys=True))
         return 0
     if "--list" in argv:
-        from fingerprint_spark.dsl.registry import Registry, builtin_rules
-
         rules_dir = None
         if "--rules-dir" in argv:
             i = argv.index("--rules-dir")
             if i + 1 < len(argv):
                 rules_dir = argv[i + 1]
-        reg = (
-            Registry.load_dir(rules_dir)
-            if rules_dir
-            else Registry(builtin_rules())
-        )
+        reg = _load_registry(rules_dir)
+        if reg is None:
+            return 2
         for r in reg.list():
             parent = r.parent or "-"
             print(f"{r.fingerprint_id}\t{r.format}\t{parent}\t{r.source}")
@@ -138,16 +134,31 @@ def _display_surfaces(argv: list[str]) -> int | None:
     return None
 
 
+def _load_registry(rules_dir: str | None):
+    """The builtin rules plus ``rules_dir``'s *.fp.yaml; None after one
+    ``rule load error: E_*`` line when a rule fails to parse or
+    validate (the refusal contract of --describe: exit 2, no
+    traceback)."""
+    from fingerprint_spark.dsl.parser import ParseError
+    from fingerprint_spark.dsl.registry import Registry, RegistryError, builtin_rules
+    from fingerprint_spark.dsl.validate import ValidationError
+
+    try:
+        return Registry.load_dir(rules_dir) if rules_dir else Registry(builtin_rules())
+    except (ParseError, ValidationError, RegistryError) as e:
+        print(f"rule load error: {e}", file=sys.stderr)
+        return None
+
+
 def _rule_definition_schema() -> dict:
     """JSON Schema (draft 2020-12) of the .fp.yaml rule definition —
     generated from the SAME parameter tables the validator enforces
     (reference: `compile --schema`, cli_smoke_surfaces.rs:160-185 expects
     $defs.assertion_<type> entries and a format enum)."""
-    from fingerprint_spark.dsl.model import FORMATS
-    from fingerprint_spark.dsl.validate import _REQUIRED_PARAMS
+    from fingerprint_spark.dsl.model import FORMATS, REQUIRED_PARAMS
 
     defs = {}
-    for atype, params in sorted(_REQUIRED_PARAMS.items()):
+    for atype, params in sorted(REQUIRED_PARAMS.items()):
         defs[f"assertion_{atype}"] = {
             "type": "object",
             "properties": {p: {} for p in params},
@@ -184,11 +195,10 @@ def _compile_mode(argv: list[str]) -> int:
     Catalyst expression tree (the engine's 'generated code') and prints
     a descriptor with the rule's source_hash and the compiled match
     expression."""
-    rest = argv[1:]
-    if "--schema" in rest:
+    paths, opts = _parse_subcommand_argv(argv, (), flags=("schema", "check"))
+    if "schema" in opts:
         print(json.dumps(_rule_definition_schema(), sort_keys=True))
         return 0
-    paths = [a for a in rest if not a.startswith("--")]
     if not paths:
         print("usage: compile <rule.fp.yaml> [--check] | compile --schema",
               file=sys.stderr)
@@ -203,7 +213,7 @@ def _compile_mode(argv: list[str]) -> int:
     except (OSError, ParseError, ValidationError) as e:
         print(f"compile error: {e}", file=sys.stderr)
         return 2
-    if "--check" in rest:
+    if "check" in opts:
         print(f"OK {d.fingerprint_id}")
         return 0
     # full compile materializes the Catalyst expression tree — Column
@@ -218,13 +228,7 @@ def _compile_mode(argv: list[str]) -> int:
         "spark.ui.enabled", "false"
     ).getOrCreate()
 
-    env = {
-        "url": F.col("url"),
-        "parsed": F.col("parsed"),
-        "sheets": F.col("sheets"),
-        "pdf": F.col("pdf"),
-    }
-    col = compile_rule(d, env)
+    col = compile_rule(d, {"url": F.col("url"), "parsed": F.col("parsed")})
     print(json.dumps({
         "generated": "CompiledFingerprint",   # codegen.rs GeneratedFingerprint analog
         "fingerprint_id": d.fingerprint_id,
@@ -244,26 +248,18 @@ def _witness_mode(argv: list[str]) -> int:
     driver-side JSONL; no SparkSession needed for the CLI surface."""
     from fingerprint_spark.witness import ledger_path
 
-    if len(argv) < 2 or argv[1] not in ("query", "last", "count"):
+    # --json is accepted for parity: the output is always JSON lines
+    paths, opts = _parse_subcommand_argv(
+        argv, ("tool", "outcome", "since", "until", "input_hash", "path"),
+        flags=("json",),
+    )
+    if len(paths) != 1 or paths[0] not in ("query", "last", "count"):
         print("usage: witness query|last|count [--tool T] [--outcome O] "
-              "[--since TS] [--until TS] [--input-hash H]", file=sys.stderr)
+              "[--since TS] [--until TS] [--input-hash H] [--path LEDGER]",
+              file=sys.stderr)
         return 2
-    action = argv[1]
-    opts: dict[str, str] = {}
-    rest = argv[2:]
-    i = 0
-    while i < len(rest):
-        a = rest[i]
-        if a == "--json":  # output is always JSON lines; accepted for parity
-            i += 1
-            continue
-        if a.startswith("--") and i + 1 < len(rest):
-            opts[a[2:].replace("-", "_")] = rest[i + 1]
-            i += 2
-        else:
-            print(f"witness: unknown/incomplete option {a}", file=sys.stderr)
-            return 2
-    path = opts.pop("path", None) or ledger_path()
+    action = paths[0]
+    path = opts.get("path") or ledger_path()
     records = []
     if os.path.exists(path):
         with open(path) as f:
@@ -298,22 +294,32 @@ def _witness_mode(argv: list[str]) -> int:
 
 
 def _parse_subcommand_argv(
-    argv: list[str], flags: tuple[str, ...] = ()
+    argv: list[str], options: tuple[str, ...], flags: tuple[str, ...] = ()
 ) -> tuple[list[str], dict[str, str]]:
-    """One pass: --flags in ``flags`` are boolean (no value token);
-    every other --opt consumes the next token; everything else is
-    positional (so `mode --id X path` and `mode path --id X` both
-    work). Shared by every subcommand (review finding r5c: five
-    hand-copied parse loops)."""
+    """One pass over a subcommand's arguments: a --flag named in
+    ``flags`` is boolean, a --opt named in ``options`` consumes the next
+    token, and everything else is positional (so `mode --id X path` and
+    `mode path --id X` both work). Names use underscores for dashes.
+    Any other --opt, or an option missing its value, is refused: one
+    line, then no positionals, so the mode's own usage check exits 2
+    before a SparkSession starts. Shared by every subcommand."""
     paths: list[str] = []
     opts: dict[str, str] = {}
     it = iter(argv[1:])
     for a in it:
-        if a.startswith("--"):
-            key = a[2:].replace("-", "_")
-            opts[key] = "1" if key in flags else next(it, "")
-        else:
+        if not a.startswith("--"):
             paths.append(a)
+            continue
+        key = a[2:].replace("-", "_")
+        if key in flags:
+            opts[key] = "1"
+            continue
+        value = next(it, None) if key in options else None
+        if value is None:
+            problem = "missing value for" if key in options else "unknown"
+            print(f"{argv[0]}: {problem} option {a}", file=sys.stderr)
+            return [], {}
+        opts[key] = value
     return paths, opts
 
 
@@ -333,14 +339,16 @@ def _subcommand_spark():
 
 
 def _infer_mode(argv: list[str]) -> int:
-    """`infer <corpus.parquet> --id ID [--format html] [--min-confidence
-    F] [--content-col html]` — mine candidate assertions from a corpus
+    """`infer <corpus.parquet> --id ID [--min-confidence F]
+    [--content-col html]` — mine candidate assertions from a corpus
     and print a deterministic .fp.yaml (reference infer subcommand,
     tests/infer_subcommand.rs; input is a parquet corpus rather than a
     file directory — the Spark-native shape)."""
-    paths, opts = _parse_subcommand_argv(argv)
+    paths, opts = _parse_subcommand_argv(
+        argv, ("id", "min_confidence", "content_col")
+    )
     if not paths:
-        print("usage: infer <corpus.parquet> --id ID [--format html] "
+        print("usage: infer <corpus.parquet> --id ID "
               "[--min-confidence F] [--content-col html]", file=sys.stderr)
         return 2
     if "id" not in opts:
@@ -362,7 +370,6 @@ def _infer_mode(argv: list[str]) -> int:
         _d, text = infer_rule(
             parsed,
             opts["id"],
-            opts.get("format", "html"),
             float(opts.get("min_confidence", "0.8")),
         )
     except ValueError as e:
@@ -388,7 +395,12 @@ def _curate_mode(argv: list[str]) -> int:
     checkpointable via the main pipeline; this subcommand is the
     corpus-wide second pass.
     """
-    paths, opts = _parse_subcommand_argv(argv, flags=("justext",))
+    paths, opts = _parse_subcommand_argv(argv, (
+        "output", "chunk_words", "max_docs", "benchmark", "decontam_n",
+        "text_col", "key_col", "classifier", "classifier_threshold",
+        "langid_model", "langid_threshold", "ppl_model", "ppl_threshold",
+        "shards", "input_snapshot", "snapshot_output", "snapshot_mode",
+    ), flags=("justext",))
     if not paths or ("output" not in opts and "snapshot_output" not in opts):
         print("usage: curate <corpus.parquet|snapshot-table-dir> "
               "--output DIR "
@@ -666,7 +678,9 @@ def _train_classifier_mode(argv: list[str]) -> int:
     closing the deployed train->score loop. Prints one JSON line with
     the training-set accuracy at threshold 0.5 (observe-free: one
     scoring pass over the labeled set, which is small by contract)."""
-    paths, opts = _parse_subcommand_argv(argv)
+    paths, opts = _parse_subcommand_argv(argv, (
+        "output", "dim", "epochs", "lr", "text_col", "label_col", "hasher",
+    ))
     if not paths or "output" not in opts:
         print("usage: train-classifier <labeled.parquet> --output "
               "MODEL.json [--dim N] [--epochs N] [--lr F] "
@@ -732,7 +746,9 @@ def _train_lm_mode(argv: list[str]) -> int:
     reaches the driver — the driver-side trainer would collect every
     training text) and write the JSON model the curate --ppl-model
     stage consumes."""
-    paths, opts = _parse_subcommand_argv(argv)
+    paths, opts = _parse_subcommand_argv(argv, (
+        "output", "order", "min_count", "max_grams", "text_col",
+    ))
     if not paths or "output" not in opts:
         print("usage: train-lm <corpus.parquet> --output MODEL.json "
               "[--order N] [--min-count N] [--max-grams N] "
@@ -804,7 +820,10 @@ def _train_langid_mode(argv: list[str]) -> int:
     train-classifier contract). Prints one JSON line with the
     training-set accuracy (one Arrow scoring pass; the labeled set is
     small by contract)."""
-    paths, opts = _parse_subcommand_argv(argv)
+    paths, opts = _parse_subcommand_argv(argv, (
+        "output", "dim", "ngram", "epochs", "lr", "text_col", "label_col",
+        "hasher",
+    ))
     if not paths or "output" not in opts:
         print("usage: train-langid <labeled.parquet> --output "
               "MODEL.json [--dim N] [--ngram N] [--epochs N] [--lr F] "
@@ -886,7 +905,9 @@ def _frontier_mode(argv: list[str]) -> int:
     to --build only: merge and probe read (n_bits, k) from the
     filter's own marker row — the self-describing params exist so a
     mismatch is impossible, not so the caller re-types them."""
-    paths, opts = _parse_subcommand_argv(argv)
+    paths, opts = _parse_subcommand_argv(argv, (
+        "build", "merge", "probe", "output", "key_col", "n_bits", "k",
+    ))
     n_actions = sum(x in opts for x in ("build", "merge", "probe"))
     if not paths or n_actions != 1 or (
         "probe" in opts and "output" not in opts
@@ -1094,7 +1115,6 @@ def main() -> int:
 
     from fingerprint_spark.checkpoint import CheckpointedRun
     from fingerprint_spark.deploy import ensure_pyfiles
-    from fingerprint_spark.dsl.registry import Registry, builtin_rules
     from fingerprint_spark.pipeline import (
         DEFAULT_LANGID_THRESHOLD,
         quality_filter,
@@ -1104,10 +1124,9 @@ def main() -> int:
 
     ensure_pyfiles(spark)
 
-    if args.rules_dir:
-        registry = Registry.load_dir(args.rules_dir)
-    else:
-        registry = Registry(builtin_rules())
+    registry = _load_registry(args.rules_dir)
+    if registry is None:
+        return 2
     if args.fp:
         from fingerprint_spark.dsl.registry import RegistryError
 
@@ -1214,10 +1233,7 @@ def main() -> int:
             from fingerprint_spark.operators.diagnose import diagnose_rule
 
             env = {"url": FF.col("url"), "parsed": FF.col("parsed")}
-            diags = [
-                diagnose_rule(r, env) for r in rules if r.parent is None
-                and r.format == "html"
-            ]
+            diags = [diagnose_rule(r, env) for r in rules if r.parent is None]
             out = out.withColumn(
                 "diagnosis",
                 FF.when(

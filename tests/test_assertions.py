@@ -1,11 +1,12 @@
-"""Per-assertion unit tests over synthesized documents — all 30 types
-(reference content_assertion_edge_cases.rs + module unit tests model)."""
+"""Per-assertion unit tests over a synthesized html document — all 17
+types (reference content_assertion_edge_cases.rs + module unit tests
+model)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.compiler import compile_assertion
-from fingerprint_spark.dsl.model import make_assertion
+from fingerprint_spark.dsl.model import ASSERTION_TYPES, make_assertion
 from fingerprint_spark.parse import parse_html_col
 
 HTML = """<html><body>
@@ -29,37 +30,17 @@ HTML = """<html><body>
 </section>
 </body></html>"""
 
-SHEETS = {
-    "Summary": [
-        ["Name", "Q1", "Q2"],
-        ["alpha", "10", "20"],
-        ["beta", "30", "40"],
-        ["total", "40", "60"],
-    ],
-    "Raw Data": [["x"], [""], ["y"]],
-}
-
-PDF = (12, {"Title": "Annual Report", "Author": "ACME Corp"})
-
-
 @pytest.fixture(scope="module")
 def doc(spark):
     df = spark.createDataFrame(
-        [("https://x.example/report-2024.html", HTML, SHEETS, PDF)],
-        "url string, html string, sheets map<string,array<array<string>>>, "
-        "pdf struct<page_count:int, metadata:map<string,string>>",
+        [("https://x.example/report-2024.html", HTML)], "url string, html string"
     )
     return df.withColumn("parsed", parse_html_col(F.col("html"))).cache()
 
 
 def _eval(doc, type_, params):
     a = make_assertion(type_, "t", params)
-    env = {
-        "url": F.col("url"),
-        "parsed": F.col("parsed"),
-        "sheets": F.col("sheets"),
-        "pdf": F.col("pdf"),
-    }
+    env = {"url": F.col("url"), "parsed": F.col("parsed")}
     return doc.select(compile_assertion(a, env).alias("r")).first()["r"]
 
 
@@ -108,11 +89,18 @@ CASES = [
         {"min_columns": 2, "types": ["string", "number"], "heading_pattern": "Figures"},
         True,
     ),
-    # pdf
-    ("page_count", {"min_pages": 10, "max_pages": 20}, True),
-    ("page_count", {"min_pages": 13, "max_pages": 20}, False),
-    ("metadata_regex", {"key": "title", "pattern": "Annual"}, True),  # case-insens key
-    ("metadata_regex", {"key": "Author", "pattern": "^Other"}, False),
+    # a failing text_regex, table_columns under a heading, table_shape's
+    # width floor
+    ("text_regex", {"pattern": r"shrank by \d+"}, False),
+    ("table_columns", {"patterns": ["A", "B", "C"], "heading_pattern": "Classification"}, True),
+    (
+        "table_shape",
+        {"min_columns": 5, "types": ["string"], "heading_pattern": "Figures"},
+        False,
+    ),
+    # best table matches 3 tokens, above max_matches
+    ("header_token_search", {"tokens": ["Region", "Amount", "Pct"], "min_matches": 1,
+                             "max_matches": 2}, False),
     # html-only
     ("header_token_search", {"tokens": ["Region", "Amount"], "min_matches": 2}, True),
     ("header_token_search", {"tokens": ["Region", "Losses"], "min_matches": 2}, False),
@@ -122,55 +110,6 @@ CASES = [
     ("full_width_row", {"pattern": "PUBLIC", "min_cells": 3}, False),
     ("page_section_count", {"min_count": 2, "max_count": 2}, True),
     ("page_section_count", {"min_count": 3, "max_count": 9}, False),
-    # spreadsheet
-    ("sheet_exists", {"sheet": "summary"}, True),  # case-insensitive
-    ("sheet_exists", {"sheet": "Missing"}, False),
-    ("sheet_name_regex", {"pattern": "^Raw"}, True),
-    ("cell_eq", {"sheet": "Summary", "cell": "A1", "value": "Name"}, True),
-    ("cell_eq", {"sheet": "Summary", "cell": "B2", "value": "99"}, False),
-    ("cell_regex", {"sheet": "Summary", "cell": "B4", "pattern": r"^\d+$"}, True),
-    ("range_non_null", {"sheet": "Summary", "range": "A1:C4"}, True),
-    ("range_non_null", {"sheet": "Raw Data", "range": "A1:A3"}, False),
-    ("range_populated", {"sheet": "Raw Data", "range": "A1:A3", "min_pct": 0.6}, True),
-    ("range_populated", {"sheet": "Raw Data", "range": "A1:A3", "min_pct": 0.9}, False),
-    ("sheet_min_rows", {"sheet": "Summary", "min_rows": 4}, True),
-    ("sheet_min_rows", {"sheet": "Summary", "min_rows": 5}, False),
-    (
-        "column_search",
-        {"sheet": "Summary", "column": "A", "row_start": 2, "row_end": 4,
-         "pattern": "^total$"},
-        True,
-    ),
-    (
-        "column_search",
-        {"sheet": "Summary", "column": "B", "row_start": 2, "row_end": 4,
-         "pattern": "^total$"},
-        False,
-    ),
-    (
-        "header_row_match",
-        {"sheet": "Summary", "row_start": 1, "row_end": 2,
-         "patterns": ["Name", "Q\\d", "Q\\d"], "min_match": 2},
-        True,
-    ),
-    (
-        "header_row_match",
-        {"sheet": "Summary", "row_start": 2, "row_end": 3,
-         "patterns": ["Name", "Q1"], "min_match": 2},
-        False,
-    ),
-    ("sum_eq", {"sheet": "Summary", "range": "B2:B3", "cell": "B4"}, True),
-    ("sum_eq", {"sheet": "Summary", "range": "B2:B3", "cell": "C4"}, False),
-    (
-        "within_tolerance",
-        {"sheet": "Summary", "cell": "C4", "min_value": 50, "max_value": 70},
-        True,
-    ),
-    (
-        "within_tolerance",
-        {"sheet": "Summary", "cell": "C4", "min_value": 90, "max_value": 99},
-        False,
-    ),
 ]
 
 
@@ -182,3 +121,6 @@ CASES = [
 def test_assertion(doc, type_, params, expected):
     assert _eval(doc, type_, params) is expected
 
+
+def test_every_assertion_type_has_a_case():
+    assert {t for t, _p, _e in CASES} == ASSERTION_TYPES

@@ -52,6 +52,13 @@ def test_invalid_yaml():
     with pytest.raises(ParseError) as e:
         parse_yaml(": not valid : yaml : [")
     assert e.value.code == "E_INVALID_YAML"
+    # well-formed YAML of the wrong shape is refused the same way
+    for bad in ("assertions: 5",
+                "assertions: [{text_regex: {pattern: x}}]\n"
+                "extract: [{name: e, section: [1, 2]}]"):
+        with pytest.raises(ParseError) as e:
+            parse_yaml(f"fingerprint_id: x.v1\nformat: html\n{bad}\n")
+        assert e.value.code == "E_INVALID_YAML"
 
 
 def test_validate_format_whitelist():
@@ -102,33 +109,62 @@ content_hash:
         validate_definition(parse_yaml(bad))
 
 
-def test_validate_range_extract_gating():
-    """A range extract reads decoded sheets: valid only on xlsx/csv
-    rules, with an A1 range; an html rule's range extract would
-    otherwise reach the match plan and fail there."""
+def test_validate_refuses_non_html_rule_language():
+    """html is the one rule format: the reference's other formats, its
+    spreadsheet and pdf assertions and its range extract are refused
+    before any plan is built."""
     rule = """
 fingerprint_id: x.v1
 format: {fmt}
 assertions:
   - {assertion}
+{extract}"""
+    text = 'text_regex: {pattern: "x"}'
+    for fmt in ("xlsx", "csv", "pdf", "markdown", "text"):
+        d = parse_yaml(rule.format(fmt=fmt, assertion=text, extract=""))
+        with pytest.raises(ValidationError, match="not in whitelist") as e:
+            validate_definition(d)
+        assert e.value.code == "E_INVALID_YAML"
+    for assertion in ('cell_eq: {sheet: "S", cell: "A1", value: "x"}',
+                      "page_count: {min_pages: 1, max_pages: 2}"):
+        with pytest.raises(ParseError) as e:
+            parse_yaml(rule.format(fmt="html", assertion=assertion, extract=""))
+        assert e.value.code == "E_UNKNOWN_ASSERTION"
+    with pytest.raises(ValidationError) as e:
+        validate_definition(FingerprintDefinition(
+            fingerprint_id="x.v1", format="html",
+            assertions=(make_assertion("sheet_exists", "a", {"sheet": "S"}),),
+        ))
+    assert e.value.code == "E_UNKNOWN_ASSERTION"
+    extract = 'extract:\n  - name: r1\n    range: {sheet: "S", range: "A1:B2"}\n'
+    with pytest.raises(ParseError, match="unknown extract type") as e:
+        parse_yaml(rule.format(fmt="html", assertion=text, extract=extract))
+    assert e.value.code == "E_INVALID_YAML"
+
+
+def test_validate_text_match_extract(spark):
+    """text_match patterns are checked like text_near's, by the
+    executing engine (hence the spark fixture): a pattern that does not
+    compile or can match the empty string is refused, and so is a
+    missing anchor or value."""
+    rule = """
+fingerprint_id: x.v1
+format: html
+assertions:
+  - text_regex: {{pattern: "x"}}
 extract:
-  - name: r1
-    range: {{sheet: "S", range: "{rng}"}}
+  - name: m
+    text_match: {{{params}}}
 """
-    html = rule.format(fmt="html", assertion='text_regex: {pattern: "x"}',
-                       rng="A1:B2")
-    with pytest.raises(ValidationError, match="range only valid") as e:
-        validate_definition(parse_yaml(html))
-    assert e.value.code == "E_INVALID_YAML"
-    sheet = 'sheet_exists: {sheet: "S"}'
-    with pytest.raises(ValidationError, match="bad A1 range") as e:
-        validate_definition(
-            parse_yaml(rule.format(fmt="xlsx", assertion=sheet, rng="A1-B2"))
-        )
-    assert e.value.code == "E_INVALID_YAML"
-    validate_definition(
-        parse_yaml(rule.format(fmt="xlsx", assertion=sheet, rng="A1:B2"))
-    )
+    validate_definition(parse_yaml(rule.format(params='anchor: "Total:", value: "[0-9]+"')))
+    for params, match in (('anchor: "(", value: "[0-9]+"', "does not compile"),
+                          ('anchor: "Total:", value: "[0-9]*"', "empty string")):
+        with pytest.raises(ValidationError, match=match) as e:
+            validate_definition(parse_yaml(rule.format(params=params)))
+        assert e.value.code == "E_INVALID_YAML"
+    with pytest.raises(ValidationError) as e:
+        validate_definition(parse_yaml(rule.format(params='anchor: "Total:"')))
+    assert e.value.code == "E_MISSING_FIELD"
 
 
 def test_registry_duplicate_refusal():

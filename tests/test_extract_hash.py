@@ -290,3 +290,55 @@ content_hash:
     assert len(want) > 0 and set(got) == set(want)
     assert all(m for m, _h in got.values())
     assert {d: h for d, (_m, h) in got.items()} == want
+
+
+# (text, anchor, value, within_chars, expected) — hand-written
+TEXT_MATCH_CASES = [
+    # no anchor
+    ("Total 60 units", "Sum:", "[0-9]+", 50, None),
+    # the value lies beyond the window
+    ("Total: abcdefghij 60", "Total:", "[0-9]+", 5, None),
+    # the value straddles the window's end: the match stops at it
+    ("Total: 12345", "Total:", "[0-9]+", 4,
+     {"line": 1, "char_offset": 7, "matched": "123"}),
+    # the window crosses lines; line and offset count from the text start
+    ("intro line\nTotal:\n  42 units", "Total:", "[0-9]+", 20,
+     {"line": 3, "char_offset": 2, "matched": "42"}),
+    # offsets count characters, a non-BMP one included
+    ("Größe 😀 Résumé: naïve 7 Tage", "Résumé:", "[0-9]+", 20,
+     {"line": 1, "char_offset": 22, "matched": "7"}),
+    # only the FIRST anchor opens a window
+    ("Total: none here. Total: 9", "Total:", "[0-9]+", 8, None),
+    # ^ matches at the window's start, right after the anchor
+    ("Total:42 and 7", "Total:", "^[0-9]+", 10,
+     {"line": 1, "char_offset": 6, "matched": "42"}),
+    ("Total: 42", "Total:", "^[0-9]+", 10, None),
+    # the anchor ends the text
+    ("abc Total:", "Total:", "[0-9]+", 10, None),
+    ("", "Total:", "[0-9]+", 10, None),
+]
+
+
+def test_text_match_extract_matches_its_twin(spark):
+    """extract_text_match runs Java regex in the JVM; its pure-Python
+    twin _text_match_py pins the same semantics on hand-written cases:
+    a missing anchor, a value outside or straddling the window, lines,
+    non-ASCII text, a repeated anchor and a ``^`` in the value."""
+    from fingerprint_spark.operators.extract import (
+        _text_match_py, extract_text_match,
+    )
+
+    df = spark.createDataFrame(
+        [(i, c[0]) for i, c in enumerate(TEXT_MATCH_CASES)], "i int, text string"
+    ).select("i", F.struct(F.col("text").alias("normalized")).alias("parsed"))
+    got = F.coalesce(*[
+        F.when(F.col("i") == i, extract_text_match(F.col("parsed"), a, v, w))
+        for i, (_t, a, v, w, _e) in enumerate(TEXT_MATCH_CASES)
+    ])
+    out = df.select("i", got.alias("tm"))
+    assert "ArrowEvalPython" not in out._jdf.queryExecution().executedPlan().toString()
+    rows = {r["i"]: r["tm"] for r in out.collect()}
+    for i, (text, anchor, value, within, expected) in enumerate(TEXT_MATCH_CASES):
+        tm = rows[i].asDict() if rows[i] is not None else None
+        assert tm == expected, (text, tm)
+        assert _text_match_py(text, anchor, value, within) == expected, text

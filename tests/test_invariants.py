@@ -32,8 +32,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "fingerprint_spark")
 
 # chained pandas UDFs that cannot fuse (stage N's output is stage N+1's
-# input): parse -> content_hash; fixture-builder -> decoder
-ARROW_ALLOWANCE = {"extract_hash": 2, "media_roundtrip": 2}
+# input): fixture-builder -> decoder
+ARROW_ALLOWANCE = {"media_roundtrip": 2}
 
 
 def _optimized_nodes(df):

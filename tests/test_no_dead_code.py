@@ -58,6 +58,7 @@ REFERENCE_TWINS = (
     "_shingle_hashes64",  # shingle_hashes_batch, per document
     "sketch_md5_py",  # _sketch_md5_batch, the portable md5 sketch
     "_near_match",  # text_near, the Column form of the TextNear assertion
+    "_text_match_py",  # extract_text_match, the Column text_match extract
     "_decode_grid_projection",  # q_xlsx_decode's fused decode UDF
     "langid_best",  # marker_langid_batch, by Spark's own split/regex count
 )

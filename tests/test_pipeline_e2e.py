@@ -5,10 +5,15 @@ bytes) and the BASELINE.json metric (keep/drop F1 >= 0.99 + byte-identical
 scrubbed text vs reference labels).
 """
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from fingerprint_spark.corpus import generate_corpus
+from fingerprint_spark.dsl.parser import parse_yaml
 from fingerprint_spark.pipeline import quality_filter
+
+RULES_DIR = Path(__file__).resolve().parent.parent / "rules"
 
 N_DOCS = 400
 
@@ -174,6 +179,13 @@ def test_revalidate_is_incremental_no_reparse(spark, tmp_path):
     plan = re_df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan  # no reparse
     assert "Exchange" not in plan         # no shuffle
+    # extracts stay in the JVM too (section, text_match and table): the
+    # flagship chain keeps its one Python stage, revalidate has none
+    maint = parse_yaml((RULES_DIR / "maint-log.v1.fp.yaml").read_text())
+    for df, n_python in ((revalidate(spark.read.parquet(stored), [maint]), 0),
+                         (quality_filter(generate_corpus(spark, 20), [maint]), 1)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == n_python, plan
     n_match = re_df.filter(F.col("fingerprint.matched")).count()
     assert n_match > 0
     assert re_df.filter(

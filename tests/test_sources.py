@@ -1,28 +1,11 @@
-"""Source operators: xlsx grids, the PDF struct the assertions read,
-partitioned corpus IO."""
+"""Source operators: xlsx grids and partitioned corpus IO."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.corpus import generate_corpus
-from fingerprint_spark.dsl.compiler import compile_assertion
-from fingerprint_spark.dsl.model import make_assertion
 from fingerprint_spark.sources import read_corpus, xlsx_to_sheets
 from helpers import write_corpus_partitioned
-
-
-def test_pdf_struct_feeds_page_count_assertion(spark):
-    df = spark.createDataFrame(
-        [(12, {"Title": "X"}, "tiny"), (12, {"Title": "X"}, "t" * 200),
-         (3, {"Title": "X"}, "tiny")],
-        "page_count int, metadata map<string,string>, text string",
-    )
-    df = df.withColumn("pdf", F.struct("page_count", "metadata"))
-
-    env = {"pdf": F.col("pdf")}
-    a = make_assertion("page_count", "t", {"min_pages": 10, "max_pages": 20})
-    got = [r["r"] for r in df.select(compile_assertion(a, env).alias("r")).collect()]
-    assert got == [True, True, False]
 
 
 def test_xlsx_codec_roundtrip_and_rejects_garbage():
@@ -71,10 +54,12 @@ def test_xlsx_shared_strings_and_sparse_rows():
     ]
 
 
-def test_spreadsheet_assertions_on_real_xlsx_bytes(spark):
-    """The whole grid-assertion family over REAL xlsx bytes decoded in a
-    Spark UDF (xlsx.rs:12-98 parity on actual file bytes, not synthetic
-    grids)."""
+def test_xlsx_decode_accessors_on_real_bytes(spark):
+    """Real xlsx bytes decoded in a Spark UDF (xlsx.rs:12-98 parity on
+    actual file bytes, not synthetic grids), read through the sheet
+    accessors of the xlsx_decode query; undecodable bytes give a NULL
+    sheets map."""
+    from fingerprint_spark.operators.assertions import _cell, sheet_exists
     from fingerprint_spark.sources.xlsx import make_xlsx, sheets_from_xlsx_col
 
     good = make_xlsx(
@@ -84,57 +69,18 @@ def test_spreadsheet_assertions_on_real_xlsx_bytes(spark):
     rows = [("u1", bytearray(good)), ("u2", bytearray(missing_sheet)),
             ("u3", bytearray(b"garbage-not-xlsx"))]
     df = spark.createDataFrame(rows, "url string, payload binary")
-    df = df.withColumn("sheets", sheets_from_xlsx_col(F.col("payload")))
-    env = {"sheets": F.col("sheets")}
-
-    def run(atype, params):
-        a = make_assertion(atype, "t", params)
-        return [
-            r["r"]
-            for r in df.orderBy("url")
-            .select(compile_assertion(a, env).alias("r"))
-            .collect()
-        ]
-
-    assert run("sheet_exists", {"sheet": "report"}) == [True, False, False]
-    assert run("cell_eq", {"sheet": "Report", "cell": "B2", "value": "3"}) == [
-        True, False, False,
+    sheets = sheets_from_xlsx_col(F.col("payload"))
+    got = df.orderBy("url").select(
+        sheets.isNull().alias("null_map"),
+        sheet_exists(sheets, "report").alias("has_report"),
+        _cell(sheets, "Report", "B2").alias("b2"),
+        _cell(sheets, "Report", "A3").alias("a3"),
+    ).collect()
+    assert [tuple(r) for r in got] == [
+        (False, True, "3", "gizmo"),
+        (False, False, None, None),
+        (True, None, None, None),
     ]
-    assert run("sheet_min_rows", {"sheet": "Report", "min_rows": 3}) == [
-        True, False, False,
-    ]
-    assert run(
-        "range_non_null", {"sheet": "Report", "range": "A1:B3"}
-    ) == [True, False, False]  # null sheets map -> assertion fails (refusal semantics)
-
-
-def test_pdf_assertions_on_literal_struct(spark):
-    """page_count / metadata_regex over the pdf struct (pdf.rs:18-61: page
-    count + trailer Info); a null struct, the undecodable-bytes row,
-    fails both."""
-    df = spark.createDataFrame(
-        [("u1", (12, {"Title": "Annual Report 2024"})),
-         ("u2", (3, {"Title": "memo"})),
-         ("u3", None)],
-        "url string, pdf struct<page_count:int, metadata:map<string,string>>",
-    )
-    env = {"pdf": F.col("pdf")}
-
-    a = make_assertion("page_count", "t", {"min_pages": 10, "max_pages": 20})
-    got = [
-        r["r"]
-        for r in df.orderBy("url").select(compile_assertion(a, env).alias("r")).collect()
-    ]
-    assert got == [True, False, False]
-
-    a2 = make_assertion(
-        "metadata_regex", "t", {"key": "title", "pattern": r"Annual.*\d{4}"}
-    )
-    got2 = [
-        r["r"]
-        for r in df.orderBy("url").select(compile_assertion(a2, env).alias("r")).collect()
-    ]
-    assert got2 == [True, False, False]
 
 
 def test_partition_pruning_and_column_pruning(spark, tmp_path):

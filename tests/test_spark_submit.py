@@ -168,6 +168,57 @@ def test_cli_compile_surface():
     os.unlink(bad)
 
 
+def test_cli_refuses_unloadable_rule_dirs(tmp_path):
+    """A rule directory holding a non-html rule or malformed YAML is one
+    E_* line and exit 2, never a traceback: under --list (no
+    SparkSession) and under run; `compile --check` refuses the file the
+    same way."""
+    import sys
+
+    script = os.path.join(REPO, "scripts", "run_pipeline.py")
+    bad_rules = {
+        "sheet.fp.yaml": "fingerprint_id: s.v1\nformat: xlsx\nassertions:\n"
+                         "  - text_regex: {pattern: x}\n",
+        "broken.fp.yaml": "fingerprint_id: [unclosed\n",
+    }
+    for name, text in bad_rules.items():
+        rules_dir = tmp_path / name.split(".")[0]
+        rules_dir.mkdir()
+        (rules_dir / name).write_text(text)
+        for args in (["--list", "--rules-dir", str(rules_dir)],
+                     ["--input", str(tmp_path / "none"),
+                      "--output", str(tmp_path / "out"), "--no-witness",
+                      "--rules-dir", str(rules_dir)],
+                     ["compile", str(rules_dir / name), "--check"]):
+            r = subprocess.run([sys.executable, script, *args],
+                               capture_output=True, text=True, timeout=300)
+            assert r.returncode == 2, (name, args, r.stderr[-1500:])
+            assert "error: E_INVALID_YAML" in r.stderr, r.stderr[-1500:]
+            assert "Traceback" not in r.stderr
+
+
+def test_cli_subcommands_refuse_unknown_flags(tmp_path):
+    """A misspelt or removed flag exits 2 with the mode's usage line
+    instead of being silently ignored, before a SparkSession starts."""
+    import sys
+
+    script = os.path.join(REPO, "scripts", "run_pipeline.py")
+    corpus = str(tmp_path / "c.parquet")
+    cases = (
+        (["curate", corpus, "--output", str(tmp_path / "o"),
+          "--classifer-threshold", "0.9"], "--classifer-threshold", "usage: curate"),
+        (["infer", corpus, "--id", "x.v1", "--format", "html"],
+         "--format", "usage: infer"),
+        (["train-lm", corpus, "--output"], "--output", "usage: train-lm"),
+    )
+    for args, flag, usage in cases:
+        r = subprocess.run([sys.executable, script, *args],
+                           capture_output=True, text=True, timeout=120)
+        assert r.returncode == 2, (args, r.stderr[-1500:])
+        assert f"option {flag}" in r.stderr and usage in r.stderr, r.stderr
+        assert "SparkContext" not in r.stderr
+
+
 def test_cli_fp_selection_and_orphan_refusal(spark, tmp_path):
     """--fp selects rules in CLI order; a child requested without its
     parent refuses with E_ORPHAN_CHILD exit 2 (reference --fp semantics).
