@@ -3,18 +3,18 @@ objects -> compiled Catalyst expressions."""
 
 from .compiler import compile_assertion, compile_rule
 from .model import (
-    Assertion,
+    Clause,
     ContentHashConfig,
-    ExtractSection,
     FingerprintDefinition,
+    clause_params,
 )
 from .parser import parse_definition, parse_yaml
 from .registry import Registry, builtin_rules
 from .validate import ValidationError, validate_definition
 
 __all__ = [
-    "Assertion",
-    "ExtractSection",
+    "Clause",
+    "clause_params",
     "ContentHashConfig",
     "FingerprintDefinition",
     "parse_yaml",

@@ -15,6 +15,10 @@ The column environment is a dict of input columns:
 Every rule is html (model.FORMATS), so no format gate is compiled: the
 reference's per-document format check (enricher.rs:455-468) is decided
 once, at validation.
+
+Compiling an assertion is a lookup: its type's builder (``BUILDERS``)
+over the env column the type's spec names, with the parameters
+``model.clause_params`` checks and fills with defaults.
 """
 
 from __future__ import annotations
@@ -23,68 +27,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..operators import assertions as A
-from .model import Assertion, FingerprintDefinition
+from .model import ASSERTION_TYPES, Clause, FingerprintDefinition, clause_params
 
 
-def compile_assertion(a: Assertion, env: dict[str, Column]) -> Column:
-    """One assertion -> Column<boolean>. Nulls coalesce to False so a
-    missing/unparsed document fails the assertion rather than poisoning
-    the fold (reference: parse failure -> skip, enricher.rs:145-159)."""
-    p = a.params_dict
-    parsed = env.get("parsed")
-    t = a.type
+# assertion type -> its Column builder, named after the type
+BUILDERS = {t: getattr(A, t) for t in ASSERTION_TYPES}
 
-    if t == "filename_regex":
-        col = A.filename_regex(env["url"], p["pattern"])
-    elif t == "heading_exists":
-        col = A.heading_exists(parsed, p["text"])
-    elif t == "heading_regex":
-        col = A.heading_regex(parsed, p["pattern"])
-    elif t == "heading_level":
-        col = A.heading_level(parsed, int(p["level"]), p["pattern"])
-    elif t == "text_contains":
-        col = A.text_contains(parsed, p["value"])
-    elif t == "text_regex":
-        col = A.text_regex(parsed, p["pattern"])
-    elif t == "text_near":
-        col = A.text_near(parsed, p["anchor"], p["value"], int(p["within_chars"]))
-    elif t == "section_non_empty":
-        col = A.section_non_empty(parsed, p["heading_pattern"])
-    elif t == "section_min_lines":
-        col = A.section_min_lines(parsed, p["heading_pattern"], int(p["min_lines"]))
-    elif t == "table_exists":
-        col = A.table_exists(parsed, p.get("heading_pattern"), int(p.get("index", 0)))
-    elif t == "table_columns":
-        col = A.table_columns(
-            parsed, list(p["patterns"]), p.get("heading_pattern"),
-            int(p.get("index", 0)),
-        )
-    elif t == "table_shape":
-        col = A.table_shape(
-            parsed, int(p["min_columns"]), list(p["types"]),
-            p.get("heading_pattern"), int(p.get("index", 0)),
-        )
-    elif t == "table_min_rows":
-        col = A.table_min_rows(
-            parsed, int(p["min_rows"]), p.get("heading_pattern"),
-            int(p.get("index", 0)),
-        )
-    elif t == "header_token_search":
-        col = A.header_token_search(
-            parsed, list(p["tokens"]), int(p.get("min_matches", 1)),
-            p.get("max_matches"), p.get("page"),
-        )
-    elif t == "dominant_column_count":
-        col = A.dominant_column_count(
-            parsed, int(p["expected"]), int(p.get("tolerance", 0)),
-            p.get("sample_pages"),
-        )
-    elif t == "full_width_row":
-        col = A.full_width_row(parsed, p["pattern"], int(p.get("min_cells", 2)))
-    elif t == "page_section_count":
-        col = A.page_section_count(parsed, int(p["min_count"]), int(p["max_count"]))
-    else:  # pragma: no cover — parser already rejects unknown types
-        raise ValueError(f"E_UNKNOWN_ASSERTION: {t}")
+
+def compile_assertion(a: Clause, env: dict[str, Column]) -> Column:
+    """One assertion -> Column<boolean>: the type's builder over the env
+    column its spec names, with the checked parameters (clause_params).
+    Nulls coalesce to False so a missing/unparsed document fails the
+    assertion rather than poisoning the fold (reference: parse failure
+    -> skip, enricher.rs:145-159)."""
+    col = BUILDERS[a.type](env[a.spec.input], **clause_params(a))
     return F.coalesce(col, F.lit(False))
 
 

@@ -35,11 +35,10 @@ import yaml
 from .model import (
     ASSERTION_TYPES,
     EXTRACT_TYPES,
-    Assertion,
+    Clause,
     ContentHashConfig,
-    ExtractSection,
     FingerprintDefinition,
-    make_assertion,
+    make_clause,
 )
 
 
@@ -56,46 +55,30 @@ def _auto_name(type_: str, counters: dict[str, int]) -> str:
     return type_ if n == 0 else f"{type_}_{n + 1}"
 
 
-def _parse_assertion(entry: dict, counters: dict[str, int]) -> Assertion:
+def _parse_clause(entry, counters: dict[str, int], extract: bool) -> Clause:
+    """One assertion or extract entry: ``{type: params}`` plus an
+    optional ``name``. An unknown assertion type is E_UNKNOWN_ASSERTION
+    (an unknown extract type E_INVALID_YAML); an anonymous extract is
+    auto-named ``extract_<type>``."""
+    what, types, code, prefix = (
+        ("extract", EXTRACT_TYPES, "E_INVALID_YAML", "extract_") if extract
+        else ("assertion", ASSERTION_TYPES, "E_UNKNOWN_ASSERTION", "")
+    )
     if not isinstance(entry, dict):
-        raise ParseError("E_INVALID_YAML", f"assertion entry must be a map: {entry!r}")
+        raise ParseError("E_INVALID_YAML", f"{what} entry must be a map: {entry!r}")
     entry = dict(entry)
     explicit_name = entry.pop("name", None)
     if len(entry) != 1:
         raise ParseError(
-            "E_UNKNOWN_ASSERTION",
-            f"assertion entry must have exactly one type key, got {sorted(entry)}",
+            code, f"{what} entry must have exactly one type key, got {sorted(entry)}"
         )
     (type_, params), = entry.items()
-    if type_ not in ASSERTION_TYPES:
-        raise ParseError("E_UNKNOWN_ASSERTION", f"unknown assertion type {type_!r}")
-    if params is None:
-        params = {}
-    if not isinstance(params, dict):
-        raise ParseError("E_INVALID_YAML", f"{type_} params must be a map")
-    name = explicit_name or _auto_name(type_, counters)
-    return make_assertion(type_, name, params)
-
-
-def _parse_extract(entry: dict, counters: dict[str, int]) -> ExtractSection:
-    if not isinstance(entry, dict):
-        raise ParseError("E_INVALID_YAML", f"extract entry must be a map: {entry!r}")
-    entry = dict(entry)
-    explicit_name = entry.pop("name", None)
-    if len(entry) != 1:
-        raise ParseError(
-            "E_INVALID_YAML", "extract entry must have exactly one type key"
-        )
-    (type_, params), = entry.items()
-    if type_ not in EXTRACT_TYPES:
-        raise ParseError("E_INVALID_YAML", f"unknown extract type {type_!r}")
+    if type_ not in types:
+        raise ParseError(code, f"unknown {what} type {type_!r}")
     if not isinstance(params or {}, dict):
         raise ParseError("E_INVALID_YAML", f"{type_} params must be a map")
-    name = explicit_name or _auto_name(f"extract_{type_}", counters)
-    return ExtractSection(
-        name=name, type=type_,
-        params=tuple(sorted((params or {}).items(), key=lambda kv: kv[0])),
-    )
+    name = explicit_name or _auto_name(prefix + type_, counters)
+    return make_clause(type_, name, params or {}, extract=extract)
 
 
 def parse_definition(data: dict, source: str = "inline") -> FingerprintDefinition:
@@ -105,12 +88,11 @@ def parse_definition(data: dict, source: str = "inline") -> FingerprintDefinitio
     for key in ("assertions", "extract"):
         if not isinstance(data.get(key) or [], list):
             raise ParseError("E_INVALID_YAML", f"{key} must be a list")
-    counters: dict[str, int] = {}
-    assertions = tuple(
-        _parse_assertion(e, counters) for e in data["assertions"] or []
+    counters: dict[str, int] = {}  # extract names are prefixed: no clash
+    assertions, extract = (
+        tuple(_parse_clause(e, counters, key == "extract") for e in data.get(key) or [])
+        for key in ("assertions", "extract")
     )
-    ex_counters: dict[str, int] = {}
-    extract = tuple(_parse_extract(e, ex_counters) for e in data.get("extract") or [])
     ch = None
     if data.get("content_hash") is not None:
         chd = data["content_hash"]

@@ -16,7 +16,7 @@ from __future__ import annotations
 import fnmatch
 from pathlib import Path
 
-from .model import FingerprintDefinition, make_assertion
+from .model import FingerprintDefinition, make_clause
 from .parser import parse_yaml
 from .validate import validate_definition
 
@@ -36,7 +36,7 @@ def builtin_rules() -> list[FingerprintDefinition]:
             fingerprint_id="spam_pharma.v1",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_regex", "spam_phrase",
                     {"pattern": r"(?i)(buy cheap pills|no prescription)"},
                 ),
@@ -48,7 +48,7 @@ def builtin_rules() -> list[FingerprintDefinition]:
             fingerprint_id="spam_casino.v1",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_regex", "spam_phrase",
                     {"pattern": r"(?i)(casino bonus|free spins|win big jackpot)"},
                 ),
@@ -60,7 +60,7 @@ def builtin_rules() -> list[FingerprintDefinition]:
             fingerprint_id="spam_replica.v1",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_regex", "spam_phrase",
                     {"pattern": r"(?i)replica watches"},
                 ),
@@ -72,7 +72,7 @@ def builtin_rules() -> list[FingerprintDefinition]:
             fingerprint_id="spam_diet.v1",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_regex", "spam_phrase",
                     {"pattern": r"(?i)(weight loss miracle|doctors hate this)"},
                 ),
@@ -86,7 +86,7 @@ def builtin_rules() -> list[FingerprintDefinition]:
             format="html",
             parent="spam_pharma.v1",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_contains", "cta", {"value": "click here now"}
                 ),
             ),

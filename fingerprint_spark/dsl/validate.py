@@ -3,47 +3,40 @@
 Reference: src/compile/validate.rs:5-214 — format whitelist,
 per-assertion parameter/bounds checks, extract field requirements,
 content_hash must reference known extracts. The whitelist is html
-alone (model.FORMATS).
+alone (model.FORMATS); the parameter checks are model.clause_params,
+which the compiler runs too, plus the regex checks that need the JVM.
 """
 
 from __future__ import annotations
 
-from .model import EXTRACT_PARAMS, FORMATS, REQUIRED_PARAMS, FingerprintDefinition
+import re
+import warnings
+
+from pyspark.sql import SparkSession
+
+from .model import (
+    FORMATS, REGEX_KINDS, Clause, FingerprintDefinition, ValidationError, clause_params,
+)
 
 
-class ValidationError(ValueError):
-    def __init__(self, code: str, message: str):
-        super().__init__(f"{code}: {message}")
-        self.code = code
+def _regex_problem(pat: str, span: bool) -> str | None:
+    """Why ``pat`` cannot run, or None — judged by the engine that will
+    EXECUTE it (java.util.regex via the active JVM when a SparkSession
+    is up; rlike/split/regexp_extract_all all run it). A span pattern
+    must also not match the empty string: text_near's match_spans and
+    text_match's split + regexp_extract desync on zero-width matches
+    (a*, bare ^, ...); other patterns may (``rlike '.*'`` is valid).
 
-
-_INVALID = object()  # sentinel: pattern refused by the executing engine
-
-
-def _regex_matches_empty(pat: str):
-    """Can ``pat`` match the empty string — judged by the engine that
-    will EXECUTE it (Java regex via the active JVM when a SparkSession
-    is up; rlike/split/regexp_extract_all all run java.util.regex).
-
-    Returns True / False, ``_INVALID`` if the executing engine refuses
-    the pattern, or None when undeterminable (no JVM and Python ``re``
-    can't parse Java-only syntax like possessive quantifiers or \\h —
-    callers must then accept with a warning, not refuse: the round-2
-    failure mode was E_INVALID_YAML on rules Java runs fine)."""
-    from pyspark.sql import SparkSession
-
+    With no JVM, Python ``re`` judges; a pattern it cannot parse
+    (Java-only syntax like possessive quantifiers or \\h) is accepted
+    with a warning, not refused: the round-2 failure mode was
+    E_INVALID_YAML on rules Java runs fine."""
     spark = SparkSession.getActiveSession()
-    if spark is not None:
-        try:
-            jpat = spark._jvm.java.util.regex.Pattern.compile(pat)
-            return bool(jpat.matcher("").find())
-        except Exception:  # PatternSyntaxException via py4j
-            return _INVALID
-    import re
-    import warnings
-
     try:
-        return re.search(pat, "") is not None
+        if spark is not None:
+            empty = spark._jvm.java.util.regex.Pattern.compile(pat).matcher("").find()
+        else:
+            empty = re.search(pat, "") is not None
     except re.error as e:
         warnings.warn(
             f"pattern {pat!r} not checkable without a JVM (python re: {e}); "
@@ -51,28 +44,24 @@ def _regex_matches_empty(pat: str):
             stacklevel=2,
         )
         return None
+    except Exception:  # PatternSyntaxException via py4j
+        return "does not compile in the executing regex engine"
+    return "can match the empty string" if span and empty else None
 
 
-def _check_span_pattern(what: str, pat) -> None:
-    """Refuse a pattern the positional scans cannot run: text_near's
-    match_spans and text_match's split + regexp_extract desync on
-    zero-width matches (a*, bare ^, ...), and a pattern the executing
-    engine does not compile would fail the job mid-run."""
-    empty = _regex_matches_empty(str(pat))
-    if empty is True:
-        raise ValidationError(
-            "E_INVALID_YAML", f"{what} pattern {pat!r} can match the empty string"
-        )
-    if empty is _INVALID:
-        raise ValidationError(
-            "E_INVALID_YAML",
-            f"{what} pattern {pat!r} does not compile in the executing "
-            "regex engine",
-        )
-    # empty is None: Java-only syntax with no JVM up — accept with a
-    # warning (the executing engine is authoritative; Python `re`
-    # rejecting a*+/\h/\R must not refuse a rule Java runs fine,
-    # ADVICE round 2)
+def _check_clause(c: Clause) -> None:
+    """The parameters per the type's spec (clause_params), then every
+    regex parameter, list elements included (_regex_problem)."""
+    params = clause_params(c)
+    for k, p in c.spec.params.items():
+        if p.kind not in REGEX_KINDS or params[k] is None:
+            continue
+        for pat in params[k] if p.kind == "regex_list" else (params[k],):
+            why = _regex_problem(pat, span=p.kind == "span_regex")
+            if why:
+                raise ValidationError(
+                    "E_INVALID_YAML", f"{c.name} ({c.type}): {k} pattern {pat!r} {why}"
+                )
 
 
 def validate_definition(d: FingerprintDefinition) -> None:
@@ -83,46 +72,12 @@ def validate_definition(d: FingerprintDefinition) -> None:
         )
     if not d.assertions:
         raise ValidationError("E_MISSING_FIELD", "at least one assertion required")
-    seen_names: set[str] = set()
-    for a in d.assertions:
-        if a.name in seen_names:
-            raise ValidationError("E_INVALID_YAML", f"duplicate assertion name {a.name}")
-        seen_names.add(a.name)
-        if a.type not in REQUIRED_PARAMS:
-            raise ValidationError(
-                "E_UNKNOWN_ASSERTION", f"unknown assertion type {a.type!r}"
-            )
-        missing = [p for p in REQUIRED_PARAMS[a.type] if a.param(p) is None]
-        if missing:
-            raise ValidationError(
-                "E_MISSING_FIELD", f"assertion {a.name} ({a.type}) missing {missing}"
-            )
-        level = a.param("level")
-        if a.type == "heading_level" and not (1 <= int(level) <= 6):
-            raise ValidationError("E_INVALID_YAML", "heading_level must be 1-6")
-        if a.type == "text_near":
-            for pname in ("anchor", "value"):
-                _check_span_pattern(
-                    f"assertion {a.name}: text_near {pname}", a.param(pname)
-                )
+    for kind, clauses in (("assertion", d.assertions), ("extract", d.extract)):
+        if len({c.name for c in clauses}) != len(clauses):
+            raise ValidationError("E_INVALID_YAML", f"duplicate {kind} names")
+        for c in clauses:
+            _check_clause(c)
     extract_names = {e.name for e in d.extract}
-    if len(extract_names) != len(d.extract):
-        raise ValidationError("E_INVALID_YAML", "duplicate extract names")
-    for e in d.extract:
-        if e.type not in EXTRACT_PARAMS:
-            raise ValidationError(
-                "E_INVALID_YAML", f"unknown extract type {e.type!r}"
-            )
-        missing = [p for p in EXTRACT_PARAMS[e.type] if e.param(p) is None]
-        if missing:
-            raise ValidationError(
-                "E_MISSING_FIELD", f"extract {e.name} ({e.type}) missing {missing}"
-            )
-        if e.type == "text_match":
-            for pname in ("anchor", "value"):
-                _check_span_pattern(
-                    f"extract {e.name}: text_match {pname}", e.param(pname)
-                )
     if d.content_hash is not None:
         unknown = [o for o in d.content_hash.over if o not in extract_names]
         if unknown:

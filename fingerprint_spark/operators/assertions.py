@@ -8,6 +8,10 @@ document answers: each builder returns a ``Column<boolean>`` over the
 document's ``parsed`` struct (see parse.schema) or the ``url`` column.
 The reference's spreadsheet and pdf variants are refused at validation.
 
+Each builder is named after its type and takes the YAML parameters by
+name with no defaults: dsl.model.ASSERTION_SPECS holds their kinds,
+bounds and defaults, and the compiler passes them checked.
+
 Every assertion — including ``text_near`` — is a pure JVM-side
 expression: text_near's positional regex scans are reconstructed from
 ``split`` + ``regexp_extract_all`` (see ``match_spans``), so a rule set
@@ -57,9 +61,9 @@ def heading_level(parsed: Column, level: int, pattern: str) -> Column:
     )
 
 
-def text_contains(parsed: Column, literal: str) -> Column:
+def text_contains(parsed: Column, value: str) -> Column:
     """Literal substring in normalized text (assertions.rs:1670-1677)."""
-    return F.instr(parsed["normalized"], literal) > 0
+    return F.instr(parsed["normalized"], value) > 0
 
 
 def text_regex(parsed: Column, pattern: str) -> Column:
@@ -88,36 +92,30 @@ def section_min_lines(parsed: Column, heading_pattern: str, min_lines: int) -> C
     )
 
 
-def _tables_matching(parsed: Column, heading_ref_pattern: str | None) -> Column:
+def _tables_matching(parsed: Column, heading_pattern: str | None) -> Column:
     """find_table analog: filter tables by heading_ref regex
     (assertions.rs:2175-2202); None pattern keeps all tables."""
-    if heading_ref_pattern is None:
+    if heading_pattern is None:
         return parsed["tables"]
     return F.filter(
         parsed["tables"],
         lambda t: t["heading_ref"].isNotNull()
-        & t["heading_ref"].rlike(heading_ref_pattern),
+        & t["heading_ref"].rlike(heading_pattern),
     )
 
 
-def table_exists(
-    parsed: Column, heading_ref_pattern: str | None = None, index: int = 0
-) -> Column:
-    """k-th table (default 0) under heading-regex exists
-    (assertions.rs:1859-1866)."""
-    ts = _tables_matching(parsed, heading_ref_pattern)
+def table_exists(parsed: Column, heading_pattern: str | None, index: int) -> Column:
+    """k-th table under heading-regex exists (assertions.rs:1859-1866)."""
+    ts = _tables_matching(parsed, heading_pattern)
     return F.size(ts) > index
 
 
 def table_columns(
-    parsed: Column,
-    patterns: list[str],
-    heading_ref_pattern: str | None = None,
-    index: int = 0,
+    parsed: Column, patterns: tuple[str, ...], heading_pattern: str | None, index: int
 ) -> Column:
     """Positional: pattern[i] must match header[i]; table must have >=
     len(patterns) columns (assertions.rs:1868-1895)."""
-    ts = _tables_matching(parsed, heading_ref_pattern)
+    ts = _tables_matching(parsed, heading_pattern)
     t = F.try_element_at(ts, F.lit(index + 1))
     pats = F.array(*[F.lit(p) for p in patterns])
     ok = F.forall(
@@ -134,13 +132,10 @@ def table_columns(
 
 
 def table_min_rows(
-    parsed: Column,
-    min_rows: int,
-    heading_ref_pattern: str | None = None,
-    index: int = 0,
+    parsed: Column, min_rows: int, heading_pattern: str | None, index: int
 ) -> Column:
     """>= N data rows (assertions.rs:1934-1950)."""
-    ts = _tables_matching(parsed, heading_ref_pattern)
+    ts = _tables_matching(parsed, heading_pattern)
     t = F.try_element_at(ts, F.lit(index + 1))
     return t.isNotNull() & (F.size(t["rows"]) >= min_rows)
 
@@ -211,15 +206,12 @@ def _type_compatible(inferred: Column, expected: str) -> Column:
 
 
 def table_shape(
-    parsed: Column,
-    min_columns: int,
-    types: list[str],
-    heading_ref_pattern: str | None = None,
-    index: int = 0,
+    parsed: Column, min_columns: int, types: tuple[str, ...],
+    heading_pattern: str | None, index: int,
 ) -> Column:
     """>= min_columns and per-column majority type equals expected
     (assertions.rs:1897-1932)."""
-    ts = _tables_matching(parsed, heading_ref_pattern)
+    ts = _tables_matching(parsed, heading_pattern)
     t = F.try_element_at(ts, F.lit(index + 1))
     width = F.greatest(
         F.size(t["headers"]),
@@ -237,11 +229,8 @@ def table_shape(
 
 
 def header_token_search(
-    parsed: Column,
-    tokens: list[str],
-    min_matches: int = 1,
-    max_matches: int | None = None,
-    page: int | None = None,
+    parsed: Column, tokens: tuple[str, ...], min_matches: int,
+    max_matches: int | None, page: int | None,
 ) -> Column:
     """Best per-table count of token-regexes matching any header must be
     >= min / <= max (assertions.rs:1952-1992, helpers 2083-2139)."""
@@ -274,7 +263,7 @@ def _table_col_count(t: Column) -> Column:
 
 
 def dominant_column_count(
-    parsed: Column, expected: int, tolerance: int = 0, sample_pages: int | None = None
+    parsed: Column, expected: int, tolerance: int, sample_pages: int | None
 ) -> Column:
     """Mode of per-table column counts within +/- tolerance; ties break
     toward the SMALLER count (assertions.rs:1994-2027, 2151-2160). The
@@ -304,7 +293,7 @@ def dominant_column_count(
     return (F.size(counts) > 0) & (F.abs(mode - expected) <= tolerance)
 
 
-def full_width_row(parsed: Column, pattern: str, min_cells: int = 2) -> Column:
+def full_width_row(parsed: Column, pattern: str, min_cells: int) -> Column:
     """Some row with >= min_cells where all non-empty cells are the
     identical string matching regex (assertions.rs:2029-2048, 2162-2173)."""
     return F.exists(

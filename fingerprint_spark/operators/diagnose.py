@@ -14,7 +14,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..dsl.compiler import compile_rule
-from ..dsl.model import FingerprintDefinition
+from ..dsl.model import FingerprintDefinition, clause_params
 
 
 def nearest_heading(parsed: Column, target: str) -> Column:
@@ -180,10 +180,11 @@ def diagnose_rule(
 
     suggestions = []
     for a in d.assertions:
-        if a.type in ("heading_exists",):
-            target = a.param("text")
+        p = clause_params(a)
+        if a.type == "heading_exists":
+            target = p["text"]
         elif a.type in ("heading_regex", "heading_level"):
-            target = a.param("pattern")
+            target = p["pattern"]
         else:
             continue
         suggestions.append(
@@ -212,10 +213,11 @@ def diagnose_rule(
     partials = []
     near_misses = []
     for a in d.assertions:
+        p = clause_params(a)
         if a.type == "text_contains":
-            target = a.param("value")
+            target = p["value"]
         elif a.type == "text_regex":
-            target = a.param("pattern")
+            target = p["pattern"]
         elif a.type == "text_near":
             near_misses.append(
                 F.when(
@@ -223,10 +225,7 @@ def diagnose_rule(
                     F.struct(
                         F.lit(a.name).alias("assertion"),
                         text_near_out_of_range(
-                            parsed,
-                            a.param("anchor"),
-                            a.param("value"),
-                            int(a.param("within_chars")),
+                            parsed, p["anchor"], p["value"], p["within_chars"]
                         ).alias("context"),
                     ),
                 )

@@ -7,8 +7,9 @@ pass; a missed target is NON-fatal (the key is simply null — extract.rs:
 contract.
 
 Each builder returns a Column (struct or null) over the parsed struct,
-JVM-side like the assertions; ``compile_extract`` dispatches one extract
-section and ``content_hash_for_rule`` hashes selected extracts in
+JVM-side like the assertions; ``compile_extract`` looks up one extract
+section's builder (its parameters and defaults are dsl.model's
+EXTRACT_SPECS) and ``content_hash_for_rule`` hashes selected extracts in
 ``over`` order (content_hash.rs:24-31).
 """
 
@@ -19,7 +20,7 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..dsl.model import ContentHashConfig, ExtractSection, FingerprintDefinition
+from ..dsl.model import Clause, ContentHashConfig, FingerprintDefinition, clause_params
 from ..functions.hashing import content_hash_col
 
 
@@ -43,9 +44,7 @@ def extract_section(parsed: Column, heading_pattern: str) -> Column:
     )
 
 
-def extract_table(
-    parsed: Column, heading_pattern: str, index: int = 0
-) -> Column:
+def extract_table(parsed: Column, heading_pattern: str, index: int) -> Column:
     """{start_line, end_line, columns, row_count} of the ``index``-th table
     whose heading_ref EQUALS the first section heading the regex matches
     (extract.rs:122-159); null when no heading matches or that heading has
@@ -122,19 +121,14 @@ def extract_text_match(
     )
 
 
-def compile_extract(e: ExtractSection, env: dict[str, Column]) -> Column:
-    p = dict(e.params)
-    if e.type == "section":
-        return extract_section(env["parsed"], p["heading_pattern"])
-    if e.type == "table":
-        return extract_table(
-            env["parsed"], p["heading_pattern"], int(p.get("index", 0))
-        )
-    if e.type == "text_match":
-        return extract_text_match(
-            env["parsed"], p["anchor"], p["value"], int(p.get("within_chars", 400))
-        )
-    raise ValueError(f"unknown extract type {e.type}")
+BUILDERS = {"section": extract_section, "table": extract_table,
+            "text_match": extract_text_match}
+
+
+def compile_extract(e: Clause, env: dict[str, Column]) -> Column:
+    """One extract section: its type's builder with the checked
+    parameters (dsl.model.clause_params)."""
+    return BUILDERS[e.type](env[e.spec.input], **clause_params(e))
 
 
 def content_hash_for_rule(
@@ -149,6 +143,6 @@ def content_hash_for_rule(
     ch: ContentHashConfig | None = d.content_hash
     if ch is None or not d.extract:
         return F.lit(None).cast("string")
-    names = list(ch.over) if ch.over else sorted(e.name for e in d.extract)
+    names = ch.over or tuple(sorted(e.name for e in d.extract))
     cols = [json_extracts[n] for n in names]
-    return content_hash_col(*cols, algo=ch.algo, names=tuple(names))
+    return content_hash_col(*cols, algo=ch.algo, names=names)

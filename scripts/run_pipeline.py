@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import sys
 
@@ -152,18 +153,45 @@ def _load_registry(rules_dir: str | None):
 
 def _rule_definition_schema() -> dict:
     """JSON Schema (draft 2020-12) of the .fp.yaml rule definition —
-    generated from the SAME parameter tables the validator enforces
+    generated from the SAME parameter table the validator enforces
+    (dsl.model's ASSERTION_SPECS / EXTRACT_SPECS: a typed property per
+    parameter, its default, its bounds, no unknown keys), so a rule the
+    schema refuses for its parameters is one validation refuses
     (reference: `compile --schema`, cli_smoke_surfaces.rs:160-185 expects
-    $defs.assertion_<type> entries and a format enum)."""
-    from fingerprint_spark.dsl.model import FORMATS, REQUIRED_PARAMS
+    $defs.assertion_<type> entries and a format enum). The Java regex
+    checks need a JVM and are validation's alone."""
+    from fingerprint_spark.dsl.model import (
+        ASSERTION_SPECS, CELL_TYPES, EXTRACT_SPECS, FORMATS,
+    )
 
+    string = {"type": "string"}
+    kinds = {"string": string, "regex": string, "span_regex": string,
+             "int": {"type": "integer"},
+             "regex_list": {"type": "array", "items": string},
+             "cell_type_list": {"type": "array", "items": {"enum": list(CELL_TYPES)}}}
     defs = {}
-    for atype, params in sorted(REQUIRED_PARAMS.items()):
-        defs[f"assertion_{atype}"] = {
-            "type": "object",
-            "properties": {p: {} for p in params},
-            "required": list(params),
-        }
+
+    def param(p) -> dict:
+        bounds = {"minimum": p.lo, "maximum": p.hi}
+        out = {**kinds[p.kind], **{k: b for k, b in bounds.items() if math.isfinite(b)}}
+        if not p.required:  # null counts as absent
+            out.update(type=[out["type"], "null"], default=p.default)
+        return out
+
+    def entries(prefix: str, specs: dict) -> dict:
+        """An array of ``{<type>: params}`` maps, each with an optional name."""
+        for t, spec in specs.items():
+            required = [k for k, p in spec.params.items() if p.required]
+            defs[f"{prefix}_{t}"] = {
+                "type": "object" if required else ["object", "null"],
+                "properties": {k: param(p) for k, p in spec.params.items()},
+                "required": required, "additionalProperties": False,
+            }
+        return {"type": "array", "items": {"oneOf": [{
+            "type": "object", "required": [t], "additionalProperties": False,
+            "properties": {"name": string, t: {"$ref": f"#/$defs/{prefix}_{t}"}},
+        } for t in sorted(specs)]}}
+
     return {
         "$schema": "https://json-schema.org/draft/2020-12/schema",
         "title": "fingerprint_spark.rule_definition",
@@ -173,8 +201,8 @@ def _rule_definition_schema() -> dict:
             "format": {"enum": sorted(FORMATS)},
             "parent": {"type": "string"},
             "valid_from": {"type": "string"},
-            "assertions": {"type": "array"},
-            "extract": {"type": "array"},
+            "assertions": entries("assertion", ASSERTION_SPECS),
+            "extract": entries("extract", EXTRACT_SPECS),
             "content_hash": {
                 "type": "object",
                 "properties": {

@@ -1,12 +1,18 @@
 """Per-assertion unit tests over a synthesized html document — all 17
-types (reference content_assertion_edge_cases.rs + module unit tests
-model)."""
+types, and the 3 extract types (reference content_assertion_edge_cases.rs
++ module unit tests model)."""
+
+import inspect
 
 import pytest
 from pyspark.sql import functions as F
 
+from fingerprint_spark.dsl import compiler
 from fingerprint_spark.dsl.compiler import compile_assertion
-from fingerprint_spark.dsl.model import ASSERTION_TYPES, make_assertion
+from fingerprint_spark.dsl.model import (
+    ASSERTION_SPECS, ASSERTION_TYPES, EXTRACT_SPECS, EXTRACT_TYPES, make_clause,
+)
+from fingerprint_spark.operators import extract
 from fingerprint_spark.parse import parse_html_col
 
 HTML = """<html><body>
@@ -39,7 +45,7 @@ def doc(spark):
 
 
 def _eval(doc, type_, params):
-    a = make_assertion(type_, "t", params)
+    a = make_clause(type_, "t", params)
     env = {"url": F.col("url"), "parsed": F.col("parsed")}
     return doc.select(compile_assertion(a, env).alias("r")).first()["r"]
 
@@ -122,5 +128,44 @@ def test_assertion(doc, type_, params, expected):
     assert _eval(doc, type_, params) is expected
 
 
+# extract type, params, whether the target is found (a miss is null)
+EXTRACT_CASES = [
+    ("section", {"heading_pattern": "^Revenue"}, True),
+    ("section", {"heading_pattern": "Losses"}, False),
+    ("table", {"heading_pattern": "Figures"}, True),
+    ("table", {"heading_pattern": "Figures", "index": 1}, False),
+    ("text_match", {"anchor": "Amount:", "value": r"\d{4}"}, True),
+    ("text_match", {"anchor": "Amount:", "value": r"\d{4}", "within_chars": 2}, False),
+]
+
+
+@pytest.mark.parametrize(
+    "type_,params,found",
+    EXTRACT_CASES,
+    ids=[f"{t}_{i}" for i, (t, _p, _f) in enumerate(EXTRACT_CASES)],
+)
+def test_extract(doc, type_, params, found):
+    e = make_clause(type_, "e", params, extract=True)
+    col = extract.compile_extract(e, {"parsed": F.col("parsed")})
+    assert (doc.select(col.alias("r")).first()["r"] is not None) is found
+
+
 def test_every_assertion_type_has_a_case():
     assert {t for t, _p, _e in CASES} == ASSERTION_TYPES
+    assert {t for t, _p, _f in EXTRACT_CASES} == EXTRACT_TYPES
+
+
+@pytest.mark.parametrize(
+    "specs,builders",
+    [(ASSERTION_SPECS, compiler.BUILDERS), (EXTRACT_SPECS, extract.BUILDERS)],
+    ids=["assertion", "extract"],
+)
+def test_builders_take_the_spec_params(specs, builders):
+    """The parameter table and the builders agree: each builder reads the
+    spec's input column, then takes exactly the spec's parameters in
+    order, with no defaults of its own (the table holds them)."""
+    assert set(builders) == set(specs)
+    for t, spec in specs.items():
+        params = inspect.signature(builders[t]).parameters
+        assert list(params) == [spec.input, *spec.params], t
+        assert all(p.default is inspect.Parameter.empty for p in params.values()), t

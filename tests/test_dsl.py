@@ -1,9 +1,11 @@
 """DSL parser/validator/registry tests — the refusal-path coverage model
 (reference tests/refusal_path_coverage.rs: every E_* code reachable)."""
 
+from pathlib import Path
+
 import pytest
 
-from fingerprint_spark.dsl.model import make_assertion, FingerprintDefinition
+from fingerprint_spark.dsl.model import make_clause, FingerprintDefinition
 from fingerprint_spark.dsl.parser import ParseError, parse_yaml
 from fingerprint_spark.dsl.registry import Registry, RegistryError, builtin_rules
 from fingerprint_spark.dsl.validate import ValidationError, validate_definition
@@ -133,7 +135,7 @@ assertions:
     with pytest.raises(ValidationError) as e:
         validate_definition(FingerprintDefinition(
             fingerprint_id="x.v1", format="html",
-            assertions=(make_assertion("sheet_exists", "a", {"sheet": "S"}),),
+            assertions=(make_clause("sheet_exists", "a", {"sheet": "S"}),),
         ))
     assert e.value.code == "E_UNKNOWN_ASSERTION"
     extract = 'extract:\n  - name: r1\n    range: {sheet: "S", range: "A1:B2"}\n'
@@ -204,3 +206,91 @@ def test_registry_deterministic_listing():
     reg = Registry(builtin_rules())
     ids = [d.fingerprint_id for d in reg.list()]
     assert ids == sorted(ids)
+
+
+# one bad parameter each: a string where an int, a list or a cell type
+# belongs, an index below 0, a misspelt or unknown key
+BAD_PARAMS = [
+    ("assertions", "heading_level: {level: x, pattern: A}"),
+    ("assertions", "heading_level: {level: 7, pattern: A}"),
+    ("assertions", "table_min_rows: {min_rows: x}"),
+    ("assertions", "table_min_rows: {min_rows: true}"),
+    ("assertions", "text_near: {anchor: A, value: B, within_chars: '40'}"),
+    ("assertions", "text_contains: {value: 5}"),
+    ("assertions", "table_columns: {patterns: abc}"),
+    ("assertions", "header_token_search: {tokens: abc, min_matches: 1}"),
+    ("assertions", "table_shape: {min_columns: 1, types: number}"),
+    ("assertions", "table_shape: {min_columns: 1, types: [numbr]}"),
+    ("assertions", "table_min_rows: {min_rows: 1, index: -1}"),
+    ("assertions", "table_exists: {index: -1}"),
+    ("assertions", "table_exists: {heading_patern: Q}"),
+    ("extract", "table: {heading_pattern: A, idx: 1}"),
+    ("extract", "table: {heading_pattern: A, index: -1}"),
+    ("extract", "text_match: {anchor: A, value: B, within_chars: 4.5}"),
+]
+
+
+def _rule_with(where: str, clause: str) -> str:
+    extract = f"extract:\n  - {clause}\n" if where == "extract" else ""
+    assertion = clause if where == "assertions" else "text_regex: {pattern: x}"
+    return f"fingerprint_id: x.v1\nformat: html\nassertions:\n  - {assertion}\n{extract}"
+
+
+@pytest.mark.parametrize("where,clause", BAD_PARAMS, ids=[c for _w, c in BAD_PARAMS])
+def test_validate_refuses_ill_typed_params(where, clause):
+    """Every parameter is checked against its type's spec: kind, bound
+    and name. None of these compiles to a working Column (a crash, a
+    rule that can never or always match, or a silently ignored key)."""
+    with pytest.raises(ValidationError) as e:
+        validate_definition(parse_yaml(_rule_with(where, clause)))
+    assert e.value.code == "E_INVALID_YAML"
+
+
+def test_validate_compiles_every_regex(spark):
+    """With a JVM up every regex parameter is compiled by
+    java.util.regex, lists included; only span patterns (text_near,
+    text_match) must not match the empty string."""
+    for clause in ("heading_regex: {pattern: '('}",
+                   "table_columns: {patterns: [A, '[']}",
+                   "header_token_search: {tokens: ['(?<'], min_matches: 1}",
+                   "table_exists: {heading_pattern: '*'}"):
+        with pytest.raises(ValidationError, match="does not compile") as e:
+            validate_definition(parse_yaml(_rule_with("assertions", clause)))
+        assert e.value.code == "E_INVALID_YAML"
+    for clause in ("heading_regex: {pattern: '.*'}", "table_columns: {patterns: ['']}"):
+        validate_definition(parse_yaml(_rule_with("assertions", clause)))
+
+
+def test_rule_schema_matches_validation():
+    """`compile --schema` is generated from the parameter table: every
+    shipped rule passes it, and every ill-typed parameter fails it."""
+    import importlib.util
+
+    import jsonschema
+    import yaml
+
+    repo = Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", repo / "scripts" / "run_pipeline.py"
+    )
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    schema = cli._rule_definition_schema()
+    jsonschema.Draft202012Validator.check_schema(schema)
+    check = jsonschema.Draft202012Validator(schema)
+    assert {"extract_section", "extract_table", "extract_text_match"} <= set(schema["$defs"])
+    files = sorted((repo / "rules").glob("*.fp.yaml"))
+    assert len(files) == 9
+    for f in files:
+        assert not list(check.iter_errors(yaml.safe_load(f.read_text()))), f.name
+    for where, clause in BAD_PARAMS:
+        assert list(check.iter_errors(yaml.safe_load(_rule_with(where, clause)))), clause
+
+
+def test_loaded_rules_hash():
+    """List parameters are stored as tuples, so every rule keys the
+    pipeline's stage memo."""
+    reg = Registry.load_dir(Path(__file__).resolve().parents[1] / "rules")
+    assert len(reg.list()) == 14
+    for d in reg.list():
+        hash(d)

@@ -6,13 +6,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from fingerprint_spark.dsl.compiler import compile_assertion
-from fingerprint_spark.dsl.model import make_assertion
+from fingerprint_spark.dsl.model import make_clause
 from fingerprint_spark.dsl.validate import ValidationError, validate_definition
 from fingerprint_spark.parse import parse_html_col
 
 
 def _run(spark, df, env, atype, params):
-    a = make_assertion(atype, "t", params)
+    a = make_clause(atype, "t", params)
     return df.select(compile_assertion(a, env).alias("r")).first()["r"]
 
 
@@ -50,7 +50,7 @@ def test_text_near_refuses_empty_matching_patterns(spark):
     def rule(anchor, value):
         return FingerprintDefinition(
             fingerprint_id="t.v1", format="html",
-            assertions=(make_assertion(
+            assertions=(make_clause(
                 "text_near", "a",
                 {"anchor": anchor, "value": value, "within_chars": 10},
             ),),

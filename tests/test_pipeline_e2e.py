@@ -123,7 +123,7 @@ def test_one_python_stage_even_with_text_near_rules(spark):
     """text_near is a pure Column expression: a rule set with several
     text_near assertions must keep the plan at EXACTLY one
     ArrowEvalPython (the enrich UDF) — not one per assertion instance."""
-    from fingerprint_spark.dsl.model import FingerprintDefinition, make_assertion
+    from fingerprint_spark.dsl.model import FingerprintDefinition, make_clause
     from fingerprint_spark.dsl.registry import builtin_rules
 
     tn_rules = [
@@ -131,7 +131,7 @@ def test_one_python_stage_even_with_text_near_rules(spark):
             fingerprint_id=f"tn{i}.v1",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_near",
                     f"a{i}",
                     {"anchor": f"Anchor{i}", "value": r"\d+", "within_chars": 40},
@@ -154,7 +154,7 @@ def test_one_python_stage_even_with_text_near_rules(spark):
 def test_revalidate_is_incremental_no_reparse(spark, tmp_path):
     """New template version over stored parsed structs: no Python stage,
     no shuffle in the plan; verdicts change with the new rules."""
-    from fingerprint_spark.dsl.model import make_assertion, FingerprintDefinition
+    from fingerprint_spark.dsl.model import make_clause, FingerprintDefinition
     from fingerprint_spark.pipeline import revalidate
 
     out = quality_filter(generate_corpus(spark, 150, partitions=4))
@@ -166,7 +166,7 @@ def test_revalidate_is_incremental_no_reparse(spark, tmp_path):
             fingerprint_id="spam_any.v2",
             format="html",
             assertions=(
-                make_assertion(
+                make_clause(
                     "text_regex", "spam",
                     {"pattern": r"(?i)(buy cheap|casino|replica watches|weight loss)"},
                 ),

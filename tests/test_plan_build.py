@@ -134,7 +134,7 @@ def test_warm_build_py4j_budget(spark):
 
 
 def test_stage_memo_stays_bounded(spark):
-    from fingerprint_spark.dsl.model import FingerprintDefinition, make_assertion
+    from fingerprint_spark.dsl.model import FingerprintDefinition, make_clause
     from fingerprint_spark.pipeline import _STAGES
 
     out = quality_filter(generate_corpus(spark, 4, partitions=1))
@@ -143,7 +143,7 @@ def test_stage_memo_stays_bounded(spark):
             fingerprint_id=f"probe_{i}.v1",
             format="html",
             assertions=(
-                make_assertion("text_regex", "probe", {"pattern": f"probe{i}"}),
+                make_clause("text_regex", "probe", {"pattern": f"probe{i}"}),
             ),
             source="builtin",
             source_hash=f"md5:probe{i}",
@@ -151,6 +151,25 @@ def test_stage_memo_stays_bounded(spark):
         revalidate(out, [rule])
         assert len(_STAGES) <= _STAGES.maxsize
     assert len(_STAGES) == _STAGES.maxsize
+
+
+def test_list_param_rules_hit_the_stage_memo(spark, monkeypatch):
+    """A rule with list parameters (soi-pack.v1's header tokens) hashes,
+    so a second quality_filter build with it reuses the memoized stage
+    Columns instead of rebuilding them."""
+    import fingerprint_spark.pipeline as pipeline
+    from fingerprint_spark.dsl.registry import Registry
+
+    rules = [Registry.load_dir(os.path.join(REPO, "rules")).get("soi-pack.v1")]
+    df = generate_corpus(spark, 4, partitions=1)
+    quality_filter(df, rules)
+    builds = []
+    build = pipeline._html_levels
+    monkeypatch.setattr(
+        pipeline, "_html_levels", lambda r: builds.append(r) or build(r)
+    )
+    quality_filter(df, rules)
+    assert builds == []
 
 
 def test_context_cache_is_lru_and_skips_unhashable_keys(spark):

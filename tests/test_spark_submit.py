@@ -180,6 +180,8 @@ def test_cli_refuses_unloadable_rule_dirs(tmp_path):
         "sheet.fp.yaml": "fingerprint_id: s.v1\nformat: xlsx\nassertions:\n"
                          "  - text_regex: {pattern: x}\n",
         "broken.fp.yaml": "fingerprint_id: [unclosed\n",
+        "level.fp.yaml": "fingerprint_id: l.v1\nformat: html\nassertions:\n"
+                         "  - heading_level: {level: x, pattern: A}\n",
     }
     for name, text in bad_rules.items():
         rules_dir = tmp_path / name.split(".")[0]
@@ -195,6 +197,29 @@ def test_cli_refuses_unloadable_rule_dirs(tmp_path):
             assert r.returncode == 2, (name, args, r.stderr[-1500:])
             assert "error: E_INVALID_YAML" in r.stderr, r.stderr[-1500:]
             assert "Traceback" not in r.stderr
+
+
+def test_cli_run_refuses_uncompilable_regex(tmp_path):
+    """run validates with the JVM up, so a heading pattern
+    java.util.regex does not compile is one E_INVALID_YAML line and exit
+    2 before any job, not a failed task."""
+    import sys
+
+    script = os.path.join(REPO, "scripts", "run_pipeline.py")
+    (tmp_path / "r").mkdir()
+    (tmp_path / "r" / "paren.fp.yaml").write_text(
+        "fingerprint_id: p.v1\nformat: html\nassertions:\n"
+        "  - heading_regex: {pattern: '('}\n"
+    )
+    r = subprocess.run(
+        [sys.executable, script, "--input", str(tmp_path / "none"),
+         "--output", str(tmp_path / "out"), "--no-witness",
+         "--rules-dir", str(tmp_path / "r")],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 2, r.stderr[-1500:]
+    assert "error: E_INVALID_YAML" in r.stderr and "does not compile" in r.stderr
+    assert "Traceback" not in r.stderr
 
 
 def test_cli_subcommands_refuse_unknown_flags(tmp_path):
