@@ -121,14 +121,16 @@ def _check(what: str, p: Param, v):
     if p.kind == "int":
         ok = type(v) is int and p.lo <= v <= p.hi  # not a bool, float or string
     elif p.kind.endswith("_list"):
-        ok = type(v) is tuple and all(type(x) is str for x in v)
+        # an empty list would make its assertion hold for any table
+        ok = type(v) is tuple and len(v) >= 1 and all(type(x) is str for x in v)
         ok = ok and (p.kind == "regex_list" or set(v) <= set(CELL_TYPES))
     else:
         ok = type(v) is str
     if not ok:
+        kind = f"non-empty {p.kind}" if p.kind.endswith("_list") else p.kind
         bounds = f" in [{p.lo}, {p.hi}]" if p.kind == "int" else ""
         raise ValidationError(
-            "E_INVALID_YAML", f"{what} {v!r} is not a {p.kind}{bounds}"
+            "E_INVALID_YAML", f"{what} {v!r} is not a {kind}{bounds}"
         )
     return v
 

@@ -19,6 +19,15 @@ from .model import (
 )
 
 
+# java.util.regex syntax Python re cannot parse: \p{..} / \P{..}
+# classes, \Q..\E quoting, the escapes \h \H \R \X \G \z \e \cX \k<..>,
+# (?<name>..) groups and, before Python 3.11, possessive quantifiers
+# (a*+). Searched with escaped backslashes removed.
+_JAVA_ONLY = re.compile(
+    r"\\(?:[pP]\{|[QhHRXGzeck])|(?<!\\)[*+?}]\+|(?<!\\)\(\?<[A-Za-z]"
+)
+
+
 def _regex_problem(pat: str, span: bool) -> str | None:
     """Why ``pat`` cannot run, or None — judged by the engine that will
     EXECUTE it (java.util.regex via the active JVM when a SparkSession
@@ -27,10 +36,10 @@ def _regex_problem(pat: str, span: bool) -> str | None:
     text_match's split + regexp_extract desync on zero-width matches
     (a*, bare ^, ...); other patterns may (``rlike '.*'`` is valid).
 
-    With no JVM, Python ``re`` judges; a pattern it cannot parse
-    (Java-only syntax like possessive quantifiers or \\h) is accepted
-    with a warning, not refused: the round-2 failure mode was
-    E_INVALID_YAML on rules Java runs fine."""
+    With no JVM, Python ``re`` judges. A pattern it cannot parse is
+    refused, save one holding Java-only syntax (_JAVA_ONLY): that one is
+    accepted with a warning, not refused, since refusing rules Java runs
+    fine (E_INVALID_YAML) was the round-2 failure mode."""
     spark = SparkSession.getActiveSession()
     try:
         if spark is not None:
@@ -38,6 +47,8 @@ def _regex_problem(pat: str, span: bool) -> str | None:
         else:
             empty = re.search(pat, "") is not None
     except re.error as e:
+        if not _JAVA_ONLY.search(pat.replace("\\\\", "")):
+            return f"does not compile (python re: {e})"
         warnings.warn(
             f"pattern {pat!r} not checkable without a JVM (python re: {e}); "
             "accepting — java.util.regex is authoritative at execution",

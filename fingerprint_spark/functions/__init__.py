@@ -10,7 +10,7 @@ input_hint, no per-row Python UDF exists anywhere in this package.
 from .hashing import content_hash_col, minhash_signature_col
 from .langid import LANG_MARKERS
 from .perplexity import NGramModel, perplexity_col, train_char_ngram
-from .scrub import PII_PATTERNS, scrub_counts, scrub_text
+from .scrub import PII_PATTERNS, scrub_counts, scrub_levels
 from .textstats import (
     GOPHER_STOPWORDS,
     gopher_quality_flags,
@@ -25,7 +25,7 @@ __all__ = [
     "train_char_ngram",
     "NGramModel",
     "perplexity_col",
-    "scrub_text",
+    "scrub_levels",
     "scrub_counts",
     "PII_PATTERNS",
     "minhash_signature_col",

@@ -14,6 +14,7 @@ fully deterministic (sorted iteration, no RNG).
 from __future__ import annotations
 
 import math
+import re
 from dataclasses import dataclass
 from functools import lru_cache
 
@@ -27,6 +28,7 @@ from pyspark.sql import types as T
 from ..caching import context_cached
 
 DEFAULT_ORDER = 3
+_NON_ASCII = re.compile(r"[^\x00-\x7f]")
 # perplexity above this is "junk" for the quality verdict
 DEFAULT_PPL_THRESHOLD = 36.0
 
@@ -297,16 +299,25 @@ def ppl_exact_col(
 @lru_cache(maxsize=4)
 def score_text_fast_fn(model: NGramModel):
     """The production float scorer: BIT-IDENTICAL to score_text(model...)
-    but ~6x faster on ASCII text (r6): the logp lookup is a numpy
-    gather over a float64 _ascii_lut, summed with cumsum — numpy's
-    cumsum accumulates SEQUENTIALLY, so the float adds happen in the
-    same order with the same IEEE ops as the Python loop (verified
-    bit-exact over the full sf0.1 corpus + fixtures in
-    test_r06_optimizations). Non-ASCII text falls back to score_text
-    itself. Used by the enrich UDF (the flagship chain's per-doc ppl),
-    perplexity_col and the perplexity oracle row's ppl_udf."""
+    but ~6x faster (r6): the logp lookup is a numpy gather over a
+    float64 _ascii_lut, summed with cumsum — numpy's cumsum accumulates
+    SEQUENTIALLY, so the float adds happen in the same order with the
+    same IEEE ops as the Python loop (verified bit-exact over the full
+    sf0.1 corpus + fixtures in test_r06_optimizations).
+
+    Non-ASCII text takes the same LUT path with every non-ASCII char
+    mapped to ``\x01``. When no model gram holds ``\x01`` or a
+    non-ASCII char, every gram that holds one scores the backoff either
+    way, and the mapping keeps the char count, so the gram sequence and
+    its floats are unchanged. A model with such a gram scores non-ASCII
+    text with score_text itself. Used by the enrich UDF (the flagship
+    chain's per-doc ppl), perplexity_col and the perplexity oracle row's
+    ppl_udf."""
     logp = model.as_dict()
     order, backoff = model.order, model.backoff_logp
+    map_non_ascii = not any(
+        "\x01" in g or not g.isascii() for g in logp
+    )
     luts: dict[str, "np.ndarray"] = {}
 
     def _lut():
@@ -316,12 +327,12 @@ def score_text_fast_fn(model: NGramModel):
 
     def score(text: str) -> float:
         s = ("\x02" * (order - 1)) + (text or "").lower()[:4000] + "\x03"
-        try:
-            b = s.encode("ascii")
-        except UnicodeEncodeError:
-            return score_text(logp, order, backoff, text)
+        if not s.isascii():
+            if not map_non_ascii:
+                return score_text(logp, order, backoff, text)
+            s = _NON_ASCII.sub("\x01", s)
         # the pads make s at least order chars long: >= 1 gram
-        keys = _ascii_gram_keys(b, order)
+        keys = _ascii_gram_keys(s.encode("ascii"), order)
         total = _lut()[keys].cumsum()[-1]
         return math.exp(-float(total) / len(keys))
 

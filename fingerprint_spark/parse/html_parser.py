@@ -1,10 +1,13 @@
 """HTML structural parse + byte-stable text normalization (pure Python).
 
 Reimplements the *semantics* of the reference HTML scan
-(``/root/reference/src/document/html.rs:73-740``) on top of the stdlib
-event parser. This module is pure Python by design: it runs ONLY inside
-Arrow-batched pandas UDFs (see ``fingerprint_spark.parse``), one call per
-document, many documents per Arrow batch.
+(``/root/reference/src/document/html.rs:73-740``) as block handlers on
+the stdlib event parser's interface, driven by a single-pass scanner
+(``_scan``) that gives them the events ``HTMLParser`` would
+(``parse_html_stdlib``, the reference twin, drives them with
+``HTMLParser`` itself). This module is pure Python by design: it runs
+ONLY inside Arrow-batched pandas UDFs (see ``fingerprint_spark.parse``),
+one call per document, many documents per Arrow batch.
 
 Normalization rules replicated byte-for-byte (the "byte-identical
 extracted text per url" invariant):
@@ -26,6 +29,7 @@ extracted text per url" invariant):
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 
 _IGNORED_TAGS = frozenset(
@@ -46,6 +50,14 @@ _IMPLIED_HEADING_CLOSE = frozenset(
     ["p", "div", "table", "section", "ul", "ol", "li", "blockquote",
      "pre", "tr", "hr"] + list(_HEADING_TAGS)
 )
+# _scan's own tokens, read exactly as html.parser reads them: a start tag
+# with no attributes (its tagfind_tolerant name directly followed by >),
+# an end tag (its endtagfind), and the test for a start tag at all
+# (its starttagopen)
+_PLAIN_START = re.compile(r"<([a-zA-Z][^\t\n\r\f />\x00]*)>")
+_PLAIN_END = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_START_OPEN = re.compile("<[a-zA-Z]")
+_RAW_TEXT = frozenset(HTMLParser.CDATA_CONTENT_ELEMENTS)
 
 
 def normalize_ws(s: str) -> str:
@@ -232,11 +244,97 @@ class _StructParser(HTMLParser):
 
     def close(self):
         super().close()
-        # EOF with unbalanced structures: emit what was collected
+        self.finish()
+
+    def finish(self) -> None:
+        """EOF with unbalanced structures: emit what was collected."""
         self._close_heading()
         while self._t_stack:
             self._t_emit(self._t_stack.pop())
         self._flush_text()
+
+
+def _scan(p: _StructParser, s: str) -> None:
+    """Drive ``p``'s handlers over the whole document ``s`` in one pass,
+    with the events ``p.feed(s); p.close()`` gives them.
+
+    Text runs are found with ``str.find`` and decoded whole, as
+    ``convert_charrefs`` does. Plain ``<name>`` and ``</name>`` tags are
+    read by one pattern each. Everything else (attributes, comments,
+    ``<!``, ``<?``, a bare ``<``, a raw-text element's close) goes to the
+    stdlib's own ``parse_*`` methods on the same buffer. Unlike
+    ``goahead`` it keeps no line counts and never stops to wait for more
+    input: markup unterminated at EOF becomes text, as ``close()`` makes
+    it."""
+    p.rawdata = s  # the stdlib parse_* methods read the buffer here
+    n = len(s)
+    find = s.find
+    data, start, end = p.handle_data, p.handle_starttag, p.handle_endtag
+    plain_start, plain_end = _PLAIN_START.match, _PLAIN_END.match
+    i = 0
+    while i < n:
+        if p.cdata_elem is not None:
+            # raw text up to </\s*script\s*> in any case (or style);
+            # parse_endtag keeps the mode on a close tag for another
+            # element. Text of an element still open at EOF is dropped
+            m = p.interesting.search(s, i)
+            if m is None:
+                break
+            j = m.start()
+            if i < j:
+                data(s[i:j])
+            i = p.parse_endtag(j)
+            continue
+        j = find("<", i)
+        if j < 0:
+            j = n
+        if i < j:
+            data(unescape(s[i:j]))
+            i = j
+            if i == n:
+                break
+        m = plain_start(s, i)
+        if m is not None:
+            tag = m.group(1).lower()
+            start(tag, [])
+            if tag in _RAW_TEXT:
+                p.set_cdata_mode(tag)
+            i = m.end()
+            continue
+        m = plain_end(s, i)
+        if m is not None:
+            end(m.group(1).lower())
+            i = m.end()
+            continue
+        nxt = s[i + 1:i + 2]
+        if _START_OPEN.match(s, i):
+            k = p.parse_starttag(i)
+        elif nxt == "/":
+            k = p.parse_endtag(i)
+        elif nxt == "!":
+            k = p.parse_html_declaration(i)
+        elif nxt == "?":
+            k = p.parse_pi(i)
+        elif nxt:
+            data("<")
+            k = i + 1
+        else:
+            break  # a "<" that ends the document: text, below
+        if k < 0:
+            # markup unterminated at EOF reads as text up to the next
+            # ">" (or "<"), as close() hands it over
+            k = find(">", i + 1)
+            if k < 0:
+                k = find("<", i + 1)
+                if k < 0:
+                    k = i + 1
+            else:
+                k += 1
+            data(unescape(s[i:k]))
+        i = k
+    if i < n and p.cdata_elem is None:
+        data(unescape(s[i:]))
+    p.finish()
 
 
 def _expand_table(
@@ -370,17 +468,36 @@ def _build_sections(
 
 def parse_html(html: str) -> dict:
     """Full structural parse -> plain dict matching schema.PARSED_TYPE."""
+    p = _StructParser()
     try:
-        p = _StructParser()
+        _scan(p, html)
+    except Exception as e:  # parse failure -> skip analog, never fatal
+        return _parse_failure(e)
+    return _parsed(p)
+
+
+def parse_html_stdlib(html: str) -> dict:
+    """Reference twin of parse_html: the same block handlers, driven by
+    html.parser's own ``feed`` + ``close`` instead of ``_scan``."""
+    p = _StructParser()
+    try:
         p.feed(html)
         p.close()
-    except Exception as e:  # parse failure -> skip analog, never fatal
-        return {
-            "normalized": None, "headings": None, "sections": None,
-            "tables": None, "page_sections": None,
-            "parse_error": f"E_PARSE: {type(e).__name__}: {e}",
-        }
+    except Exception as e:
+        return _parse_failure(e)
+    return _parsed(p)
 
+
+def _parse_failure(e: Exception) -> dict:
+    return {
+        "normalized": None, "headings": None, "sections": None,
+        "tables": None, "page_sections": None,
+        "parse_error": f"E_PARSE: {type(e).__name__}: {e}",
+    }
+
+
+def _parsed(p: _StructParser) -> dict:
+    """The parse dict of a parser that has seen the whole document."""
     lines: list[str] = []
     headings: list[dict] = []
     tables: list[dict] = []

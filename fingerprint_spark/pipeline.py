@@ -68,7 +68,7 @@ from .functions.perplexity import (
     perplexity_col,
     train_char_ngram,
 )
-from .functions.scrub import scrub_counts, scrub_text
+from .functions.scrub import scrub_counts, scrub_levels
 from .functions.textstats import (
     GOPHER_FLAGS,
     gopher_quality_flags,
@@ -129,20 +129,29 @@ def _tail_levels(
 ) -> tuple[dict[str, Column], ...]:
     """The quality tail both chains share, as projection levels:
     ``first`` (the ``_lid`` struct<lang, score> plus the chain's
-    extras), then lang + stats, then flags + scrub, then the verdict."""
+    extras), then lang + stats, then flags + scrub, then the verdict.
+
+    The scrub chain's levels ride the last three: a helper, then
+    scrubbed_text, continued in place in the verdict level. The three
+    are already separate Projects of the optimized plan, and
+    scrubbed_text keeps its column position."""
+    scrub1, scrub2, scrub3 = scrub_levels(
+        text, ("_scrub", "scrubbed_text", "scrubbed_text")
+    )
     return (
         first,
         {
             "lang_detected": F.col("_lid.lang"),
             "lang_score": F.col("_lid.score"),
             "stats": text_stats(text),
+            **scrub1,
         },
         {
             "flags": gopher_quality_flags(F.col("stats")),
             "scrub": scrub_counts(text),
-            "scrubbed_text": scrub_text(text),
+            **scrub2,
         },
-        {"keep": reason.isNull(), "drop_reason": reason},
+        {"keep": reason.isNull(), "drop_reason": reason, **scrub3},
     )
 
 
@@ -150,7 +159,7 @@ DEFAULT_LANGID_THRESHOLD = 0.5  # CCNet's fastText-prob gate
 
 # the stage-Column memo (module docstring: driver-side build shape)
 _STAGES = ContextCache(maxsize=8)
-_HELPER_COLS = ("_enriched", "_lid")  # level-to-level helpers, dropped
+_HELPER_COLS = ("_enriched", "_lid", "_scrub")  # level-to-level helpers, dropped
 
 
 def _trained_langid(
@@ -278,6 +287,8 @@ def _html_levels(
             "drop_reason": F.when(
                 parse_err.isNotNull(), F.lit("skip:E_PARSE")
             ).otherwise(verdict["drop_reason"]),
+            # the scrub chain's last level rides the verdict's
+            "scrubbed_text": verdict["scrubbed_text"],
             "warnings": F.filter(
                 F.array(F.when(parse_err.isNotNull(), F.lit("E_PARSE"))),
                 lambda w: w.isNotNull(),

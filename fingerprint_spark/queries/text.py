@@ -8,7 +8,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.langid import TOKEN_SPLIT_RE, marker_langid_col
-from ..functions.scrub import PII_PATTERNS, scrub_counts, scrub_text
+from ..functions.scrub import (
+    PII_PATTERNS, SCRUB_LEVELS, scrub_counts, scrub_levels,
+)
 from ..functions.textstats import (
     GOPHER_FLAGS,
     gopher_quality_flags,
@@ -210,11 +212,9 @@ def q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, _p, _r in PII_PATTERNS:
         c = counts[name].cast("bigint")
         total = c if total is None else total + c
-    return df.select(
-        "doc_id",
-        scrub_text(F.col("text")).alias("scrubbed_text"),
-        total.alias("n_pii"),
-    )
+    for level in scrub_levels(F.col("text"), ("scrubbed_text",) * SCRUB_LEVELS):
+        df = df.withColumns(level)
+    return df.select("doc_id", "scrubbed_text", total.alias("n_pii"))
 
 
 def sql_scrub() -> str:

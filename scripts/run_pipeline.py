@@ -167,8 +167,9 @@ def _rule_definition_schema() -> dict:
     string = {"type": "string"}
     kinds = {"string": string, "regex": string, "span_regex": string,
              "int": {"type": "integer"},
-             "regex_list": {"type": "array", "items": string},
-             "cell_type_list": {"type": "array", "items": {"enum": list(CELL_TYPES)}}}
+             "regex_list": {"type": "array", "items": string, "minItems": 1},
+             "cell_type_list": {"type": "array", "minItems": 1,
+                                "items": {"enum": list(CELL_TYPES)}}}
     defs = {}
 
     def param(p) -> dict:

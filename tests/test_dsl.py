@@ -227,6 +227,9 @@ BAD_PARAMS = [
     ("extract", "table: {heading_pattern: A, idx: 1}"),
     ("extract", "table: {heading_pattern: A, index: -1}"),
     ("extract", "text_match: {anchor: A, value: B, within_chars: 4.5}"),
+    ("assertions", "table_columns: {patterns: []}"),
+    ("assertions", "table_shape: {min_columns: 1, types: []}"),
+    ("assertions", "header_token_search: {tokens: [], min_matches: 0}"),
 ]
 
 
@@ -259,6 +262,37 @@ def test_validate_compiles_every_regex(spark):
         assert e.value.code == "E_INVALID_YAML"
     for clause in ("heading_regex: {pattern: '.*'}", "table_columns: {patterns: ['']}"):
         validate_definition(parse_yaml(_rule_with("assertions", clause)))
+
+
+def test_compile_check_without_jvm_refuses_unparsable_regex(tmp_path):
+    """Session-free `compile --check` judges a regex with Python re: a
+    pattern re cannot parse is refused (E_INVALID_YAML, exit 2) unless it
+    holds Java-only syntax, which is accepted with a warning."""
+    import subprocess
+    import sys
+
+    script = Path(__file__).resolve().parents[1] / "scripts" / "run_pipeline.py"
+
+    def check(clause: str) -> subprocess.CompletedProcess:
+        rule = tmp_path / "r.fp.yaml"
+        rule.write_text(_rule_with("assertions", clause))
+        return subprocess.run(
+            [sys.executable, str(script), "compile", str(rule), "--check"],
+            capture_output=True, text=True, timeout=120,
+        )
+
+    for clause in ("text_regex: {pattern: '('}",
+                   "table_columns: {patterns: [A, '[']}",
+                   "text_near: {anchor: 'x(', value: B, within_chars: 9}"):
+        r = check(clause)
+        assert r.returncode == 2, (clause, r.stdout, r.stderr[-800:])
+        assert "E_INVALID_YAML" in r.stderr and "does not compile" in r.stderr
+    for clause in (r"text_regex: {pattern: '\p{Lu}+'}",
+                   r"text_regex: {pattern: '\Q(\E'}",
+                   "text_regex: {pattern: 'a++b'}"):
+        r = check(clause)
+        assert r.returncode == 0, (clause, r.stderr[-800:])
+        assert r.stdout.strip() == "OK x.v1"
 
 
 def test_rule_schema_matches_validation():

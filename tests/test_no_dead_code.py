@@ -49,9 +49,12 @@ ENTRY_POINTS = (
 NOT_PRODUCTION = {ROOT / "qfbench" / "test_smoke.py"}
 TESTS = ROOT / "tests"
 
-# Reference twins: only tests call them, by design. Each pins the
-# production code named in its comment, and a test must call it.
+# Reference twins: only tests call them, by design (score_text also
+# scores non-ASCII text for a model that holds a non-ASCII gram). Each
+# pins the production code named in its comment, a faster kernel with
+# the same output, and a test must call it.
 REFERENCE_TWINS = (
+    "parse_html_stdlib",  # parse_html's single-pass scanner (_scan)
     "score_text",  # score_text_fast_fn and the fixed-point ppl UDF
     "simhash64_py",  # the batch shingle kernel's simhash
     "minhash_signature_py",  # the batch shingle kernel's minhash
@@ -61,6 +64,7 @@ REFERENCE_TWINS = (
     "_text_match_py",  # extract_text_match, the Column text_match extract
     "_decode_grid_projection",  # q_xlsx_decode's fused decode UDF
     "langid_best",  # marker_langid_batch, by Spark's own split/regex count
+    "scrub_text",  # scrub_levels and the guarded scrub_counts
 )
 
 # Parameters a signature must keep although the body never reads them,

@@ -1,13 +1,17 @@
 """Property-based tests (hypothesis): robustness + invariants the
 scenario tests can't sweep."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import Phase, given, settings, strategies as st
 
 from fingerprint_spark.functions.hashing import (
     minhash_signature_py,
     simhash64_py,
 )
-from fingerprint_spark.parse.html_parser import normalize_ws, parse_html
+from fingerprint_spark.parse.html_parser import (
+    normalize_ws,
+    parse_html,
+    parse_html_stdlib,
+)
 
 text_strategy = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
@@ -194,3 +198,135 @@ def test_winnowing_never_throws_and_bounded(s):
     # 60-bit md5 prefixes, one window minimum per window position
     assert all(0 <= x < (1 << 60) for x in fp)
     assert len(fp) <= max(1, len(s))
+
+
+# --- fast kernels against their reference twins ---------------------------
+
+_TAG_NAMES = ["p", "P", "div", "br", "BR", "td", "th", "tr", "table", "h1",
+              "H2", "h7", "li", "section", "script", "SCRIPT", "style",
+              "title", "head", "span", "a", "x:y", "my-tag"]
+_SOUP_PIECES = st.one_of(
+    # start tags: plain, uppercase, self-closing, attributes with
+    # quoted ">" and "/", bare and repeated "=", colspan/rowspan, pages
+    st.builds(lambda t: f"<{t}>", st.sampled_from(_TAG_NAMES)),
+    st.builds(lambda t: f"</{t}>", st.sampled_from(_TAG_NAMES)),
+    st.builds(lambda t, a: f"<{t} {a}>", st.sampled_from(_TAG_NAMES), st.sampled_from([
+        'href="a>b"', "title='x/>y'", "colspan=2", "rowspan='3'",
+        'data-page-number="7"', "data-page-number=x", "checked", "a==b",
+        'x="unterminated', "a=b/", "/", "\tz"])),
+    st.builds(lambda t: f"<{t}/>", st.sampled_from(_TAG_NAMES)),
+    st.builds(lambda t: f"< /{t} >", st.sampled_from(_TAG_NAMES)),
+    st.sampled_from([
+        "<!DOCTYPE html>", "<!-- note -->", "<!-- open", "<!--x--!>",
+        "<![CDATA[a<b]]>", "<![if IE]>", "<![endif]>", "<![foo bar>",
+        "<![ x>", "<!bogus>", "<?xml v='1'?>", "<?pi", "</>", "</ p>",
+        "</3>", "< p>", "<", "<<", "<3", "&", "&&", "&amp;", "&amp",
+        "&#65;", "&#x41", "&#;", "&nbsp;", "&bogus;", "&lt;p&gt;", "\n",
+        " \u00a0 ", "\u2013", "</script >", "</ScRiPt>", "</style",
+        "<script>if (a < b) {}</p></script>", "<p a='1'/>", "<br/>",
+        "<section data-page-number=\"2\"><h2>Hi</h2></section>",
+    ]),
+    st.text(alphabet="ab <>&;#/=\"'!?-\nİ", max_size=12),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_SOUP_PIECES, max_size=40), st.integers(min_value=0, max_value=8))
+def test_scanner_matches_stdlib_parser(pieces, cut):
+    """parse_html's single-pass scanner gives the whole dict the
+    html.parser-driven twin gives, parse_error included, on tag soup;
+    cutting characters off the end leaves markup unterminated at EOF."""
+    html = "".join(pieces)
+    for doc in (html, html[: len(html) - cut]):
+        assert parse_html(doc) == parse_html_stdlib(doc), doc
+
+
+def test_scanner_matches_stdlib_parser_on_errors():
+    """A marked section the stdlib refuses is the same E_PARSE skip."""
+    for doc in ("<p>a<![foo bar>b</p>", "x<![ y>", "<![if x>"):
+        out = parse_html(doc)
+        assert out == parse_html_stdlib(doc), doc
+    assert parse_html("<p>a<![foo bar>b</p>")["parse_error"].startswith(
+        "E_PARSE: AssertionError"
+    )
+
+
+_PPL_CHARS = st.one_of(
+    st.characters(max_codepoint=0x7F),
+    st.sampled_from("İıßẞﬃΣςéü日本\x01\x02\x03"),
+    st.characters(min_codepoint=0x10000, max_codepoint=0x1FFFF),  # astral
+)
+
+
+def _ppl_models():
+    from fingerprint_spark.functions.perplexity import train_char_ngram
+    from fingerprint_spark.pipeline import default_ppl_model
+
+    return (
+        default_ppl_model(),
+        train_char_ngram(["plain ascii text", "more words here"]),
+        # a model that holds non-ASCII grams scores through score_text
+        train_char_ngram(["café İstanbul 日本", "ascii too"]),
+    )
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet=_PPL_CHARS, max_size=60), st.integers(0, 4100))
+def test_ppl_lut_matches_score_text(s, pad):
+    """score_text_fast_fn returns score_text's exact float, for text
+    whose lower() changes length, astral chars, text past the
+    4,000-char truncation and a model with non-ASCII grams."""
+    from fingerprint_spark.functions.perplexity import score_text, score_text_fast_fn
+
+    for text in (s, "a" * pad + s, s * (4100 // max(len(s), 1)),
+                 "Café İstanbul 日本 " + s):
+        for m in _ppl_models():
+            want = score_text(m.as_dict(), m.order, m.backoff_logp, text)
+            assert score_text_fast_fn(m)(text) == want, text
+
+
+_SCRUB_TEXT = st.lists(
+    st.one_of(
+        st.text(alphabet="0123456789@()-. ab", max_size=20),
+        st.sampled_from([
+            "(555) 123-4567890-12-3456", "(555) 123-4567", "123-45-6789",
+            "987-64-3200", "(987) 604-3200", "joe@example.org",
+            "a.b@c.de", "x@y.com-12-3456", "10.0.0.1", "damn", "Hell-o",
+            "1-(555) 123-4567", "@", "(", "-", " ",
+        ]),
+    ),
+    max_size=8,
+).map("".join)
+
+
+# no shrink phase: each example is a Spark job
+@settings(max_examples=5, deadline=None,
+          phases=(Phase.explicit, Phase.reuse, Phase.generate))
+@given(st.lists(_SCRUB_TEXT, min_size=50, max_size=120))
+def test_guarded_scrub_matches_unguarded_chain(spark, texts):
+    """The literal-guarded counts and replacement chain equal the
+    unguarded ones (scrub_text, counts without a guard), in one
+    DataFrame, NULL text included."""
+    from pyspark.sql import functions as F
+
+    from fingerprint_spark.functions.scrub import (
+        PII_PATTERNS, SCRUB_LEVELS, scrub_counts, scrub_levels, scrub_text,
+    )
+
+    text = F.col("text")
+    # the phone replacement there puts a new \b before "890-12-3456"
+    texts = [*texts, "(555) 123-4567890-12-3456", None]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    for level in scrub_levels(text, ("guarded",) * SCRUB_LEVELS):
+        df = df.withColumns(level)
+    unguarded = F.struct(*[
+        F.size(F.regexp_extract_all(text, F.lit(pat), F.lit(0))).alias(name)
+        for name, pat, _r in PII_PATTERNS
+    ])
+    rows = df.select(
+        "text", "guarded", scrub_text(text).alias("chain"),
+        scrub_counts(text).alias("counts"), unguarded.alias("want"),
+    ).collect()
+    for r in rows:
+        assert r["guarded"] == r["chain"], r["text"]
+        assert r["counts"] == r["want"], r["text"]

@@ -225,7 +225,9 @@ PPL_TEXTS = [
 def test_score_text_fast_bit_identical(sf_dir):
     """score_text_fast_fn must return the EXACT floats of score_text —
     numpy cumsum accumulates sequentially, so the adds happen in the
-    same order; the non-ASCII path falls back to score_text itself."""
+    same order; non-ASCII text takes the same LUT path with each
+    non-ASCII char mapped to \\x01 (the default model holds no
+    non-ASCII gram)."""
     from fingerprint_spark.functions.perplexity import (
         score_text,
         score_text_fast_fn,
