@@ -146,9 +146,13 @@ class Registry:
     ) -> "Registry":
         """Scan a directory for *.fp.yaml (installed.rs:67-149). Builtin
         rules are always trusted; installed files must match a trust glob
-        (core.rs:229-239) when a trust list is supplied."""
-        reg = Registry(builtin_rules())
+        (core.rs:229-239) when a trust list is supplied. A path that is
+        not a directory is refused (E_BAD_INPUT), so a mistyped one
+        cannot run on the builtins alone; an empty directory is fine."""
         p = Path(path)
+        if not p.is_dir():
+            raise RegistryError("E_BAD_INPUT", f"rules directory {path} not found")
+        reg = Registry(builtin_rules())
         for f in sorted(p.glob("*.fp.yaml")):
             if trusted_globs is not None and not any(
                 fnmatch.fnmatch(f.name, g) or fnmatch.fnmatch(str(f), g)

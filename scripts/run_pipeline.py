@@ -13,6 +13,14 @@
 Writes keep/drop verdicts + scrubbed text per url, checkpointed per
 url-hash bucket with a lineage manifest; a killed job resumes with
 ``--resume`` and recomputes nothing. Prints one JSON summary line.
+
+Every mode — ``run`` above and the subcommands ``curate``, ``frontier``,
+``train-classifier``, ``train-lm``, ``train-langid``, ``compile``,
+``witness`` and ``infer`` — is one entry of the ``MODES`` table: its
+arguments with their kinds, defaults and help, its cross-option rules
+and whether it starts a JVM. One argparse parser per mode is built from
+it. Every refusal is one JSON envelope line on stderr and exit 2; exit
+1 is run's PARTIAL outcome alone.
 """
 
 from __future__ import annotations
@@ -22,8 +30,14 @@ import json
 import math
 import os
 import sys
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from fingerprint_spark.pipeline import (  # noqa: E402
+    DEFAULT_LANGID_THRESHOLD,
+    DEFAULT_PPL_THRESHOLD,
+)
 
 # output-record schema advertised by --schema (JSON-Schema shape, the
 # analog of the reference's record schema surface)
@@ -65,28 +79,126 @@ OUTPUT_SCHEMA = {
 REFUSALS = [
     "E_PARSE", "E_INVALID_YAML", "E_UNKNOWN_ASSERTION", "E_MISSING_FIELD",
     "E_DUPLICATE_FP_ID", "E_UNKNOWN_FP", "E_ORPHAN_CHILD", "E_UNTRUSTED_FP",
+    "E_USAGE", "E_BAD_INPUT",
 ]
 
-OPTIONS = [
-    {"flag": "--input", "help": "day-partitioned parquet corpus"},
-    {"flag": "--output", "help": "checkpointed output directory"},
-    {"flag": "--rules-dir", "help": "*.fp.yaml rule directory"},
-    {"flag": "--day", "help": "partition-pruned single day"},
-    {"flag": "--buckets", "help": "checkpoint bucket count"},
-    {"flag": "--resume", "help": "skip committed buckets"},
-    {"flag": "--params-version", "help": "rule/params version tag"},
-    {"flag": "--diagnose", "help": "full-eval diagnostics for unmatched docs"},
-    {"flag": "--fp", "help": "select fingerprint rules by id (repeatable)"},
-    {"flag": "--no-witness", "help": "skip the witness ledger append"},
-    {"flag": "--keep-parsed", "help": "persist parsed structs for --revalidate"},
-    {"flag": "--revalidate", "help": "incremental re-validation over stored parsed structs"},
-    {"flag": "--langid-model", "help": "trained langid model file (train-langid output)"},
-    {"flag": "--langid-threshold", "help": "trained-langid 'und' gate probability (default 0.5)"},
-    {"flag": "--describe", "help": "print operator descriptor JSON and exit"},
-    {"flag": "--schema", "help": "print output record JSON-Schema and exit"},
-    {"flag": "--list", "help": "print registered rules and exit"},
-    {"flag": "--version", "help": "print version banner and exit"},
-]
+
+class Opt(NamedTuple):
+    """One argument of a mode. ``name`` is ``--flag`` for an option and a
+    bare word for a positional. ``kind`` is a ``KINDS`` key. A
+    ``default`` of ``...`` makes the argument required; a positional
+    with any other default is optional."""
+
+    name: str
+    kind: str
+    default: object
+    help: str
+    choices: tuple[str, ...] = ()
+
+
+class Mode(NamedTuple):
+    """One CLI mode: its handler, its arguments, whether it starts a
+    SparkSession, and its cross-option rules — ``requires`` (a needs b),
+    ``excludes`` (a has no effect with b) and ``one_of`` (exactly one of
+    these is given)."""
+
+    run: Callable[[argparse.Namespace], int]
+    args: tuple[Opt, ...]
+    jvm: bool = True
+    requires: tuple[tuple[str, str], ...] = ()
+    excludes: tuple[tuple[str, str], ...] = ()
+    one_of: tuple[str, ...] = ()
+
+
+def count(text: str) -> int:
+    """An integer >= 1: a bucket, shard, word or iteration count."""
+    n = int(text)
+    if n < 1:
+        raise ValueError(text)
+    return n
+
+
+KINDS = {
+    "str": {},
+    "count": {"type": count},
+    "float": {"type": float},
+    "flag": {"action": "store_true"},
+    "append": {"action": "append"},
+}
+
+# run's display flags: they short-circuit before any validation
+DISPLAY = (
+    Opt("--describe", "flag", False, "print operator descriptor JSON and exit"),
+    Opt("--schema", "flag", False, "print output record JSON-Schema and exit"),
+    Opt("--list", "flag", False, "print registered rules and exit"),
+    Opt("--version", "flag", False, "print version banner and exit"),
+)
+
+
+class Refused(Exception):
+    """A refusal raised anywhere in a mode; ``main`` prints it through
+    ``refuse``."""
+
+    def __init__(self, code: str, message: str):
+        super().__init__(message)
+        self.code = code
+
+
+def refuse(mode: str, code: str, message: str) -> int:
+    """The refusal envelope (the reference's, SURVEY §2.10): one JSON
+    line on stderr, exit 2."""
+    print(json.dumps({"refusal": {"code": code, "mode": mode, "message": message}},
+                     ensure_ascii=False), file=sys.stderr)
+    return 2
+
+
+class _Parser(argparse.ArgumentParser):
+    """argparse whose usage errors are E_USAGE refusals, not exits."""
+
+    def error(self, message: str):
+        message = message.replace("argument -", "option -", 1)
+        raise Refused("E_USAGE", f"{self.prog}: {message}\n{self.format_usage().strip()}")
+
+
+def _dest(name: str) -> str:
+    return name.lstrip("-").replace("-", "_")
+
+
+def _parse(name: str, argv: list[str]) -> argparse.Namespace:
+    """``argv`` checked against the mode's table entry — unknown options,
+    kinds, bounds and the cross-option rules, each an E_USAGE refusal.
+    The result holds every declared argument, defaults filled in."""
+    mode = MODES[name]
+    ap = _Parser(prog="run_pipeline.py" if name == "run" else name,
+                 add_help=name == "run", allow_abbrev=False,
+                 argument_default=argparse.SUPPRESS)
+    for o in mode.args:
+        kw = dict(KINDS[o.kind], help=o.help)
+        if o.choices:
+            kw["choices"] = o.choices
+        if o.name.startswith("-"):
+            kw["required"] = o.default is ...
+        elif o.default is not ...:
+            kw["nargs"] = "?"
+        ap.add_argument(o.name, **kw)
+    parsed, extra = ap.parse_known_args(argv)
+    if extra:
+        ap.error(("unknown option " if extra[0].startswith("-")
+                  else "unexpected argument ") + extra[0])
+    given = vars(parsed)  # SUPPRESS keeps an argument not given out of it
+    for a, b in mode.requires:
+        if _dest(a) in given and _dest(b) not in given:
+            raise Refused("E_USAGE", f"error: {a} requires {b}")
+    for a, b in mode.excludes:
+        if _dest(a) in given and _dest(b) in given:
+            raise Refused("E_USAGE", f"error: {a} has no effect with {b}")
+    if mode.one_of and sum(_dest(a) in given for a in mode.one_of) != 1:
+        raise Refused("E_USAGE", "error: pass exactly one of " + ", ".join(mode.one_of))
+    return argparse.Namespace(**{**{_dest(o.name): o.default for o in mode.args}, **given})
+
+
+def _flags(args: tuple[Opt, ...]) -> list[dict]:
+    return [{"flag": o.name, "help": o.help} for o in args if o.name.startswith("-")]
 
 
 def _display_surfaces(argv: list[str]) -> int | None:
@@ -110,7 +222,11 @@ def _display_surfaces(argv: list[str]) -> int | None:
             ],
             "exit_codes": {"0": "OK", "1": "PARTIAL", "2": "refusal/usage"},
             "refusals": REFUSALS,
-            "options": OPTIONS,
+            "options": _flags(MODES["run"].args + DISPLAY),
+            "subcommands": {
+                name: {"jvm": m.jvm, "options": _flags(m.args)}
+                for name, m in MODES.items() if name != "run"
+            },
         }, sort_keys=True))
         return 0
     if "--schema" in argv:
@@ -122,10 +238,7 @@ def _display_surfaces(argv: list[str]) -> int | None:
             i = argv.index("--rules-dir")
             if i + 1 < len(argv):
                 rules_dir = argv[i + 1]
-        reg = _load_registry(rules_dir)
-        if reg is None:
-            return 2
-        for r in reg.list():
+        for r in _load_rules(rules_dir, None):
             parent = r.parent or "-"
             print(f"{r.fingerprint_id}\t{r.format}\t{parent}\t{r.source}")
         return 0
@@ -135,20 +248,53 @@ def _display_surfaces(argv: list[str]) -> int | None:
     return None
 
 
-def _load_registry(rules_dir: str | None):
-    """The builtin rules plus ``rules_dir``'s *.fp.yaml; None after one
-    ``rule load error: E_*`` line when a rule fails to parse or
-    validate (the refusal contract of --describe: exit 2, no
-    traceback)."""
+def _load_rules(rules_dir: str | None, fp: list[str] | None) -> list:
+    """The builtin rules plus ``rules_dir``'s *.fp.yaml: all of them, or
+    the ``fp`` ids in order. A rule that fails to parse or validate, a
+    missing directory and a bad selection are refused with the error's
+    own E_* code. Validation judges regexes with java.util.regex when a
+    SparkSession is up, else with Python ``re``."""
     from fingerprint_spark.dsl.parser import ParseError
     from fingerprint_spark.dsl.registry import Registry, RegistryError, builtin_rules
     from fingerprint_spark.dsl.validate import ValidationError
 
     try:
-        return Registry.load_dir(rules_dir) if rules_dir else Registry(builtin_rules())
+        reg = Registry.load_dir(rules_dir) if rules_dir else Registry(builtin_rules())
     except (ParseError, ValidationError, RegistryError) as e:
-        print(f"rule load error: {e}", file=sys.stderr)
-        return None
+        raise Refused(e.code, f"rule load error: {e}") from None
+    try:
+        return reg.resolve(fp) if fp else reg.list()
+    except RegistryError as e:
+        raise Refused(e.code, f"rule selection error: {e}") from None
+
+
+def _session():
+    """The one SparkSession preamble of every mode. It sets no master:
+    spark-submit supplies it, and plain ``python`` gets PySpark's
+    ``local[*]``. Quiet logs; executor code via addPyFile."""
+    from pyspark.sql import SparkSession
+
+    from fingerprint_spark.deploy import ensure_pyfiles
+
+    spark = SparkSession.builder.appName("fingerprint_spark_pipeline").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensure_pyfiles(spark)
+    return spark
+
+
+def _read_parquet(spark, path: str, *cols: str):
+    """``path`` as a DataFrame holding ``cols``; a path Spark cannot
+    read or a missing column is refused."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        raise Refused("E_BAD_INPUT", f"error: {e}") from None
+    for c in cols:
+        if c not in df.columns:
+            raise Refused("E_BAD_INPUT", f"error: column {c!r} not in {path}")
+    return df
 
 
 def _rule_definition_schema() -> dict:
@@ -217,46 +363,36 @@ def _rule_definition_schema() -> dict:
     }
 
 
-def _compile_mode(argv: list[str]) -> int:
+def _compile_mode(args: argparse.Namespace) -> int:
     """`compile <rule.fp.yaml> [--check]` / `compile --schema` — the
     reference's compile surface (src/compile/, cli_smoke_surfaces.rs).
     --check parses + validates only; full compile also builds the
     Catalyst expression tree (the engine's 'generated code') and prints
     a descriptor with the rule's source_hash and the compiled match
     expression."""
-    paths, opts = _parse_subcommand_argv(argv, (), flags=("schema", "check"))
-    if "schema" in opts:
+    if args.schema:
         print(json.dumps(_rule_definition_schema(), sort_keys=True))
         return 0
-    if not paths:
-        print("usage: compile <rule.fp.yaml> [--check] | compile --schema",
-              file=sys.stderr)
-        return 2
     from fingerprint_spark.dsl.parser import ParseError, parse_yaml
     from fingerprint_spark.dsl.validate import ValidationError, validate_definition
 
     try:
-        with open(paths[0]) as f:
-            d = parse_yaml(f.read(), source=paths[0])
+        with open(args.rule) as f:
+            d = parse_yaml(f.read(), source=args.rule)
         validate_definition(d)
     except (OSError, ParseError, ValidationError) as e:
-        print(f"compile error: {e}", file=sys.stderr)
-        return 2
-    if "check" in opts:
+        raise Refused(getattr(e, "code", "E_BAD_INPUT"), f"compile error: {e}") from None
+    if args.check:
         print(f"OK {d.fingerprint_id}")
         return 0
     # full compile materializes the Catalyst expression tree — Column
-    # construction needs a JVM, so bring up a minimal local[1] session
-    # (--check above stays session-free for fast CI validation)
-    from pyspark.sql import SparkSession
+    # construction needs a JVM (--check above stays session-free for
+    # fast CI validation)
     from pyspark.sql import functions as F  # noqa: N812
 
     from fingerprint_spark.dsl.compiler import compile_rule
 
-    SparkSession.builder.master("local[1]").config(
-        "spark.ui.enabled", "false"
-    ).getOrCreate()
-
+    _session()
     col = compile_rule(d, {"url": F.col("url"), "parsed": F.col("parsed")})
     print(json.dumps({
         "generated": "CompiledFingerprint",   # codegen.rs GeneratedFingerprint analog
@@ -270,25 +406,14 @@ def _compile_mode(argv: list[str]) -> int:
     return 0
 
 
-def _witness_mode(argv: list[str]) -> int:
+def _witness_mode(args: argparse.Namespace) -> int:
     """`witness query|last|count [--tool --outcome --since --until
     --input-hash]` — the reference's witness CLI (src/cli/args.rs witness
     subcommands, src/witness/query.rs:13-119). The ledger is a small
     driver-side JSONL; no SparkSession needed for the CLI surface."""
     from fingerprint_spark.witness import ledger_path
 
-    # --json is accepted for parity: the output is always JSON lines
-    paths, opts = _parse_subcommand_argv(
-        argv, ("tool", "outcome", "since", "until", "input_hash", "path"),
-        flags=("json",),
-    )
-    if len(paths) != 1 or paths[0] not in ("query", "last", "count"):
-        print("usage: witness query|last|count [--tool T] [--outcome O] "
-              "[--since TS] [--until TS] [--input-hash H] [--path LEDGER]",
-              file=sys.stderr)
-        return 2
-    action = paths[0]
-    path = opts.get("path") or ledger_path()
+    path = args.path or ledger_path()
     records = []
     if os.path.exists(path):
         with open(path) as f:
@@ -296,24 +421,18 @@ def _witness_mode(argv: list[str]) -> int:
                 line = line.strip()
                 if line:
                     records.append(json.loads(line))
+    exact = {"tool": args.tool, "outcome": args.outcome, "input_hash": args.input_hash}
 
     def keep(r: dict) -> bool:
-        if "tool" in opts and r.get("tool") != opts["tool"]:
-            return False
-        if "outcome" in opts and r.get("outcome") != opts["outcome"]:
-            return False
-        if "since" in opts and not (r.get("ts", "") >= opts["since"]):
-            return False
-        if "until" in opts and not (r.get("ts", "") <= opts["until"]):
-            return False
-        if "input_hash" in opts and r.get("input_hash") != opts["input_hash"]:
-            return False
-        return True
+        ts = r.get("ts", "")
+        return (all(v is None or r.get(k) == v for k, v in exact.items())
+                and (args.since is None or ts >= args.since)
+                and (args.until is None or ts <= args.until))
 
     matched = sorted((r for r in records if keep(r)), key=lambda r: r.get("ts", ""))
-    if action == "count":
+    if args.action == "count":
         print(len(matched))
-    elif action == "last":
+    elif args.action == "last":
         if matched:
             print(json.dumps(matched[-1], sort_keys=True))
     else:
@@ -322,93 +441,32 @@ def _witness_mode(argv: list[str]) -> int:
     return 0
 
 
-def _parse_subcommand_argv(
-    argv: list[str], options: tuple[str, ...], flags: tuple[str, ...] = ()
-) -> tuple[list[str], dict[str, str]]:
-    """One pass over a subcommand's arguments: a --flag named in
-    ``flags`` is boolean, a --opt named in ``options`` consumes the next
-    token, and everything else is positional (so `mode --id X path` and
-    `mode path --id X` both work). Names use underscores for dashes.
-    Any other --opt, or an option missing its value, is refused: one
-    line, then no positionals, so the mode's own usage check exits 2
-    before a SparkSession starts. Shared by every subcommand."""
-    paths: list[str] = []
-    opts: dict[str, str] = {}
-    it = iter(argv[1:])
-    for a in it:
-        if not a.startswith("--"):
-            paths.append(a)
-            continue
-        key = a[2:].replace("-", "_")
-        if key in flags:
-            opts[key] = "1"
-            continue
-        value = next(it, None) if key in options else None
-        if value is None:
-            problem = "missing value for" if key in options else "unknown"
-            print(f"{argv[0]}: {problem} option {a}", file=sys.stderr)
-            return [], {}
-        opts[key] = value
-    return paths, opts
-
-
-def _subcommand_spark():
-    """The shared subcommand session preamble (master override env,
-    quiet logs, executor code via addPyFile)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.builder.master(
-        os.environ.get("SPARK_GRAFT_MASTER", "local[8]")
-    ).config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    from fingerprint_spark.deploy import ensure_pyfiles
-
-    ensure_pyfiles(spark)
-    return spark
-
-
-def _infer_mode(argv: list[str]) -> int:
+def _infer_mode(args: argparse.Namespace) -> int:
     """`infer <corpus.parquet> --id ID [--min-confidence F]
     [--content-col html]` — mine candidate assertions from a corpus
     and print a deterministic .fp.yaml (reference infer subcommand,
     tests/infer_subcommand.rs; input is a parquet corpus rather than a
     file directory — the Spark-native shape)."""
-    paths, opts = _parse_subcommand_argv(
-        argv, ("id", "min_confidence", "content_col")
-    )
-    if not paths:
-        print("usage: infer <corpus.parquet> --id ID "
-              "[--min-confidence F] [--content-col html]", file=sys.stderr)
-        return 2
-    if "id" not in opts:
-        print("infer: --id required", file=sys.stderr)
-        return 2
     from pyspark.sql import functions as F  # noqa: N812
 
     from fingerprint_spark.operators.infer import infer_rule
     from fingerprint_spark.parse import parse_html_col
 
-    spark = _subcommand_spark()
-    content_col = opts.get("content_col", "html")
-    df = spark.read.parquet(paths[0])
+    spark = _session()
+    df = _read_parquet(spark, args.corpus, "url", args.content_col)
     parsed = df.select(
         F.col("url"),
-        parse_html_col(F.col(content_col).cast("string")).alias("parsed"),
+        parse_html_col(F.col(args.content_col).cast("string")).alias("parsed"),
     )
     try:
-        _d, text = infer_rule(
-            parsed,
-            opts["id"],
-            float(opts.get("min_confidence", "0.8")),
-        )
+        _d, text = infer_rule(parsed, args.id, args.min_confidence)
     except ValueError as e:
-        print(f"infer error: {e}", file=sys.stderr)
-        return 1
+        raise Refused("E_BAD_INPUT", f"infer error: {e}") from None
     print(text, end="")
     return 0
 
 
-def _curate_mode(argv: list[str]) -> int:
+def _curate_mode(args: argparse.Namespace) -> int:
     """`curate <corpus.parquet> --output DIR [--chunk-words N]
     [--max-docs N] [--benchmark bench.parquet] [--decontam-n N]
     [--text-col text] [--key-col url]` — the corpus-curation pass as a
@@ -424,63 +482,56 @@ def _curate_mode(argv: list[str]) -> int:
     checkpointable via the main pipeline; this subcommand is the
     corpus-wide second pass.
     """
-    paths, opts = _parse_subcommand_argv(argv, (
-        "output", "chunk_words", "max_docs", "benchmark", "decontam_n",
-        "text_col", "key_col", "classifier", "classifier_threshold",
-        "langid_model", "langid_threshold", "ppl_model", "ppl_threshold",
-        "shards", "input_snapshot", "snapshot_output", "snapshot_mode",
-    ), flags=("justext",))
-    if not paths or ("output" not in opts and "snapshot_output" not in opts):
-        print("usage: curate <corpus.parquet|snapshot-table-dir> "
-              "--output DIR "
-              "[--chunk-words N] [--max-docs N] [--benchmark PARQUET] "
-              "[--decontam-n N] [--text-col text] [--key-col url] "
-              "[--justext  (DOM boilerplate strip; needs an html col)] "
-              "[--classifier MODEL.json [--classifier-threshold P]] "
-              "[--langid-model MODEL.json [--langid-threshold P]  "
-              "(train-langid output; trained softmax replaces the "
-              "marker-word scorer; prob < P -> 'und')] "
-              "[--ppl-model LM.json [--ppl-threshold F]  (train-lm "
-              "output; perplexity gate)] "
-              "[--shards N  (audited hash-sharded output + _MANIFEST)] "
-              "[--input-snapshot N|current  (pinned Iceberg-style read)] "
-              "[--snapshot-output TABLE_DIR [--snapshot-mode "
-              "append|overwrite]  (atomic snapshot commit)]",
-              file=sys.stderr)
-        return 2
-    if "snapshot_output" in opts and "output" in opts:
-        # ambiguous: the snapshot branch would silently skip --output
-        # (review finding r4) — make the caller pick one sink
-        print("error: pass either --output or --snapshot-output, not both",
-              file=sys.stderr)
-        return 2
-    if "shards" in opts and "output" not in opts:
-        print("error: --shards requires --output (a plain sharded "
-              "directory, not a snapshot table)", file=sys.stderr)
-        return 2
-    if "langid_threshold" in opts and "langid_model" not in opts:
-        print("error: --langid-threshold requires --langid-model",
-              file=sys.stderr)
-        return 2
-    if "ppl_threshold" in opts and "ppl_model" not in opts:
-        # a forgotten --ppl-model would otherwise run with NO
-        # perplexity gate while reading as "threshold applied"
-        print("error: --ppl-threshold requires --ppl-model",
-              file=sys.stderr)
-        return 2
     from pyspark.sql import Observation
     from pyspark.sql import functions as F  # noqa: N812
 
-    spark = _subcommand_spark()
+    text_col, key_col = args.text_col, args.key_col
+    # the model files are plain JSON: load them before the session
+    langid_model = classifier_model = ppl_model = None
+    if args.langid_model:
+        # opt-in trained language stage: the model file comes from
+        # `train-langid` (fastText-shaped hashed char-n-gram softmax);
+        # it replaces the marker-word scorer inside the quality chain.
+        # Still zero-shuffle, but via the Arrow kernel (one
+        # ArrowEvalPython stage — the 46x-measured corpus path), not
+        # the pure-Column fold
+        langid_model, _ = _load_langid_model_file(args.langid_model)
+    if args.classifier:
+        from fingerprint_spark.operators.quality_classifier import (
+            quality_model_from_json,
+        )
+
+        try:
+            with open(args.classifier) as fh:
+                classifier_model = quality_model_from_json(fh.read())
+        except (OSError, ValueError) as e:
+            # the one refusal outside the envelope: its single
+            # `error: --classifier:` stderr line is pinned by
+            # test_train_classifier_cli_closes_the_loop
+            print(f"error: --classifier: {e}", file=sys.stderr)
+            return 2
+    if args.ppl_model:
+        # opt-in trained perplexity gate: the model file comes from
+        # `train-lm` (distributed n-gram counting); the threshold
+        # folds into keep/drop_reason inside the quality chain
+        from fingerprint_spark.functions.perplexity import model_from_json
+
+        try:
+            with open(args.ppl_model) as fh:
+                ppl_model = model_from_json(fh.read())
+        except (OSError, ValueError, KeyError, TypeError,
+                AttributeError) as e:
+            # TypeError/AttributeError: structurally-malformed JSON
+            # (a list, logp as a list, ...) must stay a clean error
+            raise Refused("E_BAD_INPUT", f"error: --ppl-model: {e}") from None
+
+    spark = _session()
     from fingerprint_spark.operators.curation import (
         boilerplate_filter, chunk_dedup, decontaminate,
     )
     from fingerprint_spark.pipeline import quality_filter_text
 
-    text_col = opts.get("text_col", "text")
-    key_col = opts.get("key_col", "url")
-    chunk_words = int(opts.get("chunk_words", "12"))
-    if "input_snapshot" in opts:
+    if args.input_snapshot is not None:
         # pinned Iceberg-style read: the curate pass sees snapshot N
         # byte-stably even while another writer commits N+1; the
         # witness row records which corpus state this run consumed
@@ -488,29 +539,28 @@ def _curate_mode(argv: list[str]) -> int:
             load_manifest, read_snapshot, witness_read,
         )
 
-        sval = opts["input_snapshot"]
-        sid = None if sval in ("", "current") else int(sval)
+        sval = args.input_snapshot
         try:
-            manifest = load_manifest(paths[0], sid)
-        except FileNotFoundError as e:
+            manifest = load_manifest(
+                args.corpus, None if sval in ("", "current") else int(sval)
+            )
+        except (FileNotFoundError, ValueError) as e:
             # clean CLI contract (ADVICE r4): a non-snapshot path must
             # not surface a raw traceback
-            print(f"error: --input-snapshot: {e}", file=sys.stderr)
-            return 2
-        df = read_snapshot(spark, paths[0], manifest["snapshot_id"])
-        witness_read(paths[0], manifest, tool="curate")
+            raise Refused("E_BAD_INPUT", f"error: --input-snapshot: {e}") from None
+        df = read_snapshot(spark, args.corpus, manifest["snapshot_id"])
+        witness_read(args.corpus, manifest, tool="curate")
     else:
-        df = spark.read.parquet(paths[0])
-    if "justext" in opts:
+        df = _read_parquet(spark, args.corpus)
+    if args.justext:
         # opt-in DOM boilerplate strip (VERDICT r4 #5): the JusText
         # pass replaces the text column with the stripped main text,
         # so EVERY downstream stage (quality chain, chunk dedup,
         # decontam, classifier) sees boilerplate-free text; block
         # counters ride the same observe() action
         if "html" not in df.columns:
-            print("error: --justext requires an 'html' column in the "
-                  "corpus", file=sys.stderr)
-            return 2
+            raise Refused("E_BAD_INPUT",
+                          "error: --justext requires an 'html' column in the corpus")
         from fingerprint_spark.operators.boilerplate_dom import (
             strip_boilerplate,
         )
@@ -521,97 +571,42 @@ def _curate_mode(argv: list[str]) -> int:
             "n_good", "n_bad",
         )
         df = df.drop(text_col).join(bp, key_col)
-    langid_model = None
-    if "langid_model" in opts:
-        # opt-in trained language stage: the model file comes from
-        # `train-langid` (fastText-shaped hashed char-n-gram softmax);
-        # it replaces the marker-word scorer inside the quality chain.
-        # Still zero-shuffle, but via the Arrow kernel (one
-        # ArrowEvalPython stage — the 46x-measured corpus path), not
-        # the pure-Column fold
-        try:
-            langid_model, _ = _load_langid_model_file(
-                opts["langid_model"]
-            )
-        except (OSError, ValueError) as e:
-            print(f"error: --langid-model: {e}", file=sys.stderr)
-            return 2
-    classifier_model = None
-    if "classifier" in opts:
-        from fingerprint_spark.operators.quality_classifier import (
-            quality_model_from_json,
-        )
-
-        try:
-            with open(opts["classifier"]) as fh:
-                classifier_model = quality_model_from_json(fh.read())
-        except (OSError, ValueError) as e:
-            print(f"error: --classifier: {e}", file=sys.stderr)
-            return 2
-    from fingerprint_spark.pipeline import (
-        DEFAULT_LANGID_THRESHOLD,
-        DEFAULT_PPL_THRESHOLD,
-    )
-
-    langid_threshold = float(
-        opts.get("langid_threshold", str(DEFAULT_LANGID_THRESHOLD))
-    )
-    ppl_threshold = float(
-        opts.get("ppl_threshold", str(DEFAULT_PPL_THRESHOLD))
-    )
-    ppl_model = None
-    if "ppl_model" in opts:
-        # opt-in trained perplexity gate: the model file comes from
-        # `train-lm` (distributed n-gram counting); the threshold
-        # folds into keep/drop_reason inside the quality chain
-        from fingerprint_spark.functions.perplexity import model_from_json
-
-        try:
-            with open(opts["ppl_model"]) as fh:
-                ppl_model = model_from_json(fh.read())
-        except (OSError, ValueError, KeyError, TypeError,
-                AttributeError) as e:
-            # TypeError/AttributeError: structurally-malformed JSON
-            # (a list, logp as a list, ...) must stay a clean error
-            print(f"error: --ppl-model: {e}", file=sys.stderr)
-            return 2
     quality = quality_filter_text(
         df, text_col=text_col,
-        ppl_threshold=ppl_threshold,
+        ppl_threshold=args.ppl_threshold,
         ppl_model=ppl_model,
         langid_model=langid_model,
-        langid_threshold=langid_threshold,
+        langid_threshold=args.langid_threshold,
     )
     base = quality.select(
         key_col,
         F.col("keep").cast("int").alias("keep_quality"),
         F.col("drop_reason"),
     )
-    if "max_docs" in opts:
+    if args.max_docs is not None:
         # RefinedWeb mode: chunks in > max-docs documents are removed
         # from EVERY document (no first occurrence survives)
         ded = boilerplate_filter(
-            df, text_col, key_col, chunk_words, int(opts["max_docs"])
+            df, text_col, key_col, args.chunk_words, args.max_docs
         ).withColumnRenamed("text_clean", "text_dedup")
     else:
-        ded = chunk_dedup(df, text_col, key_col, chunk_words)
+        ded = chunk_dedup(df, text_col, key_col, args.chunk_words)
     out = base.join(ded, key_col)
-    if "benchmark" in opts:
-        bench = spark.read.parquet(opts["benchmark"])
-        cont = decontaminate(
-            df, bench, text_col, key_col, int(opts.get("decontam_n", "13"))
-        )
+    if args.benchmark:
+        bench = _read_parquet(spark, args.benchmark)
+        cont = decontaminate(df, bench, text_col, key_col, args.decontam_n)
         out = out.join(cont.select(key_col, "contaminated"), key_col)
     else:
         out = out.withColumn("contaminated", F.lit(0))
-    if "justext" in opts:
+    if args.justext:
         out = out.join(df.select(key_col, "n_good", "n_bad"), key_col)
     keep = (
         (F.col("keep_quality") == 1)
         & (F.col("contaminated") == 0)
         & (F.col("n_kept") > 0)
     )
-    if "classifier" in opts:
+    thr = args.classifier_threshold
+    if classifier_model is not None:
         # opt-in learned quality gate (VERDICT r4 #5): score the
         # (possibly justext-stripped) text with a trained model file
         # and AND the probability threshold into the final verdict
@@ -619,7 +614,6 @@ def _curate_mode(argv: list[str]) -> int:
             quality_score_arrow,
         )
 
-        thr = float(opts.get("classifier_threshold", "0.5"))
         # the Arrow kernel (per-batch word memo + numpy fold) is ~3x
         # the Column fold's throughput at dim=4096 — the right default
         # for the corpus pass; parity with the Column path is pinned
@@ -631,16 +625,14 @@ def _curate_mode(argv: list[str]) -> int:
         out = out.join(scored.select(key_col, "quality_prob"), key_col)
         keep = keep & (F.col("quality_prob") >= F.lit(thr))
     out = out.withColumn("final_keep", keep.cast("int"))
-    if "shards" in opts:
+    if args.shards is not None:
         from fingerprint_spark.sinks import write_training_shards
 
-        manifest = write_training_shards(
-            out, opts["output"], key_col, int(opts["shards"])
-        )
+        manifest = write_training_shards(out, args.output, key_col, args.shards)
         print(json.dumps({"metric": "curate", "sharded": True,
                           "n_shards": manifest["n_shards"],
                           "docs": manifest["total_rows"],
-                          "output": opts["output"]}))
+                          "output": args.output}))
         return 0
     obs = Observation("curate")
     counters = [
@@ -651,54 +643,47 @@ def _curate_mode(argv: list[str]) -> int:
         F.sum("n_kept").alias("chunks_kept"),
         F.sum("final_keep").alias("final_keep"),
     ]
-    if "justext" in opts:
+    if args.justext:
         counters += [
             F.sum("n_good").alias("justext_blocks_good"),
             F.sum("n_bad").alias("justext_blocks_bad"),
         ]
-    if "classifier" in opts:
+    if classifier_model is not None:
         counters.append(
-            F.sum(
-                (F.col("quality_prob")
-                 >= float(opts.get("classifier_threshold", "0.5"))
-                 ).cast("int")
-            ).alias("classifier_keep")
+            F.sum((F.col("quality_prob") >= thr).cast("int")).alias("classifier_keep")
         )
-    if "ppl_model" in opts:
+    if ppl_model is not None:
         counters.append(
             F.sum(
                 (F.col("drop_reason") == "perplexity").cast("int")
             ).alias("ppl_dropped")
         )
-    if "langid_model" in opts:
+    if langid_model is not None:
         counters.append(
             F.sum(
                 F.col("drop_reason").startswith("langid:").cast("int")
             ).alias("langid_dropped")
         )
     out = out.observe(obs, *counters)
-    if "snapshot_output" in opts:
+    if args.snapshot_output:
         # atomic snapshot commit: the verdicts become snapshot N+1 of
         # an Iceberg-style table; concurrent pinned readers of N are
         # untouched (the counters ride the commit's write action)
         from fingerprint_spark.snapshots import commit_snapshot
 
-        manifest = commit_snapshot(
-            out, opts["snapshot_output"],
-            mode=opts.get("snapshot_mode", "overwrite"),
-        )
+        manifest = commit_snapshot(out, args.snapshot_output, mode=args.snapshot_mode)
         print(json.dumps({"metric": "curate", **obs.get,
-                          "output": opts["snapshot_output"],
+                          "output": args.snapshot_output,
                           "snapshot_id": manifest["snapshot_id"],
                           "parent_id": manifest["parent_id"]}))
         return 0
-    out.write.mode("overwrite").parquet(opts["output"])
+    out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"metric": "curate", **obs.get,
-                      "output": opts["output"]}))
+                      "output": args.output}))
     return 0
 
 
-def _train_classifier_mode(argv: list[str]) -> int:
+def _train_classifier_mode(args: argparse.Namespace) -> int:
     """`train-classifier <labeled.parquet> --output MODEL.json
     [--dim N] [--epochs N] [--lr F] [--text-col text]
     [--label-col label] [--hasher xxhash|md5]` — train the
@@ -707,43 +692,23 @@ def _train_classifier_mode(argv: list[str]) -> int:
     closing the deployed train->score loop. Prints one JSON line with
     the training-set accuracy at threshold 0.5 (observe-free: one
     scoring pass over the labeled set, which is small by contract)."""
-    paths, opts = _parse_subcommand_argv(argv, (
-        "output", "dim", "epochs", "lr", "text_col", "label_col", "hasher",
-    ))
-    if not paths or "output" not in opts:
-        print("usage: train-classifier <labeled.parquet> --output "
-              "MODEL.json [--dim N] [--epochs N] [--lr F] "
-              "[--text-col text] [--label-col label] "
-              "[--hasher xxhash|md5]", file=sys.stderr)
-        return 2
     from pyspark.sql import functions as F  # noqa: N812
 
-    spark = _subcommand_spark()
+    spark = _session()
     from fingerprint_spark.operators.quality_classifier import (
         quality_score_arrow,
         train_quality_logreg,
     )
 
-    text_col = opts.get("text_col", "text")
-    label_col = opts.get("label_col", "label")
-    hasher = opts.get("hasher", "xxhash")
-    df = spark.read.parquet(paths[0])
-    for c in (text_col, label_col):
-        if c not in df.columns:
-            print(f"error: column {c!r} not in {paths[0]}",
-                  file=sys.stderr)
-            return 2
+    text_col, label_col, hasher = args.text_col, args.label_col, args.hasher
+    df = _read_parquet(spark, args.labeled, text_col, label_col)
     try:
         model = train_quality_logreg(
             df, text_col=text_col, label_col=label_col,
-            dim=int(opts.get("dim", "4096")),
-            epochs=int(opts.get("epochs", "8")),
-            lr=float(opts.get("lr", "2.0")),
-            hasher=hasher,
+            dim=args.dim, epochs=args.epochs, lr=args.lr, hasher=hasher,
         )
     except ValueError as e:
-        print(f"error: {e}", file=sys.stderr)
-        return 2
+        raise Refused("E_BAD_INPUT", f"error: {e}") from None
     model["hasher"] = hasher
     scored = quality_score_arrow(
         df.select(text_col, label_col), model, text_col=text_col,
@@ -756,10 +721,10 @@ def _train_classifier_mode(argv: list[str]) -> int:
         ).alias("acc"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]  # driver-bounded: 1 row
-    with open(opts["output"], "w") as fh:
+    with open(args.output, "w") as fh:
         json.dump(model, fh, sort_keys=True)
     print(json.dumps({
-        "metric": "train_classifier", "output": opts["output"],
+        "metric": "train_classifier", "output": args.output,
         "n_labeled": acc_row["n"], "dim": model["dim"],
         "hasher": hasher, "n_weights": len(model["weights"]),
         "train_accuracy": round(float(acc_row["acc"]), 4),
@@ -767,7 +732,7 @@ def _train_classifier_mode(argv: list[str]) -> int:
     return 0
 
 
-def _train_lm_mode(argv: list[str]) -> int:
+def _train_lm_mode(args: argparse.Namespace) -> int:
     """`train-lm <corpus.parquet> --output MODEL.json [--order N]
     [--min-count N] [--max-grams N] [--text-col text]` — train the
     char n-gram perplexity model DISTRIBUTED (one explode + one
@@ -775,15 +740,7 @@ def _train_lm_mode(argv: list[str]) -> int:
     reaches the driver — the driver-side trainer would collect every
     training text) and write the JSON model the curate --ppl-model
     stage consumes."""
-    paths, opts = _parse_subcommand_argv(argv, (
-        "output", "order", "min_count", "max_grams", "text_col",
-    ))
-    if not paths or "output" not in opts:
-        print("usage: train-lm <corpus.parquet> --output MODEL.json "
-              "[--order N] [--min-count N] [--max-grams N] "
-              "[--text-col text]", file=sys.stderr)
-        return 2
-    spark = _subcommand_spark()
+    spark = _session()
     from fingerprint_spark.functions.perplexity import (
         model_to_json,
         train_char_ngram_df,
@@ -791,27 +748,18 @@ def _train_lm_mode(argv: list[str]) -> int:
 
     from pyspark.errors import AnalysisException
 
-    text_col = opts.get("text_col", "text")
+    df = _read_parquet(spark, args.corpus, args.text_col)
     try:
-        df = spark.read.parquet(paths[0])
-        if text_col not in df.columns:
-            print(f"error: column {text_col!r} not in {paths[0]}",
-                  file=sys.stderr)
-            return 2
         model = train_char_ngram_df(
-            df, text_col,
-            order=int(opts.get("order", "3")),
-            min_count=int(opts.get("min_count", "1")),
-            max_grams=(int(opts["max_grams"]) if "max_grams" in opts
-                       else None),
+            df, args.text_col, order=args.order, min_count=args.min_count,
+            max_grams=args.max_grams,
         )
     except (ValueError, AnalysisException) as e:
-        print(f"error: train-lm: {e}", file=sys.stderr)
-        return 2
-    with open(opts["output"], "w") as fh:
+        raise Refused("E_BAD_INPUT", f"error: train-lm: {e}") from None
+    with open(args.output, "w") as fh:
         fh.write(model_to_json(model))
     print(json.dumps({
-        "metric": "train_lm", "output": opts["output"],
+        "metric": "train_lm", "output": args.output,
         "order": model.order, "n_grams": len(model.logp),
     }))
     return 0
@@ -820,24 +768,24 @@ def _train_lm_mode(argv: list[str]) -> int:
 def _load_langid_model_file(path: str) -> tuple[dict, str]:
     """Load + validate a train-langid MODEL.json; returns (model,
     content-digest). ONE loader for the run and curate surfaces so
-    validation/exception behavior cannot diverge. Raises
-    OSError/ValueError (callers print their own clean one-line
-    error)."""
+    validation/exception behavior cannot diverge; a file that does not
+    load is refused."""
     import hashlib
 
     from fingerprint_spark.operators.langid_classifier import (
         langid_model_from_json,
     )
 
-    with open(path) as fh:
-        raw = fh.read()
-    return (
-        langid_model_from_json(raw),
-        hashlib.md5(raw.encode()).hexdigest()[:12],
-    )
+    try:
+        with open(path) as fh:
+            raw = fh.read()
+        model = langid_model_from_json(raw)
+    except (OSError, ValueError) as e:
+        raise Refused("E_BAD_INPUT", f"error: --langid-model: {e}") from None
+    return model, hashlib.md5(raw.encode()).hexdigest()[:12]
 
 
-def _train_langid_mode(argv: list[str]) -> int:
+def _train_langid_mode(args: argparse.Namespace) -> int:
     """`train-langid <labeled.parquet> --output MODEL.json [--dim N]
     [--ngram N] [--epochs N] [--lr F] [--text-col text]
     [--label-col lang] [--hasher xxhash|md5]` — train the
@@ -849,19 +797,9 @@ def _train_langid_mode(argv: list[str]) -> int:
     train-classifier contract). Prints one JSON line with the
     training-set accuracy (one Arrow scoring pass; the labeled set is
     small by contract)."""
-    paths, opts = _parse_subcommand_argv(argv, (
-        "output", "dim", "ngram", "epochs", "lr", "text_col", "label_col",
-        "hasher",
-    ))
-    if not paths or "output" not in opts:
-        print("usage: train-langid <labeled.parquet> --output "
-              "MODEL.json [--dim N] [--ngram N] [--epochs N] [--lr F] "
-              "[--text-col text] [--label-col lang] "
-              "[--hasher xxhash|md5]", file=sys.stderr)
-        return 2
     from pyspark.sql import functions as F  # noqa: N812
 
-    spark = _subcommand_spark()
+    spark = _session()
     from fingerprint_spark.operators.langid_classifier import (
         langid_classify_arrow,
         langid_model_to_json,
@@ -870,30 +808,16 @@ def _train_langid_mode(argv: list[str]) -> int:
 
     from pyspark.errors import AnalysisException
 
-    text_col = opts.get("text_col", "text")
-    label_col = opts.get("label_col", "lang")
-    hasher = opts.get("hasher", "xxhash")
+    text_col, label_col, hasher = args.text_col, args.label_col, args.hasher
+    df = _read_parquet(spark, args.labeled, text_col, label_col)
     try:
-        df = spark.read.parquet(paths[0])
-        for c in (text_col, label_col):
-            if c not in df.columns:
-                print(f"error: column {c!r} not in {paths[0]}",
-                      file=sys.stderr)
-                return 2
         model = train_langid_softmax(
             df, text_col=text_col, label_col=label_col,
-            dim=int(opts.get("dim", "2048")),
-            n=int(opts.get("ngram", "3")),
-            epochs=int(opts.get("epochs", "8")),
-            lr=float(opts.get("lr", "2.0")),
-            hasher=hasher,
-            grad_round_dp=6,
+            dim=args.dim, n=args.ngram, epochs=args.epochs, lr=args.lr,
+            hasher=hasher, grad_round_dp=6,
         )
     except (ValueError, AnalysisException) as e:
-        # AnalysisException: missing/corrupt input path must stay a
-        # clean one-line error, not a traceback (the train-lm contract)
-        print(f"error: {e}", file=sys.stderr)
-        return 2
+        raise Refused("E_BAD_INPUT", f"error: {e}") from None
     scored = langid_classify_arrow(
         df.select(text_col, label_col), model, text_col=text_col,
         out_col="_pred",
@@ -904,10 +828,10 @@ def _train_langid_mode(argv: list[str]) -> int:
         ).alias("acc"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]  # driver-bounded: 1 row
-    with open(opts["output"], "w") as fh:
+    with open(args.output, "w") as fh:
         fh.write(langid_model_to_json(model))
     print(json.dumps({
-        "metric": "train_langid", "output": opts["output"],
+        "metric": "train_langid", "output": args.output,
         "n_labeled": acc_row["n"], "dim": model["dim"],
         "ngram": model["ngram"], "hasher": hasher,
         "classes": model["classes"],
@@ -917,7 +841,7 @@ def _train_langid_mode(argv: list[str]) -> int:
     return 0
 
 
-def _frontier_mode(argv: list[str]) -> int:
+def _frontier_mode(args: argparse.Namespace) -> int:
     """`frontier <filter-table> (--build CORPUS.parquet | --merge
     DELTA.parquet | --probe INCOMING.parquet --output DIR)
     [--key-col url] [--n-bits N] [--k K]` — the incremental crawl
@@ -934,22 +858,10 @@ def _frontier_mode(argv: list[str]) -> int:
     to --build only: merge and probe read (n_bits, k) from the
     filter's own marker row — the self-describing params exist so a
     mismatch is impossible, not so the caller re-types them."""
-    paths, opts = _parse_subcommand_argv(argv, (
-        "build", "merge", "probe", "output", "key_col", "n_bits", "k",
-    ))
-    n_actions = sum(x in opts for x in ("build", "merge", "probe"))
-    if not paths or n_actions != 1 or (
-        "probe" in opts and "output" not in opts
-    ):
-        print("usage: frontier <filter-table> (--build CORPUS.parquet "
-              "| --merge DELTA.parquet | --probe INCOMING.parquet "
-              "--output DIR) [--key-col url] [--n-bits N] [--k K]",
-              file=sys.stderr)
-        return 2
     from pyspark.sql import Observation
     from pyspark.sql import functions as F  # noqa: N812
 
-    spark = _subcommand_spark()
+    spark = _session()
     from fingerprint_spark.operators.bloom import (
         bloom_build,
         bloom_merge,
@@ -974,34 +886,25 @@ def _frontier_mode(argv: list[str]) -> int:
         built = int(meta[0]["word"])
         return built // 256, built % 256
 
-    def _read_keyed(path):
-        df = spark.read.parquet(path)
-        if key_col not in df.columns:
-            raise ValueError(f"column {key_col!r} not in {path}")
-        return df
-
-    table = paths[0]
-    key_col = opts.get("key_col", "url")
+    table, key_col = args.filter_table, args.key_col
     try:
-        if "build" in opts:
-            n_bits = int(opts.get("n_bits", str(1 << 24)))
-            k = int(opts.get("k", "5"))
-            corpus = _read_keyed(opts["build"])
-            filt = bloom_build(corpus, key_col, n_bits, k)
+        if args.build:
+            corpus = _read_parquet(spark, args.build, key_col)
+            filt = bloom_build(corpus, key_col, args.n_bits, args.k)
             manifest = commit_snapshot(filt, table, mode="overwrite")
             print(json.dumps({
                 "metric": "frontier_build", "filter_table": table,
                 "snapshot_id": manifest["snapshot_id"],
-                "n_bits": n_bits, "k": k,
+                "n_bits": args.n_bits, "k": args.k,
                 "filter_rows": manifest["n_rows"],
             }))
             return 0
-        if "merge" in opts:
+        if args.merge:
             manifest_in = load_manifest(table)
             filt = read_snapshot(spark, table, manifest_in["snapshot_id"])
             n_bits, k = _marker_params(filt)
             witness_read(table, manifest_in, tool="frontier-merge")
-            delta = _read_keyed(opts["merge"])
+            delta = _read_parquet(spark, args.merge, key_col)
             merged = bloom_merge(filt, delta, key_col, n_bits, k)
             # CAS on the snapshot id: this merge was DERIVED from
             # manifest_in; if another merge landed meanwhile, blindly
@@ -1021,7 +924,7 @@ def _frontier_mode(argv: list[str]) -> int:
         filt = read_snapshot(spark, table, manifest_in["snapshot_id"])
         n_bits, k = _marker_params(filt)
         witness_read(table, manifest_in, tool="frontier-probe")
-        incoming = _read_keyed(opts["probe"])
+        incoming = _read_parquet(spark, args.probe, key_col)
         tagged = bloom_probe(incoming, filt, key_col, n_bits, k)
         obs = Observation("frontier")
         tagged = tagged.observe(
@@ -1030,7 +933,7 @@ def _frontier_mode(argv: list[str]) -> int:
             F.sum("maybe_member").alias("maybe_seen"),
         )
         new = tagged.filter(F.col("maybe_member") == 0).drop("maybe_member")
-        new.write.mode("overwrite").parquet(opts["output"])
+        new.write.mode("overwrite").parquet(args.output)
         got = obs.get
         # an empty incoming crawl observes sum() = NULL, not 0
         seen = int(got["maybe_seen"] or 0)
@@ -1039,161 +942,27 @@ def _frontier_mode(argv: list[str]) -> int:
             "snapshot_id": manifest_in["snapshot_id"],
             "incoming": int(got["incoming"]), "maybe_seen": seen,
             "new": int(got["incoming"]) - seen,
-            "output": opts["output"],
+            "output": args.output,
         }))
         return 0
     except SnapshotConflict as e:
-        print(f"error: frontier: concurrent commit — {e}", file=sys.stderr)
-        return 2
+        raise Refused("E_BAD_INPUT", f"error: frontier: concurrent commit — {e}") from None
     except (ValueError, FileNotFoundError, AnalysisException) as e:
-        print(f"error: frontier: {e}", file=sys.stderr)
-        return 2
+        raise Refused("E_BAD_INPUT", f"error: frontier: {e}") from None
 
 
-def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "curate":
-        return _curate_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "frontier":
-        return _frontier_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "train-classifier":
-        return _train_classifier_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "train-lm":
-        return _train_lm_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "train-langid":
-        return _train_langid_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "compile":
-        return _compile_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "witness":
-        return _witness_mode(sys.argv[1:])
-    if len(sys.argv) > 1 and sys.argv[1] == "infer":
-        return _infer_mode(sys.argv[1:])
-    rc = _display_surfaces(sys.argv[1:])
-    if rc is not None:
-        return rc
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--rules-dir", default=None)
-    ap.add_argument("--day", default=None)
-    ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--params-version", default="v1")
-    ap.add_argument(
-        "--diagnose",
-        action="store_true",
-        help="full-evaluation diagnostics for template-unmatched docs "
-        "(per-assertion results + nearest-heading / partial-match / "
-        "out-of-range context) written as a diagnosis column",
-    )
-    ap.add_argument(
-        "--fp",
-        action="append",
-        default=None,
-        metavar="ID",
-        help="select specific fingerprint rules in order (repeatable); "
-        "requesting a child without its parent refuses with "
-        "E_ORPHAN_CHILD (reference --fp semantics)",
-    )
-    ap.add_argument(
-        "--no-witness", action="store_true", help="skip the witness ledger append"
-    )
-    ap.add_argument(
-        "--keep-parsed",
-        action="store_true",
-        help="persist the parsed struct in the output (enables later "
-        "--revalidate passes without re-parsing the crawl)",
-    )
-    ap.add_argument(
-        "--revalidate",
-        action="store_true",
-        help="input is a PREVIOUS run's output carrying the parsed "
-        "struct: apply the (new) rule set as a pure expression pass — "
-        "no html parse, no Python stage (north_star incremental "
-        "re-validation)",
-    )
-    ap.add_argument(
-        "--langid-model",
-        default=None,
-        metavar="MODEL.json",
-        help="train-langid output: swap the marker-word language "
-        "scorer for the trained fastText-shaped softmax in the "
-        "flagship chain (lang_score becomes the softmax probability)",
-    )
-    ap.add_argument(
-        "--langid-threshold",
-        type=float,
-        default=None,
-        metavar="P",
-        help="trained-langid unknown-language gate: predictions with "
-        "softmax prob < P become 'und' and drop (default 0.5, the "
-        "CCNet fastText gate); requires --langid-model",
-    )
-    args = ap.parse_args()
-    if args.langid_threshold is not None and not args.langid_model:
-        # a forgotten --langid-model would otherwise run with NO
-        # trained stage while reading as "threshold applied"
-        print("error: --langid-threshold requires --langid-model",
-              file=sys.stderr)
-        return 2
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = SparkSession.builder.appName("fingerprint_spark_pipeline").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+def _run_mode(args: argparse.Namespace) -> int:
+    """The checkpointed quality-filter run, the default mode. Every
+    refusal that needs no JVM comes before the session: the rules load
+    and validate (Python ``re`` judging their regexes), the langid model
+    loads, and the lineage manifest is checked. With the session up the
+    rules load again, so java.util.regex judges each pattern."""
     from fingerprint_spark.checkpoint import CheckpointedRun
-    from fingerprint_spark.deploy import ensure_pyfiles
-    from fingerprint_spark.pipeline import (
-        DEFAULT_LANGID_THRESHOLD,
-        quality_filter,
-    )
-    from fingerprint_spark.sources.corpus_io import read_corpus
-    from fingerprint_spark.witness import append_witness
 
-    ensure_pyfiles(spark)
-
-    registry = _load_registry(args.rules_dir)
-    if registry is None:
-        return 2
-    if args.fp:
-        from fingerprint_spark.dsl.registry import RegistryError
-
-        try:
-            rules = registry.resolve(args.fp)
-        except RegistryError as e:
-            print(f"rule selection error: {e}", file=sys.stderr)
-            return 2
-    else:
-        rules = registry.list()
-
+    _load_rules(args.rules_dir, args.fp)
     langid_model = langid_digest = None
     if args.langid_model:
-        if args.revalidate:
-            # the revalidate path is a pure rule-expression pass with
-            # no language stage — silently ignoring a verdict-changing
-            # flag would mislead
-            print("error: --langid-model has no effect with "
-                  "--revalidate", file=sys.stderr)
-            return 2
-        try:
-            langid_model, langid_digest = _load_langid_model_file(
-                args.langid_model
-            )
-        except (OSError, ValueError) as e:
-            print(f"error: --langid-model: {e}", file=sys.stderr)
-            return 2
-
-    if args.revalidate:
-        df = spark.read.parquet(args.input)
-        if "parsed" not in df.columns:
-            sys.exit(
-                "--revalidate needs an input produced with --keep-parsed "
-                "(no 'parsed' column found)"
-            )
-    else:
-        df = read_corpus(spark, args.input, day=args.day)
-
+        langid_model, langid_digest = _load_langid_model_file(args.langid_model)
     # the langid model is a VERDICT-CHANGING parameter: fold its
     # content digest into the checkpoint params hash so a resume with
     # a different (or newly added / removed) model earns ZERO resume
@@ -1209,13 +978,24 @@ def main() -> int:
     try:
         committed = run.completed_buckets()
     except ValueError as e:  # bucketing-scheme mismatch: clean refusal
-        print(f"refusing: {e}", file=sys.stderr)
-        return 2
+        raise Refused("E_BAD_INPUT", f"refusing: {e}") from None
     if not args.resume and committed:
-        sys.exit(
-            "output has committed buckets; pass --resume to continue or "
-            "choose a fresh --output"
-        )
+        raise Refused("E_BAD_INPUT", "output has committed buckets; pass --resume "
+                      "to continue or choose a fresh --output")
+
+    spark = _session()
+    from fingerprint_spark.pipeline import quality_filter, revalidate
+    from fingerprint_spark.sources.corpus_io import read_corpus
+    from fingerprint_spark.witness import append_witness
+
+    rules = _load_rules(args.rules_dir, args.fp)
+    if args.revalidate:
+        df = spark.read.parquet(args.input)
+        if "parsed" not in df.columns:
+            raise Refused("E_BAD_INPUT", "--revalidate needs an input produced with "
+                          "--keep-parsed (no 'parsed' column found)")
+    else:
+        df = read_corpus(spark, args.input, day=args.day)
 
     def extract_cols(out):
         # the winner's extraction, present when the rules declare it
@@ -1224,8 +1004,6 @@ def main() -> int:
 
     def stage(part):
         if args.revalidate:
-            from fingerprint_spark.pipeline import revalidate
-
             out = revalidate(part, rules)
             keep = ["url", "fingerprint", "children", "child_routing"]
             if "warc_ts" in part.columns:
@@ -1236,10 +1014,7 @@ def main() -> int:
             return out.select(*keep)
         out = quality_filter(
             part, rules=rules, langid_model=langid_model,
-            langid_threshold=(
-                DEFAULT_LANGID_THRESHOLD if args.langid_threshold is None
-                else args.langid_threshold
-            ),
+            langid_threshold=args.langid_threshold,
         )
         # lang_score in the output: the marker fraction vs softmax
         # probability is the observable difference between language
@@ -1257,17 +1032,17 @@ def main() -> int:
             # rule fully evaluated for docs the fold did NOT match, with
             # authoring context; JSON-encoded so the output schema stays
             # stable across rule sets
-            from pyspark.sql import functions as FF
+            from pyspark.sql import functions as F  # noqa: N812
 
             from fingerprint_spark.operators.diagnose import diagnose_rule
 
-            env = {"url": FF.col("url"), "parsed": FF.col("parsed")}
+            env = {"url": F.col("url"), "parsed": F.col("parsed")}
             diags = [diagnose_rule(r, env) for r in rules if r.parent is None]
             out = out.withColumn(
                 "diagnosis",
-                FF.when(
-                    ~FF.col("fingerprint.matched"),
-                    FF.to_json(FF.struct(*[
+                F.when(
+                    ~F.col("fingerprint.matched"),
+                    F.to_json(F.struct(*[
                         d.alias(f"rule_{i}") for i, d in enumerate(diags)
                     ])),
                 ),
@@ -1310,6 +1085,142 @@ def main() -> int:
         )
     )
     return 0 if summary["complete"] else 1
+
+
+MODES = {
+    "run": Mode(_run_mode, (
+        Opt("--input", "str", ..., "day-partitioned parquet corpus"),
+        Opt("--output", "str", ..., "checkpointed output directory"),
+        Opt("--rules-dir", "str", None, "*.fp.yaml rule directory"),
+        Opt("--day", "str", None, "partition-pruned single day"),
+        Opt("--buckets", "count", 64, "checkpoint bucket count"),
+        Opt("--resume", "flag", False, "skip committed buckets"),
+        Opt("--params-version", "str", "v1", "rule/params version tag"),
+        Opt("--diagnose", "flag", False,
+            "full-evaluation diagnostics for template-unmatched docs "
+            "(per-assertion results + nearest-heading / partial-match / "
+            "out-of-range context) written as a diagnosis column"),
+        Opt("--fp", "append", None,
+            "select fingerprint rules by id, in order (repeatable); a child "
+            "without its parent refuses with E_ORPHAN_CHILD"),
+        Opt("--no-witness", "flag", False, "skip the witness ledger append"),
+        Opt("--keep-parsed", "flag", False,
+            "persist the parsed struct in the output for later --revalidate"),
+        Opt("--revalidate", "flag", False,
+            "input is a previous run's output carrying the parsed struct: "
+            "apply the rule set as a pure expression pass, no html parse"),
+        Opt("--langid-model", "str", None,
+            "train-langid MODEL.json: the trained softmax replaces the "
+            "marker-word language scorer"),
+        Opt("--langid-threshold", "float", DEFAULT_LANGID_THRESHOLD,
+            "trained-langid 'und' gate: softmax prob < P becomes 'und' and "
+            "drops (default 0.5, the CCNet fastText gate)"),
+    ), requires=(("--langid-threshold", "--langid-model"),),
+        excludes=(("--langid-model", "--revalidate"),)),
+    "curate": Mode(_curate_mode, (
+        Opt("corpus", "str", ..., "corpus parquet, or a snapshot table dir"),
+        Opt("--output", "str", None, "verdict parquet directory"),
+        Opt("--chunk-words", "count", 12, "words per dedup chunk"),
+        Opt("--max-docs", "count", None,
+            "RefinedWeb mode: drop chunks found in more than N docs everywhere"),
+        Opt("--benchmark", "str", None, "benchmark parquet to decontaminate against"),
+        Opt("--decontam-n", "count", 13, "decontamination n-gram size"),
+        Opt("--text-col", "str", "text", "text column"),
+        Opt("--key-col", "str", "url", "document key column"),
+        Opt("--classifier", "str", None, "train-classifier MODEL.json quality gate"),
+        Opt("--classifier-threshold", "float", 0.5, "classifier keep probability"),
+        Opt("--langid-model", "str", None,
+            "train-langid MODEL.json: the trained softmax replaces the "
+            "marker-word scorer"),
+        Opt("--langid-threshold", "float", DEFAULT_LANGID_THRESHOLD,
+            "trained-langid 'und' gate probability"),
+        Opt("--ppl-model", "str", None, "train-lm MODEL.json perplexity gate"),
+        Opt("--ppl-threshold", "float", DEFAULT_PPL_THRESHOLD, "perplexity gate"),
+        Opt("--shards", "count", None, "audited hash-sharded output + _MANIFEST"),
+        Opt("--input-snapshot", "str", None, "pinned snapshot read: N or current"),
+        Opt("--snapshot-output", "str", None, "atomic snapshot commit to TABLE_DIR"),
+        Opt("--snapshot-mode", "str", "overwrite", "append or overwrite"),
+        Opt("--justext", "flag", False, "DOM boilerplate strip; needs an html column"),
+    ), requires=(("--shards", "--output"), ("--langid-threshold", "--langid-model"),
+                 ("--ppl-threshold", "--ppl-model")),
+        one_of=("--output", "--snapshot-output")),
+    "frontier": Mode(_frontier_mode, (
+        Opt("filter_table", "str", ..., "Bloom-filter snapshot table"),
+        Opt("--build", "str", None, "build filter(1) from a corpus parquet"),
+        Opt("--merge", "str", None, "fold a url delta parquet into the filter"),
+        Opt("--probe", "str", None, "write an incoming crawl's definitely-new rows"),
+        Opt("--output", "str", None, "--probe output directory"),
+        Opt("--key-col", "str", "url", "url column"),
+        Opt("--n-bits", "count", 1 << 24, "filter bits (--build only)"),
+        Opt("--k", "count", 5, "hash functions (--build only)"),
+    ), requires=(("--probe", "--output"),), one_of=("--build", "--merge", "--probe")),
+    "train-classifier": Mode(_train_classifier_mode, (
+        Opt("labeled", "str", ..., "labeled parquet: text + 0/1 label"),
+        Opt("--output", "str", ..., "MODEL.json to write"),
+        Opt("--dim", "count", 4096, "hashed feature dimension"),
+        Opt("--epochs", "count", 8, "gradient-descent epochs"),
+        Opt("--lr", "float", 2.0, "learning rate"),
+        Opt("--text-col", "str", "text", "text column"),
+        Opt("--label-col", "str", "label", "label column"),
+        Opt("--hasher", "str", "xxhash", "xxhash or md5"),
+    )),
+    "train-lm": Mode(_train_lm_mode, (
+        Opt("corpus", "str", ..., "training corpus parquet"),
+        Opt("--output", "str", ..., "MODEL.json to write"),
+        Opt("--order", "count", 3, "char n-gram order"),
+        Opt("--min-count", "count", 1, "drop grams seen fewer times"),
+        Opt("--max-grams", "count", None, "keep the N most frequent grams"),
+        Opt("--text-col", "str", "text", "text column"),
+    )),
+    "train-langid": Mode(_train_langid_mode, (
+        Opt("labeled", "str", ..., "labeled parquet: text + language label"),
+        Opt("--output", "str", ..., "MODEL.json to write"),
+        Opt("--dim", "count", 2048, "hashed feature dimension"),
+        Opt("--ngram", "count", 3, "char n-gram size"),
+        Opt("--epochs", "count", 8, "gradient-descent epochs"),
+        Opt("--lr", "float", 2.0, "learning rate"),
+        Opt("--text-col", "str", "text", "text column"),
+        Opt("--label-col", "str", "lang", "label column"),
+        Opt("--hasher", "str", "xxhash", "xxhash or md5"),
+    )),
+    "compile": Mode(_compile_mode, (
+        Opt("rule", "str", None, "rule .fp.yaml file"),
+        Opt("--check", "flag", False, "parse + validate only, no session"),
+        Opt("--schema", "flag", False, "print the rule JSON Schema"),
+    ), one_of=("rule", "--schema")),
+    "witness": Mode(_witness_mode, (
+        Opt("action", "str", ..., "query, last or count",
+            choices=("query", "last", "count")),
+        Opt("--tool", "str", None, "records of this tool"),
+        Opt("--outcome", "str", None, "records with this outcome"),
+        Opt("--since", "str", None, "records at or after this timestamp"),
+        Opt("--until", "str", None, "records at or before this timestamp"),
+        Opt("--input-hash", "str", None, "records with this input hash"),
+        Opt("--path", "str", None, "ledger file (default: the witness ledger)"),
+        Opt("--json", "flag", False, "accepted for parity: output is JSON lines"),
+    ), jvm=False),
+    "infer": Mode(_infer_mode, (
+        Opt("corpus", "str", ..., "corpus parquet"),
+        Opt("--id", "str", ..., "fingerprint id of the inferred rule"),
+        Opt("--min-confidence", "float", 0.8, "support a candidate needs"),
+        Opt("--content-col", "str", "html", "html content column"),
+    )),
+}
+
+
+def main(argv: list[str] | None = None) -> int:
+    """Run one mode over ``argv`` (default ``sys.argv[1:]``) and return
+    its exit code: 0 OK, 1 run's PARTIAL outcome, 2 a refusal."""
+    argv = sys.argv[1:] if argv is None else argv
+    name = argv[0] if argv and argv[0] in MODES.keys() - {"run"} else "run"
+    try:
+        if name == "run":
+            rc = _display_surfaces(argv)
+            if rc is not None:
+                return rc
+        return MODES[name].run(_parse(name, argv if name == "run" else argv[1:]))
+    except Refused as e:
+        return refuse(name, e.code, str(e))
 
 
 if __name__ == "__main__":

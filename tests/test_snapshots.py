@@ -139,7 +139,7 @@ def test_curate_cli_snapshot_pinned_in_and_committed_out(
         ).alias("text"),
     )
     commit_snapshot(docs, corpus_tbl)
-    rc = rp._curate_mode([
+    rc = rp.main([
         "curate", corpus_tbl,
         "--input-snapshot", "1",
         "--snapshot-output", out_tbl,
@@ -234,7 +234,7 @@ def test_curate_cli_bad_snapshot_path_clean_error(spark, tmp_path, capsys):
 
     not_a_table = str(tmp_path / "plain_dir")
     os.makedirs(not_a_table)
-    rc = rp._curate_mode([
+    rc = rp.main([
         "curate", not_a_table,
         "--input-snapshot", "current",
         "--output", str(tmp_path / "out"),

@@ -706,7 +706,7 @@ def test_train_classifier_cli_closes_the_loop(spark, tmp_path, capsys):
         QUALITY_TRAIN_FIXTURE, "text string, label int"
     ).write.parquet(labeled)
     model_path = str(tmp_path / "model.json")
-    rc = rp._train_classifier_mode(
+    rc = rp.main(
         ["train-classifier", labeled, "--output", model_path,
          "--dim", "1024", "--epochs", "8"])
     assert rc == 0
@@ -726,7 +726,7 @@ def test_train_classifier_cli_closes_the_loop(spark, tmp_path, capsys):
         "url string, text string",
     ).write.parquet(corpus)
     out = str(tmp_path / "out")
-    rc2 = rp._curate_mode(
+    rc2 = rp.main(
         ["curate", corpus, "--output", out, "--chunk-words", "5",
          "--classifier", model_path])
     assert rc2 == 0
@@ -737,8 +737,8 @@ def test_train_classifier_cli_closes_the_loop(spark, tmp_path, capsys):
     assert rec2["classifier_keep"] == n_pos
 
     # bad inputs: clean errors, not tracebacks
-    assert rp._train_classifier_mode(["train-classifier"]) == 2
-    assert rp._train_classifier_mode(
+    assert rp.main(["train-classifier"]) == 2
+    assert rp.main(
         ["train-classifier", labeled, "--output", model_path,
          "--text-col", "nope"]) == 2
     # a malformed or out-of-range model file: one error line and exit
@@ -755,7 +755,7 @@ def test_train_classifier_cli_closes_the_loop(spark, tmp_path, capsys):
         with open(bad_path, "w") as f:
             json.dump(bad, f)
         capsys.readouterr()
-        assert rp._curate_mode(
+        assert rp.main(
             ["curate", corpus, "--output", str(tmp_path / f"o_{name}"),
              "--classifier", bad_path]) == 2, name
         err = capsys.readouterr().err.strip().splitlines()
@@ -805,19 +805,19 @@ def test_frontier_cli_build_merge_probe_cycle(spark, tmp_path, capsys,
 
     # non-default build params: merge/probe must pick them up from the
     # filter's own marker row, not require the caller to re-type them
-    assert rp._frontier_mode(
+    assert rp.main(
         ["frontier", tbl, "--build", corpus, "--n-bits", "2097152"]) == 0
     rec = last_json()
     assert rec["snapshot_id"] == 1 and rec["filter_rows"] > 0
     assert rec["n_bits"] == 2097152
 
-    assert rp._frontier_mode(
+    assert rp.main(
         ["frontier", tbl, "--merge", delta]) == 0
     rec = last_json()
     assert (rec["parent_snapshot_id"], rec["snapshot_id"]) == (1, 2)
 
     out = str(tmp_path / "new_urls")
-    assert rp._frontier_mode(
+    assert rp.main(
         ["frontier", tbl, "--probe", incoming, "--output", out]) == 0
     rec = last_json()
     assert rec["incoming"] == 2000 and rec["snapshot_id"] == 2
@@ -833,16 +833,16 @@ def test_frontier_cli_build_merge_probe_cycle(spark, tmp_path, capsys,
     empty = str(tmp_path / "empty.parquet")
     spark.createDataFrame([], "url string").write.parquet(empty)
     out2 = str(tmp_path / "new2")
-    assert rp._frontier_mode(
+    assert rp.main(
         ["frontier", tbl, "--probe", empty, "--output", out2]) == 0
     rec = last_json()
     assert (rec["incoming"], rec["maybe_seen"], rec["new"]) == (0, 0, 0)
 
     # usage + missing-filter + missing-column errors are clean
-    assert rp._frontier_mode(["frontier", tbl]) == 2
-    assert rp._frontier_mode(
+    assert rp.main(["frontier", tbl]) == 2
+    assert rp.main(
         ["frontier", str(tmp_path / "nope"), "--merge", delta]) == 2
-    assert rp._frontier_mode(
+    assert rp.main(
         ["frontier", tbl, "--probe", incoming, "--output", out2,
          "--key-col", "missing"]) == 2
 
@@ -874,7 +874,7 @@ def test_train_lm_cli_and_ppl_gate(spark, tmp_path, capsys):
     spark.createDataFrame([(t,) for t in clean], "text string")\
         .write.parquet(train)
     lm = str(tmp_path / "lm.json")
-    assert rp._train_lm_mode(
+    assert rp.main(
         ["train-lm", train, "--output", lm, "--order", "3"]) == 0
     rec = json.loads(
         [ln for ln in capsys.readouterr().out.splitlines()
@@ -905,7 +905,7 @@ def test_train_lm_cli_and_ppl_gate(spark, tmp_path, capsys):
     out = str(tmp_path / "out")
     # threshold between the measured in-domain (~7) and pseudo-English
     # (~27) per-char perplexities
-    assert rp._curate_mode(
+    assert rp.main(
         ["curate", corpus, "--output", out, "--chunk-words", "5",
          "--ppl-model", lm, "--ppl-threshold", "15"]) == 0
     rec2 = json.loads(
@@ -918,7 +918,7 @@ def test_train_lm_cli_and_ppl_gate(spark, tmp_path, capsys):
     assert all(got[f"https://h/{i}"]["keep_quality"] == 1
                for i in range(10))
     # bad model path -> clean error
-    assert rp._curate_mode(
+    assert rp.main(
         ["curate", corpus, "--output", out,
          "--ppl-model", str(tmp_path / "nope.json")]) == 2
 
@@ -948,7 +948,7 @@ def test_train_langid_cli_and_curate_stage(spark, tmp_path, capsys):
         LANGID_TRAIN_FIXTURE, "text string, lang string"
     ).write.parquet(labeled)
     model_path = str(tmp_path / "lid.json")
-    rc = rp._train_langid_mode(
+    rc = rp.main(
         ["train-langid", labeled, "--output", model_path,
          "--dim", "1024", "--epochs", "8"])
     assert rc == 0
@@ -977,7 +977,7 @@ def test_train_langid_cli_and_curate_stage(spark, tmp_path, capsys):
     spark.createDataFrame(docs, "url string, text string")\
         .write.parquet(corpus)
     out = str(tmp_path / "out")
-    assert rp._curate_mode(
+    assert rp.main(
         ["curate", corpus, "--output", out, "--chunk-words", "5",
          "--langid-model", model_path]) == 0
     rec2 = json.loads(
@@ -992,18 +992,18 @@ def test_train_langid_cli_and_curate_stage(spark, tmp_path, capsys):
             assert got[f"https://h/{lg}{i}"]["drop_reason"] == f"langid:{lg}"
 
     # bad inputs: clean errors, not tracebacks
-    assert rp._train_langid_mode(["train-langid"]) == 2
-    assert rp._train_langid_mode(
+    assert rp.main(["train-langid"]) == 2
+    assert rp.main(
         ["train-langid", labeled, "--output", model_path,
          "--label-col", "nope"]) == 2
-    assert rp._train_langid_mode(
+    assert rp.main(
         ["train-langid", str(tmp_path / "missing.parquet"),
          "--output", model_path]) == 2
-    assert rp._curate_mode(
+    assert rp.main(
         ["curate", corpus, "--output", out,
          "--langid-model", str(tmp_path / "nope.json")]) == 2
     (tmp_path / "bad.json").write_text('{"classes": ["en"]}')
-    assert rp._curate_mode(
+    assert rp.main(
         ["curate", corpus, "--output", out,
          "--langid-model", str(tmp_path / "bad.json")]) == 2
 

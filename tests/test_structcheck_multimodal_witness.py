@@ -74,7 +74,7 @@ def test_witness_ledger(tmp_path, capsys):
     append_witness("infer", {"dir": "x"}, {}, "INFERRED", path=path)
 
     def witness(*args):
-        assert cli._witness_mode(["witness", *args, "--path", path]) == 0
+        assert cli.main(["witness", *args, "--path", path]) == 0
         return capsys.readouterr().out.strip()
 
     assert witness("count") == "3"
